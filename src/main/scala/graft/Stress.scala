@@ -1017,10 +1017,11 @@ object Stress {
 
     if (sec("r14")) {
       time("page pruning (10M rows, 1M-row groups, 64K pages)") {
-        // round-14 page-level pruning at scale: WIDE row groups (the
-        // production shape where row-group skipping alone is coarse) —
-        // a 1000-key slice must decode a small fraction of the kept
-        // group's rows, positions staying DV-exact
+        // page-level pruning at scale: WIDE row groups (the production
+        // shape where row-group skipping alone is coarse) — a 1000-key
+        // slice must decode a small fraction of the kept group's rows,
+        // positions staying DV-exact. Decoded rows are the scan tasks'
+        // input records.
         val dir = java.nio.file.Files
           .createTempDirectory("graft_stress_page").toString + "/t"
         graft.operators.TableLog.append(
@@ -1029,23 +1030,34 @@ object Stress {
             .coalesce(4),
           dir, options = Map("parquet.block.size" -> (256 << 20).toString,
             "parquet.page.size" -> "65536"))
-        def skips[T](f: => T): (T, Long, Long) = {
-          val f0 = graft.operators.RowGroupScan.pageFilteredRows.sum()
-          val t0 = graft.operators.RowGroupScan.pageTotalRows.sum()
-          val r = f
-          (r, graft.operators.RowGroupScan.pageFilteredRows.sum() - f0,
-            graft.operators.RowGroupScan.pageTotalRows.sum() - t0)
+        def decoded[T](f: => T): (T, Long) = {
+          val n = new java.util.concurrent.atomic.LongAdder
+          val l = new org.apache.spark.scheduler.SparkListener {
+            override def onTaskEnd(e: org.apache.spark.scheduler
+                .SparkListenerTaskEnd): Unit =
+              if (e.taskMetrics != null)
+                n.add(e.taskMetrics.inputMetrics.recordsRead)
+          }
+          spark.sparkContext.addSparkListener(l)
+          try {
+            val r = f
+            org.apache.spark.sql.graft.SparkInternals.drainListeners(spark)
+            (r, n.sum())
+          } finally spark.sparkContext.removeSparkListener(l)
         }
-        val (n1, skipped, total) = skips {
-          graft.operators.LakeSelect.readWhere(spark, dir,
-            "k BETWEEN 5000000 AND 5000999")._1.count()
+        val ((n1, st1), read1) = decoded {
+          val (df, st) = graft.operators.LakeSelect.readWhere(spark, dir,
+            "k BETWEEN 5000000 AND 5000999")
+          (df.count(), st)
         }
         require(n1 == 1000L, s"page-pruned slice: $n1")
-        require(total > 0L && skipped * 10 >= total * 9,
-          s"pages must skip >=90%: $skipped of $total")
+        // the fixture's row groups hold equal shares of the 10M rows
+        val total = 10000000L * st1.rgOpened / st1.rgTotal
+        require(st1.rgOpened > 0L && read1 * 10 < total,
+          s"pages must skip >=90%: decoded $read1 of $total")
         graft.operators.TableLog.deleteVectored(spark, dir,
           "k IN (5000010, 5000020)")
-        val (agg, skipped2, _) = skips {
+        val (agg, read2) = decoded {
           graft.operators.LakeSelect.readWhere(spark, dir,
             "k BETWEEN 5000000 AND 5000999")._1
             .agg(count(lit(1)), sum("k")).first()
@@ -1054,7 +1066,9 @@ object Stress {
           agg.getLong(1) ==
             (5000000L to 5000999L).sum - 5000010L - 5000020L,
           s"DV under page filter at scale: $agg")
-        require(skipped2 > 0L, "post-DV read lost the page filter")
+        require(read2 < total,
+          s"post-DV read lost the page filter: decoded $read2 of $total")
+        val skipped = total - read1
         println(f"    skipped $skipped of $total rows' decode " +
           f"(${skipped * 100.0 / total}%.1f%%), DV-exact")
       }

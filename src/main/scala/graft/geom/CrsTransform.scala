@@ -658,12 +658,6 @@ object CrsTransform {
   def albersProjection(ell: Ellipsoid, lat1: Double, lat2: Double, lat0: Double,
       lon0: Double, fe: Double, fn: Double): AlbersProjection =
     new AlbersProjection(ell, lat1, lat2, lat0, lon0, fe, fn)
-  def polarStereoA(ell: Ellipsoid, north: Boolean, lon0: Double, k0: Double,
-      fe: Double, fn: Double): PolarStereoProjection =
-    PolarStereoProjection.variantA(ell, north, lon0, k0, fe, fn)
-  def polarStereoB(ell: Ellipsoid, latTs: Double, lon0: Double,
-      fe: Double, fn: Double): PolarStereoProjection =
-    PolarStereoProjection.variantB(ell, latTs, lon0, fe, fn)
   def obliqueStereoProjection(ell: Ellipsoid, lat0: Double, lon0: Double,
       k0: Double, fe: Double, fn: Double): ObliqueStereoProjection =
     new ObliqueStereoProjection(ell, lat0, lon0, k0, fe, fn)

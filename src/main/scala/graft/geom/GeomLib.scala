@@ -279,11 +279,6 @@ object GeomLib {
     try write(wktReader.get.read(wkt))
     catch { case _: Exception => null }
 
-  def isEmptyGeom(wkb: Array[Byte]): Boolean = {
-    val g = readOrNull(wkb)
-    g == null || g.isEmpty
-  }
-
   def numPoints(wkb: Array[Byte]): java.lang.Integer = {
     val g = readOrNull(wkb)
     if (g == null) null else Int.box(g.getNumPoints)
@@ -896,12 +891,5 @@ object GeomLib {
     val n = 1L << res
     val ix = (cell >> res) & (n - 1)
     -180.0 + (ix + 0.5) * 360.0 / n
-  }
-
-  def cellCenterLat(cell: Long): Double = {
-    val res = (cell >> 58).toInt
-    val n = 1L << res
-    val iy = cell & (n - 1)
-    -90.0 + (iy + 0.5) * 180.0 / n
   }
 }

@@ -970,9 +970,6 @@ object H3Lib {
     out
   }
 
-  /** Number of pentagon base cells (public H3 invariant: 12). */
-  def pentagonCount: Int = pentagonCells.size
-
   // ---- neighbors / grid_disk (k-ring) ------------------------------------
 
   private def toVec3(latDeg: Double, lngDeg: Double): Array[Double] = {

@@ -38,9 +38,11 @@ object CoOccur {
     // clustered distribution), so repartitioning by `b` FIRST collapses
     // what was three exchanges of the basket rows — distinct on (b,i),
     // re-exchange by b for the size join, plus the size aggregate — into
-    // a single shuffle of the input. The per-basket self-join already
-    // concentrated each basket on one reducer, so this adds no skew the
-    // join did not have; the hub-basket cap below stays the skew guard.
+    // a single shuffle of the input. It is a hot-key exposure: every row
+    // of a hub basket reaches one reducer (its distinct and size count
+    // run there) before the size cap below can drop the basket, so one
+    // huge basket bounds this stage's slowest task; the cap keeps the
+    // quadratic self-join bounded.
     val bi = baskets
       .select(col(basketCol).as("b"), col(itemCol).as("i"))
       .filter(col("b").isNotNull && col("i").isNotNull)

@@ -508,10 +508,10 @@ object Dedup {
     val confN = org.apache.spark.sql.graft.SparkInternals
       .sqlConf(spark).numShufflePartitions
     // edges are pinned SORTED by the per-round join key: the checkpoint
-    // preserves outputOrdering alongside partitioning, so with in-loop
-    // broadcasts disabled (below) every round's sort-merge join reads the
-    // edge side pre-sorted — sort once, merge every round; only the small
-    // labels side sorts per round.
+    // preserves outputOrdering alongside partitioning, so whenever the
+    // planner picks a sort-merge join in the loop (it keeps the broadcast
+    // choice, see below) that round reads the edge side pre-sorted —
+    // sort once, merge every round; only the small labels side sorts.
     var edges: DataFrame = null
     val p = partitionsHint match {
       case Some(hint) =>

@@ -232,18 +232,6 @@ object GeoNormalize {
     (df, kept.length, files.length)
   }
 
-  /** Hilbert-sorted global order variant: one total sort (range exchange)
-    * across the cluster — the exact reference semantics for single-file
-    * outputs (east_asia.py:75-82). */
-  def writeClusteredSorted(df: DataFrame, outPath: String, zstdLevel: Int = 22): Unit = {
-    val keyed = Scatter(df).withColumn("__hk", hilbert_of_geom(col("geom")))
-    keyed.orderBy("__hk").drop("__hk")
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .option("parquet.compression.codec.zstd.level", zstdLevel.toString)
-      .parquet(outPath)
-  }
-
   // (footer stamping lives in GeoParquetFooter below so executor tasks call
   // a static method instead of serializing this object's state)
 

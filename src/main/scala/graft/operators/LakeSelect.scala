@@ -187,7 +187,10 @@ object LakeSelect {
           Some(rgConstraints.map(_.column).distinct.mkString(",")),
           rgo, rgt, fo, ft))
       } else if (rgConstraints.size == 1) {
-        val cons = rgConstraints.head
+        val cons = rgConstraints.head match {
+          case TableLog.AtScale(in, _) => in
+          case c => c
+        }
         val label = cons match {
           case _: TableLog.NumIn | _: TableLog.StrIn |
               _: TableLog.DblIn => "rowgroup_in"
@@ -430,8 +433,8 @@ object LakeSelect {
                 // values the column's scale cannot represent are
                 // provably false and drop from the probe set (an
                 // empty set rejects every stats-bearing group)
-                Some(TableLog.NumIn(c,
-                  e.values.flatMap(unscaledExact(_, sc))))
+                Some(TableLog.AtScale(TableLog.NumIn(c,
+                  e.values.flatMap(unscaledExact(_, sc))), sc))
               } catch { case _: ArithmeticException => None }
             case None => None
           }
@@ -545,7 +548,7 @@ object LakeSelect {
                       (if (h == Long.MinValue) h else h - 1)
                     else h
                   }
-                  Some(TableLog.NumRange(c, lo, hi))
+                  Some(TableLog.AtScale(TableLog.NumRange(c, lo, hi), sc))
                 } catch { case _: ArithmeticException => None }
               case None => None
             }

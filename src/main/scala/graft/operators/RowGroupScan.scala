@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.SparkInternals
 import org.apache.spark.sql.types._
 
 /** Row-group-level data skipping: a footer index at ROW-GROUP granularity
@@ -27,30 +28,27 @@ import org.apache.spark.sql.types._
   *    aggregation, and the driver collects ONLY the kept slices. Null
   *    bounds keep conservatively (skipping may lose rows; keeping never
   *    does).
-  *  - [[scanSlices]] — scans EXACTLY the kept row groups via parquet-mr's
-  *    `readRowGroup(i)`, fanned out over bounded-size tasks so one hot
-  *    file still parallelizes. Optionally emits each row's FILE-ORDINAL
-  *    position (`__graft_fn`, `__graft_ridx`) — rebased from the index's
-  *    per-group row counts — so deletion vectors apply to a PARTIAL read
-  *    (DV positions are file ordinals; without the rebase a DV-carrying
-  *    file would degrade to a whole-file scan).
+  *  - [[scanSlices]] — scans EXACTLY the kept row groups through Spark's
+  *    own parquet reader (`ParquetFileFormat`, vectorized where the
+  *    schema allows): each kept run of contiguous row groups becomes one
+  *    byte-range split, and parquet hands a row group to the split that
+  *    holds its midpoint. The constraints travel along as pushed source
+  *    filters, so surviving groups still skip pages through the
+  *    ColumnIndex. Optionally emits each row's FILE-ORDINAL position
+  *    (`__graft_fn`, `__graft_ridx`, from the reader's row-index column)
+  *    so deletion vectors apply to a PARTIAL read.
   *
-  * The selective scan materializes records through parquet-mr's example
-  * Group reader and converts them with a schema-driven converter covering
-  * scalars (boolean, int8/16/32/64, float, double, decimal, date,
-  * timestamp — INT64 and legacy INT96 — string, binary) AND the nested
-  * shapes Spark writes (3-level LIST, 3-level MAP, struct — the
-  * `array<struct<role,content>>` training-data chat shape included).
-  * Schema evolution across files is tolerated the way the log's own
-  * readers tolerate it: the plan's UNION schema comes from the index's
-  * per-file column types, files missing a trailing column null-fill it,
-  * and a TYPE conflict on a shared column fails loudly.
+  * Schema evolution across files is the reader's: the plan's UNION schema
+  * comes from the index's per-file column types (widened losslessly by
+  * [[widenType]]), files missing a column null-fill it, narrower files
+  * widen on read, and a type the reader cannot widen fails loudly.
   *
   * Scale: driver residency is the KEPT (file, rowGroup) slices only —
   * bounded by the query's selectivity, never the table (100 TB at 128 MB
   * row groups ≈ 10⁶ index rows, all filtered where they live). Each scan
-  * task opens one footer and reads at most [[rgsPerTask]] row groups'
-  * pages; nothing reads a page outside the keep set.
+  * task opens one footer per run to locate its byte range and reads at
+  * most [[rgsPerTask]] row groups' pages; nothing reads a page outside
+  * the keep set.
   */
 object RowGroupScan {
 
@@ -78,11 +76,8 @@ object RowGroupScan {
       smin: Option[String], smax: Option[String],
       dmin: Option[Double] = None, dmax: Option[Double] = None)
 
-  /** One kept row group: `start` is the row group's first row's
-    * FILE-ORDINAL index (prefix sum of preceding groups' row counts) —
-    * what deletion-vector positions are keyed by. */
-  private[operators] final case class RgSlice(file: String, rg: Int,
-      start: Long, nRows: Long)
+  /** One kept row group: the `rg`-th of `file`. */
+  private[operators] final case class RgSlice(file: String, rg: Int)
 
   /** The WIDE per-row-group stats index over EVERY top-level column —
     * (file, rg, column, ord, dtype, n_rows, n_nulls, lmin, lmax, smin,
@@ -102,24 +97,24 @@ object RowGroupScan {
   /** One file's wide-index rows from its footer only — the per-file body
     * of [[buildWideIndex]], also callable DRIVER-side so small snapshots
     * can plan with zero Spark jobs (the Delta manifest posture: planning
-    * metadata is driver work). */
+    * metadata is driver work). Column types come from Spark's parquet
+    * schema conversion at its DEFAULT settings, so the persisted `dtype`
+    * strings never depend on the writing session. */
   private[operators] def fileIdxRows(abs: String, label: String,
       conf: org.apache.hadoop.conf.Configuration): Seq[IdxRow] = {
     {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
       import scala.jdk.CollectionConverters._
       {
         indexFooterOpens.increment()
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(abs), conf))
-        try {
-          val msg = reader.getFooter.getFileMetaData.getSchema
+        val footer = footerOf(abs, conf)
+        locally {
+          val msg = footer.getFileMetaData.getSchema
+          val sparkFields = new org.apache.spark.sql.execution.datasources
+            .parquet.ParquetToSparkSchemaConverter().convert(msg).fields
           val fields = (0 until msg.getFieldCount).map { i =>
-            val t = msg.getType(i)
-            (t, i, sparkTypeOf(t).catalogString)
+            (msg.getType(i), i, sparkFields(i).dataType.catalogString)
           }
-          val blocks = reader.getFooter.getBlocks.asScala.toList
+          val blocks = footer.getBlocks.asScala.toList
           if (blocks.isEmpty)
             fields.map { case (t, i, dt) =>
               IdxRow(label, -1, t.getName, i, dt, 0L, None, None, None,
@@ -147,9 +142,9 @@ object RowGroupScan {
                       .JsonLogicalTypeAnnotation => true
                   case _ => false
                 }
-                // INT64 timestamps normalize to MICROS — the unit the
-                // CONVERTER emits (floorDiv for nanos truncates stats
-                // and values identically, so bounds stay exact)
+                // INT64 timestamps normalize to MICROS — the unit Spark
+                // reads them in (floorDiv for nanos truncates stats and
+                // values identically, so bounds stay exact)
                 val tsToUs: Long => Long = t.asPrimitiveType()
                   .getLogicalTypeAnnotation match {
                   case ts: LogicalTypeAnnotation
@@ -211,7 +206,7 @@ object RowGroupScan {
                 nNulls, lmin, lmax, smin, smax, dmin, dmax)
             }
           }
-        } finally reader.close()
+        }
       }
     }
   }
@@ -377,26 +372,47 @@ object RowGroupScan {
   /** Whole-file DRIVER-side read of a SMALL parquet into Spark rows —
     * zero Spark jobs. For METADATA sidecars only (stats indexes, bloom
     * bitmaps, DV position lists, vector codebooks): callers enforce a
-    * byte bound before calling. Shares [[taskSliceRows]]' converter
-    * stack, so values and schema are identical to
+    * byte bound before calling. Decodes through the same Spark parquet
+    * reader as [[scanSlices]] with the session's schema conversion, so
+    * values and schema are identical to
     * `spark.read.parquet(file).collect()`. */
   private[graft] def localParquetRows(file: String,
       conf: org.apache.hadoop.conf.Configuration)
       : (Array[Row], StructType) = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file), conf))
-    val (msg, nRgs) =
-      try (r.getFooter.getFileMetaData.getSchema,
-        r.getFooter.getBlocks.size)
-      finally r.close()
-    val schema = sparkSchemaOf(msg)
-    val wanted = schema.fields.toSeq.map(f =>
-      f.name -> f.dataType.catalogString)
-    val rows = taskSliceRows(file, (0 until nRgs).map(i => (i, 0L)),
-      conf, wanted, emitPos = false).toArray
+    val msg = footerOf(file, conf).getFileMetaData.getSchema
+    val spark = SparkSession.active
+    val schema = SparkInternals.asNullable(new org.apache.spark.sql
+      .execution.datasources.parquet.ParquetToSparkSchemaConverter(
+        SparkInternals.sqlConf(spark)).convert(msg))
+    val read = SparkInternals.parquetReader(spark, schema, new StructType(),
+      Nil)
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    val rows = read(wholeFile(file, conf))
+      .map(toRow(_).asInstanceOf[Row]).toArray
     (rows, schema)
+  }
+
+  /** One byte range `[start, start + length)` of `file` as a Spark file
+    * split carrying the constant partition values `pv`. */
+  private def split(file: String, start: Long, length: Long,
+      fileSize: Long,
+      pv: org.apache.spark.sql.catalyst.InternalRow =
+        org.apache.spark.sql.catalyst.InternalRow.empty)
+      : org.apache.spark.sql.execution.datasources.PartitionedFile =
+    org.apache.spark.sql.execution.datasources.PartitionedFile(pv,
+      org.apache.spark.paths.SparkPath.fromPath(
+        new org.apache.hadoop.fs.Path(file)),
+      start, length, Array.empty[String], 0L, fileSize)
+
+  /** A whole `file` as one Spark file split (its length from the file
+    * system). */
+  private[graft] def wholeFile(file: String,
+      conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.spark.sql.execution.datasources.PartitionedFile = {
+    val p = new org.apache.hadoop.fs.Path(file)
+    val len = p.getFileSystem(conf).getFileStatus(p).getLen
+    split(file, 0L, len, len)
   }
 
   // ===== distributed prune =============================================
@@ -510,18 +526,23 @@ object RowGroupScan {
     * column) row's bounds PROVE no row can satisfy the constraint. Null
     * or missing bounds never reject (conservative keep). Spark's string
     * comparison is UTF-8 byte order — the same order the stats fold in,
-    * so string pruning can never disagree with the scan's re-filter. */
-  private[operators] def rejectCond(c: TableLog.RgConstraint): Column = {
+    * so string pruning can never disagree with the scan's re-filter.
+    * Numeric bounds judge only stats in their own space: a DECIMAL's
+    * stats are unscaled at its file's scale, so only an
+    * [[TableLog.AtScale]] probe of that `scale` may judge them. */
+  private[operators] def rejectCond(c: TableLog.RgConstraint,
+      scale: Option[Int] = None): Column = {
     import org.apache.spark.sql.functions.{col, exists, lit}
+    val nums = col("lmin").isNotNull && col("lmax").isNotNull &&
+      scale.fold(!col("dtype").startsWith("decimal"))(sc =>
+        col("dtype").endsWith(s",$sc)"))
     c match {
       case TableLog.NumRange(_, lo, hi) =>
         val sides = lo.map(l => col("lmax") < lit(l)).toSeq ++
           hi.map(h => col("lmin") > lit(h)).toSeq
-        col("lmin").isNotNull && col("lmax").isNotNull &&
-          sides.reduceOption(_ || _).getOrElse(lit(false))
+        nums && sides.reduceOption(_ || _).getOrElse(lit(false))
       case TableLog.NumIn(_, vs) =>
-        col("lmin").isNotNull && col("lmax").isNotNull &&
-          !exists(lit(vs.toArray),
+        nums && !exists(lit(vs.toArray),
             v => col("lmin") <= v && v <= col("lmax"))
       case TableLog.DblRange(_, lo, hi, hiExcl) =>
         // sides reject independently: a NaN max drops dmax (unbounded
@@ -555,7 +576,7 @@ object RowGroupScan {
         // only a CONSTANT group disproves: its one value is excluded.
         // Any null row satisfies nothing (WHERE semantics drop nulls),
         // so nulls don't block the disproof.
-        col("lmin").isNotNull && col("lmin") === col("lmax") &&
+        nums && col("lmin") === col("lmax") &&
           exists(lit(vs.toArray), v => col("lmin") === v)
       case TableLog.StrNotIn(_, vs) =>
         col("smin").isNotNull && col("smin") === col("smax") &&
@@ -577,6 +598,7 @@ object RowGroupScan {
           col("smin").isNotNull && col("smax").isNotNull &&
             !anyPadded(col("smin"), col("smax"))
         }
+      case TableLog.AtScale(in, sc) => rejectCond(in, Some(sc))
       case or: TableLog.RgOr => sys.error(
         s"RgOr must be expanded before leaf evaluation: $or")
     }
@@ -719,6 +741,7 @@ object RowGroupScan {
           col("smin").isNotNull && col("smax").isNotNull &&
           !exists(lit(vs.toArray),
             v => col("smin") <= v && v <= col("smax"))
+      case TableLog.AtScale(in, _) => fullMatchCond(in)
       case or: TableLog.RgOr => sys.error(
         s"RgOr must be expanded before leaf evaluation: $or")
     }
@@ -734,11 +757,10 @@ object RowGroupScan {
   // bound never rejects and never proves). Large snapshots keep the
   // distributed aggregation.
 
-  /** One (file, rg) planning verdict. `start` is the file-ordinal first
-    * row (deletion-vector rebasing); `full` = every row provably
+  /** One (file, rg) planning verdict. `full` = every row provably
     * satisfies ALL constraints. */
   private[operators] final case class RgVerdict(file: String, rg: Int,
-      nRows: Long, start: Long, rejected: Boolean, full: Boolean)
+      nRows: Long, rejected: Boolean, full: Boolean)
 
   private[operators] def utf8Cmp(a: String, b: String): Int = {
     val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
@@ -755,9 +777,13 @@ object RowGroupScan {
   /** Scalar [[rejectCond]]: bounds of THIS (file, rg, column) row
     * disprove the constraint. */
   private def leafReject(l: TableLog.RgConstraint, r: Row,
-      ix: Map[String, Int]): Boolean = {
+      ix: Map[String, Int], scale: Option[Int] = None): Boolean = {
+    val dtype = r.getString(ix("dtype"))
+    val numSpace = scale.fold(!dtype.startsWith("decimal"))(sc =>
+      dtype.endsWith(s",$sc)"))
     def lng(c: String): Option[Long] =
       if (r.isNullAt(ix(c))) None else Some(r.getLong(ix(c)))
+    def bound(c: String): Option[Long] = if (numSpace) lng(c) else None
     def str(c: String): Option[String] =
       if (r.isNullAt(ix(c))) None else Some(r.getString(ix(c)))
     // defensive get: rows memoized before the dmin/dmax columns
@@ -766,7 +792,7 @@ object RowGroupScan {
       ix.get(c).filter(i => !r.isNullAt(i)).map(r.getDouble)
     l match {
       case TableLog.NumRange(_, lo, hi) =>
-        (lng("lmin"), lng("lmax")) match {
+        (bound("lmin"), bound("lmax")) match {
           case (Some(lmin), Some(lmax)) =>
             lo.exists(lmax < _) || hi.exists(lmin > _)
           case _ => false
@@ -782,7 +808,7 @@ object RowGroupScan {
           case _ => false
         }
       case TableLog.NumIn(_, vs) =>
-        (lng("lmin"), lng("lmax")) match {
+        (bound("lmin"), bound("lmax")) match {
           case (Some(lmin), Some(lmax)) =>
             !vs.exists(v => lmin <= v && v <= lmax)
           case _ => false
@@ -808,7 +834,7 @@ object RowGroupScan {
           case None => false
         }
       case TableLog.NumNotIn(_, vs) =>
-        (lng("lmin"), lng("lmax")) match {
+        (bound("lmin"), bound("lmax")) match {
           case (Some(lmin), Some(lmax)) => lmin == lmax && vs.contains(lmin)
           case _ => false
         }
@@ -829,6 +855,7 @@ object RowGroupScan {
             !vs.exists(paddedVariantInRange(_, smin, smax, mode))
           case _ => false
         })
+      case TableLog.AtScale(in, sc) => leafReject(in, r, ix, Some(sc))
       case or: TableLog.RgOr => sys.error(
         s"RgOr must be expanded before leaf evaluation: $or")
     }
@@ -923,6 +950,7 @@ object RowGroupScan {
               smin == smax && vs.contains(strip(smin))
             case _ => false
           })
+      case TableLog.AtScale(in, _) => leafFull(in, r, ix)
       case or: TableLog.RgOr => sys.error(
         s"RgOr must be expanded before leaf evaluation: $or")
     }
@@ -961,42 +989,32 @@ object RowGroupScan {
     val verdicts = groups.iterator.map { case ((f, rg), byCol) =>
       val rej = constraints.exists {
         case TableLog.RgOr(bs) =>
-          bs.nonEmpty && bs.forall(flag(byCol, _, leafReject))
-        case leaf => flag(byCol, leaf, leafReject)
+          bs.nonEmpty && bs.forall(flag(byCol, _, leafReject(_, _, _)))
+        case leaf => flag(byCol, leaf, leafReject(_, _, _))
       }
       val full = constraints.nonEmpty && constraints.forall {
         case TableLog.RgOr(bs) => bs.exists(flag(byCol, _, leafFull))
         case leaf => flag(byCol, leaf, leafFull)
       }
       val n = byCol.valuesIterator.next().getLong(iNRows)
-      RgVerdict(f, rg, n, 0L, rej, full)
+      RgVerdict(f, rg, n, rej, full)
     }.toSeq
-    // file-ordinal start offsets: prefix sums per file in rg order
-    val withStarts = verdicts.groupBy(_.file).toSeq.sortBy(_._1)
-      .flatMap { case (_, vs) =>
-        var acc = 0L
-        vs.filter(_.rg >= 0).sortBy(_.rg).map { v =>
-          val out = v.copy(start = acc); acc += v.nRows; out
-        } ++ vs.filter(_.rg < 0)
-      }
-    (withStarts, cols.toSeq)
+    (verdicts, cols.toSeq)
   }
 
   /** DISTRIBUTED prune of a wide index by every constraint at once:
     * per-(file, rg) reject verdicts fold in one metadata aggregation
     * (a constraint rejects a group iff ITS column's bounds disprove it;
     * a column with no stats — or absent from an evolved file — never
-    * rejects), file-ordinal start offsets ride a window over the same
-    * rows, and the driver collects ONLY the kept slices plus the total
-    * group count. Caller should have the index persisted (two jobs). */
+    * rejects), and the driver collects ONLY the kept slices plus the
+    * total group count. Caller should have the index persisted (two
+    * jobs). */
   private[operators] def prunePairs(spark: SparkSession, wide: DataFrame,
       constraints: Seq[TableLog.RgConstraint],
-      withStarts: Boolean = true,
       needCols: Boolean = false)
       : (Seq[RgSlice], Long, Option[Seq[(String, String)]]) = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{coalesce, col, collect_list,
-      collect_set, first, lit, sort_array, struct, sum, when}
+    import org.apache.spark.sql.functions.{col, collect_list, collect_set,
+      first, sort_array, struct, sum, when}
     // rg == -1 rows (zero-row-group schema carriers) ride through the
     // grouping so the union schema below sees them, but never become
     // slices and never count
@@ -1006,18 +1024,8 @@ object RowGroupScan {
         Seq(sort_array(collect_set(struct(col("ord"), col("column"),
           col("dtype")))).as("__cols"))
       else Nil)
-    val pairs0 = wide.groupBy(col("file"), col("rg"))
+    val pairs = wide.groupBy(col("file"), col("rg"))
       .agg(aggs.head, aggs.tail: _*)
-    // file-ordinal start offsets exist to rebase DELETION-VECTOR
-    // positions; a snapshot without vectors skips the window (one fewer
-    // shuffle per read)
-    val w = Window.partitionBy("file").orderBy("rg")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val startCol =
-      if (withStarts) coalesce(sum(col("n_rows")).over(w), lit(0L))
-      else lit(0L)
-    val pairs = pairs0
-      .withColumn("__start", startCol)
       .withColumn("__rej", rej)
     // ONE action: total group count, the kept slices (collect_list
     // skips the nulls when() emits for rejects), and — when no memo had
@@ -1027,14 +1035,12 @@ object RowGroupScan {
     val globalAggs = Seq(
       sum(when(col("rg") >= 0, 1L).otherwise(0L)).as("total"),
       collect_list(when(!col("__rej") && col("rg") >= 0,
-        struct(col("file"), col("rg"), col("__start"), col("n_rows"))))
-        .as("kept")) ++
+        struct(col("file"), col("rg")))).as("kept")) ++
       (if (needCols) Seq(collect_set(col("__cols")).as("colsets"))
        else Nil)
     val row = pairs.agg(globalAggs.head, globalAggs.tail: _*).first()
     val kept = row.getSeq[Row](1)
-      .map(r => RgSlice(r.getString(0), r.getInt(1), r.getLong(2),
-        r.getLong(3)))
+      .map(r => RgSlice(r.getString(0), r.getInt(1)))
       .sortBy(s => (s.file, s.rg))
     val total = if (row.isNullAt(0)) 0L else row.getLong(0)
     val cols =
@@ -1047,10 +1053,10 @@ object RowGroupScan {
   //
   // Files written before an int→long / float→double / decimal-precision
   // evolution stay readable through the selective scan: the union
-  // schema resolves to the WIDEST type and each file's values upcast at
-  // emit time. Only lossless scalar widenings qualify; anything else is
-  // still a loud type-drift error (a silent narrow or cross-family cast
-  // could corrupt data).
+  // schema resolves to the WIDEST type and Spark's parquet reader widens
+  // each file's values on read. Only lossless scalar widenings qualify;
+  // anything else is still a loud type-drift error (a silent narrow or
+  // cross-family cast could corrupt data).
 
   private val intWidths = Seq("tinyint", "smallint", "int", "bigint")
   private val DecimalRe = """decimal\((\d+),(\d+)\)""".r
@@ -1074,25 +1080,6 @@ object RowGroupScan {
         if (p <= 38) Some(s"decimal($p,$s)") else None
       case _ => None
     }
-  }
-
-  /** Value upcast into catalog type `to` (applied only when the file's
-    * type is strictly narrower — identity otherwise). */
-  private def upcastTo(to: String): Any => Any = to match {
-    case "smallint" => {
-      case b: java.lang.Byte => b.shortValue(); case v => v }
-    case "int" => {
-      case b: java.lang.Byte => b.intValue()
-      case s: java.lang.Short => s.intValue(); case v => v }
-    case "bigint" => {
-      case b: java.lang.Byte => b.longValue()
-      case s: java.lang.Short => s.longValue()
-      case i: java.lang.Integer => i.longValue(); case v => v }
-    case "double" => {
-      case f: java.lang.Float => f.doubleValue(); case v => v }
-    case DecimalRe(_, s) => {
-      case d: java.math.BigDecimal => d.setScale(s.toInt); case v => v }
-    case _ => identity
   }
 
   /** Fold the collected per-group column-descriptor sets into the
@@ -1143,971 +1130,158 @@ object RowGroupScan {
       }
     }
 
-  // ===== page-level pruning (parquet ColumnIndex) ======================
-  //
-  // Under the row-group keep set, surviving groups can still skip
-  // PAGES: the constraint conjuncts translate to a parquet
-  // FilterPredicate built against the FILE's physical types (so type
-  // validation can never fail), the ColumnIndex computes the surviving
-  // row ranges, and the slice scan decodes only those pages. Emitted
-  // rows stay a SUPERSET of the matches (the exact predicate re-applies
-  // on top) and positions rebase through the store's row indexes, so
-  // deletion vectors keep working. Any unconvertible conjunct simply
-  // drops from the page filter — conservative, like every skip layer.
+  // ===== selective scan ================================================
 
-  /** The constraints as a parquet FilterPredicate over `full`'s
-    * physical schema; None when nothing converts. */
-  private def pageFilterFor(full: org.apache.parquet.schema.MessageType,
-      constraints: Seq[TableLog.RgConstraint])
-      : Option[org.apache.parquet.filter2.predicate.FilterPredicate] = {
-    import org.apache.parquet.filter2.predicate.{FilterApi,
-      FilterPredicate}
-    import org.apache.parquet.io.api.Binary
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import scala.jdk.CollectionConverters._
-    def isStringish(p: org.apache.parquet.schema.PrimitiveType): Boolean =
-      p.getLogicalTypeAnnotation match {
-        case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation => true
-        case _: LogicalTypeAnnotation.EnumLogicalTypeAnnotation => true
-        case _: LogicalTypeAnnotation.JsonLogicalTypeAnnotation => true
-        case _ => false
-      }
-    // an INT64 numeric filter is sound iff the file's physical values
-    // ARE the constraint's space: plain longs, or MICROS timestamps
-    // (the constraint side is micros-normalized; millis/nanos files
-    // would compare in the wrong unit — they just skip page filtering)
-    def int64Comparable(p: org.apache.parquet.schema.PrimitiveType)
-        : Boolean = p.getLogicalTypeAnnotation match {
-      case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-        ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
-      case _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => false
-      case _ => true
+  /** The constraints Spark's parquet filter pushdown can take, as source
+    * filters — the reader then skips row groups and ColumnIndex pages
+    * they disprove. Only integral and string columns (by the plan's
+    * `types`) and null checks convert; a disjunction converts only when
+    * every branch does. Anything else simply stays off the pushdown:
+    * rows come back a SUPERSET of the matches and the caller re-applies
+    * the exact predicate. */
+  private def pushedFilters(constraints: Seq[TableLog.RgConstraint],
+      types: Map[String, String]): Seq[org.apache.spark.sql.sources.Filter] = {
+    import org.apache.spark.sql.sources._
+    // a bound outside the column's value space drops (conservative)
+    def num(c: String, v: Long): Option[Any] = types.get(c) match {
+      case Some("bigint") => Some(v)
+      case Some("int") if v.isValidInt => Some(v.toInt)
+      case Some("smallint") if v.isValidShort => Some(v.toShort)
+      case Some("tinyint") if v.isValidByte => Some(v.toByte)
+      case _ => None
     }
-    def leaf(c: TableLog.RgConstraint): Option[FilterPredicate] = {
-      if (!full.containsField(c.column)) return None
-      val t = full.getType(full.getFieldIndex(c.column))
-      if (!t.isPrimitive) return None
-      val p = t.asPrimitiveType()
-      if (p.getPrimitiveTypeName ==
-          org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-            .INT64 && !int64Comparable(p)) return None
-      val inIntRange = (v: Long) =>
-        v >= Int.MinValue.toLong && v <= Int.MaxValue.toLong
-      p.getLogicalTypeAnnotation match {
-        case _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-          return None // unscaled-vs-scaled spaces never compare raw
-        case _ => ()
-      }
-      (c, p.getPrimitiveTypeName) match {
-        case (TableLog.NumRange(n, lo, hi), INT64) =>
-          val col = FilterApi.longColumn(n)
-          (lo.map(l => FilterApi.gtEq(col,
-              java.lang.Long.valueOf(l)): FilterPredicate).toSeq ++
-            hi.map(h => FilterApi.ltEq(col,
-              java.lang.Long.valueOf(h)): FilterPredicate))
-            .reduceOption(FilterApi.and(_, _))
-        case (TableLog.NumRange(n, lo, hi), INT32) =>
-          // bounds outside int space: a too-high hi / too-low lo drops
-          // its side (no constraint); a too-high lo / too-low hi cannot
-          // convert exactly — drop the conjunct (conservative)
-          if (lo.exists(_ > Int.MaxValue.toLong) ||
-              hi.exists(_ < Int.MinValue.toLong)) None
-          else {
-            val col = FilterApi.intColumn(n)
-            (lo.filter(inIntRange).map(l => FilterApi.gtEq(col,
-                java.lang.Integer.valueOf(l.toInt)): FilterPredicate)
-              .toSeq ++
-              hi.filter(inIntRange).map(h => FilterApi.ltEq(col,
-                java.lang.Integer.valueOf(h.toInt)): FilterPredicate))
-              .reduceOption(FilterApi.and(_, _))
-          }
-        case (TableLog.NumIn(n, vs), INT64) if vs.nonEmpty =>
-          Some(FilterApi.in(FilterApi.longColumn(n),
-            vs.map(java.lang.Long.valueOf).toSet.asJava))
-        case (TableLog.NumIn(n, vs), INT32) if vs.nonEmpty =>
-          val ints = vs.filter(inIntRange)
-          if (ints.isEmpty) None
-          else Some(FilterApi.in(FilterApi.intColumn(n),
-            ints.map(v => java.lang.Integer.valueOf(v.toInt))
-              .toSet.asJava))
-        case (TableLog.StrRange(n, lo, hi, hiExcl), BINARY)
-            if isStringish(p) =>
-          val col = FilterApi.binaryColumn(n)
-          (lo.map(l => FilterApi.gtEq(col,
-              Binary.fromString(l)): FilterPredicate).toSeq ++
-            hi.map(h => (if (hiExcl)
-                FilterApi.lt(col, Binary.fromString(h))
-              else FilterApi.ltEq(col,
-                Binary.fromString(h))): FilterPredicate))
-            .reduceOption(FilterApi.and(_, _))
-        case (TableLog.StrIn(n, vs), BINARY)
-            if isStringish(p) && vs.nonEmpty =>
-          Some(FilterApi.in(FilterApi.binaryColumn(n),
-            vs.map(Binary.fromString).toSet.asJava))
-        case (TableLog.NullCheck(n, isNull), INT64) =>
-          val col = FilterApi.longColumn(n)
-          Some(if (isNull) FilterApi.eq(col,
-              null.asInstanceOf[java.lang.Long]): FilterPredicate
-            else FilterApi.notEq(col,
-              null.asInstanceOf[java.lang.Long]))
-        case (TableLog.NullCheck(n, isNull), INT32) =>
-          val col = FilterApi.intColumn(n)
-          Some(if (isNull) FilterApi.eq(col,
-              null.asInstanceOf[java.lang.Integer]): FilterPredicate
-            else FilterApi.notEq(col,
-              null.asInstanceOf[java.lang.Integer]))
-        case (TableLog.NullCheck(n, isNull), BINARY) =>
-          val col = FilterApi.binaryColumn(n)
-          Some(if (isNull) FilterApi.eq(col,
-              null.asInstanceOf[Binary]): FilterPredicate
-            else FilterApi.notEq(col, null.asInstanceOf[Binary]))
-        case (TableLog.NumNotIn(n, vs), INT64) if vs.nonEmpty =>
-          val col = FilterApi.longColumn(n)
-          vs.map(v => FilterApi.notEq(col,
-            java.lang.Long.valueOf(v)): FilterPredicate)
-            .reduceOption(FilterApi.and(_, _))
-        case (TableLog.NumNotIn(n, vs), INT32) if vs.nonEmpty =>
-          val ints = vs.filter(inIntRange) // out-of-range can't match
-          val col = FilterApi.intColumn(n)
-          ints.map(v => FilterApi.notEq(col,
-            java.lang.Integer.valueOf(v.toInt)): FilterPredicate)
-            .reduceOption(FilterApi.and(_, _))
-        case (TableLog.StrNotIn(n, vs), BINARY)
-            if isStringish(p) && vs.nonEmpty =>
-          val col = FilterApi.binaryColumn(n)
-          vs.map(v => FilterApi.notEq(col,
-            Binary.fromString(v)): FilterPredicate)
-            .reduceOption(FilterApi.and(_, _))
-        case _ => None
-      }
+    def str(c: String): Boolean = types.get(c).contains("string")
+    def all(fs: Seq[Filter], f: (Filter, Filter) => Filter) =
+      fs.reduceOption(f)
+    def leaf(c: TableLog.RgConstraint): Option[Filter] = c match {
+      case TableLog.NumRange(n, lo, hi) =>
+        all(lo.flatMap(num(n, _)).map(GreaterThanOrEqual(n, _)).toSeq ++
+          hi.flatMap(num(n, _)).map(LessThanOrEqual(n, _)), And)
+      case TableLog.NumIn(n, vs) =>
+        val xs = vs.flatMap(num(n, _))
+        if (xs.isEmpty) None else Some(In(n, xs.toArray))
+      case TableLog.NumNotIn(n, vs) =>
+        all(vs.flatMap(num(n, _)).map(v => Not(EqualTo(n, v))), And)
+      case TableLog.StrRange(n, lo, hi, hiExcl) if str(n) =>
+        all(lo.map(GreaterThanOrEqual(n, _)).toSeq ++
+          hi.map(h => if (hiExcl) LessThan(n, h) else LessThanOrEqual(n, h)),
+          And)
+      case TableLog.StrIn(n, vs) if str(n) && vs.nonEmpty =>
+        Some(In(n, vs.toArray))
+      case TableLog.StrNotIn(n, vs) if str(n) =>
+        all(vs.map(v => Not(EqualTo(n, v))), And)
+      case TableLog.NullCheck(n, isNull) if types.contains(n) =>
+        Some(if (isNull) IsNull(n) else IsNotNull(n))
+      case _ => None
     }
-    def top(c: TableLog.RgConstraint): Option[FilterPredicate] = c match {
+    constraints.flatMap {
       case TableLog.RgOr(bs) =>
-        // every branch must convert, or the disjunction drops whole
         val ps = bs.map(leaf)
         if (ps.isEmpty || ps.exists(_.isEmpty)) None
-        else ps.flatten.reduceOption(FilterApi.or(_, _))
+        else all(ps.flatten, Or)
       case l => leaf(l)
     }
-    constraints.flatMap(top).reduceOption(FilterApi.and(_, _))
   }
 
-  /** Page-skip accounting (local-mode diagnostic, like
-    * [[indexFooterOpens]]): rows decoded vs rows the kept row groups
-    * hold. */
-  private[graft] val pageFilteredRows =
-    new java.util.concurrent.atomic.LongAdder
-  private[graft] val pageTotalRows =
-    new java.util.concurrent.atomic.LongAdder
-
-  /** `ParquetFileReader.readFilteredRowGroup(Int, RowRanges)` — its
-    * declared return type is a package-private class, so the call goes
-    * through reflection and upcasts to the public interface. */
-  private lazy val filteredRowGroupMh =
-    classOf[org.apache.parquet.hadoop.ParquetFileReader]
-      .getMethod("readFilteredRowGroup", classOf[Int],
-        classOf[org.apache.parquet.internal.filter2.columnindex
-          .RowRanges])
-
-  /** Scan exactly the given slices — one distributed job, ≤
-    * [[rgsPerTask]] row groups per task. Schema evolution across files
-    * null-fills (a file missing a union column emits nulls for it); a
-    * TYPE conflict fails loudly in the task. `emitPos` appends
-    * `__graft_fn` (file basename) and `__graft_ridx` (file-ordinal row
-    * index, rebased from the slice's start offset) — the join identity
-    * deletion vectors use, so a DV-carrying file can be read
-    * PARTIALLY. A non-empty `columns` projection reads only those
-    * columns' pages (a point fetch on a wide table touches 2 column
-    * chunks, not 200 — the custom scan materializes rows eagerly, so
-    * Catalyst's own column pruning cannot reach inside it). */
+  /** Scan exactly the given slices through Spark's parquet reader — one
+    * distributed job, ≤ [[rgsPerTask]] row groups per task, each run of
+    * contiguous kept row groups one byte-range split. Schema evolution
+    * across files null-fills (a file missing a union column reads nulls
+    * for it) and widens narrower files; a type the reader cannot widen
+    * fails loudly in the task. `emitPos` appends `__graft_ridx` (the
+    * reader's file-ordinal row index) and `__graft_fn` (file basename) —
+    * the join identity deletion vectors use, so a DV-carrying file can
+    * be read PARTIALLY. A non-empty `columns` projection reads only
+    * those columns' pages; `constraints` push down as source filters for
+    * page skipping ([[pushedFilters]]). */
   private[operators] def scanSlices(spark: SparkSession,
       slices: Seq[RgSlice], unionCols: Seq[(String, String)],
       columns: Seq[String] = Nil, emitPos: Boolean = false,
       constraints: Seq[TableLog.RgConstraint] = Nil): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{FilePartition,
+      PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat
     val wanted = wantedCols(unionCols, columns)
-    val base = StructType(wanted.map { case (n, dt) =>
+    val data = StructType(wanted.map { case (n, dt) =>
       StructField(n, DataType.fromDDL(dt), nullable = true)
     })
+    // the reader fills its row-index column like a column the file
+    // lacks, which it only accepts as nullable
+    val required =
+      if (!emitPos) data
+      else data.add(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
+        LongType, nullable = true)
+    val partition =
+      if (!emitPos) new StructType()
+      else new StructType().add("__graft_fn", StringType, nullable = false)
     val schema =
-      if (!emitPos) base
-      else StructType(base.fields :+
-        StructField("__graft_fn", StringType, nullable = false) :+
-        StructField("__graft_ridx", LongType, nullable = false))
+      if (!emitPos) data
+      else data.add("__graft_ridx", LongType, nullable = false)
+        .add("__graft_fn", StringType, nullable = false)
     if (slices.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val read = SparkInternals.parquetReader(spark, required, partition,
+      pushedFilters(constraints, wanted.toMap))
+    // planning knows row-group ordinals, not byte offsets (it opens no
+    // footer): each split goes out as [first rg, first rg + run length)
+    // and the task resolves it against the file's own footer
     val tasks = slices.groupBy(_.file).toSeq.sortBy(_._1)
       .flatMap { case (f, ss) =>
-        ss.sortBy(_.rg).grouped(rgsPerTask)
-          .map(g => (f, g.map(s => (s.rg, s.start))))
+        ss.map(_.rg).sorted.grouped(rgsPerTask).map(f -> _)
       }
-    val wantedLocal = wanted
-    val emitPosLocal = emitPos
-    val constraintsLocal = constraints
-    val rdd = spark.sparkContext
-      .parallelize(tasks, math.max(1, tasks.size))
-      .flatMap { case (f, parts) =>
-        taskSliceRows(f, parts, conf.value, wantedLocal, emitPosLocal,
-          constraintsLocal)
-      }
-    spark.createDataFrame(rdd, schema)
-  }
-
-  /** Executor-side selective scan of `parts` (rg index, start offset) in
-    * `file`, emitting rows in `wanted` order with nulls for columns the
-    * file predates. The reader closes on task completion (and eagerly on
-    * exhaustion). */
-  private def taskSliceRows(file: String, parts: Seq[(Int, Long)],
-      conf: org.apache.hadoop.conf.Configuration,
-      wanted: Seq[(String, String)], emitPos: Boolean,
-      constraints: Seq[TableLog.RgConstraint] = Nil): Iterator[Row] = {
-    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.io.ColumnIOFactory
-    import scala.jdk.CollectionConverters._
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file), conf))
-    var closed = false
-    def close(): Unit = if (!closed) { closed = true; reader.close() }
-    val tc = org.apache.spark.TaskContext.get()
-    if (tc != null) tc.addTaskCompletionListener[Unit](_ => close())
-    val full = reader.getFooter.getFileMetaData.getSchema
-    val fileCols = full.getFields.asScala.map(_.getName).toSet
-    val have = wanted.filter(w => fileCols(w._1))
-    // per-column upcast into the plan's (possibly widened) type; a file
-    // whose type neither equals nor widens into the plan's fails loudly
-    val adapters: Map[String, Any => Any] = have.map { case (n, dt) =>
-      val got = sparkTypeOf(full.getType(full.getFieldIndex(n)))
-        .catalogString
-      require(got == dt || widenType(got, dt).contains(dt),
-        s"type drift on column $n in $file: $got, plan wants $dt")
-      n -> (if (got == dt) identity[Any] _ else upcastTo(dt))
-    }.toMap
-    val blocks = reader.getFooter.getBlocks
-    val nRgs = blocks.size
-    val fname = new org.apache.hadoop.fs.Path(file).getName
-    if (have.isEmpty) {
-      // nothing to decode from this file: emit null rows by count only
-      // (no data page leaves disk)
-      val out = parts.iterator.flatMap { case (i, start) =>
-        require(i >= 0 && i < nRgs, s"row group $i out of range in $file")
-        val n = blocks.get(i).getRowCount
-        Iterator.range(0L, n).map { r =>
-          val base: Seq[Any] = wanted.map(_ => null)
-          Row.fromSeq(if (emitPos) base :+ fname :+ (start + r) else base)
-        }
-      }
-      return new Iterator[Row] {
-        def hasNext: Boolean = { val h = out.hasNext; if (!h) close(); h }
-        def next(): Row = out.next()
-      }
+    val parts = tasks.zipWithIndex.map { case ((f, rgs), i) =>
+      val pv =
+        if (!emitPos) org.apache.spark.sql.catalyst.InternalRow.empty
+        else org.apache.spark.sql.catalyst.InternalRow(
+          org.apache.spark.unsafe.types.UTF8String.fromString(
+            new org.apache.hadoop.fs.Path(f).getName))
+      val runs = rgs.foldLeft(List.empty[(Int, Int)]) {
+        case ((first, n) :: done, rg) if first + n == rg =>
+          (first, n + 1) :: done
+        case (done, rg) => (rg, 1) :: done
+      }.reverse
+      FilePartition(i, runs.map { case (first, n) =>
+        split(f, first, n, 0L, pv)
+      }.toArray)
     }
-    val haveSet = have.map(_._1).toSet
-    val msg = new org.apache.parquet.schema.MessageType(full.getName,
-      full.getFields.asScala.filter(f => haveSet(f.getName)).asJava)
-    reader.setRequestedSchema(msg)
-    val msgIdx = (0 until msg.getFieldCount)
-      .map(j => msg.getType(j).getName -> j).toMap
-    val convs = Array.tabulate(msg.getFieldCount)(j =>
-      fieldConverter(msg.getType(j), j))
-    val io = new ColumnIOFactory().getColumnIO(msg)
-    // page-level pruning: constraints → FilterPredicate over the FILE
-    // schema → ColumnIndex row ranges; a group whose ranges cover every
-    // row reads plain (no synchronization overhead). Failures fall back
-    // to the whole group — skipping may lose rows, reading more never.
-    val pageFilter =
-      if (constraints.isEmpty) None
-      else pageFilterFor(full, constraints)
-        .map(org.apache.parquet.filter2.compat.FilterCompat.get)
-    val inner = parts.iterator.flatMap { case (i, start) =>
-      require(i >= 0 && i < nRgs, s"row group $i out of range in $file")
-      val block = blocks.get(i)
-      val (pages, rowIdx) = pageFilter match {
-        case Some(filter) =>
-          try {
-            import scala.jdk.CollectionConverters._
-            val ranges = org.apache.parquet.internal.filter2.columnindex
-              .ColumnIndexFilter.calculateRowRanges(filter,
-                reader.getColumnIndexStore(i),
-                block.getColumns.asScala.map(_.getPath).toSet.asJava,
-                block.getRowCount)
-            pageTotalRows.add(block.getRowCount)
-            if (ranges.rowCount() >= block.getRowCount)
-              (reader.readRowGroup(i), None)
-            else {
-              // the 2-arg readFilteredRowGroup's declared return class
-              // is package-private; go through the public interface
-              val ps = filteredRowGroupMh.invoke(reader,
-                Int.box(i), ranges)
-                .asInstanceOf[org.apache.parquet.column.page
-                  .PageReadStore]
-              pageFilteredRows.add(block.getRowCount - ps.getRowCount)
-              (ps, Option(ps.getRowIndexes.orElse(null)))
-            }
-          } catch {
-            case _: Exception => (reader.readRowGroup(i), None)
-          }
-        case None => (reader.readRowGroup(i), None)
-      }
-      val rr = io.getRecordReader(pages, new GroupRecordConverter(msg))
-      Iterator.range(0L, pages.getRowCount).map { r =>
-        val g = rr.read()
-        // positions rebase through the filtered store's row indexes so
-        // deletion vectors keep addressing the right rows
-        val pos = rowIdx.map(_.nextLong()).getOrElse(r)
-        val base: Seq[Any] = wanted.map { case (n, _) =>
-          msgIdx.get(n) match {
-            case Some(j) =>
-              if (g.getFieldRepetitionCount(j) == 0) null
-              else adapters(n)(convs(j)(g))
-            case None => null
-          }
-        }
-        Row.fromSeq(if (emitPos) base :+ fname :+ (start + pos) else base)
-      }
-    }
-    new Iterator[Row] {
-      def hasNext: Boolean = {
-        val h = inner.hasNext
-        if (!h) close()
-        h
-      }
-      def next(): Row = inner.next()
-    }
-  }
-
-  // ===== legacy single-column index API ================================
-  //
-  // The wide index above is what the log's readers use; these per-column
-  // builders and pruned readers remain as the standalone surface for
-  // ad-hoc parquet directories (and the specs that pin the index shape).
-  // Their prune is the same DISTRIBUTED filter, never a driver loop.
-
-  /** Per-ROW-GROUP zone-map index over a numeric column — (file, rg,
-    * zmin, zmax, n_rows) from the parquet footers only, distributed one
-    * file per task. Row groups lacking stats for `column` (or whose
-    * min/max is non-numeric) get null bounds — [[readRowGroupsPruned]]
-    * keeps them conservatively. */
-  def rowGroupIndexFiles(spark: SparkSession, files: Seq[String],
-      column: String): DataFrame =
-    narrowView(buildWideIndex(spark, files.map(f => (f, f))), column,
-      "lmin", "lmax")
-
-  /** Per-ROW-GROUP zone-map index over a STRING column — the
-    * [[rowGroupIndexFiles]] twin for the most common lake predicate
-    * shape (date strings, category codes, url prefixes). Bounds fold in
-    * UTF-8 BYTE order (the order parquet stats and Spark's string
-    * comparison use — Java String `<` disagrees beyond the BMP). */
-  def rowGroupIndexStringFiles(spark: SparkSession, files: Seq[String],
-      column: String): DataFrame =
-    narrowView(buildWideIndex(spark, files.map(f => (f, f))), column,
-      "smin", "smax")
-
-  /** Single-column (file, rg, zmin, zmax, n_rows) view of a wide index.
-    * EVERY (file, rg) appears — a file that predates the column (or a
-    * column with no stats) carries null bounds and is kept
-    * conservatively by the pruned readers. */
-  private def narrowView(wide: DataFrame, column: String,
-      minCol: String, maxCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val pairs = wide.filter(col("rg") >= 0)
-      .select("file", "rg", "n_rows").distinct()
-    val stats = wide.filter(col("column") === column && col("rg") >= 0)
-      .select(col("file"), col("rg"), col(minCol).as("zmin"),
-        col(maxCol).as("zmax"))
-    pairs.join(stats, Seq("file", "rg"), "left")
-      .select("file", "rg", "zmin", "zmax", "n_rows")
-  }
-
-  /** Range-pruned read off a [[rowGroupIndexFiles]] index: scans ONLY row
-    * groups whose [zmin, zmax] intersects [lo, hi] (null-bounds groups
-    * kept conservatively — skipping may lose rows, keeping never does).
-    * The caller re-applies the exact predicate. Returns (frame,
-    * rgOpened, rgTotal, filesOpened). Zero kept groups returns an empty
-    * frame WITH the table schema, so downstream plans analyze cleanly.
-    * `columns` non-empty = a PROJECTION pushed into the scan: only those
-    * columns' pages are read. */
-  def readRowGroupsPruned(spark: SparkSession, index: DataFrame,
-      lo: Long, hi: Long, columns: Seq[String] = Nil)
-      : (DataFrame, Long, Long, Int) = {
-    import org.apache.spark.sql.functions.{col, lit}
-    prunedScanNarrow(spark, index,
-      col("zmin") <= lit(hi) && col("zmax") >= lit(lo), columns)
-  }
-
-  /** [[readRowGroupsPruned]] for a STRING index ([[
-    * rowGroupIndexStringFiles]]): lexicographic [lo, hi] intersection in
-    * UTF-8 byte order — matching ORDER BY / BETWEEN semantics on
-    * strings. */
-  def readRowGroupsPrunedString(spark: SparkSession, index: DataFrame,
-      lo: String, hi: String, columns: Seq[String] = Nil)
-      : (DataFrame, Long, Long, Int) =
-    readRowGroupsPrunedStringBounds(spark, index, Some(lo), Some(hi),
-      columns)
-
-  /** [[readRowGroupsPrunedString]] with OPTIONAL bounds: `None` skips
-    * that side of the comparison, so `col >= lo` predicates prune
-    * exactly without inventing a fake top string. */
-  def readRowGroupsPrunedStringBounds(spark: SparkSession,
-      index: DataFrame, lo: Option[String], hi: Option[String],
-      columns: Seq[String] = Nil): (DataFrame, Long, Long, Int) = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val conds = lo.map(l => col("zmax") >= lit(l)).toSeq ++
-      hi.map(h => col("zmin") <= lit(h)).toSeq
-    prunedScanNarrow(spark, index,
-      conds.reduceOption(_ && _).getOrElse(lit(true)), columns)
-  }
-
-  /** IN-list-pruned read off a numeric index: keeps a row group iff ANY
-    * probe value falls inside its [zmin, zmax] — the point-lookup shape
-    * ([[graft.operators.TableLog.readPointLookup]] composes it with the
-    * bloom file prune). The probe runs DISTRIBUTED as an `exists` over a
-    * literal array — never an O(|index|·|values|) driver loop. */
-  def readRowGroupsPrunedIn(spark: SparkSession, index: DataFrame,
-      values: Seq[Long], columns: Seq[String] = Nil)
-      : (DataFrame, Long, Long, Int) = {
-    import org.apache.spark.sql.functions.{col, exists, lit}
-    prunedScanNarrow(spark, index,
-      exists(lit(values.toArray),
-        v => col("zmin") <= v && v <= col("zmax")), columns)
-  }
-
-  /** [[readRowGroupsPrunedIn]] for a STRING index (UTF-8 byte order). */
-  def readRowGroupsPrunedInString(spark: SparkSession, index: DataFrame,
-      values: Seq[String], columns: Seq[String] = Nil)
-      : (DataFrame, Long, Long, Int) = {
-    import org.apache.spark.sql.functions.{col, exists, lit}
-    prunedScanNarrow(spark, index,
-      exists(lit(values.toArray),
-        v => col("zmin") <= v && v <= col("zmax")), columns)
-  }
-
-  /** Shared narrow prune+scan core: `keepCond` judges a non-null-bounds
-    * index row DISTRIBUTED (Column filter, not a collected loop);
-    * null-bounds rows are always kept. The driver receives only the kept
-    * (file, rg) pairs. */
-  private def prunedScanNarrow(spark: SparkSession, index: DataFrame,
-      keepCond: Column, columns: Seq[String] = Nil)
-      : (DataFrame, Long, Long, Int) = {
-    import org.apache.spark.sql.functions.col
-    val cached = index.persist()
-    try {
-      val kept = cached
-        .filter(col("zmin").isNull || col("zmax").isNull || keepCond)
-        .select("file", "rg").collect()
-        .map(r => (r.getString(0), r.getInt(1))).toSet
-      val total = cached.count()
-      val anyFile = cached.select("file").limit(1).collect()
-        .headOption.map(_.getString(0))
-      require(anyFile.isDefined,
-        "row-group pruned read needs a non-empty index")
-      scanKeep(spark, kept, total, anyFile.get, columns)
-    } finally cached.unpersist()
-  }
-
-  /** Scan a keep set (possibly intersected across constraints). Returns
-    * (frame, rgOpened, rgTotal, filesOpened). */
-  private[operators] def scanKeep(spark: SparkSession,
-      keep: Set[(String, Int)], total: Long, anyFile: String,
-      columns: Seq[String] = Nil): (DataFrame, Long, Long, Int) = {
-    val byFile = keep.toSeq.groupBy(_._1).view
-      .mapValues(_.map(_._2).sorted).toSeq.sortBy(_._1)
-    val df =
-      if (keep.isEmpty) {
-        val conf = spark.sparkContext.hadoopConfiguration
-        callerOrder(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row],
-          sparkSchemaOf(project(
-            parquetSchemaOf(anyFile, conf), columns))), columns)
-      } else readRowGroups(spark, byFile, columns)
-    (df, keep.size.toLong, total, byFile.size)
-  }
-
-  /** Projected frames come back in the CALLER's column order (the
-    * parquet-side subset stays in table order for the readers). */
-  private def callerOrder(df: DataFrame, columns: Seq[String]): DataFrame =
-    if (columns.isEmpty) df
-    else df.select(columns.map(org.apache.spark.sql.functions.col): _*)
-
-  /** Scan exactly the given (file, row-group indices) — one distributed
-    * job, ≤ [[rgsPerTask]] row groups per task. All files must carry the
-    * SAME parquet schema (the strict ad-hoc contract; the log's own
-    * reads go through [[scanSlices]], which tolerates add-column
-    * evolution). A non-empty `columns` projection reads ONLY those
-    * columns' pages. */
-  def readRowGroups(spark: SparkSession,
-      plan: Seq[(String, Seq[Int])],
-      columns: Seq[String] = Nil): DataFrame = {
-    require(plan.nonEmpty, "readRowGroups needs a non-empty plan")
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val msg = parquetSchemaOf(plan.head._1,
-      spark.sparkContext.hadoopConfiguration)
-    val schema = sparkSchemaOf(project(msg, columns))
-    val expect = msg.toString
-    val tasks = plan.flatMap { case (f, rgs) =>
-      rgs.sorted.grouped(rgsPerTask).map(f -> _.toSeq)
+    val byteRange: PartitionedFile => Iterator[
+        org.apache.spark.sql.catalyst.InternalRow] = { run =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        run.toPath, conf.value)
+      val blocks = footerOf(in).getBlocks
+      val (first, last) = (run.start.toInt, (run.start + run.length - 1).toInt)
+      require(first >= 0 && last < blocks.size,
+        s"row groups $first..$last out of range in ${run.toPath}")
+      // parquet assigns a row group to the split holding its midpoint
+      val from = blocks.get(first).getStartingPos
+      val until = blocks.get(last).getStartingPos +
+        blocks.get(last).getCompressedSize
+      read(run.copy(start = from, length = until - from,
+        fileSize = in.getLength))
     }
-    val cols = columns // stable local for the task closure
-    val rdd = spark.sparkContext
-      .parallelize(tasks, math.max(1, tasks.size))
-      .flatMap { case (f, rgs) =>
-        taskRows(f, rgs, conf.value, expect, cols)
-      }
-    callerOrder(spark.createDataFrame(rdd, schema), columns)
+    SparkInternals.fileScanFrame(spark, byteRange, parts, schema)
   }
-
-  /** Field subset of `msg` in TABLE order (empty `columns` = all);
-    * unknown names fail loudly. */
-  private def project(msg: org.apache.parquet.schema.MessageType,
-      columns: Seq[String]): org.apache.parquet.schema.MessageType =
-    if (columns.isEmpty) msg
-    else {
-      import scala.jdk.CollectionConverters._
-      val want = columns.toSet
-      val known = msg.getFields.asScala.map(_.getName).toSet
-      val missing = want -- known
-      require(missing.isEmpty,
-        s"projection names unknown columns: ${missing.mkString(", ")}")
-      new org.apache.parquet.schema.MessageType(msg.getName,
-        msg.getFields.asScala.filter(f => want(f.getName)).asJava)
-    }
-
-  // ===== executor-side selective scan ==================================
-
-  /** Iterator over the rows of `rgs` in `file`, reading only those row
-    * groups' pages. The reader closes on task completion (and eagerly on
-    * exhaustion). */
-  private def taskRows(file: String, rgs: Seq[Int],
-      conf: org.apache.hadoop.conf.Configuration,
-      expectSchema: String, columns: Seq[String]): Iterator[Row] = {
-    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.io.ColumnIOFactory
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file), conf))
-    var closed = false
-    def close(): Unit = if (!closed) { closed = true; reader.close() }
-    val tc = org.apache.spark.TaskContext.get()
-    if (tc != null) tc.addTaskCompletionListener[Unit](_ => close())
-    val full = reader.getFooter.getFileMetaData.getSchema
-    require(full.toString == expectSchema,
-      s"schema drift: $file does not match the plan's first file")
-    // projection pushdown: the reader then fetches ONLY these columns'
-    // chunks per readRowGroup — unread pages never leave disk
-    val msg = project(full, columns)
-    if (columns.nonEmpty) reader.setRequestedSchema(msg)
-    val nRgs = reader.getFooter.getBlocks.size
-    val convs = Array.tabulate(msg.getFieldCount)(i =>
-      fieldConverter(msg.getType(i), i))
-    val io = new ColumnIOFactory().getColumnIO(msg)
-    val inner = rgs.iterator.flatMap { i =>
-      require(i >= 0 && i < nRgs, s"row group $i out of range in $file")
-      val pages = reader.readRowGroup(i)
-      val rr = io.getRecordReader(pages, new GroupRecordConverter(msg))
-      Iterator.range(0L, pages.getRowCount).map { _ =>
-        val g = rr.read()
-        Row.fromSeq((0 until msg.getFieldCount).map(j =>
-          if (g.getFieldRepetitionCount(j) == 0) null else convs(j)(g)))
-      }
-    }
-    new Iterator[Row] {
-      def hasNext: Boolean = {
-        val h = inner.hasNext
-        if (!h) close()
-        h
-      }
-      def next(): Row = inner.next()
-    }
-  }
-
-  /** Value converter for one field — scalars mirror Spark's own parquet
-    * type mapping (so a selective scan unions cleanly with a
-    * `spark.read.parquet` of sibling files); nested shapes cover what
-    * Spark WRITES: 3-level LIST, 3-level MAP, struct. The converter
-    * assumes the field is PRESENT (repetition count > 0) — the caller
-    * null-checks. */
-  private def fieldConverter(t: org.apache.parquet.schema.Type,
-      idx: Int): org.apache.parquet.example.data.Group => Any =
-    if (t.isPrimitive) primitiveConverter(t, idx)
-    else {
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      val gt = t.asGroupType()
-      t.getLogicalTypeAnnotation match {
-        case _: LogicalTypeAnnotation.ListLogicalTypeAnnotation =>
-          val rep = listRepeated(gt)
-          val elemT = rep.getType(0)
-          val ec = fieldConverter(elemT, 0)
-          g => {
-            val lg = g.getGroup(idx, 0)
-            val n = lg.getFieldRepetitionCount(0)
-            val out = new Array[Any](n)
-            var i = 0
-            while (i < n) {
-              val entry = lg.getGroup(0, i)
-              out(i) =
-                if (entry.getFieldRepetitionCount(0) == 0) null
-                else ec(entry)
-              i += 1
-            }
-            out.toSeq
-          }
-        case _: LogicalTypeAnnotation.MapLogicalTypeAnnotation =>
-          val kv = mapKeyValue(gt)
-          val kc = fieldConverter(kv.getType(0), 0)
-          val vc = fieldConverter(kv.getType(1), 1)
-          g => {
-            val mg = g.getGroup(idx, 0)
-            val n = mg.getFieldRepetitionCount(0)
-            (0 until n).map { i =>
-              val e = mg.getGroup(0, i)
-              val v = if (e.getFieldRepetitionCount(1) == 0) null
-                      else vc(e)
-              kc(e) -> v
-            }.toMap
-          }
-        case _ => // plain group = struct
-          requireStruct(t)
-          val convs = Array.tabulate(gt.getFieldCount)(j =>
-            fieldConverter(gt.getType(j), j))
-          g => {
-            val sg = g.getGroup(idx, 0)
-            Row.fromSeq((0 until gt.getFieldCount).map(j =>
-              if (sg.getFieldRepetitionCount(j) == 0) null
-              else convs(j)(sg)))
-          }
-      }
-    }
-
-  /** Scalar converter (shared by flat and nested paths). */
-  private def primitiveConverter(t: org.apache.parquet.schema.Type,
-      idx: Int): org.apache.parquet.example.data.Group => Any = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.LogicalTypeAnnotation._
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.Type.Repetition
-    require(t.getRepetition != Repetition.REPEATED,
-      s"row-group scan: legacy 2-level repeated field unsupported: $t")
-    val p = t.asPrimitiveType()
-    val ann = p.getLogicalTypeAnnotation
-    p.getPrimitiveTypeName match {
-      case BOOLEAN => g => g.getBoolean(idx, 0)
-      case INT32 => ann match {
-        case _: DateLogicalTypeAnnotation => g =>
-          java.sql.Date.valueOf(
-            java.time.LocalDate.ofEpochDay(g.getInteger(idx, 0).toLong))
-        case d: DecimalLogicalTypeAnnotation => g =>
-          java.math.BigDecimal.valueOf(g.getInteger(idx, 0).toLong,
-            d.getScale)
-        case i: IntLogicalTypeAnnotation if i.getBitWidth == 8 => g =>
-          g.getInteger(idx, 0).toByte
-        case i: IntLogicalTypeAnnotation if i.getBitWidth == 16 => g =>
-          g.getInteger(idx, 0).toShort
-        case _ => g => g.getInteger(idx, 0)
-      }
-      case INT64 => ann match {
-        case ts: TimestampLogicalTypeAnnotation =>
-          val toUs: Long => Long = ts.getUnit match {
-            case LogicalTypeAnnotation.TimeUnit.MILLIS => _ * 1000L
-            case LogicalTypeAnnotation.TimeUnit.MICROS => identity
-            case _ => Math.floorDiv(_, 1000L) // NANOS
-          }
-          if (ts.isAdjustedToUTC) g =>
-            microsToTimestamp(toUs(g.getLong(idx, 0)))
-          else g => microsToLocalDateTime(toUs(g.getLong(idx, 0)))
-        case d: DecimalLogicalTypeAnnotation => g =>
-          java.math.BigDecimal.valueOf(g.getLong(idx, 0), d.getScale)
-        case _ => g => g.getLong(idx, 0)
-      }
-      case FLOAT => g => g.getFloat(idx, 0)
-      case DOUBLE => g => g.getDouble(idx, 0)
-      case BINARY | FIXED_LEN_BYTE_ARRAY => ann match {
-        case _: StringLogicalTypeAnnotation |
-             _: EnumLogicalTypeAnnotation |
-             _: JsonLogicalTypeAnnotation => g =>
-          g.getBinary(idx, 0).toStringUsingUTF8
-        case d: DecimalLogicalTypeAnnotation => g =>
-          new java.math.BigDecimal(
-            new java.math.BigInteger(g.getBinary(idx, 0).getBytes),
-            d.getScale)
-        case _ => g => g.getBinary(idx, 0).getBytes
-      }
-      case INT96 => g => // legacy Spark timestamp (julian day + nanos)
-        microsToTimestamp(int96ToMicros(g.getInt96(idx, 0)))
-      case other => sys.error(s"row-group scan: unsupported primitive " +
-        s"$other for field ${t.getName}")
-    }
-  }
-
-  /** [[fieldConverter]]'s CATALYST twin: values in InternalRow
-    * representation (UTF8String, epoch-day ints, micros longs,
-    * sql.types.Decimal, GenericArrayData / ArrayBasedMapData /
-    * GenericInternalRow for the nested shapes) — what a DataSource-v2
-    * PartitionReader emits ([[graft.sources.LakeStreamProvider]])
-    * without dragging encoder machinery onto the executors. */
-  private[graft] def catalystConverter(t: org.apache.parquet.schema.Type,
-      idx: Int): org.apache.parquet.example.data.Group => Any =
-    if (t.isPrimitive) catalystPrimitive(t, idx)
-    else {
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-      import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData,
-        GenericArrayData}
-      val gt = t.asGroupType()
-      t.getLogicalTypeAnnotation match {
-        case _: LogicalTypeAnnotation.ListLogicalTypeAnnotation =>
-          val rep = listRepeated(gt)
-          val ec = catalystConverter(rep.getType(0), 0)
-          g => {
-            val lg = g.getGroup(idx, 0)
-            val n = lg.getFieldRepetitionCount(0)
-            val out = new Array[Any](n)
-            var i = 0
-            while (i < n) {
-              val entry = lg.getGroup(0, i)
-              out(i) =
-                if (entry.getFieldRepetitionCount(0) == 0) null
-                else ec(entry)
-              i += 1
-            }
-            new GenericArrayData(out)
-          }
-        case _: LogicalTypeAnnotation.MapLogicalTypeAnnotation =>
-          val kv = mapKeyValue(gt)
-          val kc = catalystConverter(kv.getType(0), 0)
-          val vc = catalystConverter(kv.getType(1), 1)
-          g => {
-            val mg = g.getGroup(idx, 0)
-            val n = mg.getFieldRepetitionCount(0)
-            val ks = new Array[Any](n)
-            val vs = new Array[Any](n)
-            var i = 0
-            while (i < n) {
-              val e = mg.getGroup(0, i)
-              ks(i) = kc(e)
-              vs(i) = if (e.getFieldRepetitionCount(1) == 0) null
-                      else vc(e)
-              i += 1
-            }
-            new ArrayBasedMapData(new GenericArrayData(ks),
-              new GenericArrayData(vs))
-          }
-        case _ => // plain group = struct
-          requireStruct(t)
-          val convs = Array.tabulate(gt.getFieldCount)(j =>
-            catalystConverter(gt.getType(j), j))
-          g => {
-            val sg = g.getGroup(idx, 0)
-            val vals = new Array[Any](gt.getFieldCount)
-            var j = 0
-            while (j < gt.getFieldCount) {
-              vals(j) =
-                if (sg.getFieldRepetitionCount(j) == 0) null
-                else convs(j)(sg)
-              j += 1
-            }
-            new GenericInternalRow(vals)
-          }
-      }
-    }
-
-  private def catalystPrimitive(t: org.apache.parquet.schema.Type,
-      idx: Int): org.apache.parquet.example.data.Group => Any = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.LogicalTypeAnnotation._
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.Type.Repetition
-    require(t.getRepetition != Repetition.REPEATED,
-      s"row-group scan: legacy 2-level repeated field unsupported: $t")
-    val p = t.asPrimitiveType()
-    val ann = p.getLogicalTypeAnnotation
-    p.getPrimitiveTypeName match {
-      case BOOLEAN => g => g.getBoolean(idx, 0)
-      case INT32 => ann match {
-        case _: DateLogicalTypeAnnotation => g => g.getInteger(idx, 0)
-        case d: DecimalLogicalTypeAnnotation => g =>
-          org.apache.spark.sql.types.Decimal(
-            java.math.BigDecimal.valueOf(g.getInteger(idx, 0).toLong,
-              d.getScale))
-        case i: IntLogicalTypeAnnotation if i.getBitWidth == 8 => g =>
-          g.getInteger(idx, 0).toByte
-        case i: IntLogicalTypeAnnotation if i.getBitWidth == 16 => g =>
-          g.getInteger(idx, 0).toShort
-        case _ => g => g.getInteger(idx, 0)
-      }
-      case INT64 => ann match {
-        case ts: TimestampLogicalTypeAnnotation =>
-          val toUs: Long => Long = ts.getUnit match {
-            case LogicalTypeAnnotation.TimeUnit.MILLIS => _ * 1000L
-            case LogicalTypeAnnotation.TimeUnit.MICROS => identity
-            case _ => Math.floorDiv(_, 1000L) // NANOS
-          }
-          g => toUs(g.getLong(idx, 0)) // micros either way (TZ and NTZ)
-        case d: DecimalLogicalTypeAnnotation => g =>
-          org.apache.spark.sql.types.Decimal(
-            java.math.BigDecimal.valueOf(g.getLong(idx, 0), d.getScale))
-        case _ => g => g.getLong(idx, 0)
-      }
-      case FLOAT => g => g.getFloat(idx, 0)
-      case DOUBLE => g => g.getDouble(idx, 0)
-      case BINARY | FIXED_LEN_BYTE_ARRAY => ann match {
-        case _: StringLogicalTypeAnnotation |
-             _: EnumLogicalTypeAnnotation |
-             _: JsonLogicalTypeAnnotation => g =>
-          org.apache.spark.unsafe.types.UTF8String.fromBytes(
-            g.getBinary(idx, 0).getBytes)
-        case d: DecimalLogicalTypeAnnotation => g =>
-          org.apache.spark.sql.types.Decimal(
-            new java.math.BigDecimal(
-              new java.math.BigInteger(g.getBinary(idx, 0).getBytes),
-              d.getScale))
-        case _ => g => g.getBinary(idx, 0).getBytes
-      }
-      case INT96 => g => int96ToMicros(g.getInt96(idx, 0))
-      case other => sys.error(s"row-group scan: unsupported primitive " +
-        s"$other for field ${t.getName}")
-    }
-  }
-
-  private def int96ToMicros(b: org.apache.parquet.io.api.Binary): Long = {
-    val buf = java.nio.ByteBuffer.wrap(b.getBytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt
-    (julianDay - 2440588).toLong * 86400000000L + nanosOfDay / 1000L
-  }
-
-  private def microsToTimestamp(us: Long): java.sql.Timestamp = {
-    val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
-
-  private def microsToLocalDateTime(us: Long): java.time.LocalDateTime =
-    java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
-      (Math.floorMod(us, 1000000L) * 1000L).toInt,
-      java.time.ZoneOffset.UTC)
-
-  // ===== schema bridging ===============================================
-
-  /** The repeated "list" group of a 3-level parquet LIST (what Spark
-    * writes); legacy 2-level shapes fail loudly. */
-  private def listRepeated(gt: org.apache.parquet.schema.GroupType)
-      : org.apache.parquet.schema.GroupType = {
-    import org.apache.parquet.schema.Type.Repetition
-    require(gt.getFieldCount == 1 && !gt.getType(0).isPrimitive &&
-      gt.getType(0).getRepetition == Repetition.REPEATED &&
-      gt.getType(0).asGroupType().getFieldCount == 1,
-      s"row-group scan supports 3-level LIST only: $gt")
-    gt.getType(0).asGroupType()
-  }
-
-  /** The repeated key_value group of a 3-level parquet MAP. */
-  private def mapKeyValue(gt: org.apache.parquet.schema.GroupType)
-      : org.apache.parquet.schema.GroupType = {
-    import org.apache.parquet.schema.Type.Repetition
-    require(gt.getFieldCount == 1 && !gt.getType(0).isPrimitive &&
-      gt.getType(0).getRepetition == Repetition.REPEATED &&
-      gt.getType(0).asGroupType().getFieldCount == 2,
-      s"row-group scan supports 3-level MAP only: $gt")
-    gt.getType(0).asGroupType()
-  }
-
-  private def requireStruct(t: org.apache.parquet.schema.Type): Unit = {
-    import org.apache.parquet.schema.Type.Repetition
-    require(t.getRepetition != Repetition.REPEATED,
-      s"row-group scan: legacy repeated group unsupported: $t")
-  }
-
-  /** Spark type for one parquet field — scalars as
-    * [[primitiveConverter]] materializes them, nested via the 3-level
-    * LIST/MAP and struct shapes, so created frames union cleanly with
-    * `spark.read.parquet` frames of sibling files. */
-  private[operators] def sparkTypeOf(
-      t: org.apache.parquet.schema.Type): DataType =
-    if (t.isPrimitive) {
-      import org.apache.parquet.schema.LogicalTypeAnnotation._
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-      import org.apache.parquet.schema.Type.Repetition
-      require(t.getRepetition != Repetition.REPEATED,
-        s"row-group scan: legacy 2-level repeated field unsupported: $t")
-      val p = t.asPrimitiveType()
-      val ann = p.getLogicalTypeAnnotation
-      p.getPrimitiveTypeName match {
-        case BOOLEAN => BooleanType
-        case INT32 => ann match {
-          case _: DateLogicalTypeAnnotation => DateType
-          case d: DecimalLogicalTypeAnnotation =>
-            DecimalType(d.getPrecision, d.getScale)
-          case a: IntLogicalTypeAnnotation if a.getBitWidth == 8 =>
-            ByteType
-          case a: IntLogicalTypeAnnotation if a.getBitWidth == 16 =>
-            ShortType
-          case _ => IntegerType
-        }
-        case INT64 => ann match {
-          case ts: TimestampLogicalTypeAnnotation =>
-            if (ts.isAdjustedToUTC) TimestampType else TimestampNTZType
-          case d: DecimalLogicalTypeAnnotation =>
-            DecimalType(d.getPrecision, d.getScale)
-          case _ => LongType
-        }
-        case FLOAT => FloatType
-        case DOUBLE => DoubleType
-        case BINARY | FIXED_LEN_BYTE_ARRAY => ann match {
-          case _: StringLogicalTypeAnnotation |
-               _: EnumLogicalTypeAnnotation |
-               _: JsonLogicalTypeAnnotation => StringType
-          case d: DecimalLogicalTypeAnnotation =>
-            DecimalType(d.getPrecision, d.getScale)
-          case _ => BinaryType
-        }
-        case INT96 => TimestampType
-        case other => sys.error(s"row-group scan: unsupported primitive " +
-          s"$other for field ${t.getName}")
-      }
-    } else {
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      val gt = t.asGroupType()
-      t.getLogicalTypeAnnotation match {
-        case _: LogicalTypeAnnotation.ListLogicalTypeAnnotation =>
-          ArrayType(sparkTypeOf(listRepeated(gt).getType(0)),
-            containsNull = true)
-        case _: LogicalTypeAnnotation.MapLogicalTypeAnnotation =>
-          val kv = mapKeyValue(gt)
-          MapType(sparkTypeOf(kv.getType(0)), sparkTypeOf(kv.getType(1)),
-            valueContainsNull = true)
-        case _ =>
-          requireStruct(t)
-          StructType((0 until gt.getFieldCount).map(j =>
-            StructField(gt.getType(j).getName, sparkTypeOf(gt.getType(j)),
-              nullable = true)))
-      }
-    }
 
   private def parquetSchemaOf(file: String,
       conf: org.apache.hadoop.conf.Configuration)
-      : org.apache.parquet.schema.MessageType = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file), conf))
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
+      : org.apache.parquet.schema.MessageType =
+    footerOf(file, conf).getFileMetaData.getSchema
 
-  /** Spark schema for a parquet message — the same mapping the
-    * converters materialize, so created frames union cleanly with
-    * `spark.read.parquet` frames of sibling files. */
-  private[graft] def sparkSchemaOf(
-      msg: org.apache.parquet.schema.MessageType): StructType =
-    StructType((0 until msg.getFieldCount).map { i =>
-      val t = msg.getType(i)
-      // always nullable: Spark's file sources relax REQUIRED to nullable
-      // on read, and this schema must union cleanly with theirs
-      StructField(t.getName, sparkTypeOf(t), nullable = true)
-    })
+  /** A parquet file's footer through Spark's footer reader — a fraction
+    * of the cost of `ParquetFileReader.open`, which also sets up the
+    * page-reading machinery. */
+  private def footerOf(in: org.apache.parquet.hadoop.util.HadoopInputFile)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata =
+    org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+      .readFooter(in, org.apache.parquet.format.converter
+        .ParquetMetadataConverter.NO_FILTER)
+
+  private def footerOf(file: String,
+      conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata =
+    footerOf(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file), conf))
 }

@@ -600,7 +600,7 @@ object Similarity {
     }.toMap
   }
 
-  /** Codebook sidecars read DRIVER-side (parquet-mr, zero Spark jobs,
+  /** Codebook sidecars read DRIVER-side (zero Spark jobs,
     * sorted locally): a codebook is nlist rows of metadata — the old
     * spark.read + orderBy + collect paid a job AND an exchange per
     * query just to fetch it. Same driver-residency bound as before

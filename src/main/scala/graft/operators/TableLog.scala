@@ -1070,14 +1070,30 @@ object TableLog {
   /** Snapshot read with schema evolution: per-file schemas are merged
     * (`mergeSchema`), so files appended before a column existed read it
     * back as NULL — the add-column evolution contract of the lakehouse
-    * formats. Costs a footer read per file at planning; use [[read]]
-    * when the schema is known stable. */
+    * formats. Type evolution that `mergeSchema` refuses (int→bigint,
+    * float→double, a decimal scale-up) reads in the snapshot's widened
+    * union schema instead — the one the selective reads plan with — and
+    * Spark's reader widens the older files; a type that cannot widen
+    * still fails loudly. Costs a footer read per file at planning; use
+    * [[read]] when the schema is known stable. */
   def readEvolved(spark: SparkSession, dir: String,
       version: Int = -1): DataFrame = {
     val snap = snapshot(dir, version)
     val abs = snap.files.map(f => Paths.get(dir).resolve(f).toString)
-    applyDv(spark, dir,
-      spark.read.option("mergeSchema", "true").parquet(abs: _*), snap.dvs)
+    val scan =
+      try spark.read.option("mergeSchema", "true").parquet(abs: _*)
+      catch {
+        case e: org.apache.spark.SparkException
+            if e.getCondition == "CANNOT_MERGE_SCHEMAS" =>
+          val cols = Option(unionColsMemo.get((dir, snap.version)))
+            .getOrElse(snapshotUnionCols(spark, dir, snap))
+          spark.read.schema(org.apache.spark.sql.types.StructType(
+            cols.map { case (n, t) =>
+              org.apache.spark.sql.types.StructField(n,
+                org.apache.spark.sql.types.DataType.fromDDL(t))
+            })).parquet(abs: _*)
+      }
+    applyDv(spark, dir, scan, snap.dvs)
   }
 
   /** Row-level change feed between two committed versions (the
@@ -1255,14 +1271,6 @@ object TableLog {
     prunedCore(spark, dir, snapshot(dir, version),
       Seq(NumIn(column, values)), columns)
 
-  /** [[readRowGroupPrunedIn]] for STRING probes (UTF-8 order). */
-  def readRowGroupPrunedInString(spark: SparkSession, dir: String,
-      column: String, values: Seq[String], version: Int = -1,
-      columns: Seq[String] = Nil)
-      : (DataFrame, Long, Long, Int, Int) =
-    prunedCore(spark, dir, snapshot(dir, version),
-      Seq(StrIn(column, values)), columns)
-
   /** One prunable conjunct for [[readRowGroupPrunedMulti]]. A
     * [[StrRange]] with `hiExcl` treats `hi` as EXCLUSIVE — the prefix
     * predicate shape (`substr(col, 1, 7) = 'p'` ⟺ `col >= 'p' AND
@@ -1338,6 +1346,14 @@ object TableLog {
   final case class RgOr(branches: Seq[RgConstraint]) extends RgConstraint {
     def column: String = branches.map(_.column).distinct.mkString("|")
   }
+  /** A numeric probe in a DECIMAL column's unscaled space at `scale`.
+    * Only index rows of files that store that scale can disprove or
+    * prove it: a file written before a scale-up keeps its stats at its
+    * own scale, where the unscaled bounds mean other values. */
+  final case class AtScale(inner: RgConstraint, scale: Int)
+      extends RgConstraint {
+    def column: String = inner.column
+  }
 
   /** MULTI-constraint row-group pruning: every constraint's disproof is
     * a Column filter over ONE wide index, the per-(file, row-group)
@@ -1391,8 +1407,7 @@ object TableLog {
             val (verdicts, colTuples) =
               RowGroupScan.classifyLocal(rows, schema, constraints)
             val kept = verdicts.filter(v => !v.rejected && v.rg >= 0)
-              .map(v => RowGroupScan.RgSlice(v.file, v.rg, v.start,
-                v.nRows))
+              .map(v => RowGroupScan.RgSlice(v.file, v.rg))
               .sortBy(s => (s.file, s.rg))
             (kept, verdicts.count(_.rg >= 0).toLong,
               if (memoHit.isEmpty)
@@ -1401,7 +1416,6 @@ object TableLog {
           case None =>
             val wide = rgIndexForUncached(spark, dir, snap, files)
             RowGroupScan.prunePairs(spark, wide, constraints,
-              withStarts = files.exists(snap.dvs.contains),
               needCols = memoHit.isEmpty)
         }
       // the union schema must cover the FULL snapshot even when a bloom
@@ -1808,7 +1822,7 @@ object TableLog {
         // memoize) the full index only when the full snapshot is asked
         val buildFiles =
           if (files.size == snap.files.size) snap.files else files
-        // zero-job driver build first (sidecars read via parquet-mr,
+        // zero-job driver build first (sidecars read on the driver,
         // un-indexed footers read driver-side) — planning a small
         // snapshot should not cost Spark jobs at all; any surprise
         // (oversized sidecar, schema drift) falls back to the
@@ -2065,8 +2079,8 @@ object TableLog {
             (vs.filter(v => !v.rejected && isFull(v)).map(_.nRows).sum,
               vs.size.toLong,
               vs.filter(v => !v.rejected && !isFull(v))
-                .map(v => RowGroupScan.RgSlice(v.file, v.rg, v.start,
-                  v.nRows)).sortBy(s => (s.file, s.rg)),
+                .map(v => RowGroupScan.RgSlice(v.file, v.rg))
+                .sortBy(s => (s.file, s.rg)),
               if (needCols)
                 Some(RowGroupScan.unionColsFromTuples(colTuples))
               else None)
@@ -2088,17 +2102,8 @@ object TableLog {
             import spark.implicits._
             val dvDf = broadcast(dvAbs.toDF("file")
               .withColumn("__isdv", lit(true)))
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("file").orderBy("rg")
-              .rowsBetween(org.apache.spark.sql.expressions.Window
-                .unboundedPreceding, -1)
-            val startCol =
-              if (dvAbs.isEmpty) lit(0L) // starts only rebase DVs
-              else org.apache.spark.sql.functions
-                .coalesce(sum(col("n_rows")).over(w), lit(0L))
             val pairs = pairs0
               .join(dvDf, Seq("file"), "left")
-              .withColumn("__start", startCol)
               .withColumn("__rej", rej)
               .withColumn("__full", isFull && col("__isdv").isNull)
             import org.apache.spark.sql.functions.{collect_list,
@@ -2109,15 +2114,14 @@ object TableLog {
               sum(when(col("rg") >= 0, 1L).otherwise(0L)),
               collect_list(when(!col("__rej") && !col("__full") &&
                 col("rg") >= 0,
-                struct(col("file"), col("rg"), col("__start"),
-                  col("n_rows"))))) ++
+                struct(col("file"), col("rg"))))) ++
               (if (needCols) Seq(collect_set(col("__cols"))) else Nil)
             val agg = pairs.agg(gAggs.head, gAggs.tail: _*).first()
             (if (agg.isNullAt(0)) 0L else agg.getLong(0),
               if (agg.isNullAt(1)) 0L else agg.getLong(1),
               agg.getSeq[org.apache.spark.sql.Row](2)
                 .map(r => RowGroupScan.RgSlice(r.getString(0),
-                  r.getInt(1), r.getLong(2), r.getLong(3)))
+                  r.getInt(1)))
                 .sortBy(s => (s.file, s.rg)),
               if (needCols)
                 Some(RowGroupScan.unionColsFromSets(agg.getSeq[
@@ -2183,7 +2187,7 @@ object TableLog {
   def columnMinMax(spark: SparkSession, dir: String, column: String,
       version: Int = -1): Option[(Option[Any], Option[Any], Long)] = {
     import org.apache.spark.sql.functions.{coalesce, collect_list, expr,
-      first, lit, max, min, struct, sum, when}
+      first, lit, max, min, struct, when}
     val snap = snapshot(dir, version)
     if (snap.files.isEmpty) return Some((None, None, 0L))
     val prefix = Paths.get(dir).toString + "/"
@@ -2191,14 +2195,6 @@ object TableLog {
     val wide = rgIndexFor(spark, dir, snap, snap.files)
     val rows = wide.filter(col("column") === column)
     val isDv = col("file").isin(dvAbs.toSeq: _*)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("file").orderBy("rg")
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, -1)
-    val startCol =
-      if (dvAbs.isEmpty) lit(0L)
-      else coalesce(sum(when(col("rg") >= 0, col("n_rows"))
-        .otherwise(0L)).over(w), lit(0L))
     // an FP group with non-null rows but a missing bound (NaN folded
     // into the stats, or no stats at all) cannot prove its extreme —
     // it scans selectively, exactly like a DV'd group
@@ -2206,15 +2202,14 @@ object TableLog {
       coalesce(col("n_nulls"), lit(1L)) =!= col("n_rows") &&
       (col("dmin").isNull || col("dmax").isNull)
     val needsScan = isDv || fpIncomplete
-    val agg = rows.withColumn("__start", startCol).agg(
+    val agg = rows.agg(
       first(col("dtype")).as("dtype"),
       min(when(!isDv, col("lmin"))), max(when(!isDv, col("lmax"))),
       min(when(!isDv, col("smin"))), max(when(!isDv, col("smax"))),
       min(when(!needsScan, col("dmin"))),
       max(when(!needsScan, col("dmax"))),
       collect_list(when(needsScan && col("rg") >= 0,
-        struct(col("file"), col("rg"), col("__start"),
-          col("n_rows"))))).first()
+        struct(col("file"), col("rg"))))).first()
     val dtype = agg.getString(0)
     val isLongT =
       Seq("tinyint", "smallint", "int", "bigint").contains(dtype)
@@ -2227,8 +2222,7 @@ object TableLog {
       else if (isFpT) (statOf(5), statOf(6))
       else (statOf(3), statOf(4))
     val dvSlices = agg.getSeq[org.apache.spark.sql.Row](7)
-      .map(r => RowGroupScan.RgSlice(r.getString(0), r.getInt(1),
-        r.getLong(2), r.getLong(3)))
+      .map(r => RowGroupScan.RgSlice(r.getString(0), r.getInt(1)))
     val (dvMin, dvMax, scanned) =
       if (dvSlices.isEmpty) (None, None, 0L)
       else {

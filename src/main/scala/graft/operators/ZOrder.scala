@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Multi-column Z-order (Morton) clustering keys — the Delta/Iceberg
@@ -40,10 +40,4 @@ object ZOrder {
       s"((((${exprs(c)}) >> $b) & 1) << ${b * n + c})"
     terms.mkString("(", " + ", ")")
   }
-
-  /** Range-exchange sort by the z-key (adds `zkey`). Write the result
-    * with a row-group-sized sink (K1) to get min-max pruning on every
-    * interleaved column. */
-  def clusterByZOrder(df: DataFrame, bits: Int, cols: Column*): DataFrame =
-    df.withColumn("zkey", zorderEncode(cols, bits)).orderBy("zkey")
 }

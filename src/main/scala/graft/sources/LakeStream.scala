@@ -2,14 +2,14 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.graft.SparkInternals
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -43,12 +43,12 @@ import graft.operators.{RowGroupScan, TableLog}
   *
   * Scale: planning is driver-side log-json diffing — O(files-per-commit)
   * strings per micro-batch, never data bytes. Each added file is one
-  * input partition; executors read their file's pages directly through
-  * the [[graft.operators.RowGroupScan]] converters (scalars plus the
-  * nested 3-level LIST/MAP and struct shapes — chat-shaped training
-  * tables stream as-is; schema-evolved files fill missing trailing
-  * columns with nulls), no SparkSession or encoder machinery on the
-  * reader path. Vacuuming a
+  * input partition; executors read their file through Spark's own
+  * parquet reader in the stream schema (nested LIST/MAP/struct shapes
+  * included — chat-shaped training tables stream as-is; schema-evolved
+  * files fill missing columns with nulls and widen narrower types, and a
+  * type that cannot widen fails loudly), no SparkSession or encoder
+  * machinery on the reader path. Vacuuming a
   * version the stream has not consumed yet fails the replay loudly
   * rather than dropping rows. */
 class LakeStreamProvider extends TableProvider with DataSourceRegister {
@@ -187,83 +187,38 @@ private[sources] class LakeMicroBatchStream(dir: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      SparkSession.active.sparkContext.hadoopConfiguration)
-    new LakeReaderFactory(schema, conf)
+    val spark = SparkSession.active
+    new LakeReaderFactory(
+      SparkInternals.parquetReader(spark, SparkInternals.asNullable(schema),
+        new StructType(), Nil),
+      new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration))
   }
 }
 
-private[sources] class LakeReaderFactory(schema: StructType,
+/** Reads each added file whole through Spark's parquet reader in the
+  * stream schema: a column the file predates reads null, a narrower
+  * file type widens, a type that cannot widen fails loudly. */
+private[sources] class LakeReaderFactory(
+    read: PartitionedFile => Iterator[InternalRow],
     conf: org.apache.spark.util.SerializableConfiguration)
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
-    val file = partition.asInstanceOf[LakeFilePartition].path
+    val rows = read(RowGroupScan.wholeFile(
+      partition.asInstanceOf[LakeFilePartition].path, conf.value))
     new PartitionReader[InternalRow] {
-      import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      import org.apache.parquet.io.ColumnIOFactory
-
-      private val reader = ParquetFileReader.open(HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(file), conf.value))
-      private val msg = reader.getFooter.getFileMetaData.getSchema
-      // stream-schema field -> converter over THIS file's layout; a
-      // field the file predates (schema evolution) stays null, a field
-      // whose file type disagrees with the stream schema fails loudly
-      private val convs: Array[org.apache.parquet.example.data.Group => Any] = {
-        val fileSchema = RowGroupScan.sparkSchemaOf(msg)
-        schema.fields.map { sf =>
-          val i = msg.getFields.asScala.indexWhere(_.getName == sf.name)
-          if (i < 0) null
-          else {
-            require(fileSchema(i).dataType == sf.dataType,
-              s"$file column ${sf.name}: file type " +
-                s"${fileSchema(i).dataType} != stream ${sf.dataType}")
-            RowGroupScan.catalystConverter(msg.getType(i), i)
-          }
-        }
-      }
-      private val fieldIdx: Array[Int] = schema.fields.map(sf =>
-        msg.getFields.asScala.indexWhere(_.getName == sf.name))
-      private val io = new ColumnIOFactory().getColumnIO(msg)
-      private val nRgs = reader.getFooter.getBlocks.size
-      private var rg = 0
-      private var rr: org.apache.parquet.io.RecordReader[
-        org.apache.parquet.example.data.Group] = null
-      private var leftInRg = 0L
       private var current: InternalRow = null
-
       override def next(): Boolean = {
-        while (leftInRg == 0L && rg < nRgs) {
-          val pages = reader.readRowGroup(rg)
-          rg += 1
-          leftInRg = pages.getRowCount
-          if (leftInRg > 0L)
-            rr = io.getRecordReader(pages, new GroupRecordConverter(msg))
-        }
-        if (leftInRg == 0L) { current = null; false }
-        else {
-          val g = rr.read()
-          leftInRg -= 1
-          val vals = new Array[Any](schema.length)
-          var j = 0
-          while (j < schema.length) {
-            vals(j) =
-              if (fieldIdx(j) < 0) null
-              else if (g.getFieldRepetitionCount(fieldIdx(j)) == 0) null
-              else convs(j)(g)
-            j += 1
-          }
-          current = new org.apache.spark.sql.catalyst.expressions
-            .GenericInternalRow(vals)
-          true
-        }
+        current = if (rows.hasNext) rows.next() else null
+        current != null
       }
-
       override def get(): InternalRow = current
-      override def close(): Unit = reader.close()
+      override def close(): Unit = rows match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
     }
   }
 }

@@ -99,6 +99,4 @@ final class AhoCorasick(val patterns: Array[String]) extends Serializable {
     }
     false
   }
-
-  def nPatterns: Int = patterns.length
 }

@@ -40,6 +40,55 @@ object SparkInternals {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf
 
+  /** Spark's own parquet reader function (`ParquetFileFormat`, vectorized
+    * where the schema allows) over `required` plus the constant
+    * `partition` columns each split carries, with `filters` pushed for
+    * row-group and ColumnIndex page skipping. Rows come out one at a
+    * time (`required` then `partition` fields); the function is
+    * serializable and also runs on the driver, outside any task. */
+  def parquetReader(spark: org.apache.spark.sql.SparkSession,
+      required: org.apache.spark.sql.types.StructType,
+      partition: org.apache.spark.sql.types.StructType,
+      filters: Seq[org.apache.spark.sql.sources.Filter])
+      : org.apache.spark.sql.execution.datasources.PartitionedFile =>
+        Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.execution.datasources.FileFormat
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .buildReaderWithPartitionValues(s, required, partition, required,
+        filters, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        s.sessionState.newHadoopConf())
+  }
+
+  /** One Spark job's worth of file scan: `read` over `partitions` (one
+    * task each) as a DataFrame of `schema` — a `FileScanRDD`, so task
+    * input metrics (`recordsRead`) count the rows it decodes. */
+  def fileScanFrame(spark: org.apache.spark.sql.SparkSession,
+      read: org.apache.spark.sql.execution.datasources.PartitionedFile =>
+        Iterator[org.apache.spark.sql.catalyst.InternalRow],
+      partitions: Seq[org.apache.spark.sql.execution.datasources
+        .FilePartition],
+      schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.DataFrame = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val rdd = new org.apache.spark.sql.execution.datasources.FileScanRDD(
+      s, read, partitions, schema, Nil, Map.empty,
+      new org.apache.spark.sql.catalyst.FileSourceOptions(
+        org.apache.spark.sql.catalyst.util.CaseInsensitiveMap(
+          Map.empty[String, String])))
+    s.internalCreateDataFrame(rdd, schema)
+  }
+
+  /** Block until every event posted so far has reached the session's
+    * listeners (`listenerBus` is `private[spark]`). */
+  def drainListeners(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** `schema` with every field, element and value nullable — what
+    * Spark's file sources report on read. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** Eager checkpoint that KEEPS the frame's physical layout. Under AQE,
     * `Dataset.checkpoint`/`localCheckpoint` read
     * `executedPlan.outputPartitioning` from the `AdaptiveSparkPlanExec`

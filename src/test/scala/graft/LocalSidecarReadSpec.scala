@@ -7,8 +7,8 @@ import graft.operators.{LakeSelect, RowGroupScan, TableLog}
 
 /** Driver-side metadata reads (round 15): small sidecars (stats index,
   * bloom bitmaps, DV position lists) and small-table planning read via
-  * parquet-mr on the driver — ZERO Spark jobs — with the distributed
-  * path as byte-budget fallback. Pins (a) value/schema equivalence of
+  * Spark's parquet reader on the driver — ZERO Spark jobs — with the
+  * distributed path as byte-budget fallback. Pins (a) value/schema equivalence of
   * the local reader against spark.read, (b) result equality between the
   * local and distributed planning paths, and (c) the zero-job property
   * planning now has. */
@@ -70,6 +70,35 @@ class LocalSidecarReadSpec extends AnyFunSuite {
     val got = rows.map(canon).sortBy(_.toString)
     val want = expected.collect().map(canon).sortBy(_.toString)
     assert(got.toSeq == want.toSeq)
+  }
+
+  test("the row-group index keeps its dtype strings for every sidecar " +
+    "type class, so persisted sidecars still classify") {
+    val dir = tmp("lsr_dtypes")
+    TableLog.append(spark.range(20).selectExpr(
+      "concat('s', id) as s", "cast(id as int) as i", "id as l",
+      "id * 1.5d as d", "cast(cast(id as string) as binary) as b",
+      "array(cast(id as float)) as af", "id % 2 = 0 as bo",
+      "cast(id as tinyint) as ti", "cast(id as smallint) as si",
+      "cast(id as float) as f", "cast(id as decimal(12,2)) as dec",
+      "cast(id as decimal(25,3)) as wdec",
+      "date_add(date'2020-01-01', cast(id as int)) as dt",
+      "timestamp_seconds(id) as ts",
+      "cast(timestamp_seconds(id) as timestamp_ntz) as tsn",
+      "named_struct('a', cast(id as int), 's', 'x') as st",
+      "map('k', id) as m"), dir)
+    TableLog.computeRowGroupIndex(spark, dir)
+    val sidecars = new java.io.File(dir, "stats").listFiles()
+      .filter(_.getName.contains("-rgidx-")).map(_.toString).toSeq
+    val got = spark.read.parquet(sidecars: _*)
+      .select("column", "dtype").distinct().collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == Map("s" -> "string", "i" -> "int", "l" -> "bigint",
+      "d" -> "double", "b" -> "binary", "af" -> "array<float>",
+      "bo" -> "boolean", "ti" -> "tinyint", "si" -> "smallint",
+      "f" -> "float", "dec" -> "decimal(12,2)", "wdec" -> "decimal(25,3)",
+      "dt" -> "date", "ts" -> "timestamp", "tsn" -> "timestamp_ntz",
+      "st" -> "struct<a:int,s:string>", "m" -> "map<string,bigint>"))
   }
 
   test("planning-path equality: local sidecar build == distributed " +

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{RowGroupScan, TableLog}
+import graft.operators.TableLog
 
 /** Row-group-level data skipping: index shape, selective-scan fidelity
   * across the flat scalar type surface, conservative keeps, pruning
@@ -18,22 +18,34 @@ class RowGroupScanSpec extends AnyFunSuite {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** `n` sorted rows (k, v = 7k) appended as a two-file table. */
   private def writeSorted(dir: String, n: Int): Unit =
-    spark.range(n.toLong).selectExpr("id as k", "id * 7 as v")
-      .repartitionByRange(2, col("k")).sortWithinPartitions("k")
-      .write.mode("overwrite")
-      .options(smallRg).parquet(dir)
+    TableLog.append(spark.range(n.toLong).selectExpr("id as k", "id * 7 as v")
+      .repartitionByRange(2, col("k")).sortWithinPartitions("k"),
+      dir, options = smallRg)
 
-  private def parquets(dir: String): Seq[String] =
-    new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted.toSeq
+  /** Row-group-pruned read of `k` in [lo, hi]: (frame, rgOpened,
+    * rgTotal, filesOpened). */
+  private def prunedK(dir: String, lo: Long, hi: Long) = {
+    val (df, opened, total, filesOpened, _) =
+      TableLog.readRowGroupPrunedMulti(spark, dir,
+        Seq(TableLog.NumRange("k", Some(lo), Some(hi))))
+    (df, opened, total, filesOpened)
+  }
 
   test("index: one row per row group, bounds tight, counts add up") {
-    val dir = tmp("rgidx")
+    val dir = tmp("rgidx") + "/t"
     writeSorted(dir, 20000)
-    val files = parquets(dir)
-    val idx = RowGroupScan.rowGroupIndexFiles(spark, files, "k").collect()
+    TableLog.computeRowGroupIndex(spark, dir)
+    val sidecars = new java.io.File(dir, "stats").listFiles()
+      .filter(_.getName.contains("-rgidx-")).map(_.toString).toSeq
+    val idx = spark.read.parquet(sidecars: _*)
+      .filter(col("column") === "k" && col("rg") >= 0)
+      .select("file", "rg", "lmin", "lmax", "n_rows").collect()
+    val files = TableLog.snapshot(dir).files
     assert(idx.length > files.size, "expected multiple row groups per file")
+    assert(idx.map(r => (r.getString(0), r.getInt(1))).distinct.length ==
+      idx.length, "one index row per (file, row group)")
     assert(idx.map(_.getLong(4)).sum == 20000L)
     // sorted writes make per-group ranges disjoint within each file
     idx.groupBy(_.getString(0)).foreach { case (_, rgs) =>
@@ -47,12 +59,9 @@ class RowGroupScanSpec extends AnyFunSuite {
 
   test("selective scan returns exactly the kept row groups' rows and " +
     "prunes a narrow range") {
-    val dir = tmp("rgscan")
+    val dir = tmp("rgscan") + "/t"
     writeSorted(dir, 20000)
-    val files = parquets(dir)
-    val idx = RowGroupScan.rowGroupIndexFiles(spark, files, "k")
-    val (df, opened, total, filesOpened) =
-      RowGroupScan.readRowGroupsPruned(spark, idx, 100L, 700L)
+    val (df, opened, total, filesOpened) = prunedK(dir, 100L, 700L)
     assert(opened < total, s"no pruning: $opened/$total")
     assert(filesOpened == 1, "narrow low range must touch one file")
     val got = df.filter(col("k").between(100, 700))
@@ -67,11 +76,9 @@ class RowGroupScanSpec extends AnyFunSuite {
   }
 
   test("zero matching row groups: empty frame with the table schema") {
-    val dir = tmp("rgempty")
+    val dir = tmp("rgempty") + "/t"
     writeSorted(dir, 5000)
-    val idx = RowGroupScan.rowGroupIndexFiles(spark, parquets(dir), "k")
-    val (df, opened, total, filesOpened) =
-      RowGroupScan.readRowGroupsPruned(spark, idx, 900000L, 990000L)
+    val (df, opened, total, filesOpened) = prunedK(dir, 900000L, 990000L)
     assert(opened == 0L && total > 0L && filesOpened == 0)
     assert(df.columns.toSeq == Seq("k", "v"))
     assert(df.count() == 0L)
@@ -79,7 +86,7 @@ class RowGroupScanSpec extends AnyFunSuite {
 
   test("type surface: bool/int/long/float/double/string/binary/decimal/" +
     "date/timestamp survive the selective scan bit-for-bit") {
-    val dir = tmp("rgtypes")
+    val dir = tmp("rgtypes") + "/t"
     val df = spark.range(4000).selectExpr(
       "id as k",
       "id % 2 = 0 as b",
@@ -92,16 +99,12 @@ class RowGroupScanSpec extends AnyFunSuite {
       "date_add(date'2020-01-01', cast(id % 300 as int)) as dt",
       "timestamp_millis(1500000000000 + id * 1000) as ts",
       "case when id % 97 = 0 then null else id end as maybe")
-    df.repartitionByRange(1, col("k")).sortWithinPartitions("k")
-      .write.mode("overwrite").options(smallRg).parquet(dir)
-    val files = parquets(dir)
-    val idx = RowGroupScan.rowGroupIndexFiles(spark, files, "k")
+    TableLog.append(df.repartitionByRange(1, col("k"))
+      .sortWithinPartitions("k"), dir, options = smallRg)
     // open EVERYTHING: full fidelity against Spark's own reader
-    val (got, opened, total, _) =
-      RowGroupScan.readRowGroupsPruned(spark, idx, Long.MinValue,
-        Long.MaxValue)
+    val (got, opened, total, _) = prunedK(dir, Long.MinValue, Long.MaxValue)
     assert(opened == total && total > 1)
-    val want = spark.read.parquet(files: _*)
+    val want = TableLog.read(spark, dir)
     assert(got.schema == want.schema,
       s"schema drift:\n${got.schema}\n${want.schema}")
     val key = got.columns.sorted.toSeq
@@ -279,26 +282,22 @@ class RowGroupScanSpec extends AnyFunSuite {
         case _ => "id % 2 = 0 as v"
       }
       val blockSize = 8192 << rnd.nextInt(3)
-      val dir = tmp(s"rgprop$round")
-      spark.range(n.toLong).selectExpr(
+      val dir = tmp(s"rgprop$round") + "/t"
+      TableLog.append(spark.range(n.toLong).selectExpr(
           "id as k", valueCol,
           s"case when id % $nullEvery = 0 then null else id * 2 end " +
             "as maybe")
         .repartitionByRange(1 + rnd.nextInt(3), col("k"))
-        .sortWithinPartitions("k")
-        .write.mode("overwrite")
-        .option("parquet.block.size", blockSize.toString)
-        .option("parquet.page.size", "4096").parquet(dir)
-      val files = parquets(dir)
-      val idx = RowGroupScan.rowGroupIndexFiles(spark, files, "k")
+        .sortWithinPartitions("k"),
+        dir, options = Map("parquet.block.size" -> blockSize.toString,
+          "parquet.page.size" -> "4096"))
       val a = rnd.nextInt(n).toLong
       val b = a + rnd.nextInt(n / 3 + 1)
-      val (sel, opened, total, _) =
-        RowGroupScan.readRowGroupsPruned(spark, idx, a, b)
+      val (sel, opened, total, _) = prunedK(dir, a, b)
       assert(opened <= total)
       val got = sel.filter(col("k").between(a, b))
         .orderBy("k").collect().toSeq
-      val want = spark.read.parquet(files: _*)
+      val want = TableLog.read(spark, dir)
         .filter(col("k").between(a, b)).orderBy("k").collect().toSeq
       assert(got == want,
         s"round $round drift (n=$n block=$blockSize range=[$a,$b])")
@@ -306,16 +305,14 @@ class RowGroupScanSpec extends AnyFunSuite {
   }
 
   test("schema drift across files fails loudly") {
-    val dir = tmp("rgdrift")
-    spark.range(100).selectExpr("id as k", "id as v")
-      .coalesce(1).write.mode("overwrite").parquet(dir + "/a")
-    spark.range(100).selectExpr("id as k", "cast(id as string) as v")
-      .coalesce(1).write.mode("overwrite").parquet(dir + "/b")
-    val files = parquets(dir + "/a") ++ parquets(dir + "/b")
-    val ex = intercept[org.apache.spark.SparkException] {
-      RowGroupScan.readRowGroups(spark,
-        files.map(_ -> Seq(0))).count()
+    val dir = tmp("rgdrift") + "/t"
+    TableLog.append(spark.range(100).selectExpr("id as k", "id as v")
+      .coalesce(1), dir)
+    TableLog.append(spark.range(100)
+      .selectExpr("id as k", "cast(id as string) as v").coalesce(1), dir)
+    val ex = intercept[RuntimeException] {
+      prunedK(dir, 0L, 99L)._1.count()
     }
-    assert(ex.getMessage != null)
+    assert(ex.getMessage.contains("type drift on column v"), ex.getMessage)
   }
 }

@@ -1325,18 +1325,16 @@ class ScalePlanSpec extends AnyFunSuite {
 
   test("selective row-group scan: bounded tasks per hot file (a file " +
     "with many kept groups fans out, never one straggler task)") {
-    import graft.operators.RowGroupScan
-    val dir = java.nio.file.Files.createTempDirectory("spplan2").toString
-    spark.range(200000).selectExpr("id as k", "id as v")
-      .repartitionByRange(1, col("k")).sortWithinPartitions("k")
-      .write.mode("overwrite")
-      .option("parquet.block.size", "16384")
-      .option("parquet.page.size", "4096").parquet(dir)
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.toString).toSeq
-    val idx = RowGroupScan.rowGroupIndexFiles(spark, files, "k")
-    val (df, opened, _, filesOpened) = RowGroupScan
-      .readRowGroupsPruned(spark, idx, Long.MinValue, Long.MaxValue)
+    import graft.operators.TableLog
+    val dir = java.nio.file.Files.createTempDirectory("spplan2")
+      .toString + "/t"
+    TableLog.append(spark.range(200000).selectExpr("id as k", "id as v")
+      .repartitionByRange(1, col("k")).sortWithinPartitions("k"),
+      dir, options = Map("parquet.block.size" -> "16384",
+        "parquet.page.size" -> "4096"))
+    val (df, opened, _, filesOpened, _) = TableLog.readRowGroupPrunedMulti(
+      spark, dir, Seq(TableLog.NumRange("k", Some(Long.MinValue),
+        Some(Long.MaxValue))))
     assert(filesOpened == 1 && opened > 16, s"fixture wants many groups")
     val parts = df.rdd.getNumPartitions
     assert(parts >= (opened / 8).toInt,

@@ -782,4 +782,30 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => r.event_id -> ((r._c, r._bn, r._bs, r._bq))).toMap
     assert(batch == streamed, s"batch/stream legs differ:\n$batch\n$streamed")
   }
+
+  test("graft-lake stream widens a narrower file but fails loudly on a " +
+    "file type that cannot widen to the stream schema") {
+    import graft.operators.TableLog
+    val root = java.nio.file.Files.createTempDirectory("lakedrift").toString
+    val dir = root + "/t"
+    TableLog.append(Seq((1L, 10L)).toDF("id", "v"), dir)
+    TableLog.append(Seq((2L, 20)).toDF("id", "v"), dir) // int widens
+    def drain(): Unit = spark.readStream.schema("id bigint, v bigint")
+      .format("graft-lake").load(dir)
+      .writeStream.format("parquet")
+      .option("path", root + "/sink")
+      .option("checkpointLocation", root + "/cp")
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    drain()
+    assert(spark.read.parquet(root + "/sink").orderBy("id")
+      .as[(Long, Long)].collect().toSeq == Seq((1L, 10L), (2L, 20L)))
+    TableLog.append(Seq((3L, "x")).toDF("id", "v"), dir) // cannot widen
+    val ex = intercept[org.apache.spark.sql.streaming
+      .StreamingQueryException](drain())
+    def chain(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: chain(t.getCause)
+    assert(chain(ex).exists(_.isInstanceOf[org.apache.spark.sql.execution
+      .datasources.SchemaColumnConvertNotSupportedException]), ex)
+  }
 }
