@@ -908,10 +908,11 @@ object SparkEntry {
       // row-group skipping over a NESTED schema (round-12 verdict item
       // 3): a lake table carrying the chat shape training-data tables
       // use — array<struct<role,content>> plus a map — scans
-      // selectively through the same Group-converter path as flat
+      // selectively through the same Spark parquet reader as flat
       // scalars (the old engine rejected nested schemas loudly and fell
-      // back to full files). A doc_id slice must prune row groups while
-      // the nested fields replay closed-form against `documents`.
+      // back to full files). A doc_id slice through LakeSelect.readWhere
+      // must prune row groups while the nested fields replay closed-form
+      // against `documents`.
       val dir = java.nio.file.Files.createTempDirectory("graft_k34")
         .toString + "/table"
       val docs = t(s, d, "documents").select(
@@ -931,28 +932,26 @@ object SparkEntry {
       val b = docs.agg(min("doc_id"), max("doc_id")).first()
       val lo = b.getLong(0)
       val hi = lo + (b.getLong(1) - lo) / 8
-      val (pr, rgOpened, rgTotal, _, _) =
-        graft.operators.TableLog.readRowGroupPruned(
-          s, dir, "doc_id", lo, hi)
-      pr.filter(col("doc_id").between(lo, hi))
-        .agg(count(lit(1)).as("n"),
+      val (pr, st) = graft.operators.LakeSelect.readWhere(s, dir,
+        s"doc_id BETWEEN $lo AND $hi")
+      pr.agg(count(lit(1)).as("n"),
           sum(length(col("msgs").getItem(0).getField("content")))
             .as("sum_q_len"),
           countDistinct(col("msgs").getItem(1).getField("content"))
             .as("n_langs"),
           countDistinct(col("meta").getItem("source")).as("n_sources"),
           sum(col("n_chars")).as("sum_chars"))
-        .withColumn("rg_pruned", lit(rgOpened < rgTotal))
+        .withColumn("rg_pruned", lit(st.rgOpened < st.rgTotal))
     },
 
     "k35_dv_rowgroup" -> { (s, d) =>
       // DV-aware SELECTIVE scans (round-12 verdict item 5): a file
       // carrying a deletion vector no longer reads whole — the slice
-      // scan emits file-ordinal positions rebased from the index's
-      // per-group row counts and anti-joins the vector, so the same
-      // read both prunes row groups INSIDE the DV'd file (dv_rg_pruned)
-      // and keeps the deleted keys invisible. Replay: the slice minus
-      // the two deleted keys, closed-form.
+      // scan emits each row's file position from the parquet reader's
+      // row index and anti-joins the vector, so the same readWhere
+      // both prunes row groups INSIDE the DV'd file (dv_rg_pruned) and
+      // keeps the deleted keys invisible. Replay: the slice minus the
+      // two deleted keys, closed-form.
       val dir = java.nio.file.Files.createTempDirectory("graft_k35")
         .toString + "/table"
       val o = t(s, d, "orders").select(col("o_orderkey"),
@@ -972,16 +971,14 @@ object SparkEntry {
         .limit(2).collect().map(_.getLong(0))
       val (_, nDel, _, _) = graft.operators.TableLog.deleteVectored(
         s, dir, s"o_orderkey IN (${ks.mkString(",")})")
-      val (pr, rgOpened, rgTotal, fOpened, fTotal) =
-        graft.operators.TableLog.readRowGroupPruned(
-          s, dir, "o_orderkey", lo, hi)
-      pr.filter(col("o_orderkey").between(lo, hi))
-        .agg(count(lit(1)).as("n"),
+      val (pr, st) = graft.operators.LakeSelect.readWhere(s, dir,
+        s"o_orderkey BETWEEN $lo AND $hi")
+      pr.agg(count(lit(1)).as("n"),
           sum(col("price_cents")).as("sum_cents"),
           min(col("o_orderkey")).as("min_k"),
           max(col("o_orderkey")).as("max_k"))
-        .withColumn("dv_rg_pruned",
-          lit(nDel == 2L && rgOpened < rgTotal && fOpened < fTotal))
+        .withColumn("dv_rg_pruned", lit(nDel == 2L &&
+          st.rgOpened < st.rgTotal && st.filesOpened < st.filesTotal))
     },
 
     "sql14_prefix_select" -> { (s, d) =>
@@ -2815,58 +2812,55 @@ object SparkEntry {
     },
 
     "k11_zonemap_prune" -> { (s, d) =>
-      // external zone-map file skipping (ParquetTuning.zoneMapIndex /
-      // readZonePruned — the Delta/Iceberg statistics-table pattern): the
-      // lake is range-clustered on l_orderkey into 8 files, the index is
-      // built from parquet FOOTERS only (no data pages, one footer per
-      // task), and a 1/8th-keyspace range query opens only intersecting
-      // files. The exact predicate re-applies after pruning (zone maps
-      // prune files, not rows), so the aggregates must equal the
-      // full-scan oracle; `pruned` pins that at least one file was
-      // actually skipped.
+      // zone-map file skipping (LakeSelect.readWhere over the log's
+      // row-group index — the Delta/Iceberg statistics-in-the-log
+      // pattern): one append range-clusters the lake on l_orderkey into
+      // 8 files, the index plans from parquet FOOTERS only (no data
+      // pages), and a 1/8th-keyspace range query opens only
+      // intersecting files. readWhere re-applies the exact predicate
+      // after pruning, so the aggregates must equal the full-scan
+      // oracle; `pruned` pins that at least one file was actually
+      // skipped.
       val dir = java.nio.file.Files.createTempDirectory("graft_k11")
         .toString + "/lake"
       val li = t(s, d, "lineitem").select(col("l_orderkey"),
         cents(col("l_extendedprice")).as("price_cents"))
-      li.repartitionByRange(8, col("l_orderkey")).write.parquet(dir)
+      graft.operators.TableLog.append(
+        li.repartitionByRange(8, col("l_orderkey")), dir)
       val bounds = li.agg(min("l_orderkey"), max("l_orderkey")).first()
       val lo = bounds.getLong(0)
       val hi = lo + (bounds.getLong(1) - lo) / 8
-      val idx = graft.operators.ParquetTuning.zoneMapIndex(s, dir,
-        "l_orderkey")
-      val (pr, opened, total) = graft.operators.ParquetTuning
-        .readZonePruned(s, idx, lo, hi)
-      pr.filter(col("l_orderkey").between(lo, hi))
-        .agg(count(lit(1)).as("n"),
+      val (pr, st) = graft.operators.LakeSelect.readWhere(s, dir,
+        s"l_orderkey BETWEEN $lo AND $hi")
+      pr.agg(count(lit(1)).as("n"),
           sum(col("price_cents")).as("sum_cents"),
           min(col("l_orderkey")).as("min_k"),
           max(col("l_orderkey")).as("max_k"))
-        .withColumn("pruned", lit(opened < total))
+        .withColumn("pruned", lit(st.filesOpened < st.filesTotal))
     },
 
     "k11b_zonemap_string" -> { (s, d) =>
-      // STRING zone maps (ParquetTuning.zoneMapIndexString — round-9
-      // verdict gap: numeric-only stats): the lake is range-clustered on a
-      // yyyy-MM-dd date STRING into 8 files; parquet keeps binary min/max
-      // whose byte-lexicographic order equals the predicate's ORDER BY
-      // semantics, so a one-year range query opens only intersecting
-      // files (the shipdate-pruning shape, the most common lake
-      // predicate). Exact predicate re-applies after pruning; `pruned`
-      // pins that files were actually skipped.
+      // STRING zone maps (round-9 verdict gap: numeric-only stats): one
+      // append range-clusters the lake on a yyyy-MM-dd date STRING into
+      // 8 files; parquet keeps binary min/max whose byte-lexicographic
+      // order equals the predicate's ORDER BY semantics, so a one-year
+      // range query through LakeSelect.readWhere opens only
+      // intersecting files (the shipdate-pruning shape, the most common
+      // lake predicate). Exact predicate re-applies after pruning;
+      // `pruned` pins that files were actually skipped.
       val dir = java.nio.file.Files.createTempDirectory("graft_k11b")
         .toString + "/lake"
       val o = t(s, d, "orders").select(
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("ds"),
         col("o_orderkey"), cents(col("o_totalprice")).as("price_cents"))
-      o.repartitionByRange(8, col("ds")).write.parquet(dir)
-      val idx = graft.operators.ParquetTuning.zoneMapIndexString(s, dir, "ds")
-      val (pr, opened, total) = graft.operators.ParquetTuning
-        .readZonePrunedString(s, idx, "1996-01-01", "1996-12-31")
-      pr.filter(col("ds").between("1996-01-01", "1996-12-31"))
-        .agg(count(lit(1)).as("n"),
+      graft.operators.TableLog.append(
+        o.repartitionByRange(8, col("ds")), dir)
+      val (pr, st) = graft.operators.LakeSelect.readWhere(s, dir,
+        "ds BETWEEN '1996-01-01' AND '1996-12-31'")
+      pr.agg(count(lit(1)).as("n"),
           sum(col("price_cents")).as("sum_cents"),
           min(col("ds")).as("min_ds"), max(col("ds")).as("max_ds"))
-        .withColumn("pruned", lit(opened < total))
+        .withColumn("pruned", lit(st.filesOpened < st.filesTotal))
     },
 
     "k10_lake_upsert" -> { (s, d) =>
@@ -3097,11 +3091,12 @@ object SparkEntry {
 
     "k26_bloom_skipping" -> { (s, d) =>
       // Per-file bloom-filter data skipping (TableLog.computeBlooms +
-      // readBloomPruned): orders split into 8 custkey-band files, so a
-      // point lookup on o_orderkey — a column the layout does NOT
-      // cluster — hits exactly one file; zone maps can't prune it (every
-      // band spans the full orderkey range) but the bloom index opens
-      // only the file(s) whose bitmap might hold the key.
+      // LakeSelect.readWhere's point_lookup route): orders split into 8
+      // custkey-band files, so a point lookup on o_orderkey — a column
+      // the layout does NOT cluster — hits exactly one file; zone maps
+      // can't prune it (every band spans the full orderkey range) but
+      // the bloom index opens only the file(s) whose bitmap might hold
+      // the key.
       // bloom_pruned pins filesOpened < filesTotal (with fp slack); the
       // looked-up row replays closed-form via a min-over-threshold key
       // both engines can compute.
@@ -3121,11 +3116,10 @@ object SparkEntry {
       graft.operators.TableLog.computeBlooms(s, dir, "o_orderkey")
       val key = o.filter(col("o_orderkey") >= 1000)
         .agg(min("o_orderkey")).first().getLong(0)
-      val (pruned, opened, total) = graft.operators.TableLog
-        .readBloomPruned(s, dir, "o_orderkey", Seq(key))
-      pruned.filter(col("o_orderkey") === key)
-        .select(col("o_orderkey"), col("o_custkey"), col("price_cents"))
-        .withColumn("bloom_pruned", lit(opened < total))
+      val (pruned, st) = graft.operators.LakeSelect.readWhere(s, dir,
+        s"o_orderkey = $key")
+      pruned.select(col("o_orderkey"), col("o_custkey"), col("price_cents"))
+        .withColumn("bloom_pruned", lit(st.filesOpened < st.filesTotal))
     },
 
     "k26b_bloom_maintained" -> { (s, d) =>
@@ -3161,11 +3155,10 @@ object SparkEntry {
       val maintained = snap.blooms.keySet == snap.files.toSet
       val key = o.filter(col("o_orderkey") >= 1000)
         .agg(min("o_orderkey")).first().getLong(0)
-      val (pruned, opened, total) = graft.operators.TableLog
-        .readBloomPruned(s, dir, "o_orderkey", Seq(key))
-      pruned.filter(col("o_orderkey") === key)
-        .select(col("o_orderkey"), col("o_custkey"), col("price_cents"))
-        .withColumn("bloom_pruned", lit(opened < total))
+      val (pruned, st) = graft.operators.LakeSelect.readWhere(s, dir,
+        s"o_orderkey = $key")
+      pruned.select(col("o_orderkey"), col("o_custkey"), col("price_cents"))
+        .withColumn("bloom_pruned", lit(st.filesOpened < st.filesTotal))
         .withColumn("maintained", lit(maintained))
     },
 
@@ -3320,21 +3313,21 @@ object SparkEntry {
         count(lit(1))).first()
       val lo = b.getLong(0)
       val hi = lo + (b.getLong(1) - lo) / 8
-      val (_, ob, tb) = graft.operators.TableLog.readZonePruned(
-        s, dir, "o_orderkey", lo, hi)
+      val pred = s"o_orderkey BETWEEN $lo AND $hi"
+      val (_, before) = graft.operators.LakeSelect.readWhere(s, dir, pred)
       graft.operators.TableLog.optimize(s, dir,
         maxRows = (b.getLong(2) + 7) / 8,
         clusterBy = Seq("o_custkey", "o_orderkey"))
-      val (pr, opened, total) = graft.operators.TableLog.readZonePruned(
-        s, dir, "o_orderkey", lo, hi)
-      pr.filter(col("o_orderkey").between(lo, hi))
-        .agg(count(lit(1)).as("n"),
+      val (pr, st) = graft.operators.LakeSelect.readWhere(s, dir, pred)
+      pr.agg(count(lit(1)).as("n"),
           sum(col("price_cents")).as("sum_cents"),
           min(col("o_orderkey")).as("min_k"),
           max(col("o_orderkey")).as("max_k"),
           sum(col("o_custkey")).as("sum_cust"))
-        .withColumn("pruned_second", lit(opened < total))
-        .withColumn("unpruned_before", lit(ob == tb))
+        .withColumn("pruned_second",
+          lit(st.filesOpened < st.filesTotal))
+        .withColumn("unpruned_before",
+          lit(before.filesOpened == before.filesTotal))
     },
 
     "k16c_quantile_zorder" -> { (s, d) =>
@@ -3362,32 +3355,32 @@ object SparkEntry {
       val maxRows = (nRows + 7) / 8
       graft.operators.TableLog.optimize(s, dir, maxRows = maxRows,
         clusterBy = Seq("o_custkey", "skew"))
-      val (_, openedU, totalU) = graft.operators.TableLog.readZonePruned(
-        s, dir, "skew", 100L, 300L)
+      val pred = "skew BETWEEN 100 AND 300"
+      val (_, u) = graft.operators.LakeSelect.readWhere(s, dir, pred)
       graft.operators.TableLog.optimize(s, dir, maxRows = maxRows,
         clusterBy = Seq("o_custkey", "skew"), quantileCluster = true)
-      val (pr, openedQ, totalQ) = graft.operators.TableLog.readZonePruned(
-        s, dir, "skew", 100L, 300L)
-      pr.filter(col("skew").between(100L, 300L))
-        .agg(count(lit(1)).as("n"),
+      val (pr, q) = graft.operators.LakeSelect.readWhere(s, dir, pred)
+      pr.agg(count(lit(1)).as("n"),
           sum(col("price_cents")).as("sum_cents"),
           sum(col("o_custkey")).as("sum_cust"),
           min(col("skew")).as("min_s"), max(col("skew")).as("max_s"))
-        .withColumn("beats_uniform", lit(openedQ < openedU))
-        .withColumn("pruned", lit(openedQ < totalQ))
-        .withColumn("uniform_collapsed", lit(openedU == totalU))
+        .withColumn("beats_uniform", lit(q.filesOpened < u.filesOpened))
+        .withColumn("pruned", lit(q.filesOpened < q.filesTotal))
+        .withColumn("uniform_collapsed",
+          lit(u.filesOpened == u.filesTotal))
     },
 
     "k28_rowgroup_skipping" -> { (s, d) =>
-      // ROW-GROUP-level data skipping (TableLog.readRowGroupPruned +
+      // ROW-GROUP-level data skipping (LakeSelect.readWhere +
       // RowGroupScan — round-11 verdict gap #7, the reference's own
       // 15k-row-group design intent, ref east_asia.py:82): one key-sorted
       // append written with small row groups, then a 1/16th-keyspace
       // query. The log's footer index extends to per-ROW-GROUP min/max
-      // and the selective scan reads ONLY matching row groups via
-      // parquet-mr readRowGroup(i) — rg_pruned pins row-groups-read <
-      // row-groups-total and file_pruned pins the file-level skip, while
-      // the aggregates replay closed-form against the full-scan oracle.
+      // and the selective scan hands Spark's parquet reader ONLY the
+      // matching row groups as byte-range splits — rg_pruned pins
+      // row-groups-read < row-groups-total and file_pruned pins the
+      // file-level skip, while the aggregates replay closed-form against
+      // the full-scan oracle.
       val dir = java.nio.file.Files.createTempDirectory("graft_k28")
         .toString + "/table"
       val o = t(s, d, "orders").select(col("o_orderkey"),
@@ -3400,20 +3393,18 @@ object SparkEntry {
       val b = o.agg(min("o_orderkey"), max("o_orderkey")).first()
       val lo = b.getLong(0)
       val hi = lo + (b.getLong(1) - lo) / 16
-      val (pr, rgOpened, rgTotal, fOpened, fTotal) =
-        graft.operators.TableLog.readRowGroupPruned(
-          s, dir, "o_orderkey", lo, hi)
-      pr.filter(col("o_orderkey").between(lo, hi))
-        .agg(count(lit(1)).as("n"),
+      val (pr, st) = graft.operators.LakeSelect.readWhere(s, dir,
+        s"o_orderkey BETWEEN $lo AND $hi")
+      pr.agg(count(lit(1)).as("n"),
           sum(col("price_cents")).as("sum_cents"),
           min(col("o_orderkey")).as("min_k"),
           max(col("o_orderkey")).as("max_k"))
-        .withColumn("rg_pruned", lit(rgOpened < rgTotal))
-        .withColumn("file_pruned", lit(fOpened < fTotal))
+        .withColumn("rg_pruned", lit(st.rgOpened < st.rgTotal))
+        .withColumn("file_pruned", lit(st.filesOpened < st.filesTotal))
     },
 
     "k28b_rowgroup_string" -> { (s, d) =>
-      // ROW-GROUP skipping on a STRING column (readRowGroupPrunedString —
+      // ROW-GROUP skipping on a STRING column (LakeSelect.readWhere —
       // the date-string predicate, the most common lake filter shape):
       // orders keyed by its 'yyyy-MM-dd' day string, sorted on append,
       // then the FIRST CALENDAR MONTH sliced lexicographically
@@ -3431,15 +3422,13 @@ object SparkEntry {
           "parquet.page.size" -> "4096"))
       val lo = d0.agg(min("day")).first().getString(0)
       val hi = lo.substring(0, 8) + "99"
-      val (pr, rgOpened, rgTotal, fOpened, fTotal) =
-        graft.operators.TableLog.readRowGroupPrunedString(
-          s, dir, "day", lo, hi)
-      pr.filter(col("day").between(lo, hi))
-        .agg(count(lit(1)).as("n"),
+      val (pr, st) = graft.operators.LakeSelect.readWhere(s, dir,
+        s"day BETWEEN '$lo' AND '$hi'")
+      pr.agg(count(lit(1)).as("n"),
           sum(col("price_cents")).as("sum_cents"),
           min(col("day")).as("min_d"), max(col("day")).as("max_d"))
-        .withColumn("rg_pruned", lit(rgOpened < rgTotal))
-        .withColumn("file_pruned", lit(fOpened < fTotal))
+        .withColumn("rg_pruned", lit(st.rgOpened < st.rgTotal))
+        .withColumn("file_pruned", lit(st.filesOpened < st.filesTotal))
     },
 
     "k29_point_lookup" -> { (s, d) =>
@@ -3478,7 +3467,7 @@ object SparkEntry {
     },
 
     "k16_tablelog_skipping" -> { (s, d) =>
-      // log-integrated data skipping (TableLog.readZonePruned +
+      // log-integrated data skipping (LakeSelect.readWhere +
       // optimize(clusterBy)): six UNCLUSTERED appends leave every file
       // spanning the whole key range (zone maps can skip nothing —
       // unpruned_before pins that honestly); a clustering OPTIMIZE
@@ -3499,19 +3488,18 @@ object SparkEntry {
         count(lit(1))).first()
       val lo = b.getLong(0)
       val hi = lo + (b.getLong(1) - lo) / 8
-      val (_, ob, tb) = graft.operators.TableLog.readZonePruned(
-        s, dir, "o_orderkey", lo, hi)
+      val pred = s"o_orderkey BETWEEN $lo AND $hi"
+      val (_, before) = graft.operators.LakeSelect.readWhere(s, dir, pred)
       graft.operators.TableLog.optimize(s, dir,
         maxRows = (b.getLong(2) + 7) / 8, clusterBy = Seq("o_orderkey"))
-      val (pr, opened, total) = graft.operators.TableLog.readZonePruned(
-        s, dir, "o_orderkey", lo, hi)
-      pr.filter(col("o_orderkey").between(lo, hi))
-        .agg(count(lit(1)).as("n"),
+      val (pr, st) = graft.operators.LakeSelect.readWhere(s, dir, pred)
+      pr.agg(count(lit(1)).as("n"),
           sum(col("price_cents")).as("sum_cents"),
           min(col("o_orderkey")).as("min_k"),
           max(col("o_orderkey")).as("max_k"))
-        .withColumn("pruned", lit(opened < total))
-        .withColumn("unpruned_before", lit(ob == tb))
+        .withColumn("pruned", lit(st.filesOpened < st.filesTotal))
+        .withColumn("unpruned_before",
+          lit(before.filesOpened == before.filesTotal))
     },
 
     "k15_exactly_once_append" -> { (s, d) =>

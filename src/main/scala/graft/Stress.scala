@@ -833,12 +833,12 @@ object Stress {
         // pick a real key from file 17 and fetch it
         val key = spark.range(99L, 100L)
           .select(xxhash64(col("id"), lit(17))).head().getLong(0)
-        val (df, opened, total) = graft.operators.TableLog
-          .readBloomPruned(spark, dir, "k", Seq(key))
-        require(total == 40 && opened <= 4,
-          s"bloom opened $opened of $total")
-        require(df.filter(col("k") === key).count() >= 1L)
-        println(s"    opened $opened of $total files")
+        val (df, st) = graft.operators.LakeSelect.readWhere(spark, dir,
+          s"k = $key")
+        require(st.filesTotal == 40 && st.filesOpened <= 4,
+          s"bloom opened ${st.filesOpened} of ${st.filesTotal}")
+        require(df.count() >= 1L)
+        println(s"    opened ${st.filesOpened} of ${st.filesTotal} files")
       }
       time("incremental view refresh (10M-row source, 1k-row change)") {
         // the rollup-freshness path at scale: the second refresh must be
@@ -884,16 +884,16 @@ object Stress {
               (col("id") * 3L).as("v"))
             .repartitionByRange(4, col("k")).sortWithinPartitions("k"),
           dir, options = rgOpts)
-        val (pr, rgOpened, rgTotal, fOpened, fTotal) =
-          graft.operators.TableLog.readRowGroupPruned(
-            spark, dir, "k", 4000000L, 4050000L)
-        require(rgTotal > 50, s"stress wants many row groups: $rgTotal")
-        require(rgOpened * 20 < rgTotal,
-          s"row groups opened $rgOpened of $rgTotal")
-        require(fOpened == 1 && fTotal == 4)
-        val n = pr.filter(col("k").between(4000000L, 4050000L)).count()
+        val (pr, st) = graft.operators.LakeSelect.readWhere(spark, dir,
+          "k BETWEEN 4000000 AND 4050000")
+        require(st.rgTotal > 50,
+          s"stress wants many row groups: ${st.rgTotal}")
+        require(st.rgOpened * 20 < st.rgTotal,
+          s"row groups opened ${st.rgOpened} of ${st.rgTotal}")
+        require(st.filesOpened == 1 && st.filesTotal == 4)
+        val n = pr.count()
         require(n == 50001L, s"range count $n")
-        println(s"    opened $rgOpened of $rgTotal row groups")
+        println(s"    opened ${st.rgOpened} of ${st.rgTotal} row groups")
       }
       time("composed point lookup (10M rows, 40 interleaved files)") {
         // bloom × row-group composition: every file spans the FULL key

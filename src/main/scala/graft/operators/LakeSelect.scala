@@ -19,16 +19,15 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType,
   *     integral column, string probes a string column — a double column
   *     hashed as "4.0" must never be probed with "4" (Spark's implicit
   *     cast would match rows the bloom pruned away); mistyped conjuncts
-  *     fall through to the conservative zone-map paths instead.
-  *  2. TWO OR MORE prunable conjuncts → [[TableLog.
-  *     readRowGroupPrunedMulti]]: every constraint's keep set
-  *     intersects and the scan runs once — the z-order payoff (a
-  *     2-column clustered table prunes on both predicate columns);
-  *  3. equality/IN on any column → [[TableLog.readRowGroupPrunedIn]]
-  *     (row-group zone stats only);
-  *  4. range on any column → [[TableLog.readRowGroupPruned]] /
-  *     `...String` (single-bound numeric ranges widen the missing side;
-  *     string bounds stay exact through optional-bound scans).
+  *     fall through to the conservative row-group route instead.
+  *  2. any other prunable conjunct(s) → [[TableLog.
+  *     readRowGroupPrunedMulti]] over the row-group zone stats: every
+  *     constraint's keep set intersects and the scan runs once — the
+  *     z-order payoff (a 2-column clustered table prunes on both
+  *     predicate columns). Open bounds stay open (a one-sided range
+  *     prunes on its one side). The strategy label names the shape of
+  *     a single constraint, or `rowgroup_multi` for two or more;
+  *  3. nothing prunable → a full snapshot scan.
   *
   * Prunable conjunct shapes: top-level ANDs of `col = lit`,
   * `col IN (lits…)`, `col <cmp> lit` (either operand order; integral,
@@ -50,8 +49,9 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType,
   * conjunct can never change results, only pruning power: the
   * conservative-keep contract every skipping path in this engine
   * follows. Under the row-group keep set, surviving groups also skip
-  * PAGES via the parquet ColumnIndex (constraints re-expressed as a
-  * FilterPredicate over each file's physical types).
+  * PAGES via the parquet ColumnIndex: constraints on integral and
+  * string columns, and null checks, are pushed to Spark's parquet
+  * reader as `sources.Filter`s.
   *
   * [[countWhere]] is the aggregate twin: COUNT answered from footer
   * metadata wherever the index PROVES a whole row group in or out, with
@@ -68,7 +68,7 @@ object LakeSelect {
   /** What a [[readWhere]] actually did — for plan assertions and ops
     * introspection. `strategy` ∈ point_lookup | rowgroup_multi |
     * rowgroup_in | rowgroup_range | rowgroup_null | rowgroup_ne |
-    * rowgroup_or | full_scan. */
+    * rowgroup_or | rowgroup_case | rowgroup_trim | full_scan. */
   final case class Stats(strategy: String, column: Option[String],
       rgOpened: Long, rgTotal: Long, filesOpened: Int, filesTotal: Int)
 
@@ -180,31 +180,12 @@ object LakeSelect {
           TableLog.readPointLookup(spark, dir, c, e.values, version,
             scanCols, extra, partKeep)
         (df, Stats("point_lookup", Some(c), rgo, rgt, fo, ft))
-      } else if (rgConstraints.size >= 2) {
+      } else if (rgConstraints.nonEmpty) {
         val (df, rgo, rgt, fo, ft) = TableLog.readRowGroupPrunedMulti(
           spark, dir, rgConstraints, version, scanCols, partKeep)
-        (df, Stats("rowgroup_multi",
+        (df, Stats(strategyOf(rgConstraints),
           Some(rgConstraints.map(_.column).distinct.mkString(",")),
           rgo, rgt, fo, ft))
-      } else if (rgConstraints.size == 1) {
-        val cons = rgConstraints.head match {
-          case TableLog.AtScale(in, _) => in
-          case c => c
-        }
-        val label = cons match {
-          case _: TableLog.NumIn | _: TableLog.StrIn |
-              _: TableLog.DblIn => "rowgroup_in"
-          case _: TableLog.CaseIn => "rowgroup_case"
-          case _: TableLog.TrimIn => "rowgroup_trim"
-          case _: TableLog.NullCheck => "rowgroup_null"
-          case _: TableLog.NumNotIn | _: TableLog.StrNotIn =>
-            "rowgroup_ne"
-          case _: TableLog.RgOr => "rowgroup_or"
-          case _ => "rowgroup_range"
-        }
-        val (df, rgo, rgt, fo, ft) = TableLog.readRowGroupPrunedMulti(
-          spark, dir, rgConstraints, version, scanCols, partKeep)
-        (df, Stats(label, Some(cons.column), rgo, rgt, fo, ft))
       } else {
         val df = TableLog.read(spark, dir, version)
         (df, Stats("full_scan", None, 0L, 0L,
@@ -214,6 +195,23 @@ object LakeSelect {
     (if (columns.isEmpty) filtered
      else filtered.select(columns.map(col): _*), stats)
   }
+
+  /** The [[Stats.strategy]] label of a row-group read: `rowgroup_multi`
+    * for two or more constraints, else named after the one constraint's
+    * shape. */
+  private def strategyOf(cs: Seq[TableLog.RgConstraint]): String =
+    if (cs.size >= 2) "rowgroup_multi"
+    else cs.head match {
+      case TableLog.AtScale(in, _) => strategyOf(Seq(in))
+      case _: TableLog.NumIn | _: TableLog.StrIn | _: TableLog.DblIn =>
+        "rowgroup_in"
+      case _: TableLog.CaseIn => "rowgroup_case"
+      case _: TableLog.TrimIn => "rowgroup_trim"
+      case _: TableLog.NullCheck => "rowgroup_null"
+      case _: TableLog.NumNotIn | _: TableLog.StrNotIn => "rowgroup_ne"
+      case _: TableLog.RgOr => "rowgroup_or"
+      case _ => "rowgroup_range"
+    }
 
   /** COUNT(*) with the predicate answered from footer METADATA wherever
     * the index proves a row group fully in (exact constraints, zero

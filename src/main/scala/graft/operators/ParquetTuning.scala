@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Parquet physical-layout tuning beyond codec/row-group size: split-block
   * bloom filters on high-cardinality lookup keys.
@@ -32,182 +31,6 @@ object ParquetTuning {
         .option(s"parquet.bloom.filter.fpp#$c", fpp.toString)
     }
     w.save(path)
-  }
-
-  /** Per-file zone-map index over a numeric column — (file, zmin, zmax,
-    * n_rows) from the parquet FOOTERS only (the Delta/Iceberg
-    * file-skipping statistic, maintained externally so planning a point
-    * or range query on a 100 TB lake reads one small index table instead
-    * of opening millions of footers).
-    *
-    * Build: file names list on the driver (one string per file — the
-    * MergeParquet planning posture), footer statistics read DISTRIBUTED
-    * (one footer per task, no data pages touched). Files lacking stats
-    * for the column get a null-bounds row — [[readZonePruned]] keeps them
-    * conservatively. */
-  def zoneMapIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      column: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val files = root.getFileSystem(conf).listStatus(root).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).map(_.toString).toSeq
-    zoneMapIndexFiles(spark, files, column)
-  }
-
-  /** [[zoneMapIndex]] over an EXPLICIT file list — the [[TableLog]]
-    * data-skipping shape: stats for exactly the committed snapshot's
-    * files (orphans and other versions' files never enter the index). */
-  def zoneMapIndexFiles(spark: org.apache.spark.sql.SparkSession,
-      files: Seq[String], column: String): DataFrame = {
-    import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-    files.toDS().mapPartitions { it =>
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      import scala.jdk.CollectionConverters._
-      it.map { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f), serConf.value))
-        try {
-          val blocks = reader.getFooter.getBlocks.asScala
-          var mn: Option[Long] = None
-          var mx: Option[Long] = None
-          var n = 0L
-          var statsOk = true
-          blocks.foreach { rg =>
-            n += rg.getRowCount
-            rg.getColumns.asScala.find(_.getPath.toDotString == column) match {
-              case Some(cc) if cc.getStatistics != null &&
-                  !cc.getStatistics.isEmpty =>
-                val st = cc.getStatistics
-                (st.genericGetMin, st.genericGetMax) match {
-                  case (a: Number, b: Number) =>
-                    mn = Some(mn.fold(a.longValue)(math.min(_, a.longValue)))
-                    mx = Some(mx.fold(b.longValue)(math.max(_, b.longValue)))
-                  case _ => statsOk = false
-                }
-              case _ => statsOk = false
-            }
-          }
-          if (statsOk) (f, mn, mx, n)
-          else (f, None: Option[Long], None: Option[Long], n)
-        } finally reader.close()
-      }
-    }.toDF("file", "zmin", "zmax", "n_rows")
-  }
-
-  /** Range-pruned lake read off a [[zoneMapIndex]]: opens ONLY files whose
-    * [zmin, zmax] intersects [lo, hi] (null-bounds files kept
-    * conservatively — skipping may lose rows, keeping never does).
-    * Returns (frame, filesOpened, filesTotal); the caller re-applies the
-    * exact predicate — zone maps prune files, they don't filter rows. */
-  def readZonePruned(spark: org.apache.spark.sql.SparkSession,
-      index: DataFrame, lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val total = index.count().toInt
-    val keep = index.filter(col("zmin").isNull || col("zmax").isNull ||
-        (col("zmin") <= hi && col("zmax") >= lo))
-      .select("file").collect().map(_.getString(0))
-    val df =
-      if (keep.isEmpty) spark.emptyDataFrame
-      else spark.read.parquet(keep.toIndexedSeq: _*)
-    (df, keep.length, total)
-  }
-
-  /** [[zoneMapIndex]] for STRING (binary/UTF8) columns — (file, zmin,
-    * zmax, n_rows) with string bounds, the shipdate-style statistic
-    * behind the most common lake predicate (date strings, category
-    * codes, url prefixes). Parquet keeps binary min/max truncated
-    * lexicographic bounds; comparison is byte-lexicographic, which for
-    * UTF-8 equals code-point order — exactly the ORDER BY semantics the
-    * pruning predicate needs. Same scale shape: file list on the driver,
-    * footers read distributed, no data pages touched. Files lacking
-    * binary stats get null bounds — kept conservatively by
-    * [[readZonePrunedString]]. */
-  def zoneMapIndexString(spark: org.apache.spark.sql.SparkSession,
-      dir: String, column: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val files = root.getFileSystem(conf).listStatus(root).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).map(_.toString).toSeq
-    zoneMapIndexStringFiles(spark, files, column)
-  }
-
-  /** [[zoneMapIndexString]] over an explicit file list (TableLog twin). */
-  def zoneMapIndexStringFiles(spark: org.apache.spark.sql.SparkSession,
-      files: Seq[String], column: String): DataFrame = {
-    import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-    files.toDS().mapPartitions { it =>
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      import scala.jdk.CollectionConverters._
-      // fold bounds in UTF-8 BYTE order — the order the parquet stats
-      // and Spark's UTF8String pruning filter use. Java String <
-      // compares UTF-16 code units, which DISAGREES beyond the BMP (a
-      // supplementary char sorts below U+E000..U+FFFF in UTF-16 but
-      // above in UTF-8), and a wrongly-folded max prunes files that
-      // hold matching rows.
-      def utf8Lt(a: String, b: String): Boolean = {
-        val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-        val n = math.min(x.length, y.length)
-        var i = 0
-        while (i < n) {
-          val c = (x(i) & 0xff) - (y(i) & 0xff)
-          if (c != 0) return c < 0
-          i += 1
-        }
-        x.length < y.length
-      }
-      it.map { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f), serConf.value))
-        try {
-          val blocks = reader.getFooter.getBlocks.asScala
-          var mn: Option[String] = None
-          var mx: Option[String] = None
-          var n = 0L
-          var statsOk = true
-          blocks.foreach { rg =>
-            n += rg.getRowCount
-            rg.getColumns.asScala.find(_.getPath.toDotString == column) match {
-              case Some(cc) if cc.getStatistics != null &&
-                  !cc.getStatistics.isEmpty =>
-                val st = cc.getStatistics
-                (st.genericGetMin, st.genericGetMax) match {
-                  case (a: org.apache.parquet.io.api.Binary,
-                        b: org.apache.parquet.io.api.Binary) =>
-                    val (lo, hi) = (a.toStringUsingUTF8, b.toStringUsingUTF8)
-                    mn = Some(mn.fold(lo)(m => if (utf8Lt(lo, m)) lo else m))
-                    mx = Some(mx.fold(hi)(m => if (utf8Lt(m, hi)) hi else m))
-                  case _ => statsOk = false
-                }
-              case _ => statsOk = false
-            }
-          }
-          if (statsOk) (f, mn, mx, n)
-          else (f, None: Option[String], None: Option[String], n)
-        } finally reader.close()
-      }
-    }.toDF("file", "zmin", "zmax", "n_rows")
-  }
-
-  /** Range-pruned lake read off a [[zoneMapIndexString]]: opens ONLY
-    * files whose string [zmin, zmax] intersects [lo, hi]
-    * lexicographically (null-bounds files kept conservatively). Returns
-    * (frame, filesOpened, filesTotal); the caller re-applies the exact
-    * predicate. */
-  def readZonePrunedString(spark: org.apache.spark.sql.SparkSession,
-      index: DataFrame, lo: String, hi: String): (DataFrame, Int, Int) = {
-    val total = index.count().toInt
-    val keep = index.filter(col("zmin").isNull || col("zmax").isNull ||
-        (col("zmin") <= hi && col("zmax") >= lo))
-      .select("file").collect().map(_.getString(0))
-    val df =
-      if (keep.isEmpty) spark.emptyDataFrame
-      else spark.read.parquet(keep.toIndexedSeq: _*)
-    (df, keep.length, total)
   }
 
   /** True iff EVERY row group of every parquet file under `dir` carries a

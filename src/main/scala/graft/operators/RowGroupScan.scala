@@ -7,10 +7,9 @@ import org.apache.spark.sql.types._
 /** Row-group-level data skipping: a footer index at ROW-GROUP granularity
   * plus a selective scan that reads only the matching row groups.
   *
-  * File-level zone maps ([[ParquetTuning.zoneMapIndexFiles]]) stop at file
-  * bounds: a 500 MB Hilbert-sorted file whose [zmin, zmax] straddles the
-  * predicate is opened WHOLE even though only a handful of its row groups
-  * intersect. The reference's entire physical design leans on small row
+  * File-level zone maps stop at file bounds: a 500 MB Hilbert-sorted
+  * file whose [zmin, zmax] straddles the predicate is opened WHOLE even
+  * though only a handful of its row groups intersect. The reference's entire physical design leans on small row
   * groups for exactly this reason (15 000-row groups — ref
   * east_asia.py:82, SURVEY §1.3): the pruning unit is the row group, not
   * the file. This object extends the log's own index to that granularity:

@@ -647,7 +647,7 @@ object TableLog {
           .contains(c))
           Map.empty
         else {
-          val rel = stageBloomSidecar(spark, dir, c, files, v, 10)
+          val rel = stageBloomSidecar(spark, dir, prior, c, files, v, 10)
           files.map(_ -> rel).toMap
         }
       case _ => Map.empty
@@ -796,15 +796,13 @@ object TableLog {
     import org.apache.spark.sql.functions.{broadcast, col, expr}
     import spark.implicits._
     val snap = snapshot(dir)
-    val abs = snap.files.map(f => Paths.get(dir).resolve(f).toString)
     val byName = snap.files.map(f =>
       Paths.get(f).getFileName.toString -> f).toMap
     require(byName.size == snap.files.size,
       s"duplicate data-file basenames in $dir") // never true by naming
     // visible rows only: a row already in a DV can't be deleted twice
     val visible = antiDv(spark, dir,
-      tagPhys(spark.read.option("mergeSchema", "true").parquet(abs: _*)),
-      snap.dvs)
+      tagPhys(scanEvolved(spark, dir, snap, snap.files)), snap.dvs)
     val lookup = byName.toSeq.toDF("__graft_fn", "f")
     val matches = visible.filter(expr(predicate))
       .join(broadcast(lookup), "__graft_fn")
@@ -1079,21 +1077,30 @@ object TableLog {
   def readEvolved(spark: SparkSession, dir: String,
       version: Int = -1): DataFrame = {
     val snap = snapshot(dir, version)
-    val abs = snap.files.map(f => Paths.get(dir).resolve(f).toString)
-    val scan =
-      try spark.read.option("mergeSchema", "true").parquet(abs: _*)
-      catch {
-        case e: org.apache.spark.SparkException
-            if e.getCondition == "CANNOT_MERGE_SCHEMAS" =>
-          val cols = Option(unionColsMemo.get((dir, snap.version)))
-            .getOrElse(snapshotUnionCols(spark, dir, snap))
-          spark.read.schema(org.apache.spark.sql.types.StructType(
-            cols.map { case (n, t) =>
-              org.apache.spark.sql.types.StructField(n,
-                org.apache.spark.sql.types.DataType.fromDDL(t))
-            })).parquet(abs: _*)
-      }
-    applyDv(spark, dir, scan, snap.dvs)
+    applyDv(spark, dir, scanEvolved(spark, dir, snap, snap.files),
+      snap.dvs)
+  }
+
+  /** Plain parquet scan of `files` (log-relative) with per-file schemas
+    * merged. When `mergeSchema` refuses a type evolution (int→bigint, a
+    * decimal scale-up) the files read in `snap`'s widened union schema
+    * instead, and Spark's reader widens the older files. Every evolved
+    * read goes through here: [[readEvolved]], the DML scans, the change
+    * feed and the bloom build. */
+  private def scanEvolved(spark: SparkSession, dir: String, snap: Snapshot,
+      files: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.types.{DataType, StructField, StructType}
+    val abs = files.map(f => Paths.get(dir).resolve(f).toString)
+    try spark.read.option("mergeSchema", "true").parquet(abs: _*)
+    catch {
+      case e: org.apache.spark.SparkException
+          if e.getCondition == "CANNOT_MERGE_SCHEMAS" =>
+        val cols = Option(unionColsMemo.get((dir, snap.version)))
+          .getOrElse(snapshotUnionCols(spark, dir, snap))
+        spark.read.schema(StructType(cols.map { case (n, t) =>
+          StructField(n, DataType.fromDDL(t))
+        })).parquet(abs: _*)
+    }
   }
 
   /** Row-level change feed between two committed versions (the
@@ -1118,21 +1125,20 @@ object TableLog {
     val bSet = b.files.toSet
     val added = b.files.filterNot(aSet)
     val removed = a.files.filterNot(bSet)
-    // mergeSchema + allowMissingColumns: the touched files may straddle
-    // an add-column evolution (see [[readEvolved]]) — files predating the
-    // column surface it as NULL instead of dropping it or failing the
-    // union. Each side applies ITS version's deletion vectors, so a row
-    // already DV-deleted at fromV never re-surfaces as a CDF delete and
-    // a row inserted-then-DV-deleted inside the window nets out.
+    // evolved scans + allowMissingColumns: the touched files may
+    // straddle an add-column or type-widening evolution (see
+    // [[readEvolved]]) — files predating the column surface it as NULL
+    // instead of dropping it or failing the union. Each side applies
+    // ITS version's deletion vectors, so a row already DV-deleted at
+    // fromV never re-surfaces as a CDF delete and a row
+    // inserted-then-DV-deleted inside the window nets out.
     def readFiles(fs: Seq[String], tag: String,
-        dvs: Map[String, String]): Option[DataFrame] =
+        at: Snapshot): Option[DataFrame] =
       if (fs.isEmpty) None
       else {
         val fsSet = fs.toSet
-        Some(applyDv(spark, dir,
-          spark.read.option("mergeSchema", "true")
-            .parquet(fs.map(f => Paths.get(dir).resolve(f).toString): _*),
-          dvs.filter { case (f, _) => fsSet(f) })
+        Some(applyDv(spark, dir, scanEvolved(spark, dir, at, fs),
+          at.dvs.filter { case (f, _) => fsSet(f) })
           .withColumn("_change_type", lit(tag)))
       }
     // DV-only changes on files live at BOTH versions: positions added to
@@ -1154,8 +1160,7 @@ object TableLog {
         val key = pairs.select(
           element_at(split(col("f"), "/"), -1).as("__graft_fn"),
           col("ridx").as("__graft_ridx"))
-        Some(tagPhys(spark.read.option("mergeSchema", "true")
-          .parquet(fs.map(f => Paths.get(dir).resolve(f).toString): _*))
+        Some(tagPhys(scanEvolved(spark, dir, b, fs.toSeq))
           .join(broadcast(key), Seq("__graft_fn", "__graft_ridx"),
             "left_semi")
           .drop("__graft_fn", "__graft_ridx")
@@ -1171,105 +1176,13 @@ object TableLog {
           val bP = bp.getOrElse(ap.get.limit(0))
           (rowsFor(bP.except(aP), "delete"), rowsFor(aP.except(bP), "insert"))
       }
-    val parts = Seq(readFiles(added, "insert", b.dvs), dvInserts,
-      readFiles(removed, "delete", a.dvs), dvDeletes).flatten
+    val parts = Seq(readFiles(added, "insert", b), dvInserts,
+      readFiles(removed, "delete", a), dvDeletes).flatten
     if (parts.isEmpty) // no file or vector changed: empty, table schema
       readEvolved(spark, dir, toV).limit(0)
         .withColumn("_change_type", lit("insert"))
     else parts.reduce(_.unionByName(_, allowMissingColumns = true))
   }
-
-  /** Partition-pruned read: only files tagged with one of `values`.
-    * Untagged files are kept conservatively (they may hold any
-    * partition — skipping could lose rows, keeping never does). */
-  def readPartitions(spark: SparkSession, dir: String,
-      values: Seq[String], version: Int = -1): DataFrame = {
-    val snap = snapshot(dir, version)
-    val keep = snap.files.filter(f =>
-      snap.parts.get(f).forall(values.contains))
-    require(keep.nonEmpty, s"no files for partitions $values in $dir")
-    val keepSet = keep.toSet
-    applyDv(spark, dir,
-      RowGroupScan.readNoInfer(spark, keep.map(f =>
-        Paths.get(dir).resolve(f).toString)),
-      snap.dvs.filter { case (f, _) => keepSet(f) })
-  }
-
-  /** Zone-map-pruned read: footer min/max stats of EXACTLY the committed
-    * snapshot's files (an orphan or another version's file never enters
-    * the index — the Delta data-skipping contract), opening only files
-    * whose [zmin, zmax] intersects [lo, hi]. The caller re-applies the
-    * exact predicate (zone maps prune files, not rows). Returns
-    * (frame, filesOpened, filesTotal). Pair with [[optimize]]
-    * (`clusterBy` the same column) so file ranges are tight. */
-  def readZonePruned(spark: SparkSession, dir: String, column: String,
-      lo: Long, hi: Long, version: Int = -1): (DataFrame, Int, Int) = {
-    val snap = snapshot(dir, version)
-    val abs = snap.files.map(f => Paths.get(dir).resolve(f).toString)
-    val idx = ParquetTuning.zoneMapIndexFiles(spark, abs, column)
-    val (df, opened, total) = ParquetTuning.readZonePruned(spark, idx, lo, hi)
-    // zero kept files: return an empty frame WITH the table schema —
-    // applyDv's _metadata tag does not exist on an empty local relation,
-    // so routing spark.emptyDataFrame through it crashes the analyzer
-    if (opened == 0) (readEvolved(spark, dir, snap.version).limit(0),
-      opened, total)
-    else (applyDv(spark, dir, df, snap.dvs), opened, total)
-  }
-
-  /** ROW-GROUP-level zone-pruned read — [[readZonePruned]] at the
-    * granularity the reference's physical layout is built around (15k-row
-    * groups, ref east_asia.py:82): per-row-group footer min/max feed a
-    * selective scan ([[RowGroupScan]]) that reads ONLY the row groups
-    * whose [zmin, zmax] intersects [lo, hi], so a narrow predicate over a
-    * clustered 500 MB file reads a few row groups instead of the whole
-    * file. The caller re-applies the exact predicate. Returns (frame,
-    * rgOpened, rgTotal, filesOpened, filesTotal).
-    *
-    * The prune is DISTRIBUTED (a Column filter over the index — the
-    * driver collects only the kept slices) and the index is served from
-    * the log's persisted sidecar when [[computeRowGroupIndex]] has run
-    * (zero footer opens to plan; unmapped files fall back to a footer
-    * pass). Files carrying deletion vectors are read PARTIALLY too: the
-    * selective scan emits file-ordinal row positions rebased from the
-    * index's per-group row counts, and the vectors anti-join as usual. */
-  def readRowGroupPruned(spark: SparkSession, dir: String, column: String,
-      lo: Long, hi: Long, version: Int = -1,
-      columns: Seq[String] = Nil)
-      : (DataFrame, Long, Long, Int, Int) =
-    prunedCore(spark, dir, snapshot(dir, version),
-      Seq(NumRange(column, Some(lo), Some(hi))), columns)
-
-  /** [[readRowGroupPruned]] for STRING columns — lexicographic [lo, hi]
-    * in UTF-8 byte order (ORDER BY / BETWEEN semantics), the date-string
-    * / category-code predicate shape. Open bounds (`None`) skip that
-    * side of the comparison — there is no finite top string, so
-    * `lo`-only predicates stay exactly prunable. */
-  def readRowGroupPrunedString(spark: SparkSession, dir: String,
-      column: String, lo: String, hi: String, version: Int = -1,
-      columns: Seq[String] = Nil)
-      : (DataFrame, Long, Long, Int, Int) =
-    readRowGroupPrunedStringBounds(spark, dir, column, Some(lo), Some(hi),
-      version, columns)
-
-  /** [[readRowGroupPrunedString]] with optional bounds. */
-  def readRowGroupPrunedStringBounds(spark: SparkSession, dir: String,
-      column: String, lo: Option[String], hi: Option[String],
-      version: Int = -1, columns: Seq[String] = Nil)
-      : (DataFrame, Long, Long, Int, Int) =
-    prunedCore(spark, dir, snapshot(dir, version),
-      Seq(StrRange(column, lo, hi)), columns)
-
-  /** IN-list row-group-pruned read WITHOUT a bloom index: keeps row
-    * groups whose [zmin, zmax] contains ANY probe value (the probe is a
-    * distributed `exists` over a literal array — never a per-row driver
-    * loop). Prefer [[readPointLookup]] when the column carries a bloom
-    * index (it also prunes whole files). */
-  def readRowGroupPrunedIn(spark: SparkSession, dir: String,
-      column: String, values: Seq[Long], version: Int = -1,
-      columns: Seq[String] = Nil)
-      : (DataFrame, Long, Long, Int, Int) =
-    prunedCore(spark, dir, snapshot(dir, version),
-      Seq(NumIn(column, values)), columns)
 
   /** One prunable conjunct for [[readRowGroupPrunedMulti]]. A
     * [[StrRange]] with `hiExcl` treats `hi` as EXCLUSIVE — the prefix
@@ -2429,9 +2342,10 @@ object TableLog {
     * [[optimize]]/[[rewriteMatched]]. One footer pass sizes the bitmap,
     * ONE distributed scan builds per-file bitmaps with map-side partial
     * OR — shuffle volume is O(tasks × bitmap), never the position
-    * stream. */
+    * stream. `snap` is the snapshot the files are read against (its
+    * union schema covers a type-widened file set). */
   private def stageBloomSidecar(spark: SparkSession, dir: String,
-      column: String, files: Seq[String], v: Int,
+      snap: Snapshot, column: String, files: Seq[String], v: Int,
       bitsPerRow: Int): String = {
     import org.apache.spark.sql.functions.{array, broadcast, col}
     import spark.implicits._
@@ -2448,8 +2362,7 @@ object TableLog {
     val mBits = if (Integer.bitCount(want) == 1) math.max(want, 8192)
                 else math.max(Integer.highestOneBit(want) << 1, 8192)
     val mBytes = mBits / 8
-    val scanned = spark.read.option("mergeSchema", "true")
-      .parquet(files.map(f => Paths.get(dir).resolve(f).toString): _*)
+    val scanned = scanEvolved(spark, dir, snap, files)
       .select(col("_metadata.file_name").as("fn"),
         array(bloomPosCols(col(column).cast("string"), mBits): _*)
           .as("ps"))
@@ -2504,7 +2417,7 @@ object TableLog {
     val need = snap.files.filterNot(prior.contains)
     if (need.isEmpty) return snap.version
     val (_, v) = planNext(dir)
-    val sidecarRel = stageBloomSidecar(spark, dir, column, need, v,
+    val sidecarRel = stageBloomSidecar(spark, dir, snap, column, need, v,
       bitsPerRow)
     retryCommit(dir, maxRetries) { (head, vNext) =>
       // index only files still live at the head; keep the head's own
@@ -2523,42 +2436,6 @@ object TableLog {
     }.get
   }
 
-  /** Equality-pruned read: open only files whose bloom bitmap might
-    * contain one of `values` (unindexed files are kept conservatively —
-    * skipping could lose rows, keeping never does). Probe values hash
-    * through their `toString` form, which must equal Spark's
-    * cast-to-string of the column (true for long/int/string keys). The
-    * caller re-applies the exact predicate. Returns (frame,
-    * filesOpened, filesTotal).
-    *
-    * Scale: the probe runs as ONE distributed job over the sidecar rows —
-    * each task evaluates its bitmaps in place and emits (file, hit), so
-    * driver residency is O(indexed files) BOOLEANS, never the bitmaps
-    * themselves (at 100 TB / ~10¹¹ indexed rows the bitmaps total
-    * ~10 GB+ — collecting them was the one driver scale-killer on
-    * exactly the needle-in-100TB path this index exists for). */
-  def readBloomPruned(spark: SparkSession, dir: String, column: String,
-      values: Seq[Any], version: Int = -1): (DataFrame, Int, Int) = {
-    require(values.nonEmpty, "readBloomPruned needs at least one value")
-    val snap = snapshot(dir, version)
-    require(snap.bloomCol.contains(column),
-      s"no bloom index on $column in $dir (run computeBlooms first)")
-    val keep = bloomKeepFiles(spark, dir, snap, values)
-    val keepSet = keep.toSet
-    val df =
-      if (keep.isEmpty) // provably absent everywhere: empty, table schema
-        readEvolved(spark, dir, snap.version).limit(0)
-      else applyDv(spark, dir,
-        spark.read.option("mergeSchema", "true").parquet(
-          keep.map(f => Paths.get(dir).resolve(f).toString): _*),
-        snap.dvs.filter { case (f, _) => keepSet(f) })
-    (df, keep.size, snap.files.size)
-  }
-
-  /** The bloom probe behind [[readBloomPruned]]/[[readPointLookup]]:
-    * which of the snapshot's files MIGHT contain one of `values`
-    * (unindexed files kept conservatively, indexed-but-no-sidecar-row =
-    * all-NULL file = definitely absent). */
   /** Driver memo of a small snapshot's bloom bitmaps — like the wide-
     * index memo, repeated point lookups against one version then plan
     * without any Spark job. Bounded: ≤512 indexed files collect at all,
@@ -2652,6 +2529,10 @@ object TableLog {
     }.toArray
   }
 
+  /** The bloom probe behind [[readPointLookup]]: which of the
+    * snapshot's files MIGHT contain one of `values` (unindexed files
+    * kept conservatively, indexed-but-no-sidecar-row = all-NULL file =
+    * definitely absent). */
   private def bloomKeepFiles(spark: SparkSession, dir: String,
       snap: Snapshot, values: Seq[Any]): Seq[String] = {
     val probeHashes: Array[Array[Long]] = probeHashesLocal(values)
@@ -2714,10 +2595,11 @@ object TableLog {
     * Probe values must be all integral (Long-widened zone check) or all
     * strings (UTF-8 order) — matching the bloom contract that the
     * column's cast-to-string equals `v.toString`. Files carrying
-    * deletion vectors scan selectively too (positions rebase, as in
-    * [[readRowGroupPruned]]). `extra` composes ADDITIONAL prunable
-    * conjuncts into the same scan — the keep sets intersect, so a
-    * bloom-routed query with a range rider prunes on both. */
+    * deletion vectors scan selectively too: the reader's row index
+    * gives each row its file position, and the vectors anti-join on it
+    * (as in [[readRowGroupPrunedMulti]]). `extra` composes ADDITIONAL
+    * prunable conjuncts into the same scan — the keep sets intersect,
+    * so a bloom-routed query with a range rider prunes on both. */
   def readPointLookup(spark: SparkSession, dir: String, column: String,
       values: Seq[Any], version: Int = -1,
       columns: Seq[String] = Nil,
@@ -2764,7 +2646,7 @@ object TableLog {
     * with each other (the tag survives); single-file bins are kept
     * as-is, not rewritten. `clusterBy` sorts each rewritten file on the
     * given columns (the OPTIMIZE ZORDER/cluster shape) so footer min/max
-    * ranges tighten and [[readZonePruned]] skips harder. Returns
+    * ranges tighten and [[LakeSelect.readWhere]] skips harder. Returns
     * (newVersion, filesBefore, filesAfter); a no-op (nothing to merge)
     * commits nothing and returns the current version.
     *
@@ -2812,7 +2694,7 @@ object TableLog {
       if (clusterBy.nonEmpty) {
         // clustering rewrite: the whole group re-sorts GLOBALLY into
         // range-disjoint ≤maxRows files — the OPTIMIZE ZORDER shape that
-        // makes readZonePruned skip hard (per-bin local sorts would
+        // makes the row-group index skip hard (per-bin local sorts would
         // leave file ranges overlapping).
         //
         // ONE column (or any non-numeric column): lexicographic sort —
@@ -2928,7 +2810,7 @@ object TableLog {
     // a manual computeBlooms re-run
     val bloomTopUp: Map[String, String] = snap.bloomCol match {
       case Some(c) if mergedFiles.nonEmpty =>
-        val rel = stageBloomSidecar(spark, dir, c,
+        val rel = stageBloomSidecar(spark, dir, snap, c,
           mergedFiles.map(_._1), v, bitsPerRow = 10)
         mergedFiles.map(_._1 -> rel).toMap
       case _ => Map.empty
@@ -3049,17 +2931,16 @@ object TableLog {
       Paths.get(f).getFileName.toString -> f).toMap
     require(byName.size == snap.files.size,
       s"duplicate data-file basenames in $dir") // never true by naming
-    val abs = snap.files.map(f => Paths.get(dir).resolve(f).toString)
-    // mergeSchema on BOTH copy-on-write scans: the touched files may
-    // straddle an add-column evolution (see [[readEvolved]]) — without
-    // it the rewrite could resolve one footer's narrower schema and
-    // silently DROP the evolved column from the surviving rows.
+    // evolved scans on BOTH copy-on-write passes: the touched files may
+    // straddle an add-column or type-widening evolution (see
+    // [[readEvolved]]) — without them the rewrite could resolve one
+    // footer's narrower schema and silently DROP the evolved column
+    // from the surviving rows, or refuse the widened type outright.
     // Deletion vectors apply FIRST: a row already DV-deleted is not
     // visible, cannot match, and never re-enters through the rewrite.
     // ONE distributed scan: which files hold matches, and how many rows
     val matchedCounts = antiDv(spark, dir,
-        tagPhys(spark.read.option("mergeSchema", "true").parquet(abs: _*)),
-        snap.dvs)
+        tagPhys(scanEvolved(spark, dir, snap, snap.files)), snap.dvs)
       .filter(pred)
       .groupBy(col("__graft_fn").as("f"))
       .agg(count(lit(1)).as("n"))
@@ -3079,10 +2960,8 @@ object TableLog {
     val outputs = Seq.newBuilder[(String, Option[String])]
     var grp = 0
     touched.groupBy(f => snap.parts.get(f)).foreach { case (tag, fs) =>
-      val fabs = fs.toSeq.sorted.map(f => Paths.get(dir).resolve(f).toString)
       val rewritten = rewrite(
-        applyDv(spark, dir,
-          spark.read.option("mergeSchema", "true").parquet(fabs: _*),
+        applyDv(spark, dir, scanEvolved(spark, dir, snap, fs.toSeq.sorted),
           snap.dvs), pred)
       // UPDATE writes NEW row values — they must satisfy the table's
       // CHECK constraints (a DELETE's survivors were committed valid).
@@ -3116,7 +2995,7 @@ object TableLog {
     // them — index their replacements in the same commit (see optimize)
     val bloomTopUp: Map[String, String] = snap.bloomCol match {
       case Some(c) if outs.nonEmpty =>
-        val rel = stageBloomSidecar(spark, dir, c, outs.map(_._1), v,
+        val rel = stageBloomSidecar(spark, dir, snap, c, outs.map(_._1), v,
           bitsPerRow = 10)
         outs.map(_._1 -> rel).toMap
       case _ => Map.empty

@@ -491,32 +491,32 @@ class PipelineSpec extends AnyFunSuite {
 
   test("zone-map index: footer-only bounds; pruned read opens only " +
     "intersecting files and equals the brute-force scan") {
-    import graft.operators.ParquetTuning
-    val tmp = java.nio.file.Files.createTempDirectory("zonespec")
+    val dir = java.nio.file.Files.createTempDirectory("zonespec")
       .toString + "/lake"
     // 4 range-clustered files over keys 0..3999
-    (0 until 4000).map(i => (i.toLong, i * 3L)).toDF("k", "v")
-      .repartitionByRange(4, $"k").write.parquet(tmp)
-    val idx = ParquetTuning.zoneMapIndex(spark, tmp, "k").collect()
-    assert(idx.length == 4)
-    // bounds cover the key space exactly, files disjoint
-    val spans = idx.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
+    val all = (0 until 4000).map(i => (i.toLong, i * 3L))
+    TableLog.append(all.toDF("k", "v").repartitionByRange(4, $"k"), dir)
+    // brute-force file spans: they cover the key space, files disjoint
+    val spans = TableLog.snapshot(dir).files.map { f =>
+      val r = spark.read.parquet(s"$dir/$f").agg(min($"k"), max($"k"))
+        .first()
+      (r.getLong(0), r.getLong(1))
+    }.sortBy(_._1)
+    assert(spans.size == 4)
     assert(spans.head._1 == 0L && spans.last._2 == 3999L)
-    spans.sliding(2).foreach { case Array((_, aMax), (bMin, _)) =>
+    spans.sliding(2).foreach { case Seq((_, aMax), (bMin, _)) =>
       assert(aMax < bMin, "zone spans must be disjoint on a range layout")
     }
-    assert(idx.map(_.getLong(3)).sum == 4000L)
-    // a range inside one zone opens exactly the intersecting file(s)
-    val idxDf = ParquetTuning.zoneMapIndex(spark, tmp, "k")
-    val (one, opened, total) = ParquetTuning.readZonePruned(
-      spark, idxDf, spans(1)._1 + 1, spans(1)._1 + 10)
-    assert(total == 4 && opened == 1, s"opened $opened of $total")
-    val got = one.filter($"k".between(spans(1)._1 + 1, spans(1)._1 + 10))
-      .agg(sum($"v")).first().getLong(0)
-    assert(got == (spans(1)._1 + 1 to spans(1)._1 + 10).map(_ * 3).sum)
+    // a range inside one file's span opens exactly that file
+    val (lo, hi) = (spans(1)._1 + 1, spans(1)._1 + 10)
+    val (one, st) = LakeSelect.readWhere(spark, dir,
+      s"k BETWEEN $lo AND $hi")
+    assert(st.filesTotal == 4 && st.filesOpened == 1, st.toString)
+    assert(one.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      all.filter { case (k, _) => k >= lo && k <= hi }.toSet)
     // a disjoint range opens nothing and yields the empty frame
-    val (none, opened0, _) = ParquetTuning.readZonePruned(
-      spark, idxDf, 100000L, 200000L)
-    assert(opened0 == 0 && none.isEmpty)
+    val (none, st0) = LakeSelect.readWhere(spark, dir,
+      "k BETWEEN 100000 AND 200000")
+    assert(st0.filesOpened == 0 && none.isEmpty)
   }
 }

@@ -40,12 +40,12 @@ class RgIndexSidecarSpec extends AnyFunSuite {
     val snap = TableLog.snapshot(dir)
     assert(snap.version == v && snap.op == "rgidx-stats")
     assert(snap.files.forall(snap.rgidx.contains), "all files mapped")
-    val ((pr, rgOpened, rgTotal, _, _), opens) = footerOpens {
-      TableLog.readRowGroupPruned(spark, dir, "k", 100L, 700L)
+    val ((pr, st), opens) = footerOpens {
+      LakeSelect.readWhere(spark, dir, "k BETWEEN 100 AND 700")
     }
     assert(opens == 0L, s"index must serve from the sidecar: $opens")
-    assert(rgOpened < rgTotal)
-    assert(pr.filter(col("k").between(100, 700)).count() == 601L)
+    assert(st.rgOpened < st.rgTotal)
+    assert(pr.count() == 601L)
     // idempotent: nothing new to index
     assert(TableLog.computeRowGroupIndex(spark, dir) == v)
   }
@@ -71,12 +71,11 @@ class RgIndexSidecarSpec extends AnyFunSuite {
     val s3 = TableLog.snapshot(dir)
     assert(s3.files.forall(s3.rgidx.contains), "optimize must top up")
     assert(s3.rgidx.keySet.subsetOf(s3.files.toSet ++ s2.rgidx.keySet))
-    val ((pr, _, _, _, _), opens) = footerOpens {
-      TableLog.readRowGroupPruned(spark, dir, "k", 10900L, 11100L)
+    val ((pr, _), opens) = footerOpens {
+      LakeSelect.readWhere(spark, dir, "k BETWEEN 10900 AND 11100")
     }
     assert(opens == 0L, s"post-maintenance planning opened $opens footers")
-    val got = pr.filter(col("k").between(10900, 11100))
-      .agg(sum("v")).first().getLong(0)
+    val got = pr.agg(sum("v")).first().getLong(0)
     val want = (10900L to 11100L).map(k =>
       if (k == 11000L) k * 7 + 1 else k * 7).sum
     assert(got == want)
@@ -97,9 +96,8 @@ class RgIndexSidecarSpec extends AnyFunSuite {
     // version → swept
     assert(swept.exists(_.contains("rgidx")),
       s"orphaned rgidx sidecar must sweep: $swept")
-    val (pr, _, _, _, _) =
-      TableLog.readRowGroupPruned(spark, dir, "k", 0L, 100L)
-    assert(pr.filter(col("k") <= 100).count() == 101L)
+    val (pr, _) = LakeSelect.readWhere(spark, dir, "k BETWEEN 0 AND 100")
+    assert(pr.count() == 101L)
   }
 
   test("deletion vectors: the DV'd file scans SELECTIVELY (positions " +
@@ -112,13 +110,12 @@ class RgIndexSidecarSpec extends AnyFunSuite {
     assert(nDel == 100L)
     // a range that TOUCHES the DV'd file must still row-group-prune
     // inside it (the old engine read DV files whole)
-    val (pr, rgOpened, rgTotal, fOpened, fTotal) =
-      TableLog.readRowGroupPruned(spark, dir, "k", 8900L, 9200L)
-    assert(rgOpened < rgTotal,
-      s"DV file must prune at row-group level: $rgOpened/$rgTotal")
-    assert(fOpened == 1 && fTotal == 2)
-    val ks = pr.filter(col("k").between(8900, 9200))
-      .select("k").as[Long].collect().toSet
+    val (pr, st) =
+      LakeSelect.readWhere(spark, dir, "k BETWEEN 8900 AND 9200")
+    assert(st.rgOpened < st.rgTotal,
+      s"DV file must prune at row-group level: $st")
+    assert(st.filesOpened == 1 && st.filesTotal == 2)
+    val ks = pr.select("k").as[Long].collect().toSet
     assert(ks == ((8900L to 9200L).toSet -- (9000L until 9100L)))
     // and the composed point lookup: deleted key invisible, present key
     // fetched from a partial scan of the same file
@@ -176,11 +173,9 @@ class RgIndexSidecarSpec extends AnyFunSuite {
     TableLog.append(
       df.repartitionByRange(2, col("k")).sortWithinPartitions("k"),
       dir, options = smallRg)
-    val (pr, rgOpened, rgTotal, _, _) =
-      TableLog.readRowGroupPruned(spark, dir, "k", 100L, 200L)
-    assert(rgOpened < rgTotal)
-    val got = pr.filter(col("k").between(100, 200))
-      .selectExpr("k", "msgs[1].content", "meta['lang']")
+    val (pr, st) = LakeSelect.readWhere(spark, dir, "k BETWEEN 100 AND 200")
+    assert(st.rgOpened < st.rgTotal)
+    val got = pr.selectExpr("k", "msgs[1].content", "meta['lang']")
       .orderBy("k").collect()
     assert(got.length == 101)
     assert(got.head.getString(1) == "a100" &&
@@ -212,11 +207,10 @@ class RgIndexSidecarSpec extends AnyFunSuite {
         .repartitionByRange(1, col("k")).sortWithinPartitions("k"),
       dir, options = smallRg)
     // range straddling both schema generations
-    val (pr, _, _, fo, _) =
-      TableLog.readRowGroupPruned(spark, dir, "k", 2900L, 3100L)
-    assert(fo == 2)
-    val rows = pr.filter(col("k").between(2900, 3100))
-      .orderBy("k").select("k", "tag").collect()
+    val (pr, st0) =
+      LakeSelect.readWhere(spark, dir, "k BETWEEN 2900 AND 3100")
+    assert(st0.filesOpened == 2)
+    val rows = pr.orderBy("k").select("k", "tag").collect()
     assert(rows.length == 201)
     assert(rows.take(100).forall(_.isNullAt(1)), "old files null-fill")
     assert(rows.last.getString(1) == "t3100")
@@ -235,13 +229,12 @@ class RgIndexSidecarSpec extends AnyFunSuite {
     sortedTable(dir, 2000, parts = 1)
     TableLog.append(spark.range(0).selectExpr("id as k", "id as v"),
       dir) // may stage zero files or a schema-only file
-    val (pr, _, _, _, _) =
-      TableLog.readRowGroupPruned(spark, dir, "k", 100L, 110L)
-    assert(pr.filter(col("k").between(100, 110)).count() == 11L)
+    val (pr, _) = LakeSelect.readWhere(spark, dir, "k BETWEEN 100 AND 110")
+    assert(pr.count() == 11L)
     // fully-pruned read returns an empty frame WITH the schema
-    val (none, o, _, _, _) =
-      TableLog.readRowGroupPruned(spark, dir, "k", 900000L, 990000L)
-    assert(o == 0L && none.columns.toSeq == Seq("k", "v"))
+    val (none, st) =
+      LakeSelect.readWhere(spark, dir, "k BETWEEN 900000 AND 990000")
+    assert(st.rgOpened == 0L && none.columns.toSeq == Seq("k", "v"))
     assert(none.count() == 0L)
   }
 
@@ -373,19 +366,20 @@ class RgIndexSidecarSpec extends AnyFunSuite {
         .repartitionByRange(1, col("k")).sortWithinPartitions("k"),
       dir, options = smallRg)
     TableLog.computeRowGroupIndex(spark, dir)
-    val (pr, rgOpened, rgTotal, _, _) =
-      TableLog.readRowGroupPruned(spark, dir, "k", 1000L, 1050L)
-    assert(rgTotal > 50L, s"want many row groups, got $rgTotal")
-    assert(rgOpened <= 2L,
-      s"driver must hold only the KEPT slices: $rgOpened of $rgTotal")
-    assert(pr.filter(col("k").between(1000, 1050)).count() == 51L)
+    val (pr, st) =
+      LakeSelect.readWhere(spark, dir, "k BETWEEN 1000 AND 1050")
+    assert(st.rgTotal > 50L, s"want many row groups, got ${st.rgTotal}")
+    assert(st.rgOpened <= 2L,
+      s"driver must hold only the KEPT slices: $st")
+    assert(pr.count() == 51L)
     // wide IN-list: the probe is a distributed exists() over a literal
     // array — correctness over 1000 probes, pruning still strict
     val keys = (0 until 1000).map(i => i.toLong * 199)
-    val (inPr, inOpened, inTotal, _, _) =
-      TableLog.readRowGroupPrunedIn(spark, dir, "k", keys)
-    assert(inOpened < inTotal)
-    assert(inPr.filter(col("k").isin(keys: _*)).count() == 1000L)
+    val (inPr, inSt) = LakeSelect.readWhere(spark, dir,
+      s"k IN (${keys.mkString(", ")})")
+    assert(inSt.strategy == "rowgroup_in")
+    assert(inSt.rgOpened < inSt.rgTotal)
+    assert(inPr.count() == 1000L)
   }
 
   test("columnMinMax: metadata-only extremes; a DV hiding the max " +

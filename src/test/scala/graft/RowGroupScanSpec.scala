@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.TableLog
+import graft.operators.{LakeSelect, TableLog}
 
 /** Row-group-level data skipping: index shape, selective-scan fidelity
   * across the flat scalar type surface, conservative keeps, pruning
@@ -112,7 +112,7 @@ class RowGroupScanSpec extends AnyFunSuite {
       want.orderBy("k").collect().toSeq, s"row drift on $key")
   }
 
-  test("TableLog.readRowGroupPruned: prunes row groups, DV files scan " +
+  test("readWhere: prunes row groups, DV files scan " +
     "selectively with deletes applied, aggregates match the full read") {
     val dir = tmp("rgdv") + "/table"
     val d1 = spark.range(10000).selectExpr("id as k", "id * 3 as v")
@@ -123,23 +123,21 @@ class RowGroupScanSpec extends AnyFunSuite {
     val (_, nDel, _, _) = TableLog.deleteVectored(spark, dir,
       "k >= 9000 AND k < 9100")
     assert(nDel == 100L)
-    val (pr, rgOpened, rgTotal, filesOpened, filesTotal) =
-      TableLog.readRowGroupPruned(spark, dir, "k", 100L, 700L)
-    assert(rgTotal > 0L && rgOpened < rgTotal,
-      s"no row-group pruning: $rgOpened/$rgTotal")
-    assert(filesOpened < filesTotal,
-      s"the DV'd high file must zone-prune away: $filesOpened/$filesTotal")
-    val cnt = pr.filter(col("k").between(100, 700)).count()
-    assert(cnt == 601L)
+    val (pr, st) =
+      LakeSelect.readWhere(spark, dir, "k BETWEEN 100 AND 700")
+    assert(st.rgTotal > 0L && st.rgOpened < st.rgTotal,
+      s"no row-group pruning: $st")
+    assert(st.filesOpened < st.filesTotal,
+      s"the DV'd high file must zone-prune away: $st")
+    assert(pr.count() == 601L)
     // a range over the DV'd file: rows deleted stay deleted
-    val (pr2, _, _, _, _) =
-      TableLog.readRowGroupPruned(spark, dir, "k", 8900L, 9200L)
-    val ks = pr2.filter(col("k").between(8900, 9200))
-      .select("k").as[Long].collect().toSet
+    val (pr2, _) =
+      LakeSelect.readWhere(spark, dir, "k BETWEEN 8900 AND 9200")
+    val ks = pr2.select("k").as[Long].collect().toSet
     assert(ks == ((8900L to 9200L).toSet -- (9000L until 9100L)))
-    // full-range read equals the canonical log read
-    val (all, _, _, _, _) = TableLog.readRowGroupPruned(spark, dir, "k",
-      Long.MinValue, Long.MaxValue)
+    // full-range read (every row group kept, unfiltered) equals the
+    // canonical log read
+    val (all, _, _, _) = prunedK(dir, Long.MinValue, Long.MaxValue)
     assert(all.count() == TableLog.read(spark, dir).count())
   }
 
@@ -154,14 +152,13 @@ class RowGroupScanSpec extends AnyFunSuite {
     TableLog.optimize(spark, dir, maxRows = 2000, clusterBy = Seq("k"))
     val snap = TableLog.snapshot(dir)
     assert(snap.dvs.isEmpty, "optimize must materialize DVs away")
-    val (pr, rgOpened, rgTotal, _, _) =
-      TableLog.readRowGroupPruned(spark, dir, "k", 0L, 300L)
+    val (pr, st) = LakeSelect.readWhere(spark, dir, "k BETWEEN 0 AND 300")
     // post-optimize files are 128 MB-row-group singletons at this size,
     // so pruning here is FILE-level via the rg index (each file = 1 rg)
-    assert(rgOpened < rgTotal, s"no pruning after optimize")
+    assert(st.rgOpened < st.rgTotal, s"no pruning after optimize")
     // 301 keys in [0,300] minus k=7 (deleted by k % 1000 = 7, then
     // materialized away by optimize)
-    assert(pr.filter(col("k").between(0, 300)).count() == 300L)
+    assert(pr.count() == 300L)
   }
 
   test("string row-group pruning: lexicographic day-string range opens " +
@@ -174,13 +171,11 @@ class RowGroupScanSpec extends AnyFunSuite {
     TableLog.append(
       df.repartitionByRange(2, col("day")).sortWithinPartitions("day"),
       dir, options = smallRg)
-    val (pr, rgOpened, rgTotal, fOpened, fTotal) =
-      TableLog.readRowGroupPrunedString(spark, dir, "day",
-        "2024-03-01", "2024-03-99")
-    assert(rgOpened < rgTotal, s"no pruning: $rgOpened/$rgTotal")
-    assert(fOpened < fTotal)
-    val got = pr.filter(col("day").between("2024-03-01", "2024-03-99"))
-      .agg(count(lit(1)), sum("v")).first()
+    val (pr, st) = LakeSelect.readWhere(spark, dir,
+      "day BETWEEN '2024-03-01' AND '2024-03-99'")
+    assert(st.rgOpened < st.rgTotal, s"no pruning: $st")
+    assert(st.filesOpened < st.filesTotal)
+    val got = pr.agg(count(lit(1)), sum("v")).first()
     val want = TableLog.read(spark, dir)
       .filter(col("day").between("2024-03-01", "2024-03-99"))
       .agg(count(lit(1)), sum("v")).first()
@@ -242,19 +237,19 @@ class RowGroupScanSpec extends AnyFunSuite {
     TableLog.append(
       wide.repartitionByRange(2, col("k")).sortWithinPartitions("k"),
       dir, options = smallRg)
-    val (pr, rgOpened, rgTotal, _, _) = TableLog.readRowGroupPruned(
-      spark, dir, "k", 100L, 300L, columns = Seq("k", "s"))
-    assert(rgOpened < rgTotal)
+    val (pr, st) = LakeSelect.readWhere(spark, dir,
+      "k BETWEEN 100 AND 300", columns = Seq("k", "s"))
+    assert(st.rgOpened < st.rgTotal)
     assert(pr.columns.toSeq == Seq("k", "s"))
-    val got = pr.filter(col("k").between(100, 300))
-      .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1)))
+    val got = pr.orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1)))
     assert(got.length == 201 && got.head == ((100L, "x100")))
     // with a DV: projected union across the two legs stays consistent
     TableLog.deleteVectored(spark, dir, "k = 150")
-    val (pr2, _, _, _, _) = TableLog.readRowGroupPruned(
-      spark, dir, "k", 100L, 300L, columns = Seq("k", "s"))
+    val (pr2, _) = LakeSelect.readWhere(spark, dir,
+      "k BETWEEN 100 AND 300", columns = Seq("k", "s"))
     assert(pr2.columns.toSeq == Seq("k", "s"))
-    assert(pr2.filter(col("k").between(100, 300)).count() == 200L)
+    assert(pr2.count() == 200L)
     // point lookup with projection
     TableLog.computeBlooms(spark, dir, "k")
     val (pl, _, _, _, _) = TableLog.readPointLookup(
@@ -263,7 +258,7 @@ class RowGroupScanSpec extends AnyFunSuite {
     assert(pl.filter(col("k") === 4242L).head().getString(0) == "x4242")
     // unknown projected column fails loudly
     intercept[IllegalArgumentException] {
-      TableLog.readRowGroupPruned(spark, dir, "k", 0L, 1L,
+      LakeSelect.readWhere(spark, dir, "k BETWEEN 0 AND 1",
         columns = Seq("nope"))
     }
   }

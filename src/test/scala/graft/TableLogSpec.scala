@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.TableLog
+import graft.operators.{LakeSelect, TableLog}
 
 /** Transaction-log semantics: version resolution from the log only (not
   * directory listing), time travel, overwrite isolation, vacuum retention,
@@ -209,8 +210,10 @@ class TableLogSpec extends AnyFunSuite {
     assert(snap.files.distinct.size == snap.files.size)
     assert(snap.parts.values.toSet == Set("Aa", "BB"))
     assert(TableLog.read(spark, dir).count() == 2L)
-    assert(TableLog.readPartitions(spark, dir, Seq("Aa"))
-      .where($"p" === "Aa").count() == 1L)
+    val (aa, st) = LakeSelect.readWhere(spark, dir, "p = 'Aa'")
+    assert(aa.count() == 1L)
+    assert(st.filesOpened == snap.parts.values.count(_ == "Aa") &&
+      st.filesOpened < st.filesTotal, st.toString)
   }
 
   test("vacuum guards: future-version staged files and files inside the " +
@@ -306,8 +309,14 @@ class TableLogSpec extends AnyFunSuite {
     assert(rows == Set((10L, 1L, "p1"), (20L, 2L, "p1"), (3L, 30L, "p2")),
       rows.toString)
     // the p1 partition tag survived the copy-on-write
-    assert(TableLog.readPartitions(spark, dir, Seq("p1")).count() == 2L)
-    assert(TableLog.readPartitions(spark, dir, Seq("p2")).count() == 1L)
+    val snap = TableLog.snapshot(dir)
+    assert(snap.files.forall(snap.parts.contains), "untagged rewrite")
+    Seq("p1" -> 2L, "p2" -> 1L).foreach { case (p, n) =>
+      val (rows, st) = LakeSelect.readWhere(spark, dir, s"p = '$p'")
+      assert(rows.count() == n)
+      assert(st.filesOpened == snap.parts.values.count(_ == p) &&
+        st.filesOpened < st.filesTotal, st.toString)
+    }
   }
 
   test("delete/update cross-validate against recomputed frames on a " +
@@ -468,17 +477,16 @@ class TableLogSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { TableLog.snapshot(dir, pre) }
   }
 
-  test("optimize(clusterBy) range-sorts globally; readZonePruned skips " +
+  test("optimize(clusterBy) range-sorts globally; readWhere skips " +
     "files and never reads orphans") {
-    import org.apache.spark.sql.functions.col
     val dir = freshDir()
     // 3 unclustered appends, keys interleaved across the range
     (0 until 3).foreach { i =>
       TableLog.append((0L until 300L).filter(_ % 3 == i)
         .map(k => (k, k * 10)).toDF("k", "v").repartition(2), dir)
     }
-    val (before, _, _) = TableLog.readZonePruned(spark, dir, "k", 0L, 49L)
-    assert(before.filter(col("k") <= 49).count() == 50)
+    val (before, _) = LakeSelect.readWhere(spark, dir, "k BETWEEN 0 AND 49")
+    assert(before.count() == 50)
     val (ver, _, after) =
       TableLog.optimize(spark, dir, maxRows = 60, clusterBy = Seq("k"))
     assert(after >= 5, s"expected ~5 range files, got $after")
@@ -490,15 +498,14 @@ class TableLogSpec extends AnyFunSuite {
       .filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.move(orphan.toPath,
       java.nio.file.Paths.get(dir, "data", f"v$ver%05d-orphan.parquet"))
-    val (pr, opened, total) = TableLog.readZonePruned(spark, dir, "k", 0L, 49L)
-    assert(opened < total, s"no skip: $opened/$total")
-    val got = pr.filter(col("k") <= 49)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (pr, st) = LakeSelect.readWhere(spark, dir, "k BETWEEN 0 AND 49")
+    assert(st.filesOpened < st.filesTotal, s"no skip: $st")
+    val got = pr.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == (0L until 50L).map(k => (k, k * 10)).toSet,
       "pruned read lost rows or leaked the orphan")
   }
 
-  test("appendPartitioned + readPartitions: tags prune to the asked " +
+  test("appendPartitioned + readWhere: tags prune to the asked " +
     "partitions; optimize preserves tags") {
     val dir = freshDir()
     val df = Seq((1L, "x", 10L), (2L, "y", 20L), (3L, "x", 30L),
@@ -506,15 +513,20 @@ class TableLogSpec extends AnyFunSuite {
     TableLog.appendPartitioned(df, dir, "part")
     TableLog.appendPartitioned(
       Seq((5L, "x", 50L)).toDF("id", "part", "v"), dir, "part")
-    val xs = TableLog.readPartitions(spark, dir, Seq("x"))
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(xs == Set(1L, 3L, 5L))
+    // readWhere re-applies the predicate, so the rows alone cannot show
+    // pruning: the files opened must be exactly the x-tagged ones
+    def xIds(): Set[Long] = {
+      val (xs, st) = LakeSelect.readWhere(spark, dir, "part = 'x'")
+      val snap = TableLog.snapshot(dir)
+      assert(st.filesOpened == snap.parts.values.count(_ == "x") &&
+        st.filesOpened < st.filesTotal, st.toString)
+      xs.select("id").collect().map(_.getLong(0)).toSet
+    }
+    assert(xIds() == Set(1L, 3L, 5L))
     // the partition column survives in the data files (shadow-col write)
     assert(TableLog.read(spark, dir).columns.contains("part"))
     val (_, _, _) = TableLog.optimize(spark, dir)
-    val xs2 = TableLog.readPartitions(spark, dir, Seq("x"))
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(xs2 == Set(1L, 3L, 5L), "tags lost through optimize")
+    assert(xIds() == Set(1L, 3L, 5L), "tags lost through optimize")
     val snap = TableLog.snapshot(dir)
     assert(snap.files.nonEmpty &&
       snap.files.forall(snap.parts.contains), "untagged file appeared")
@@ -631,6 +643,62 @@ class TableLogSpec extends AnyFunSuite {
     assert(rows.toSeq == Seq((1L, 10L, "-"), (2L, 20L, "fresh")))
   }
 
+  test("DML and the change feed on a type-widened table (int→bigint, " +
+    "decimal(5,2)→(12,4)) match a driver-side model") {
+    val dir = freshDir()
+    // file A: int k, decimal(5,2) d; file B: the widened types. Each
+    // rewrite below touches ONE file, so the table stays mixed.
+    TableLog.append(spark.range(0, 100).selectExpr("cast(id as int) as k",
+      "cast(id / 4 as decimal(5,2)) as d").coalesce(1), dir)
+    TableLog.append(spark.range(100, 200).selectExpr("id as k",
+      "cast(id / 8 as decimal(12,4)) as d").coalesce(1), dir)
+    var model: Map[Long, BigDecimal] = (0L until 200L).map(k =>
+      k -> BigDecimal(k) / (if (k < 100) 4 else 8)).toMap
+    val v2 = TableLog.currentVersion(dir)
+    val versions = scala.collection.mutable.Map(v2 -> model)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, BigDecimal)] =
+      df.select(col("k").cast("long"), col("d")).collect()
+        .map(r => (r.getLong(0), BigDecimal(r.getDecimal(1)).setScale(4)))
+        .toSet
+    def norm(m: Map[Long, BigDecimal]) =
+      m.map { case (k, d) => (k, d.setScale(4)) }.toSet
+    def check(v: Int): Unit = {
+      assert(rows(TableLog.readEvolved(spark, dir)) == norm(model))
+      versions(v) = model
+    }
+    // copy-on-write UPDATE of the widened file
+    val (v3, n3, t3, _) = TableLog.update(spark, dir,
+      "k % 50 = 7 AND k >= 100", Map("d" -> "d + 1"))
+    assert(n3 == 2L && t3 == 1)
+    model = model.map { case (k, d) =>
+      k -> (if (k % 50 == 7 && k >= 100) d + 1 else d) }
+    check(v3)
+    // copy-on-write DELETE of the narrow file
+    val (v4, n4, t4, _) = TableLog.delete(spark, dir, "k % 10 = 2 AND k < 100")
+    assert(n4 == 10L && t4 == 1)
+    model = model.filterNot { case (k, _) => k % 10 == 2 && k < 100 }
+    check(v4)
+    // vectored DELETE across both files
+    val (v5, n5, t5, _) = TableLog.deleteVectored(spark, dir, "k % 10 = 3")
+    assert(n5 == 20L && t5 == 2)
+    model = model.filterNot(_._1 % 10 == 3)
+    check(v5)
+    // the change feed between two versions is the models' diff (a
+    // rewritten file's unchanged rows appear on both sides and cancel)
+    for ((a, b) <- Seq((v2, v3), (v3, v4), (v4, v5), (v2, v5))) {
+      val feed = TableLog.changes(spark, dir, a, b)
+      def side(t: String) = rows(feed.where(col("_change_type") === t))
+      val (ma, mb) = (norm(versions(a)), norm(versions(b)))
+      assert(side("insert") -- side("delete") == mb -- ma, s"$a→$b")
+      assert(side("delete") -- side("insert") == ma -- mb, s"$a→$b")
+    }
+    // the bloom build reads the mixed files too
+    TableLog.computeBlooms(spark, dir, "k")
+    val (hit, st) = LakeSelect.readWhere(spark, dir, "k = 157")
+    assert(st.strategy == "point_lookup")
+    assert(rows(hit) == norm(model.filter(_._1 == 157L)))
+  }
+
   // ===== deletion vectors ==============================================
 
   private def dvTable(): (String, Seq[String]) = {
@@ -679,11 +747,15 @@ class TableLogSpec extends AnyFunSuite {
     assert(ids(dir) == want)
     assert(TableLog.readEvolved(spark, dir).select("id").collect()
       .map(_.getLong(0)).toSet == want)
-    val (zdf, _, _) = TableLog.readZonePruned(spark, dir, "id", 1L, 20L)
+    val (zdf, _) = LakeSelect.readWhere(spark, dir, "id BETWEEN 1 AND 20")
     assert(zdf.select("id").collect().map(_.getLong(0)).toSet ==
       want.filter(_ <= 20L))
-    assert(TableLog.readPartitions(spark, dir, Seq("a")).select("id")
-      .collect().map(_.getLong(0)).toSet == want.filter(_ <= 20L))
+    val (pdf, st) = LakeSelect.readWhere(spark, dir, "p = 'a'")
+    assert(pdf.select("id").collect().map(_.getLong(0)).toSet ==
+      want.filter(_ <= 20L))
+    val snap = TableLog.snapshot(dir)
+    assert(st.filesOpened == snap.parts.values.count(_ == "a") &&
+      st.filesOpened < st.filesTotal, st.toString)
   }
 
   test("copy-on-write delete/update after a vectored delete: hidden rows " +
@@ -751,7 +823,21 @@ class TableLogSpec extends AnyFunSuite {
 
   // ===== bloom-filter data skipping ====================================
 
-  test("computeBlooms + readBloomPruned: point lookups open only the " +
+  /** `col IN (vs)` through [[LakeSelect.readWhere]], which must take the
+    * bloom route: (rows, filesOpened, filesTotal). */
+  private def lookup(dir: String, col: String, vs: Any*)
+      : (org.apache.spark.sql.DataFrame, Int, Int) = {
+    val lits = vs.map {
+      case s: String => s"'$s'"
+      case v => v.toString
+    }
+    val (df, st) = LakeSelect.readWhere(spark, dir,
+      s"$col IN (${lits.mkString(", ")})")
+    assert(st.strategy == "point_lookup", st.toString)
+    (df, st.filesOpened, st.filesTotal)
+  }
+
+  test("computeBlooms + readWhere: point lookups open only the " +
     "files that might hold the key; misses open zero files") {
     val dir = freshDir()
     // 4 disjoint key chunks, one file each — a key lives in exactly one
@@ -762,19 +848,16 @@ class TableLogSpec extends AnyFunSuite {
     TableLog.computeBlooms(spark, dir, "id")
     val snap = TableLog.snapshot(dir)
     assert(snap.bloomCol.contains("id") && snap.blooms.size == 4)
-    val (df, opened, total) =
-      TableLog.readBloomPruned(spark, dir, "id", Seq(2042L))
+    val (df, opened, total) = lookup(dir, "id", 2042L)
     assert(total == 4 && opened <= 2, s"opened $opened of $total")
-    assert(df.filter($"id" === 2042L).count() == 1)
+    assert(df.count() == 1)
     // absent key: every bitmap says definitely-absent (fp-tolerant: <=1)
-    val (_, openedMiss, _) =
-      TableLog.readBloomPruned(spark, dir, "id", Seq(999999L))
+    val (_, openedMiss, _) = lookup(dir, "id", 999999L)
     assert(openedMiss <= 1, s"miss opened $openedMiss files")
     // multi-value probe unions the candidate sets
-    val (df3, opened3, _) =
-      TableLog.readBloomPruned(spark, dir, "id", Seq(42L, 3042L))
+    val (df3, opened3, _) = lookup(dir, "id", 42L, 3042L)
     assert(opened3 <= 3)
-    assert(df3.filter($"id".isin(42L, 3042L)).count() == 2)
+    assert(df3.count() == 2)
   }
 
   test("blooms top up incrementally on append, survive DV deletes, are " +
@@ -792,19 +875,16 @@ class TableLogSpec extends AnyFunSuite {
     val snapA = TableLog.snapshot(dir)
     assert(snapA.files.forall(snapA.blooms.contains),
       s"append did not top up the bloom index: ${snapA.blooms.keySet}")
-    val (df1, opened1, total1) =
-      TableLog.readBloomPruned(spark, dir, "id", Seq(150L))
-    assert(total1 == 2 && opened1 == 1 &&
-      df1.filter($"id" === 150L).count() == 1)
+    val (df1, opened1, total1) = lookup(dir, "id", 150L)
+    assert(total1 == 2 && opened1 == 1 && df1.count() == 1)
     // a computeBlooms re-run is now a no-op (nothing unindexed)
     TableLog.computeBlooms(spark, dir, "id")
-    val (df2, opened2, _) =
-      TableLog.readBloomPruned(spark, dir, "id", Seq(150L))
-    assert(opened2 == 1 && df2.filter($"id" === 150L).count() == 1)
+    val (df2, opened2, _) = lookup(dir, "id", 150L)
+    assert(opened2 == 1 && df2.count() == 1)
     // DV delete keeps blooms (false positives only) and hides the row
     TableLog.deleteVectored(spark, dir, "id = 150")
-    val (df3, _, _) = TableLog.readBloomPruned(spark, dir, "id", Seq(150L))
-    assert(df3.filter($"id" === 150L).count() == 0)
+    val (df3, _, _) = lookup(dir, "id", 150L)
+    assert(df3.count() == 0)
     assert(TableLog.snapshot(dir).blooms.size == 2)
     // compaction AUTO-MAINTAINS the index: rewritten inputs' bitmaps are
     // dropped and the rewrite outputs get fresh bitmaps in the SAME
@@ -815,19 +895,16 @@ class TableLogSpec extends AnyFunSuite {
     assert(snapOpt.blooms.keySet == snapOpt.files.toSet,
       s"every post-optimize file must stay indexed: ${snapOpt.blooms}")
     assert(nAfter == snapOpt.files.size)
-    val (df4, _, _) = TableLog.readBloomPruned(spark, dir, "id", Seq(7L))
-    assert(df4.filter($"id" === 7L).count() == 1)
+    val (df4, _, _) = lookup(dir, "id", 7L)
+    assert(df4.count() == 1)
     // a definite miss still opens zero files post-optimize
-    val (_, openedMiss, _) =
-      TableLog.readBloomPruned(spark, dir, "id", Seq(987654L))
+    val (_, openedMiss, _) = lookup(dir, "id", 987654L)
     assert(openedMiss == 0, s"post-optimize miss opened $openedMiss")
     // an UNINDEXED appended file reads conservatively
     TableLog.append((201L to 210L).map(i => (i, i * 2L)).toDF("id", "v")
       .coalesce(1), dir)
-    val (df5, opened5, total5) =
-      TableLog.readBloomPruned(spark, dir, "id", Seq(205L))
-    assert(opened5 >= 1 && opened5 < total5 + 1 &&
-      df5.filter($"id" === 205L).count() == 1)
+    val (df5, opened5, total5) = lookup(dir, "id", 205L)
+    assert(opened5 >= 1 && opened5 < total5 + 1 && df5.count() == 1)
   }
 
   test("bloom auto-maintenance: optimize keeps carried-through files' " +
@@ -856,29 +933,26 @@ class TableLogSpec extends AnyFunSuite {
     val postDel = TableLog.snapshot(dir)
     assert(postDel.blooms.keySet == postDel.files.toSet,
       s"DML must top up blooms: ${postDel.blooms.keySet}")
-    val (_, openedMiss, _) =
-      TableLog.readBloomPruned(spark, dir, "id", Seq(25L))
+    val (_, openedMiss, _) = lookup(dir, "id", 25L)
     assert(openedMiss == 0, "deleted key must be definitely-absent again")
-    val (df, _, _) = TableLog.readBloomPruned(spark, dir, "id", Seq(1200L))
-    assert(df.filter($"id" === 1200L).count() == 1)
+    val (df, _, _) = lookup(dir, "id", 1200L)
+    assert(df.count() == 1)
   }
 
-  test("readBloomPruned probe is distributed and scales to many files " +
-    "without driver bitmap residency") {
+  test("readWhere's bloom probe prunes exactly across many files") {
     val dir = freshDir()
     (0 until 24).foreach { c =>
       TableLog.append((1L to 40L).map(i => (c * 100L + i, i))
         .toDF("id", "v").coalesce(1), dir)
     }
     TableLog.computeBlooms(spark, dir, "id")
-    // the probe is one Spark job over sidecar rows returning (file, hit)
-    // booleans — never the bitmaps; assert exact pruning over 24 files
-    val (df, opened, total) =
-      TableLog.readBloomPruned(spark, dir, "id", Seq(512L))
+    // small snapshots probe driver-resident bitmaps, large ones run one
+    // job returning (file, hit) booleans; assert exact pruning over 24
+    // files
+    val (df, opened, total) = lookup(dir, "id", 512L)
     assert(total == 24 && opened <= 2, s"opened $opened of $total")
-    assert(df.filter($"id" === 512L).count() == 1)
-    val (_, openedMiss, _) =
-      TableLog.readBloomPruned(spark, dir, "id", Seq(99999L))
+    assert(df.count() == 1)
+    val (_, openedMiss, _) = lookup(dir, "id", 99999L)
     assert(openedMiss <= 1)
   }
 
@@ -899,15 +973,15 @@ class TableLogSpec extends AnyFunSuite {
       .getLong(0) == (1L to 600L).sum)
   }
 
-  test("readZonePruned returns an empty schema'd frame when pruning " +
+  test("readWhere returns an empty schema'd frame when pruning " +
     "keeps zero files — even with deletion vectors present") {
     val dir = freshDir()
     TableLog.append((1L to 100L).map(i => (i, s"r$i")).toDF("id", "s")
       .coalesce(1), dir)
     TableLog.deleteVectored(spark, dir, "id = 5")
-    val (df, opened, total) =
-      TableLog.readZonePruned(spark, dir, "id", 5000L, 6000L)
-    assert(opened == 0 && total == 1)
+    val (df, st) =
+      LakeSelect.readWhere(spark, dir, "id BETWEEN 5000 AND 6000")
+    assert(st.filesOpened == 0 && st.filesTotal == 1)
     assert(df.columns.toSeq == Seq("id", "s"))
     assert(df.count() == 0)
   }
@@ -936,12 +1010,10 @@ class TableLogSpec extends AnyFunSuite {
     TableLog.append(Seq((4L, "delta"), (5L, null)).toDF("id", "s")
       .coalesce(1), dir)
     TableLog.computeBlooms(spark, dir, "s")
-    val (df, opened, total) =
-      TableLog.readBloomPruned(spark, dir, "s", Seq("delta"))
+    val (df, opened, total) = lookup(dir, "s", "delta")
     assert(total == 2 && opened <= 1 + 0 /* fp slack none at this size */)
-    assert(df.filter($"s" === "delta").count() == 1)
-    val (_, openedMiss, _) =
-      TableLog.readBloomPruned(spark, dir, "s", Seq("omega"))
+    assert(df.count() == 1)
+    val (_, openedMiss, _) = lookup(dir, "s", "omega")
     assert(openedMiss == 0)
   }
 
