@@ -191,16 +191,17 @@ object Changelog {
     val affectedStr = affected.map(_.toString).toSet
     val (touched, untouched) =
       snap.files.partition(f => affectedStr.contains(snap.parts(f)))
-    val base = java.nio.file.Paths.get(dir)
     val touchedSet = touched.toSet
+    // evolved scans: the touched files may straddle an add-column or a
+    // type widening, which a plain parquet read drops or fails on
     val snapshotDf =
       if (touched.nonEmpty) // deletion vectors apply before the merge —
         // a DV-deleted row must not resurface through the rewrite
         TableLog.applyDv(spark, dir,
-          spark.read.parquet(touched.map(f => base.resolve(f).toString): _*),
+          TableLog.scanEvolved(spark, dir, snap, touched),
           snap.dvs.filter { case (f, _) => touchedSet(f) })
       else // fresh partitions only: empty snapshot with the table schema
-        spark.read.parquet(base.resolve(snap.files.head).toString).limit(0)
+        TableLog.scanEvolved(spark, dir, snap, snap.files).limit(0)
     val updated = applyChangelog(snapshotDf, changes, keyCols, seqCol, opCol)
     // stage new files partition-split through the SHARED TableLog helper
     // (identical leaf parsing / unescaping / naming as appendPartitioned),

@@ -74,6 +74,8 @@ object GeoNormalize {
     * its own task and is internally Hilbert-ordered, giving the same
     * row-group locality without a single-writer bottleneck); a positive
     * `numFiles` forces that many output files (reference parity: 1).
+    * Files go through [[ZstdSinkFormat]]: one zstd context per file, not
+    * one per page.
     */
   def writeClustered(df: DataFrame, outPath: String, numFiles: Int = 0,
       zstdLevel: Int = 22, rowGroupBytes: Long = 4L * 1024 * 1024,
@@ -86,13 +88,13 @@ object GeoNormalize {
         .sortWithinPartitions("__hk")
       else keyed.sortWithinPartitions("__hk") // caller controls partitioning
     arranged.drop("__hk")
-      .write.mode("overwrite")
+      .write.mode("overwrite").format(ZstdSinkFormat.name)
       .option("compression", "zstd")
       .option("parquet.compression.codec.zstd.level", zstdLevel.toString)
       // parquet-mr sizes row groups in bytes, not rows; small groups keep
       // the reference's row-group-level spatial pruning property (§1.3)
       .option("parquet.block.size", rowGroupBytes.toString)
-      .parquet(outPath)
+      .save(outPath)
     if (geoFooter) writeGeoParquetFooter(df.sparkSession, outPath)
   }
 

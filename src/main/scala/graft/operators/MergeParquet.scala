@@ -46,14 +46,14 @@ object MergeParquet {
 
   /** Merge: per batch, union-scan the files, attach `source` lineage
     * (READ_PARQUET(filename=True) → `filename AS source`, east_asia.py:396-400),
-    * Hilbert-sort, write one ~500MB-class ZSTD file (east_asia.py:401-408).
+    * Hilbert-sort, write one ~500MB-class ZSTD file (east_asia.py:401-408)
+    * through [[ZstdSinkFormat]] (one zstd context per file, not per page).
     *
-    * Batches are independent Spark jobs; `maxConcurrent` of them are
-    * submitted at once from a bounded driver-side pool, so a batch whose
-    * final single-file write tails off does not leave the cluster idle —
-    * serial submission was leaving (batches−1)·write-tail of wall-clock on
-    * the table. Spark's scheduler interleaves the stages (FIFO by default;
-    * a fair pool makes it even). */
+    * Each batch ends in one single-task write, which compresses every page
+    * of its file on one core; `maxConcurrent` batches are submitted at once
+    * from a bounded driver-side pool so those single-core tails overlap
+    * instead of running back to back. Spark's scheduler interleaves the
+    * stages (FIFO by default; a fair pool makes it even). */
   def merge(spark: SparkSession, inPaths: Seq[String], outDir: String,
       maxRows: Long = 10000000L, zstdLevel: Int = 22,
       maxConcurrent: Int = 4): Seq[String] = {
@@ -66,10 +66,10 @@ object MergeParquet {
       val keyed = df.withColumn("__hk", hilbert_of_geom(col("geom")))
       keyed.repartitionByRange(1, col("__hk")).sortWithinPartitions("__hk")
         .drop("__hk")
-        .write.mode("overwrite")
+        .write.mode("overwrite").format(ZstdSinkFormat.name)
         .option("compression", "zstd")
         .option("parquet.compression.codec.zstd.level", zstdLevel.toString)
-        .parquet(out)
+        .save(out)
       out
     }
     Concurrency.mapBounded(batches.zipWithIndex, maxConcurrent) {

@@ -1086,8 +1086,8 @@ object TableLog {
     * decimal scale-up) the files read in `snap`'s widened union schema
     * instead, and Spark's reader widens the older files. Every evolved
     * read goes through here: [[readEvolved]], the DML scans, the change
-    * feed and the bloom build. */
-  private def scanEvolved(spark: SparkSession, dir: String, snap: Snapshot,
+    * feed, the bloom build and [[Changelog.applyToLakeVersioned]]. */
+  private[graft] def scanEvolved(spark: SparkSession, dir: String, snap: Snapshot,
       files: Seq[String]): DataFrame = {
     import org.apache.spark.sql.types.{DataType, StructField, StructType}
     val abs = files.map(f => Paths.get(dir).resolve(f).toString)

@@ -315,6 +315,50 @@ class ChangelogSpec extends AnyFunSuite {
       .agg(org.apache.spark.sql.functions.sum("v")).first().getLong(0) == 600L)
   }
 
+  test("applyToLakeVersioned: a partition holding an add-column file and " +
+    "an int→bigint file applies like a driver-side model") {
+    import graft.operators.TableLog
+    val dir = java.nio.file.Files.createTempDirectory("lakeevolved")
+      .toString + "/table"
+    // file 1: int v, no tag (p0 and p1); file 2 adds tag; file 3 widens v
+    // to bigint with a value past the int range. Files 2 and 3 sit in p0.
+    TableLog.appendPartitioned(Seq((1L, 10, "p0"), (2L, 20, "p0"),
+      (3L, 30, "p1")).toDF("id", "v", "part"), dir, "part")
+    TableLog.appendPartitioned(Seq((4L, 40, "p0", "t4"),
+      (5L, 50, "p0", "t5")).toDF("id", "v", "part", "tag"), dir, "part")
+    TableLog.appendPartitioned(Seq((6L, 6000000000L, "p0"),
+      (7L, 70L, "p0")).toDF("id", "v", "part"), dir, "part")
+    type Row3 = (Long, Option[String], String)
+    var model: Map[Long, Row3] = Map(
+      1L -> (10L, None, "p0"), 2L -> (20L, None, "p0"),
+      3L -> (30L, None, "p1"), 4L -> (40L, Some("t4"), "p0"),
+      5L -> (50L, Some("t5"), "p0"), 6L -> (6000000000L, None, "p0"),
+      7L -> (70L, None, "p0"))
+    val ch = Seq(
+      (1L, 7000000000L, "p0", Option("u1"), 1L, "U"),
+      (4L, 0L, "p0", Option.empty[String], 1L, "D"),
+      (5L, 50L, "p0", Option("t5b"), 1L, "U"),
+      (6L, 61L, "p0", Option.empty[String], 1L, "U"),
+      (8L, 80L, "p0", Option("n8"), 1L, "I")
+    ).toDF("id", "v", "part", "tag", "seq", "op")
+    ch.collect().foreach { r =>
+      val id = r.getLong(0)
+      if (r.getString(5) == "D") model -= id
+      else model += id -> ((r.getLong(1), Option(r.getString(3)), r.getString(2)))
+    }
+    val v = Changelog.applyToLakeVersioned(dir, ch, "part", Seq("id"),
+      "seq", "op")
+    assert(v == 4)
+    val p1Files = TableLog.snapshot(dir, 3).files
+      .filter(f => TableLog.snapshot(dir, 3).parts(f) == "p1").toSet
+    assert(p1Files.nonEmpty && p1Files.subsetOf(TableLog.snapshot(dir, v).files.toSet))
+    val got = TableLog.readEvolved(spark, dir)
+      .select(col("id"), col("v").cast("long"), col("tag"), col("part"))
+      .collect().map(r => r.getLong(0) ->
+        ((r.getLong(1), Option(r.getString(2)), r.getString(3)))).toMap
+    assert(got == model)
+  }
+
   private def mergeOut(df: org.apache.spark.sql.DataFrame) =
     df.orderBy("id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq

@@ -1,0 +1,158 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.geom.GeomLib
+import graft.operators.{Concurrency, GeoNormalize, ZstdSinkFormat}
+
+/** The zstd sink's writer against Spark's built-in parquet writer: same
+  * file layout, no larger chunks, one zstd context per file, and a failed
+  * task leaves nothing committed and no context open. */
+class ZstdSinkSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+
+  private def tmp(): String =
+    java.nio.file.Files.createTempDirectory("zsink").toString
+
+  /** Points on a 200 × 60 grid with a near-duplicate text column and a
+    * low-cardinality one (dictionary pages). Every column is nullable, as
+    * a parquet read-back's are. */
+  private def frame() = (0 until 12000).map { i =>
+    val lon = -170.0 + (i % 200) * 1.7
+    val lat = -75.0 + (i / 200) * 2.5
+    (Option(i.toLong), s"building $i on block ${i % 97} of ward ${i % 13}",
+      s"class_${i % 7}", GeomLib.pointWkb(lon, lat))
+  }.toDF("fid", "label", "kind", "geom")
+
+  private case class Chunk(path: String, codec: CompressionCodecName,
+      encodings: Set[String], pages: Int, bytes: Long)
+  private case class Layout(rowGroups: Seq[Long], chunks: Seq[Chunk],
+      sparkSchema: String)
+
+  private def layout(file: String): Layout = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+    try {
+      val blocks = r.getFooter.getBlocks.asScala.toSeq
+      val chunks = blocks.flatMap(_.getColumns.asScala.map { c =>
+        val oi = r.readOffsetIndex(c)
+        assert(oi != null, s"no offset index in $file")
+        Chunk(c.getPath.toDotString, c.getCodec,
+          c.getEncodings.asScala.map(_.name).toSet, oi.getPageCount,
+          c.getTotalSize)
+      })
+      Layout(blocks.map(_.getRowCount), chunks, r.getFooter.getFileMetaData
+        .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+    } finally r.close()
+  }
+
+  private def parquetFiles(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet"))
+      .map(_.getAbsolutePath).sorted.toSeq
+
+  test("writeClustered at level 22 matches Spark's parquet writer page for " +
+    "page, with no larger chunks and one zstd context per file") {
+    val df = frame()
+    val rowGroupBytes = 64L * 1024
+    val sink = tmp() + "/sink"
+    val created0 = ZstdSinkFormat.contextsCreated.get()
+    GeoNormalize.writeClustered(df, sink, numFiles = 4, zstdLevel = 22,
+      rowGroupBytes = rowGroupBytes, geoFooter = false)
+    val created = ZstdSinkFormat.contextsCreated.get() - created0
+    // each sink file's rows, in file order (one small file is one split),
+    // written again by Spark's own parquet writer with the same options
+    val sf = parquetFiles(sink)
+    val base = tmp()
+    val pf = Concurrency.mapBounded(sf.indices, sf.size) { i =>
+      spark.read.parquet(sf(i))
+        .write.option("compression", "zstd")
+        .option("parquet.compression.codec.zstd.level", "22")
+        .option("parquet.block.size", rowGroupBytes.toString)
+        .parquet(s"$base/plain$i")
+      parquetFiles(s"$base/plain$i")
+    }.flatten
+    assert(sf.size == 4 && pf.size == 4, (sf, pf))
+    assert(sf.forall(_.endsWith(".zstd.parquet")))
+    // one context per file written, not one per page
+    assert(created == sf.size, s"$created contexts for ${sf.size} files")
+    assert(ZstdSinkFormat.contextsOpen.get() == 0)
+    var pages = 0
+    sf.zip(pf).foreach { case (s, p) =>
+      val (a, b) = (layout(s), layout(p))
+      assert(a.rowGroups == b.rowGroups, s"row groups of $s")
+      assert(a.rowGroups.size > 1, s"one row group in $s")
+      assert(a.sparkSchema != null && a.sparkSchema == b.sparkSchema)
+      assert(a.chunks.size == b.chunks.size)
+      a.chunks.zip(b.chunks).foreach { case (x, y) =>
+        assert(x.path == y.path && x.pages == y.pages &&
+          x.encodings == y.encodings, s"$x vs $y")
+        assert(x.codec == CompressionCodecName.ZSTD, x)
+        assert(x.bytes <= y.bytes, s"$x larger than $y")
+      }
+      pages += a.chunks.map(_.pages).sum
+    }
+    assert(pages > 4 * sf.size, s"only $pages pages")
+    val (ra, rb) = (spark.read.parquet(sink), spark.read.parquet(pf: _*))
+    assert(ra.count() == df.count() && rb.count() == df.count())
+    assert(ra.exceptAll(rb).isEmpty && rb.exceptAll(ra).isEmpty)
+    assert(ra.exceptAll(df).isEmpty)
+  }
+
+  test("other codecs go to parquet's own compressor") {
+    val out = tmp() + "/snappy"
+    val created0 = ZstdSinkFormat.contextsCreated.get()
+    frame().limit(500).coalesce(1).write.format(ZstdSinkFormat.name)
+      .option("compression", "snappy").save(out)
+    assert(ZstdSinkFormat.contextsCreated.get() == created0)
+    val files = parquetFiles(out)
+    assert(files.size == 1 && files.head.endsWith(".snappy.parquet"))
+    assert(layout(files.head).chunks.forall(_.codec == CompressionCodecName.SNAPPY))
+    assert(spark.read.parquet(out).exceptAll(frame().limit(500)).isEmpty)
+  }
+
+  test("a task failing mid-partition fails the job with its own error, " +
+    "commits no file and closes every zstd context") {
+    val out = tmp() + "/aborted"
+    val created0 = ZstdSinkFormat.contextsCreated.get()
+    val failAt = udf { (i: Long) =>
+      if (i == 5000L) throw new IllegalStateException("planted failure at fid 5000")
+      i
+    }
+    // the UDF runs in the write task, after rows before it were written
+    // (16 KB row groups, so whole pages are already compressed)
+    val e = intercept[Exception] {
+      frame().repartitionByRange(2, col("fid")).sortWithinPartitions("fid")
+        .withColumn("fid", failAt(col("fid")))
+        .write.format(ZstdSinkFormat.name)
+        .option("compression", "zstd")
+        .option("parquet.compression.codec.zstd.level", "22")
+        .option("parquet.block.size", (16 * 1024).toString)
+        .save(out)
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage == "planted failure at fid 5000"), causes.map(_.toString))
+    assert(ZstdSinkFormat.contextsCreated.get() > created0)
+    // the other task is cancelled; its writer closes as it aborts
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (ZstdSinkFormat.contextsOpen.get() != 0 && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(ZstdSinkFormat.contextsOpen.get() == 0)
+    val left = {
+      val root = java.nio.file.Paths.get(out)
+      if (!java.nio.file.Files.exists(root)) Seq.empty
+      else java.nio.file.Files.walk(root).iterator().asScala
+        .map(_.getFileName.toString).toSeq
+    }
+    assert(!left.contains("_SUCCESS"), left)
+    assert(!left.exists(_.endsWith(".parquet")), left)
+  }
+}
