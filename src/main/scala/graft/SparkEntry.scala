@@ -6228,7 +6228,7 @@ object SparkEntry {
       // the WKB type codes), and requires exact string equality with the
       // stored footer — pinning version, primary column, WKB encoding,
       // bbox, and types in one check. Content aggregates ride along so the
-      // hash also proves the raw row-group byte copy is lossless.
+      // hash also proves the footer-writing sink kept every row intact.
       val sample = t(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"),
           cxCol.as("x"), cyCol.as("y"))
@@ -6243,7 +6243,7 @@ object SparkEntry {
       val files = root.getFileSystem(conf).listStatus(root).map(_.getPath)
         .filter(_.getName.endsWith(".parquet"))
       val stored: Map[String, Option[String]] = files
-        .map(p => p.getName -> graft.operators.GeoParquetFooter.read(p.toString, conf))
+        .map(p => p.getName -> graft.operators.GeoNormalize.geoFooterOf(p.toString, conf))
         .toMap
       val back = s.read.parquet(tmp)
       val expected = back

@@ -75,11 +75,15 @@ object GeoNormalize {
     * row-group locality without a single-writer bottleneck); a positive
     * `numFiles` forces that many output files (reference parity: 1).
     * Files go through [[ZstdSinkFormat]]: one zstd context per file, not
-    * one per page.
+    * one per page, and each file's public GeoParquet 1.1 `geo` footer key
+    * ([[geoFooterJson]]) written in the same pass, so GDAL / geopandas /
+    * DuckDB-spatial auto-recognize the geometry column (the reference reads
+    * its own output back via explicit `ST_GEOMFROMWKB`,
+    * East-Asia-Building-Footprints.md:231-234 — the footer is pure interop
+    * upside).
     */
   def writeClustered(df: DataFrame, outPath: String, numFiles: Int = 0,
-      zstdLevel: Int = 22, rowGroupBytes: Long = 4L * 1024 * 1024,
-      geoFooter: Boolean = true): Unit = {
+      zstdLevel: Int = 22, rowGroupBytes: Long = 4L * 1024 * 1024): Unit = {
     // the WKB→Hilbert kernel runs in the pre-exchange stage (twice, for the
     // range sampling) — scatter a few-split input first (no-op at scale)
     val keyed = Scatter(df).withColumn("__hk", hilbert_of_geom(col("geom")))
@@ -95,53 +99,12 @@ object GeoNormalize {
       // the reference's row-group-level spatial pruning property (§1.3)
       .option("parquet.block.size", rowGroupBytes.toString)
       .save(outPath)
-    if (geoFooter) writeGeoParquetFooter(df.sparkSession, outPath)
-  }
-
-  /** Stamp the public GeoParquet 1.1 `geo` footer key on every parquet file
-    * under `outPath` so GDAL / geopandas / DuckDB-spatial auto-recognize the
-    * geometry column (the reference reads its own output back via explicit
-    * `ST_GEOMFROMWKB`, East-Asia-Building-Footprints.md:231-234 — the footer
-    * is pure interop upside). Per-file bbox and geometry_types come from one
-    * geometry-only scan of the fresh files (column pruning reads a single
-    * column); the footer rewrite itself is a raw row-group byte copy
-    * (`ParquetFileWriter.appendFile` — no decode, no re-compression),
-    * distributed one task per file. `crs` is omitted: the spec default
-    * OGC:CRS84 is exactly the normalized lon-lat WGS84 this sink emits. */
-  def writeGeoParquetFooter(spark: SparkSession, outPath: String,
-      geomCol: String = "geom"): Unit = {
-    val root = new org.apache.hadoop.fs.Path(outPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet")).map(_.toString).sorted
-    if (files.isEmpty) return
-    val stats = spark.read.parquet(outPath)
-      .select(input_file_name().as("f"),
-        st_xmin(col(geomCol)).as("x0"), st_ymin(col(geomCol)).as("y0"),
-        st_xmax(col(geomCol)).as("x1"), st_ymax(col(geomCol)).as("y1"),
-        wkb_shape_type(col(geomCol)).as("t"))
-      .groupBy(col("f"))
-      .agg(min(col("x0")).as("x0"), min(col("y0")).as("y0"),
-        max(col("x1")).as("x1"), max(col("y1")).as("y1"),
-        collect_set(col("t")).as("types"))
-      .collect()
-      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).getName ->
-        ((if (r.isNullAt(1)) None
-          else Some((r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))),
-          r.getSeq[Int](5))))
-      .toMap
-    val metas = files.map { f =>
-      val (bbox, types) = stats.getOrElse(new org.apache.hadoop.fs.Path(f).getName,
-        (None, Seq.empty[Int]))
-      f -> geoFooterJson(geomCol, bbox, types)
-    }
-    val par = math.max(1, math.min(metas.size, spark.sparkContext.defaultParallelism))
-    spark.sparkContext.parallelize(metas, par)
-      .foreach { case (f, json) => GeoParquetFooter.stamp(f, json) }
   }
 
   /** The GeoParquet 1.1 `geo` JSON for one file (hand-rolled: the shape is
-    * fixed and determinism matters for the gate hash). */
+    * fixed and determinism matters for the gate hash). `crs` is omitted:
+    * the spec default OGC:CRS84 is exactly the normalized lon-lat WGS84
+    * this sink emits. */
   private[graft] def geoFooterJson(geomCol: String,
       bbox: Option[(Double, Double, Double, Double)], typeCodes: Seq[Int]): String = {
     val names = Map(1 -> "Point", 2 -> "LineString", 3 -> "Polygon",
@@ -156,8 +119,8 @@ object GeoNormalize {
       s"""{"$geomCol":{"encoding":"WKB","geometry_types":[$types]$bboxStr}}}"""
   }
 
-  /** Consumer-side GeoParquet discovery (the read twin of
-    * [[writeGeoParquetFooter]]): parse the public `geo` footer key and
+  /** Consumer-side GeoParquet discovery (the read twin of the footer
+    * [[writeClustered]] writes): parse the public `geo` footer key and
     * return the DataFrame plus the discovered primary geometry column and
     * the dataset bbox merged across files. Jackson-parsed, so ANY
     * GeoParquet 1.x writer's output works — GDAL/geopandas/DuckDB-spatial
@@ -165,30 +128,12 @@ object GeoNormalize {
     * carries the key (plain parquet → caller names the column itself). */
   def readGeoParquet(spark: SparkSession, path: String)
       : (DataFrame, String, Option[(Double, Double, Double, Double)]) = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    val files = fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    var primary: String = null
-    var bbox: Option[(Double, Double, Double, Double)] = None
-    files.foreach { f =>
-      GeoParquetFooter.read(f.toString, conf).foreach { json =>
-        val node = om.readTree(json)
-        if (primary == null) primary = node.path("primary_column").asText(null)
-        if (primary != null) {
-          val b = node.path("columns").path(primary).path("bbox")
-          if (b.isArray && b.size >= 4) {
-            val nb = (b.get(0).asDouble, b.get(1).asDouble,
-              b.get(2).asDouble, b.get(3).asDouble)
-            bbox = Some(bbox.fold(nb)(o => (math.min(o._1, nb._1),
-              math.min(o._2, nb._2), math.max(o._3, nb._3), math.max(o._4, nb._4))))
-          }
-        }
-      }
-    }
+    val footers = geoFooters(spark, path).flatMap(_._2)
+    val primary = footers.headOption.map(_._1).orNull
     require(primary != null, s"no GeoParquet 'geo' footer found under $path")
+    val bbox = footers.collect { case (`primary`, Some(b)) => b }
+      .reduceOption((o, nb) => (math.min(o._1, nb._1), math.min(o._2, nb._2),
+        math.max(o._3, nb._3), math.max(o._4, nb._4)))
     (spark.read.parquet(path), primary, bbox)
   }
 
@@ -207,35 +152,48 @@ object GeoNormalize {
       bbox: (Double, Double, Double, Double)): (DataFrame, Int, Int) = {
     val (minx, miny, maxx, maxy) = bbox
     require(minx <= maxx && miny <= maxy, s"invalid query bbox: $bbox")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    val files = fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val kept = files.filter { f =>
-      GeoParquetFooter.read(f.toString, conf) match {
-        case None => true // no footer: keep, never silently drop data
-        case Some(json) =>
-          val node = om.readTree(json)
-          val primary = node.path("primary_column").asText(null)
-          val b =
-            if (primary == null) null
-            else node.path("columns").path(primary).path("bbox")
-          if (b == null || !b.isArray || b.size < 4) true
-          else !(b.get(2).asDouble < minx || b.get(0).asDouble > maxx ||
-            b.get(3).asDouble < miny || b.get(1).asDouble > maxy)
-      }
-    }
+    val files = geoFooters(spark, path)
+    val kept = files.filter {
+      case (_, Some((_, Some(b)))) =>
+        !(b._3 < minx || b._1 > maxx || b._4 < miny || b._2 > maxy)
+      case _ => true // no footer or no bbox: keep, never silently drop data
+    }.map(_._1)
     val df =
       if (kept.isEmpty)
         spark.read.parquet(path).limit(0) // schema-preserving empty frame
-      else spark.read.parquet(kept.map(_.toString): _*)
+      else spark.read.parquet(kept: _*)
     (df, kept.length, files.length)
   }
 
-  // (footer stamping lives in GeoParquetFooter below so executor tasks call
-  // a static method instead of serializing this object's state)
+  private type Bbox = (Double, Double, Double, Double)
+
+  /** Each `.parquet` file under `path`, in name order, with its `geo`
+    * footer's primary column and that column's bbox (None without the key
+    * or a primary column; an inner None without a 4-number bbox). */
+  private def geoFooters(spark: SparkSession, path: String)
+      : Seq[(String, Option[(String, Option[Bbox])])] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    root.getFileSystem(conf).listStatus(root).map(_.getPath.toString)
+      .filter(_.endsWith(".parquet")).sorted.toSeq
+      .map { f =>
+        f -> geoFooterOf(f, conf).map(om.readTree).flatMap { node =>
+          Option(node.path("primary_column").asText(null)).map { primary =>
+            val b = node.path("columns").path(primary).path("bbox")
+            primary -> Option.when(b.isArray && b.size >= 4)((b.get(0).asDouble,
+              b.get(1).asDouble, b.get(2).asDouble, b.get(3).asDouble))
+          }
+        }
+      }
+  }
+
+  /** One parquet file's `geo` footer value (None when the key is absent),
+    * read through Spark's footer reader. */
+  private[graft] def geoFooterOf(file: String,
+      conf: org.apache.hadoop.conf.Configuration): Option[String] =
+    Option(RowGroupScan.footerOf(file, conf).getFileMetaData
+      .getKeyValueMetaData.get("geo"))
 
   /** Idempotency guard (F4, east_asia.py:99-106 / ORNL-FEMA-Buildings.md:69):
     * true if `outPath` already holds a committed non-empty dataset. */
@@ -279,48 +237,5 @@ object GeoNormalize {
         None
       } catch { case e: Throwable => Some(src -> e) }
     }.flatten
-  }
-}
-
-/** Executor-side GeoParquet footer rewrite: copy a parquet file's row groups
-  * as raw bytes (no decode/re-encode) into a sibling temp file whose footer
-  * carries the extra `geo` key, then atomically swap. Going through the
-  * file's own Hadoop FileSystem keeps sidecar checksums (.crc on local FS)
-  * consistent. */
-object GeoParquetFooter {
-  def stamp(pathStr: String, geoJson: String): Unit = {
-    import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
-    import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val path = new org.apache.hadoop.fs.Path(pathStr)
-    val in = HadoopInputFile.fromPath(path, conf)
-    val reader = ParquetFileReader.open(in)
-    val (schema, kv) =
-      try {
-        val fmd = reader.getFooter.getFileMetaData
-        (fmd.getSchema, fmd.getKeyValueMetaData)
-      } finally reader.close()
-    val tmp = new org.apache.hadoop.fs.Path(path.getParent, "." + path.getName + ".geo.tmp")
-    val writer = new ParquetFileWriter(HadoopOutputFile.fromPath(tmp, conf),
-      schema, ParquetFileWriter.Mode.OVERWRITE, 128L * 1024 * 1024, 0)
-    writer.start()
-    writer.appendFile(in)
-    val newKv = new java.util.HashMap[String, String](kv)
-    newKv.put("geo", geoJson)
-    writer.end(newKv)
-    val fs = path.getFileSystem(conf)
-    if (!fs.delete(path, false) || !fs.rename(tmp, path))
-      throw new java.io.IOException(s"geo footer swap failed for $pathStr")
-  }
-
-  /** Read back the `geo` footer value of one parquet file (None when the
-    * key is absent) — the gate/spec verification path. */
-  def read(pathStr: String, conf: org.apache.hadoop.conf.Configuration): Option[String] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(pathStr), conf))
-    try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get("geo"))
-    finally reader.close()
   }
 }

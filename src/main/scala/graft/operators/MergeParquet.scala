@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions._
-
 /** Compaction: the reference's `merge-pqs` command (east_asia.py:376-419) —
   * greedy bin-packing of per-file row counts into ≤ maxRows batches, then one
   * Hilbert-clustered ZSTD parquet file per batch with a lineage column.
@@ -46,8 +44,10 @@ object MergeParquet {
 
   /** Merge: per batch, union-scan the files, attach `source` lineage
     * (READ_PARQUET(filename=True) → `filename AS source`, east_asia.py:396-400),
-    * Hilbert-sort, write one ~500MB-class ZSTD file (east_asia.py:401-408)
-    * through [[ZstdSinkFormat]] (one zstd context per file, not per page).
+    * and write one ~500MB-class Hilbert-ordered ZSTD file
+    * (east_asia.py:401-408) through the clustered sink
+    * ([[GeoNormalize.writeClustered]] with one file: its 4 MB row groups and
+    * its GeoParquet `geo` footer).
     *
     * Each batch ends in one single-task write, which compresses every page
     * of its file on one core; `maxConcurrent` batches are submitted at once
@@ -61,15 +61,9 @@ object MergeParquet {
     val batches = planBatches(counts, maxRows)
     def writeBatch(files: Seq[String], i: Int): String = {
       val out = f"$outDir/merged_$i%04d"
-      val df = spark.read.parquet(files: _*)
-        .withColumn("source", substring_index(input_file_name(), "/", -1))
-      val keyed = df.withColumn("__hk", hilbert_of_geom(col("geom")))
-      keyed.repartitionByRange(1, col("__hk")).sortWithinPartitions("__hk")
-        .drop("__hk")
-        .write.mode("overwrite").format(ZstdSinkFormat.name)
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", zstdLevel.toString)
-        .save(out)
+      GeoNormalize.writeClustered(spark.read.parquet(files: _*)
+        .withColumn("source", substring_index(input_file_name(), "/", -1)),
+        out, numFiles = 1, zstdLevel = zstdLevel)
       out
     }
     Concurrency.mapBounded(batches.zipWithIndex, maxConcurrent) {

@@ -1278,7 +1278,7 @@ object RowGroupScan {
       .readFooter(in, org.apache.parquet.format.converter
         .ParquetMetadataConverter.NO_FILTER)
 
-  private def footerOf(file: String,
+  private[graft] def footerOf(file: String,
       conf: org.apache.hadoop.conf.Configuration)
       : org.apache.parquet.hadoop.metadata.ParquetMetadata =
     footerOf(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(

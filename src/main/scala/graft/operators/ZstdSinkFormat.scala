@@ -12,19 +12,23 @@ import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.compression.CompressionCodecFactory.BytesInputCompressor
 import org.apache.parquet.hadoop.{CodecFactory, MemoryManager, ParquetFileWriter,
   ParquetOutputFormat, ParquetRecordWriter, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport.FinalizedWriteContext
 import org.apache.parquet.hadoop.codec.{CodecConfig, ZstandardCodec}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetWriteSupport}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BinaryType, StructType}
+
+import graft.geom.GeomLib
 
 /** Spark's parquet sink with one zstd context per open file instead of one
-  * per page — the format both zstd sinks ([[GeoNormalize.writeClustered]],
-  * [[MergeParquet.merge]]) write through:
+  * per page — the format the clustered sink ([[GeoNormalize.writeClustered]],
+  * which [[MergeParquet.merge]] also writes through) uses:
   * `df.write.format(ZstdSinkFormat.name)…save(out)`.
   *
   * Spark's writer compresses each page through parquet's
@@ -36,6 +40,11 @@ import org.apache.spark.sql.types.StructType
   * unknown size (CONTINUE, then END — the frames and parameters the stream
   * path writes, without the re-allocation), and is freed when the writer
   * closes, on commit and on abort alike.
+  *
+  * A file with a binary `geom` column also gets the public GeoParquet 1.1
+  * `geo` footer key ([[GeoNormalize.geoFooterJson]]: per-file bbox and
+  * geometry types), folded from the rows as they are written and merged
+  * into the footer when the writer closes, before the commit protocol runs.
   *
   * Everything else is Spark's: `prepareWrite` (schema conf, commit protocol,
   * `.zstd.parquet` extension), `ParquetWriteSupport` (row encoding, Spark's
@@ -61,12 +70,13 @@ private[graft] object ZstdSinkFormat {
     override def getFileExtension(ctx: TaskAttemptContext): String =
       parquet.getFileExtension(ctx)
     override def newInstance(path: String, dataSchema: StructType,
-        ctx: TaskAttemptContext): OutputWriter = new FileWriter(path, ctx)
+        ctx: TaskAttemptContext): OutputWriter = new FileWriter(path, dataSchema, ctx)
   }
 
-  /** `ParquetOutputFormat.getRecordWriter` with the compressor swapped. */
-  private final class FileWriter(file: String, ctx: TaskAttemptContext)
-      extends OutputWriter {
+  /** `ParquetOutputFormat.getRecordWriter` with the compressor swapped and,
+    * for a binary `geom` column, [[GeoFooterSupport]] as the write support. */
+  private final class FileWriter(file: String, dataSchema: StructType,
+      ctx: TaskAttemptContext) extends OutputWriter {
     private val conf = ctx.getConfiguration
     private val compressor: BytesInputCompressor =
       CodecConfig.from(ctx).getCodec match {
@@ -83,7 +93,10 @@ private[graft] object ZstdSinkFormat {
       catch { case e: Throwable => compressor.release(); throw e }
 
     private def open(): ParquetRecordWriter[InternalRow] = {
-      val support = new ParquetWriteSupport
+      val geom = dataSchema.fields.indexWhere(f =>
+        f.name == "geom" && f.dataType == BinaryType)
+      val support =
+        if (geom < 0) new ParquetWriteSupport else new GeoFooterSupport(geom)
       val wctx = support.init(conf)
       val path = new Path(file)
       val props = ParquetProperties.builder()
@@ -110,6 +123,44 @@ private[graft] object ZstdSinkFormat {
     override def write(row: InternalRow): Unit = writer.write(null, row)
     override def close(): Unit =
       try writer.close(ctx) finally compressor.release()
+  }
+
+  /** Spark's row encoding plus the file's `geo` footer key. Each row's
+    * geometry is parsed once: its WKB type code joins the file's types
+    * (codes outside 1..7 are dropped, as `geoFooterJson` drops them) and
+    * its envelope widens the bbox. Null, empty and undecodable geometries
+    * add no bbox; a file with none has no `bbox`. Bounds are compared as
+    * Spark's `min`/`max` compare doubles (NaN above every number, -0.0
+    * equal to 0.0, first seen kept on ties), so the key equals the one
+    * those aggregates give over the written file. */
+  private final class GeoFooterSupport(geom: Int) extends ParquetWriteSupport {
+    private var types = 0 // bit t set: type code t seen
+    private var box: Array[Double] = _ // xmin, ymin, xmax, ymax
+
+    override def write(row: InternalRow): Unit = {
+      if (!row.isNullAt(geom)) {
+        val wkb = row.getBinary(geom)
+        val t = GeomLib.wkbShapeType(wkb)
+        if (t >= 1 && t <= 7) types |= 1 << t
+        val g = GeomLib.readOrNull(wkb)
+        if (g != null && !g.isEmpty) {
+          val e = g.getEnvelopeInternal
+          if (box == null) box = Array(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)
+          else {
+            if (compareDoubles(e.getMinX, box(0)) < 0) box(0) = e.getMinX
+            if (compareDoubles(e.getMinY, box(1)) < 0) box(1) = e.getMinY
+            if (compareDoubles(e.getMaxX, box(2)) > 0) box(2) = e.getMaxX
+            if (compareDoubles(e.getMaxY, box(3)) > 0) box(3) = e.getMaxY
+          }
+        }
+      }
+      super.write(row)
+    }
+
+    override def finalizeWrite(): FinalizedWriteContext =
+      new FinalizedWriteContext(java.util.Map.of("geo", GeoNormalize.geoFooterJson(
+        "geom", Option(box).map(b => (b(0), b(1), b(2), b(3))),
+        (1 to 7).filter(t => (types & (1 << t)) != 0))))
   }
 
   /** The pool Spark's writer registers with. Parquet creates it on the

@@ -92,15 +92,15 @@ class PipelineSpec extends AnyFunSuite {
       .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
     assert(files.length == 2)
     files.foreach { f =>
-      val geo = graft.operators.GeoParquetFooter.read(f, conf)
+      val geo = GeoNormalize.geoFooterOf(f, conf)
       assert(geo.isDefined, s"missing geo footer in $f")
       val j = geo.get
       assert(j.contains("\"version\":\"1.1.0\""), j)
       assert(j.contains("\"primary_column\":\"geom\""), j)
       assert(j.contains("\"encoding\":\"WKB\""), j)
       assert(j.contains("\"bbox\":["), j)
-      // Spark's own schema metadata must survive the footer rewrite —
-      // otherwise readback falls back to parquet-level type inference
+      // Spark's own schema metadata sits beside the geo key — otherwise
+      // readback falls back to parquet-level type inference
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(f), conf))
@@ -109,12 +109,21 @@ class PipelineSpec extends AnyFunSuite {
         assert(kv.containsKey("org.apache.spark.sql.parquet.row.metadata"))
       } finally reader.close()
     }
-    // data pages survived the raw byte copy
     val back = spark.read.parquet(dir)
     assert(back.count() == df.count())
     // footer bbox equals the per-file data envelope exactly
-    val expected = back
-      .select(org.apache.spark.sql.functions.input_file_name().as("f"),
+    val expected = bboxPerFile(back)
+    files.foreach { f =>
+      val name = new java.io.File(f).getName
+      val j = GeoNormalize.geoFooterOf(f, conf).get
+      assert(j.contains(expected(name)), s"$name: $j vs ${expected(name)}")
+    }
+  }
+
+  /** Each file's `"bbox":[...]` footer fragment, from its rows' envelope. */
+  private def bboxPerFile(back: DataFrame): Map[String, String] =
+    back
+      .select(input_file_name().as("f"),
         st_xmin($"geom").as("x0"), st_ymin($"geom").as("y0"),
         st_xmax($"geom").as("x1"), st_ymax($"geom").as("y1"))
       .groupBy($"f")
@@ -123,12 +132,6 @@ class PipelineSpec extends AnyFunSuite {
       .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).getName ->
         s""""bbox":[${r.getDouble(1)},${r.getDouble(2)},${r.getDouble(3)},${r.getDouble(4)}]""")
       .toMap
-    files.foreach { f =>
-      val name = new java.io.File(f).getName
-      val j = graft.operators.GeoParquetFooter.read(f, conf).get
-      assert(j.contains(expected(name)), s"$name: $j vs ${expected(name)}")
-    }
-  }
 
   test("readGeoParquet discovers the geometry column and merged bbox from the footer") {
     val dir = tmp() + "/geodisc"
@@ -243,6 +246,25 @@ class PipelineSpec extends AnyFunSuite {
     val merged = spark.read.parquet(outs: _*)
     assert(merged.count() == 80)
     assert(merged.select($"source").distinct().count() == inFiles.size)
+    // each merged file is GeoParquet too: its footer bbox is its envelope
+    val conf = spark.sparkContext.hadoopConfiguration
+    val expected = bboxPerFile(merged)
+    outs.foreach { out =>
+      val names = new java.io.File(out).listFiles.map(_.getName).toSeq
+      val files = names.filter(_.endsWith(".parquet"))
+      assert(files.size == 1, names)
+      val j = GeoNormalize.geoFooterOf(s"$out/${files.head}", conf)
+        .getOrElse(fail(s"no geo footer in $out/${files.head}"))
+      assert(j.contains(expected(files.head)), s"$j vs ${expected(files.head)}")
+      // only the committed file, _SUCCESS and their checksums: no temp
+      // twin or other leftover from the write
+      names.foreach { n =>
+        val bare = if (n.startsWith(".") && n.endsWith(".crc"))
+          n.stripPrefix(".").stripSuffix(".crc") else n
+        assert(bare == "_SUCCESS" ||
+          (bare.startsWith("part-") && bare.endsWith(".zstd.parquet")), s"stray $n in $out")
+      }
+    }
   }
 
   test("ewkbStats + heatmap + bbox") {

@@ -9,12 +9,14 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.GraftFunctions._
 import graft.geom.GeomLib
 import graft.operators.{Concurrency, GeoNormalize, ZstdSinkFormat}
 
 /** The zstd sink's writer against Spark's built-in parquet writer: same
-  * file layout, no larger chunks, one zstd context per file, and a failed
-  * task leaves nothing committed and no context open. */
+  * file layout, no larger chunks, one zstd context per file, a `geo` footer
+  * equal to the one recomputed from each file's rows, and a failed task
+  * leaves nothing committed and no context open. */
 class ZstdSinkSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -58,6 +60,24 @@ class ZstdSinkSpec extends AnyFunSuite {
     new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet"))
       .map(_.getAbsolutePath).sorted.toSeq
 
+  /** Each sink file's stored `geo` value and the one `geoFooterJson` gives
+    * for the Spark aggregates over that file's rows (envelope min/max, set
+    * of WKB type codes; no bbox when no row has an envelope). */
+  private def geoFooters(dir: String): Seq[(String, Option[String], String)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    parquetFiles(dir).map { f =>
+      val r = spark.read.parquet(f)
+        .agg(min(st_xmin($"geom")), min(st_ymin($"geom")),
+          max(st_xmax($"geom")), max(st_ymax($"geom")),
+          collect_set(wkb_shape_type($"geom")))
+        .head()
+      val bbox = Option.when(!r.isNullAt(0))(
+        (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+      (f, GeoNormalize.geoFooterOf(f, conf),
+        GeoNormalize.geoFooterJson("geom", bbox, r.getSeq[Int](4)))
+    }
+  }
+
   test("writeClustered at level 22 matches Spark's parquet writer page for " +
     "page, with no larger chunks and one zstd context per file") {
     val df = frame()
@@ -65,7 +85,7 @@ class ZstdSinkSpec extends AnyFunSuite {
     val sink = tmp() + "/sink"
     val created0 = ZstdSinkFormat.contextsCreated.get()
     GeoNormalize.writeClustered(df, sink, numFiles = 4, zstdLevel = 22,
-      rowGroupBytes = rowGroupBytes, geoFooter = false)
+      rowGroupBytes = rowGroupBytes)
     val created = ZstdSinkFormat.contextsCreated.get() - created0
     // each sink file's rows, in file order (one small file is one split),
     // written again by Spark's own parquet writer with the same options
@@ -104,6 +124,45 @@ class ZstdSinkSpec extends AnyFunSuite {
     assert(ra.count() == df.count() && rb.count() == df.count())
     assert(ra.exceptAll(rb).isEmpty && rb.exceptAll(ra).isEmpty)
     assert(ra.exceptAll(df).isEmpty)
+    geoFooters(sink).foreach { case (f, got, want) =>
+      assert(got.contains(want), s"$f: $got vs $want")
+      assert(want.contains("\"bbox\":[") && want.contains("[\"Point\"]"), want)
+    }
+  }
+
+  test("the geo footer takes types and bbox only from decodable geometries") {
+    // nulls, 3-byte stubs (no type code, no envelope) and an empty
+    // linestring (type code 2, no envelope) beside points and squares
+    val stub = Array[Byte](1, 3, 0)
+    val emptyLine = Array[Byte](1, 2, 0, 0, 0, 0, 0, 0, 0)
+    val mixed = (0 until 400).map { i =>
+      val g = i % 5 match {
+        case 0 => null
+        case 1 => stub
+        case 2 => emptyLine
+        case 3 => GeomLib.pointWkb(10.0 + i * 0.1, -5.0 + i * 0.05)
+        case _ => GeomLib.squareWkb(-20.0 + i * 0.1, 3.0, 0.5)
+      }
+      (i.toLong, g)
+    }.toDF("fid", "geom")
+    val sink = tmp() + "/mixed"
+    GeoNormalize.writeClustered(mixed, sink, numFiles = 2, zstdLevel = 1)
+    val footers = geoFooters(sink)
+    assert(footers.size == 2)
+    footers.foreach { case (f, got, want) =>
+      assert(got.contains(want), s"$f: $got vs $want")
+    }
+    val all = footers.map(_._3).mkString
+    assert(all.contains("\"bbox\":[") && all.contains("\"LineString\""), all)
+    // no row with an envelope: types from the decodable shapes, no bbox
+    val none = tmp() + "/noenv"
+    GeoNormalize.writeClustered(mixed.filter($"fid" % 5 < 3), none, numFiles = 1,
+      zstdLevel = 1)
+    val Seq((f, got, want)) = geoFooters(none)
+    assert(got.contains(want), s"$f: $got vs $want")
+    assert(!want.contains("bbox") && want.contains("\"geometry_types\":[\"LineString\"]"),
+      want)
+    assert(spark.read.parquet(none).count() == 240)
   }
 
   test("other codecs go to parquet's own compressor") {
