@@ -55,6 +55,17 @@ object Bench {
     (System.nanoTime() - t0) / 1e6
   }
 
+  /** Seconds one run of query `name` takes, or None when it throws: a
+    * failed query's elapsed time is not a timing. */
+  private def timeQuery(spark: SparkSession, name: String,
+      sfDir: String): Option[Double] = {
+    val t0 = System.nanoTime()
+    try {
+      SparkEntry.queries(name)(spark, sfDir).count()
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch { case _: Throwable => None }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -109,7 +120,7 @@ object Bench {
     // comparable across rounds
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
     val structural = scala.collection.mutable.LinkedHashMap[String, (Int, Int)]()
-    val results = names.map { name =>
+    val timed = names.map { name =>
       val times = (0 until passes).map { i =>
         // GC quiescence outside the timed region: without it, garbage from
         // earlier queries' shuffles is collected INSIDE whichever later
@@ -122,15 +133,14 @@ object Bench {
         if (i == passes - 1) {
           drainListeners(); jobsCnt.set(0); stagesCnt.set(0)
         }
-        val t0 = System.nanoTime()
-        try { SparkEntry.queries(name)(spark, sfDir).count() }
-        catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
+        timeQuery(spark, name, sfDir)
       }
       drainListeners()
       structural(name) = (jobsCnt.get, stagesCnt.get)
-      name -> times.min
+      name -> Option.when(times.forall(_.isDefined))(times.flatten.min)
     }
+    val results = timed.collect { case (name, Some(t)) => name -> t }
+    val failed = timed.collect { case (name, None) => name }
     val sentinelPost = sentinelMs()
     val sentinelMtPost = sentinelMtMs()
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -142,7 +152,7 @@ object Bench {
       .mkString("{", ",", "}")
     val ss = structural.map { case (k, (_, s)) => s"\"" + k + "\":" + s }
       .mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","sentinel_ms":$sentinel,"sentinel_pre_ms":$sentinelPre,"sentinel_post_ms":$sentinelPost,"sentinel_mt_ms":$sentinelMt,"sentinel_mt_pre_ms":$sentinelMtPre,"sentinel_mt_post_ms":$sentinelMtPost,"passes":$passes,"jobs":$js,"stages":$ss}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","sentinel_ms":$sentinel,"sentinel_pre_ms":$sentinelPre,"sentinel_post_ms":$sentinelPost,"sentinel_mt_ms":$sentinelMt,"sentinel_mt_pre_ms":$sentinelMtPre,"sentinel_mt_post_ms":$sentinelMtPost,"passes":$passes,"jobs":$js,"stages":$ss,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     println(json)
     // stdout is interleaved with sbt/log4j noise; also write the line to a
     // file so machine parsers never miss it
@@ -161,27 +171,22 @@ object Bench {
     if (sys.env.getOrElse("SPARK_GRAFT_BENCH_AB", "0") == "1") {
       val slow = results.filter(_._2 >= 1.5).map(_._1)
       val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_AB_REPS", "3").toInt
-      val buf = scala.collection.mutable.LinkedHashMap[String,
-        Vector[Double]](slow.map(_ -> Vector.empty[Double]): _*)
-      (0 until reps).foreach { _ =>
-        slow.foreach { name =>
-          System.gc()
-          val t0 = System.nanoTime()
-          try { SparkEntry.queries(name)(spark, sfDir).count() }
-          catch { case _: Throwable => () }
-          buf(name) = buf(name) :+ (System.nanoTime() - t0) / 1e9
-        }
-      }
+      val runs = (0 until reps).flatMap(_ => slow.map { name =>
+        System.gc()
+        name -> timeQuery(spark, name, sfDir)
+      }).groupMap(_._1)(_._2)
+      val (timedOk, abFailed) = slow.partition(runs(_).forall(_.isDefined))
       val best = results.toMap
-      val entries = slow.map { n =>
-        val sortedTs = buf(n).sorted
-        val med = sortedTs(sortedTs.size / 2)
-        s""""$n":{"median":$med,"times":[${buf(n).mkString(",")}],""" +
+      val entries = timedOk.map { n =>
+        val ts = runs(n).flatten
+        val med = ts.sorted.apply(ts.size / 2)
+        s""""$n":{"median":$med,"times":[${ts.mkString(",")}],""" +
           s""""best_of_main":${best(n)}}"""
       }
       val abJson = s"""{"metric":"bench_ab","sf":"$sfDir",""" +
         s""""reps":$reps,"sentinel_mt_ms":$sentinelMt,""" +
-        s""""threshold_sec":1.5,"gates":{${entries.mkString(",")}}}"""
+        s""""threshold_sec":1.5,"gates":{${entries.mkString(",")}},""" +
+        s""""failed":${abFailed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
       java.nio.file.Files.write(
         java.nio.file.Paths.get(sys.env.getOrElse(
           "SPARK_GRAFT_BENCH_AB_OUT", "bench_ab.json")),

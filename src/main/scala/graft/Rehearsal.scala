@@ -226,12 +226,8 @@ object Rehearsal {
     require(reconvSecs < convSecs / 4,
       f"F4 rerun should skip, not reconvert: $reconvSecs%.1f s vs $convSecs%.1f s")
     val (outFiles, mergeSecs) = timed(s"merge-pqs (${convFiles.size} converted dirs)") {
-      // each batch's final write is a single repartitionByRange(1) task
-      // that compresses every page of its file at zstd 22 on one core:
-      // wide concurrent submission keeps the cluster busy where
-      // 4-at-a-time left 28/32 cores idle
       graft.operators.MergeParquet.merge(spark, convFiles, mergeDir,
-        maxRows = 10000000L, zstdLevel = 22, maxConcurrent = 8)
+        maxRows = 10000000L, zstdLevel = 22)
     }
     // contract audit: rows ≤ 10M per merged file, sizes in the ~500MB class
     val merged = spark.read.parquet(outFiles: _*)

@@ -69,37 +69,45 @@ object GeoNormalize {
 
   /** Spatial clustering + write contract (every reference sink,
     * east_asia.py:72-83): order by Hilbert(lat, lon of centroid), write
-    * ZSTD parquet. `numFiles <= 0` leaves Spark's range-partitioned sort
-    * parallelism intact (the 100TB path: each range partition is written by
-    * its own task and is internally Hilbert-ordered, giving the same
-    * row-group locality without a single-writer bottleneck); a positive
-    * `numFiles` forces that many output files (reference parity: 1).
-    * Files go through [[ZstdSinkFormat]]: one zstd context per file, not
-    * one per page, and each file's public GeoParquet 1.1 `geo` footer key
-    * ([[geoFooterJson]]) written in the same pass, so GDAL / geopandas /
-    * DuckDB-spatial auto-recognize the geometry column (the reference reads
-    * its own output back via explicit `ST_GEOMFROMWKB`,
-    * East-Asia-Building-Footprints.md:231-234 — the footer is pure interop
-    * upside).
-    */
+    * ZSTD parquet through [[sink]]. `numFiles <= 0` leaves Spark's
+    * range-partitioned sort parallelism intact (the 100TB path: each range
+    * partition is written by its own task and is internally Hilbert-ordered,
+    * giving the same row-group locality without a single-writer
+    * bottleneck); a positive `numFiles` forces that many output files
+    * (reference parity: 1). */
   def writeClustered(df: DataFrame, outPath: String, numFiles: Int = 0,
-      zstdLevel: Int = 22, rowGroupBytes: Long = 4L * 1024 * 1024): Unit = {
-    // the WKB→Hilbert kernel runs in the pre-exchange stage (twice, for the
-    // range sampling) — scatter a few-split input first (no-op at scale)
+      zstdLevel: Int = 22, rowGroupBytes: Long = sinkRowGroupBytes): Unit = {
+    // arrange: the WKB→Hilbert kernel runs in the pre-exchange stage (twice,
+    // for the range sampling) — scatter a few-split input first (no-op at
+    // scale)
     val keyed = Scatter(df).withColumn("__hk", hilbert_of_geom(col("geom")))
-    val arranged =
+    val placed =
       if (numFiles > 0) keyed.repartitionByRange(numFiles, col("__hk"))
-        .sortWithinPartitions("__hk")
-      else keyed.sortWithinPartitions("__hk") // caller controls partitioning
-    arranged.drop("__hk")
-      .write.mode("overwrite").format(ZstdSinkFormat.name)
+      else keyed // caller controls partitioning
+    sink(placed.sortWithinPartitions("__hk").drop("__hk"), outPath, zstdLevel,
+      rowGroupBytes)
+  }
+
+  private val sinkRowGroupBytes: Long = 4L * 1024 * 1024
+
+  /** The one parquet sink of [[writeClustered]] and [[MergeParquet.merge]]:
+    * overwrites `outPath` (partitioned by `partitionBy`, if any) through
+    * [[ZstdSinkFormat]] — one zstd context per file, not one per page, and
+    * each file's public GeoParquet 1.1 `geo` footer key ([[geoFooterJson]])
+    * written in the same pass, so GDAL / geopandas / DuckDB-spatial
+    * auto-recognize the geometry column (the reference reads its own output
+    * back via explicit `ST_GEOMFROMWKB`, East-Asia-Building-Footprints.md:
+    * 231-234 — the footer is pure interop upside). */
+  private[operators] def sink(df: DataFrame, outPath: String, zstdLevel: Int,
+      rowGroupBytes: Long = sinkRowGroupBytes, partitionBy: Seq[String] = Nil): Unit =
+    df.write.mode("overwrite").format(ZstdSinkFormat.name)
+      .partitionBy(partitionBy: _*)
       .option("compression", "zstd")
       .option("parquet.compression.codec.zstd.level", zstdLevel.toString)
       // parquet-mr sizes row groups in bytes, not rows; small groups keep
       // the reference's row-group-level spatial pruning property (§1.3)
       .option("parquet.block.size", rowGroupBytes.toString)
       .save(outPath)
-  }
 
   /** The GeoParquet 1.1 `geo` JSON for one file (hand-rolled: the shape is
     * fixed and determinism matters for the gate hash). `crs` is omitted:
@@ -204,14 +212,6 @@ object GeoNormalize {
       fs.listStatus(p).exists(s => s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
   }
 
-  /** Per-source error isolation (F10): run `work` for each source, collect
-    * failures instead of aborting the run. */
-  def forEachSource[T](sources: Seq[T])(work: T => Unit): Seq[(T, Throwable)] =
-    sources.flatMap { s =>
-      try { work(s); None }
-      catch { case e: Throwable => Some(s -> e) }
-    }
-
   /** The reference's `main` command end-to-end (east_asia.py:286-314): for
     * each (inputPath → srcEpsg) source table of WKB geometry, normalize and
     * write a Hilbert-clustered output under `outDir`, with retry-friendly
@@ -237,5 +237,20 @@ object GeoNormalize {
         None
       } catch { case e: Throwable => Some(src -> e) }
     }.flatten
+  }
+}
+
+/** Bounded-concurrency driver-side job submission. Spark jobs triggered
+  * from different driver threads run concurrently on the cluster; the
+  * bound keeps driver memory and scheduler pressure sane. */
+private[graft] object Concurrency {
+  def mapBounded[A, B](items: Seq[A], maxConcurrent: Int)(f: A => B): Seq[B] = {
+    require(maxConcurrent >= 1)
+    if (items.sizeIs <= 1 || maxConcurrent == 1) return items.map(f)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(maxConcurrent, items.size))
+    // the first failure propagates
+    try items.map(a => pool.submit[B](() => f(a))).map(_.get())
+    finally pool.shutdown()
   }
 }

@@ -1658,7 +1658,7 @@ object TableLog {
         r
       case None =>
         val combined = bySidecar.map { case (sidecar, m) =>
-          spark.read.parquet(Paths.get(dir).resolve(sidecar).toString)
+          bloomSidecar(spark, dir, sidecar)
             .join(broadcast(m.map(_._1).toDF("f")), Seq("f"),
               "left_semi")
         }.reduce(_ unionByName _)
@@ -2385,8 +2385,8 @@ object TableLog {
     // sidecar rows carry the log-relative path (the DV convention)
     val byName = files.map(f => Paths.get(f).getFileName.toString -> f).toMap
     val lookup = byName.toSeq.toDF("fn", "f")
-    val sidecarDf = bitmapDs.toDF("fn", "bits")
-      .join(broadcast(lookup), "fn").select("f", "bits")
+    val sidecarDf = bitmapDs.toDF("fn", "bitmap")
+      .join(broadcast(lookup), "fn").select("f", "bitmap")
     val staging = Files.createTempDirectory("graft_bloom").toString
     sidecarDf.repartition(1).write.mode("overwrite").parquet(staging)
     Files.createDirectories(Paths.get(dir, "stats"))
@@ -2446,6 +2446,13 @@ object TableLog {
     new java.util.concurrent.ConcurrentHashMap[(String, Int),
       Option[Map[String, Array[Byte]]]]()
 
+  /** One bloom sidecar as (f, bitmap) rows, whichever name its bitmap
+    * column carries (both writers put `f` first). */
+  private def bloomSidecar(spark: SparkSession, dir: String,
+      sidecar: String): DataFrame =
+    spark.read.parquet(Paths.get(dir).resolve(sidecar).toString)
+      .toDF("f", "bitmap")
+
   /** Driver-side read of bloom sidecars TRIMMED to the given
     * file→sidecar mapping, as (file, bitmap) rows. None = byte budget
     * exceeded or schema drift — callers fall back to the distributed
@@ -2463,11 +2470,12 @@ object TableLog {
       val ok = bySidecar.forall { case (sc, want) =>
         val (rows, schema) = RowGroupScan.localParquetRows(
           Paths.get(dir).resolve(sc).toString, conf)
-        val shaped = schema.fieldNames.contains("f") &&
-          schema.fieldNames.contains("bitmap")
+        // `bits`: sidecars Spark-built before both writers used `bitmap`
+        val bitmapCol = Seq("bitmap", "bits").find(schema.fieldNames.contains)
+        val shaped = schema.fieldNames.contains("f") && bitmapCol.isDefined
         if (shaped) {
           val fi = schema.fieldIndex("f")
-          val bi = schema.fieldIndex("bitmap")
+          val bi = schema.fieldIndex(bitmapCol.get)
           rows.foreach { r =>
             val f = r.getString(fi)
             if (want(f)) acc += f -> r.getAs[Array[Byte]](bi)
@@ -2492,8 +2500,7 @@ object TableLog {
         .map(_.toMap).getOrElse {
         val parts = bySidecar.map { case (sidecar, m) =>
           val fs = m.keySet.toSeq
-          spark.read
-            .parquet(Paths.get(dir).resolve(sidecar).toString)
+          bloomSidecar(spark, dir, sidecar)
             .filter(org.apache.spark.sql.functions.col("f")
               .isin(fs: _*))
         }
@@ -2558,8 +2565,7 @@ object TableLog {
           val parts = snap.blooms.groupBy(_._2).toSeq.sortBy(_._1)
             .map { case (sidecar, m) =>
               val fs = m.keySet.toSeq
-              spark.read
-                .parquet(Paths.get(dir).resolve(sidecar).toString)
+              bloomSidecar(spark, dir, sidecar)
                 .filter(org.apache.spark.sql.functions.col("f")
                   .isin(fs: _*))
             }

@@ -27,8 +27,8 @@ import org.apache.spark.sql.types.{BinaryType, StructType}
 import graft.geom.GeomLib
 
 /** Spark's parquet sink with one zstd context per open file instead of one
-  * per page — the format the clustered sink ([[GeoNormalize.writeClustered]],
-  * which [[MergeParquet.merge]] also writes through) uses:
+  * per page — the format the clustered sink ([[GeoNormalize.sink]], behind
+  * `writeClustered` and [[MergeParquet.merge]]) uses:
   * `df.write.format(ZstdSinkFormat.name)…save(out)`.
   *
   * Spark's writer compresses each page through parquet's

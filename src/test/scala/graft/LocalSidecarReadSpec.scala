@@ -142,6 +142,49 @@ class LocalSidecarReadSpec extends AnyFunSuite {
     assert(resA._1 == 6000L)
   }
 
+  test("a point lookup on a freshly bloomed table plans with zero Spark " +
+    "jobs; sidecars with the older `bits` column still probe") {
+    def bloomed(prefix: String): String = {
+      val dir = tmp(prefix)
+      TableLog.append(spark.range(4000).selectExpr("id as k", "id * 3 as v")
+        .repartitionByRange(2, col("k")), dir)
+      TableLog.computeBlooms(spark, dir, "k")
+      dir
+    }
+    /** Rewrite the table's bloom sidecar in place with the column `bits`. */
+    def renameToBits(dir: String): Unit = {
+      import scala.jdk.CollectionConverters._
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "stats"))
+      val sidecar = try s.iterator.asScala
+        .find(_.getFileName.toString.contains("-bloom-")).get finally s.close()
+      val staged = dir + "_bits"
+      spark.read.parquet(sidecar.toString).toDF("f", "bits").coalesce(1)
+        .write.parquet(staged)
+      val part = new java.io.File(staged).listFiles
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath, sidecar,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    def lookup(dir: String): (Int, Seq[Long]) = {
+      // the build's own job events must not reach the listener
+      org.apache.spark.graft.CoreInternals.waitListenerBusEmpty(
+        spark.sparkContext, 10000)
+      val ((pl, _, _, filesOpened, filesTotal), jobs) =
+        jobsDuring(TableLog.readPointLookup(spark, dir, "k", Seq(1234L)))
+      assert(filesOpened == 1 && filesTotal == 2, s"$filesOpened/$filesTotal")
+      (jobs, pl.filter(col("k") === 1234L).select("v").as[Long].collect().toSeq)
+    }
+    assert(lookup(bloomed("lsr_bloom")) == (0, Seq(3702L)))
+    val old = bloomed("lsr_bits"); renameToBits(old)
+    assert(lookup(old) == (0, Seq(3702L)))
+    val oldDist = bloomed("lsr_bits_dist"); renameToBits(oldDist)
+    val prev = TableLog.localSidecarMaxBytes
+    try {
+      TableLog.localSidecarMaxBytes = 0L // the distributed fallback
+      assert(lookup(oldDist)._2 == Seq(3702L))
+    } finally TableLog.localSidecarMaxBytes = prev
+  }
+
   test("deletion vectors read locally agree with the distributed read " +
     "across MULTIPLE dv sidecars") {
     val a = tmp("lsr_dva"); val b = tmp("lsr_dvb")

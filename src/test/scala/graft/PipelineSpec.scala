@@ -267,6 +267,110 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  /** One single-file parquet input per entry of `sizes`, each holding that
+    * many fixture rows (a distinct slice per file), named `name(k)` in one
+    * flat directory; returns the local paths in name order. */
+  private def mergeInputs(base: String, sizes: Seq[Int],
+      name: Int => String = k => f"in_$k%02d.parquet"): Seq[String] = {
+    val rows = fixture().filter($"Shape".isNotNull).select($"fid", $"Shape".as("geom"))
+    val flat = new java.io.File(s"$base/flat"); flat.mkdirs()
+    sizes.zipWithIndex.map { case (n, k) =>
+      val from = sizes.take(k).sum
+      val staged = s"$base/staged_$k"
+      rows.filter($"fid" >= from).orderBy($"fid").limit(n).coalesce(1).write.parquet(staged)
+      val part = new java.io.File(staged).listFiles.filter(_.getName.endsWith(".parquet")).head
+      val to = new java.io.File(flat, name(k))
+      java.nio.file.Files.move(part.toPath, to.toPath)
+      to.toString
+    }.sorted
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.CoreInternals.waitListenerBusEmpty(sc, 10000)
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      org.apache.spark.graft.CoreInternals.waitListenerBusEmpty(sc, 10000)
+      (a, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Each merge output directory's single parquet file. */
+  private def mergedFile(dir: String): String = {
+    val files = new java.io.File(dir).listFiles.map(_.toString).filter(_.endsWith(".parquet"))
+    assert(files.length == 1, s"$dir holds ${files.toSeq}")
+    files.head
+  }
+
+  test("mergeParquet: batches are planBatches over footer counts, Hilbert-sorted, " +
+    "GeoParquet, in at most 3 jobs") {
+    val base = tmp()
+    val inFiles = mergeInputs(base, Seq(40, 25, 30, 50, 10))
+    val want = MergeParquet.planBatches(
+      inFiles.map(f => f -> spark.read.parquet(f).count()), maxRows = 60)
+      .map(_.map(f => new java.io.File(f).getName).toSet)
+    assert(want.size == 3, want) // 40 | 25+30 | 50+10
+    val (outs, jobs) = jobsDuring(
+      MergeParquet.merge(spark, inFiles, s"$base/merged", maxRows = 60))
+    assert(jobs <= 3, s"merge ran $jobs jobs")
+    assert(outs == want.indices.map(i => f"$base/merged/merged_batch=$i%04d"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    outs.zip(want).foreach { case (out, names) =>
+      val f = mergedFile(out)
+      val back = spark.read.parquet(f)
+      assert(back.select("source").distinct().collect().map(_.getString(0)).toSet == names)
+      val keys = back.select("geom").collect()
+        .map(r => GeomLib.hilbertOfGeom(r.getAs[Array[Byte]](0)).longValue)
+      assert(keys.sliding(2).forall(p => p.length < 2 || p(0) <= p(1)),
+        s"Hilbert keys decrease within $f")
+      val j = GeoNormalize.geoFooterOf(f, conf).getOrElse(fail(s"no geo footer in $f"))
+      val bbox = bboxPerFile(back)(new java.io.File(f).getName)
+      assert(j.contains(bbox), s"$j vs $bbox")
+    }
+    assert(spark.read.parquet(outs: _*).count() == 155)
+  }
+
+  test("mergeParquet: zero-row inputs join no batch; a space in a file name " +
+    "reaches `source` URL-encoded") {
+    val base = tmp()
+    val inFiles = mergeInputs(base, Seq(0, 30, 20),
+      name = k => Seq("a_empty.parquet", "b with space.parquet", "c.parquet")(k))
+    val outs = MergeParquet.merge(spark, inFiles, s"$base/merged", maxRows = 40)
+    assert(outs.size == 2) // [empty, 30] | [20]: the empty file adds no rows
+    val sources = outs.map(o => spark.read.parquet(mergedFile(o)).groupBy("source").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+    assert(sources == Seq(Map("b%20with%20space.parquet" -> 30L), Map("c.parquet" -> 20L)))
+    // inputs that are all empty plan no batch and write nothing
+    val none = MergeParquet.merge(spark, inFiles.take(1), s"$base/none", maxRows = 40)
+    assert(none.isEmpty && !new java.io.File(s"$base/none").exists)
+  }
+
+  test("mergeParquet: AQE does not coalesce the per-batch partitions") {
+    val base = tmp()
+    val inFiles = mergeInputs(base, Seq(30, 30, 30, 30))
+    val keys = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.adaptive.coalescePartitions.enabled",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    val outs = try {
+      spark.conf.set(keys(0), "true"); spark.conf.set(keys(1), "true")
+      spark.conf.set(keys(2), "1g")
+      MergeParquet.merge(spark, inFiles, s"$base/merged", maxRows = 30)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(outs.size == 4)
+    outs.foreach(o => assert(spark.read.parquet(mergedFile(o)).count() == 30))
+  }
+
   test("ewkbStats + heatmap + bbox") {
     val df = fixture().filter($"Shape".isNotNull)
       .select($"fid", $"Shape".as("geom"))
