@@ -6169,10 +6169,8 @@ object SparkEntry {
       // zstdLevel 3 here: the gate pins the sink CONTRACT (range exchange,
       // ordered disjoint files, zstd codec); level-22-takes-effect is
       // separately asserted in PipelineSpec. Level 22 costs more at every
-      // file size, not just on tiny files: each writer's context allocates
-      // ~0.7 GB of match-finder tables (once per file through
-      // ZstdSinkFormat, once per page through Spark's own writer) and
-      // every page then compresses far slower than at level 3
+      // file size: ZstdSinkFormat sizes its tables to each page, but every
+      // page still compresses far slower than at level 3
       val tmp = java.nio.file.Files.createTempDirectory("k1sink").toString + "/clustered"
       graft.operators.GeoNormalize.writeClustered(sample, tmp, numFiles = 4, zstdLevel = 3)
       val back = s.read.parquet(tmp)

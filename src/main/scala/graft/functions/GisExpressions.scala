@@ -339,7 +339,7 @@ case class StAsGeoJson(child: Expression) extends UnaryExpression
   * (replaces the reference's ogr2ogr subprocess + DuckDB ST_TRANSFORM,
   * east_asia.py:118-137,204-208). */
 case class StTransform(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback with ImplicitCastInputTypes {
+    extends TernaryExpression with ImplicitCastInputTypes {
   override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType, IntegerType)
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
@@ -347,6 +347,10 @@ case class StTransform(first: Expression, second: Expression, third: Expression)
   protected override def nullSafeEval(wkb: Any, src: Any, dst: Any): Any =
     CrsTransform.transformWkb(
       wkb.asInstanceOf[Array[Byte]], src.asInstanceOf[Number].intValue, dst.asInstanceOf[Number].intValue)
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (wkb, src, dst) =>
+      s"""${ev.value} = graft.geom.CrsTransform.transformWkb($wkb, $src, $dst);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
     copy(first = f, second = s, third = t)
 }

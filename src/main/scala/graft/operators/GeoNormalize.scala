@@ -231,7 +231,7 @@ object GeoNormalize {
         val name = path.substring(path.lastIndexOf('/') + 1).stripSuffix(".parquet")
         val out = s"$outDir/$name"
         if (!alreadyDone(spark, out)) {
-          val df = spark.read.parquet(path)
+          val df = RowGroupScan.readNoInfer(spark, Seq(path))
           writeClustered(normalize(df, epsg), out, numFiles = numFilesPerSource)
         }
         None

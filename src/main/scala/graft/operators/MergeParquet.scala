@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.GraftFunctions.hilbert_of_geom
 
@@ -29,7 +30,9 @@ object MergeParquet {
   /** Merge as one planned write. Planning runs no job: each input file's
     * row count (the reference's resp.json manifest,
     * East-Asia-Building-Footprints.md:279-287) comes from its footer, in
-    * path order; zero-row files join no batch. The write tags each row with
+    * path order; zero-row files join no batch. The read schema comes from
+    * the same footers, so the read runs no inference job; a `mergeSchema`
+    * read when they disagree. The write tags each row with
     * its batch (a broadcast map on `_metadata.file_path`) and its `source`
     * file name (`filename AS source`, east_asia.py:396-400), gives each
     * batch one partition (`repartitionById`, which AQE does not coalesce),
@@ -40,16 +43,23 @@ object MergeParquet {
   def merge(spark: SparkSession, inPaths: Seq[String], outDir: String,
       maxRows: Long = 10000000L, zstdLevel: Int = 22,
       maxConcurrent: Int = 4): Seq[String] = {
-    val all = spark.read.parquet(inPaths: _*)
     val conf = spark.sparkContext.hadoopConfiguration
-    val counts = all.inputFiles.sorted.toSeq.map { f =>
-      // Spark re-parses the path string into `_metadata.file_path`
-      val path = new Path(new Path(new java.net.URI(f)).toString)
-      val blocks = RowGroupScan.footerOf(path.toString, conf).getBlocks.asScala
-      path.toUri.toString -> blocks.map(_.getRowCount).sum
-    }.filter(_._2 > 0)
-    val batches = planBatches(counts, maxRows)
+    // an empty schema lists the inputs as the read does, without inferring
+    val inputs = spark.read.schema(new StructType).parquet(inPaths: _*)
+      .inputFiles.sorted.toSeq.map { f =>
+        // Spark re-parses the path string into `_metadata.file_path`
+        val path = new Path(new Path(new java.net.URI(f)).toString)
+        val footer = RowGroupScan.footerOf(path.toString, conf)
+        (path.toUri.toString, footer.getBlocks.asScala.map(_.getRowCount).sum,
+          RowGroupScan.sparkSchemaOf(spark, path.toString, footer))
+      }
+    val batches = planBatches(inputs.collect { case (f, n, _) if n > 0 => f -> n }, maxRows)
     if (batches.isEmpty) return Nil
+    // every footer's schema, not one file's: any disagreement merges them
+    val all = inputs.map(_._3).distinct match {
+      case Seq(schema) => spark.read.schema(schema).parquet(inPaths: _*)
+      case _ => spark.read.option("mergeSchema", "true").parquet(inPaths: _*)
+    }
     val ids = batches.indices.map(i => f"$i%04d")
     val batchOf = spark.sparkContext.broadcast(
       batches.zip(ids).flatMap { case (files, id) => files.map(_ -> id) }.toMap)

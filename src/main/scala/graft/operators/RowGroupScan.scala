@@ -279,6 +279,18 @@ object RowGroupScan {
     }
   }
 
+  /** The schema Spark's parquet inference reads from `file`'s footer:
+    * its stored Spark schema, else its parquet schema converted with the
+    * session's flags. */
+  private[graft] def sparkSchemaOf(spark: SparkSession, file: String,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetToSparkSchemaConverter}
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(new org.apache.hadoop.fs.Path(file), footer),
+      new ParquetToSparkSchemaConverter(SparkInternals.sqlConf(spark)))
+  }
+
   /** DRIVER-side parquet write of wide-index rows (parquet-mr Group
     * API) — the write half of zero-job sidecar staging. The schema
     * matches what Spark writes for an IdxRow frame (same names, string

@@ -1435,18 +1435,25 @@ object TableLog {
   }
 
   /** The FULL snapshot's union schema from its row-group index (sidecar
-    * -served where mapped — one small-parquet aggregation, no footers)
-    * — what the bloom-narrowed path needs when the memo is cold. The
-    * answer memoizes like the in-line computation does. */
+    * -served where mapped, no footers) — what the bloom-narrowed path
+    * needs when the memo is cold. A snapshot whose index rows can sit on
+    * the driver ([[rgIndexLocal]]) answers there with no job; a larger one
+    * runs one small-parquet aggregation. The answer memoizes like the
+    * in-line computation does. */
   private def snapshotUnionCols(spark: SparkSession, dir: String,
       snap: Snapshot): Seq[(String, String)] = {
     import org.apache.spark.sql.functions.{col, collect_set, sort_array,
       struct}
-    val wide = rgIndexFor(spark, dir, snap, snap.files)
-    val row = wide.agg(sort_array(collect_set(struct(col("ord"),
-      col("column"), col("dtype"))))).first()
-    val cols = RowGroupScan.unionColsFromSets(
-      Seq(row.getSeq[org.apache.spark.sql.Row](0)))
+    val cols = rgIndexLocal(spark, dir, snap, snap.files) match {
+      case Some((rows, schema)) =>
+        RowGroupScan.unionColsFromTuples(colsOfRows(rows, schema))
+      case None =>
+        val wide = rgIndexFor(spark, dir, snap, snap.files)
+        val row = wide.agg(sort_array(collect_set(struct(col("ord"),
+          col("column"), col("dtype"))))).first()
+        RowGroupScan.unionColsFromSets(
+          Seq(row.getSeq[org.apache.spark.sql.Row](0)))
+    }
     if (unionColsMemo.size > 512) unionColsMemo.clear()
     unionColsMemo.put((dir, snap.version), cols)
     cols

@@ -33,13 +33,20 @@ import graft.geom.GeomLib
   *
   * Spark's writer compresses each page through parquet's
   * `CodecFactory.HeapBytesCompressor`, which opens a fresh
-  * `ZstdOutputStream` per page. A new level-22 stream of unknown size
-  * allocates and clears ~0.7 GB of match-finder tables: ~0.5 s of one core
-  * per page, whatever the page's size. Here one `ZstdCompressCtx` per file
+  * `ZstdOutputStream` per page. A level-22 stream of unknown size gets the
+  * level's full match-finder geometry (window 2^27, chain 2^27, hash
+  * 2^25): ~640 MB of tables allocated and zeroed, ~0.5 s of one core per
+  * page, whatever the page's size. Here one `ZstdCompressCtx` per file
   * writer compresses every page of the file, each as its own frame of
-  * unknown size (CONTINUE, then END — the frames and parameters the stream
-  * path writes, without the re-allocation), and is freed when the writer
-  * closes, on commit and on abort alike.
+  * unknown size (CONTINUE, then END), and is freed when the writer closes,
+  * on commit and on abort alike. Before a page, the context's window,
+  * chain and hash logs are cut to the page ([[ZstdSinkFormat.geometry]]):
+  * the clamp zstd itself applies to an input of known size, floored at
+  * its 128 KB block. A page then needs a few MB of tables, and every
+  * frame holds the blocks the full geometry gives; only its header's
+  * Window_Descriptor names the smaller window. The size is not pledged:
+  * a pledged page of 256 KB or less would move onto zstd's small-input
+  * parameter rows, which compress those pages worse.
   *
   * A file with a binary `geom` column also gets the public GeoParquet 1.1
   * `geo` footer key ([[GeoNormalize.geoFooterJson]]: per-file bbox and
@@ -176,13 +183,40 @@ private[graft] object ZstdSinkFormat {
     }
   }
 
+  /** zstd 1.5's default (windowLog, chainLog, hashLog) for a frame of
+    * unknown size, by level: `ZSTD_defaultCParameters[0]`. Level 0 is
+    * zstd's default level 3, negative levels share row 0, and levels
+    * above 22 are 22. */
+  private val defaultRows: Array[(Int, Int, Int)] = Array(
+    (19, 12, 13), (19, 13, 14), (20, 15, 16), (21, 16, 17), (21, 18, 18),
+    (21, 18, 19), (21, 18, 19), (21, 19, 20), (21, 19, 20), (22, 20, 21),
+    (22, 21, 22), (22, 21, 22), (22, 22, 23), (22, 22, 22), (22, 22, 23),
+    (22, 23, 23), (22, 22, 22), (23, 23, 22), (23, 23, 22), (23, 24, 22),
+    (25, 25, 23), (26, 26, 24), (27, 27, 25))
+
+  /** The (windowLog, chainLog, hashLog) a page of `pageBytes` is compressed
+    * with at `level`: the level's default row with the window cut to
+    * ⌈log2 pageBytes⌉, but not below 17 (zstd's 128 KB block, so blocks
+    * split where they did), and the chain and hash logs to one above the
+    * window, as `ZSTD_adjustCParams` cuts them for a known size. Levels
+    * 5–12 keep their hash log: their row match finder spreads positions
+    * over 2^hashLog rows, so a smaller table changes the matches. */
+  private[graft] def geometry(level: Int, pageBytes: Int): (Int, Int, Int) = {
+    val (w, c, h) = defaultRows(if (level == 0) 3 else level.max(0).min(22))
+    val need = 32 - Integer.numberOfLeadingZeros(math.max(pageBytes, 2) - 1)
+    val win = w.min(need.max(17))
+    (win, c.min(win + 1), if (level >= 5 && level <= 12) h else h.min(win + 1))
+  }
+
   /** One zstd context for every page of one file. */
-  private final class ZstdPages(level: Int, workers: Int) extends BytesInputCompressor {
+  private[graft] final class ZstdPages(level: Int, workers: Int)
+      extends BytesInputCompressor {
     private val zc = new ZstdCompressCtx().setLevel(level).setWorkers(workers)
     contextsCreated.incrementAndGet()
     contextsOpen.incrementAndGet()
     private var src = ByteBuffer.allocateDirect(0)
     private var dst = ByteBuffer.allocateDirect(0)
+    private var window = 0
     private var open = true
 
     override def getCodecName: CompressionCodecName = CompressionCodecName.ZSTD
@@ -195,10 +229,19 @@ private[graft] object ZstdSinkFormat {
       val bound = Zstd.compressBound(src.remaining.toLong).toInt
       if (dst.capacity < bound) dst = ByteBuffer.allocateDirect(bound)
       dst.clear()
-      // CONTINUE first leaves the frame's size unknown, as a stream's is:
-      // an END first pledges the page size, and zstd then picks its
-      // small-input parameters (pages compress worse). No reset between
-      // frames: zstd-jni's reset() also drops the level.
+      // a new geometry clears the tables (a few MB); an unchanged one lets
+      // zstd carry them over to the next frame as they are
+      val (w, chain, hash) = geometry(level, src.remaining)
+      if (w != window) {
+        zc.setWindowLog(w).setChainLog(chain).setHashLog(hash)
+        window = w
+      }
+      // CONTINUE first leaves the frame's size unknown, as a stream's is,
+      // so zstd starts from the level's default row and only the logs set
+      // above differ: an END first pledges the page size, and zstd then
+      // picks its small-input rows for pages of 256 KB or less (they
+      // compress worse). No reset between frames: zstd-jni's reset() also
+      // drops the level and the logs.
       zc.compressDirectByteBufferStream(dst, src, EndDirective.CONTINUE)
       // END is done when it returns true; with workers > 0 it may return
       // early with room left, so grow only a full buffer

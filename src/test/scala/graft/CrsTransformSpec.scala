@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.debug.codegenString
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.GraftFunctions.st_transform
 import graft.geom.{CrsTransform, GeomLib}
 
 class CrsTransformSpec extends AnyFunSuite {
@@ -360,5 +364,38 @@ class CrsTransformSpec extends AnyFunSuite {
     assert(math.abs(GeomLib.stY(back) - 39.9) < 1e-8)
     assert(CrsTransform.transformWkb(p, 4326, 99999) == null)
     assert(CrsTransform.transformWkb(p, 4326, 4326) eq p) // identity shortcut
+  }
+
+  test("st_transform compiles to Java and answers as the interpreted path does") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val p = GeomLib.pointWkb(116.4, 39.9)
+    // a point each way, the identity, undecodable WKB, an unsupported EPSG
+    // and a null geometry; repartition keeps the projection out of the
+    // optimizer's local-relation folding, and `df` is a def because a
+    // Dataset keeps the physical plan it first planned
+    def df = Seq[(Array[Byte], Int, Int)]((p, 4326, 32650),
+        (CrsTransform.transformWkb(p, 4326, 32650), 32650, 4326), (p, 4326, 4326),
+        (Array[Byte](1, 3, 0), 4326, 3857), (p, 4326, 99999), (null, 4326, 3857))
+      .toDF("g", "s", "d").repartition(2)
+      .select(col("s"), col("d"), st_transform(col("g"), col("s"), col("d")).as("t"))
+    def rows(f: DataFrame): Seq[(Int, Int, Option[String])] = f.collect().toSeq.map(r =>
+      (r.getInt(0), r.getInt(1), Option(r.getAs[Array[Byte]](2))
+        .map(_.map("%02x".format(_)).mkString))).sorted
+    val planned = df
+    val compiled = rows(planned)
+    val plan = planned.queryExecution.executedPlan
+    assert(codegenString(plan).contains("graft.geom.CrsTransform.transformWkb"), plan)
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    val interpreted = try {
+      spark.conf.set(keys(0), "NO_CODEGEN"); spark.conf.set(keys(1), "false")
+      rows(df)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(compiled == interpreted)
+    assert(compiled.count(_._3.isEmpty) == 3, compiled) // bad WKB, EPSG:99999, null
   }
 }

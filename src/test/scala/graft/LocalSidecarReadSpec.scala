@@ -185,6 +185,26 @@ class LocalSidecarReadSpec extends AnyFunSuite {
     } finally TableLog.localSidecarMaxBytes = prev
   }
 
+  test("a point lookup on an indexed, bloomed table runs as many jobs as " +
+    "one without the index") {
+    def lookupJobs(indexed: Boolean): (Int, Seq[Long]) = {
+      val dir = tmp(if (indexed) "lsr_rgidx" else "lsr_plain")
+      TableLog.append(spark.range(4000).selectExpr("id as k", "id * 3 as v")
+        .repartitionByRange(2, col("k")), dir)
+      if (indexed) TableLog.computeRowGroupIndex(spark, dir)
+      TableLog.computeBlooms(spark, dir, "k")
+      org.apache.spark.graft.CoreInternals.waitListenerBusEmpty(
+        spark.sparkContext, 10000)
+      val ((pl, _, _, filesOpened, _), jobs) =
+        jobsDuring(TableLog.readPointLookup(spark, dir, "k", Seq(1234L)))
+      assert(filesOpened == 1)
+      (jobs, pl.filter(col("k") === 1234L).select("v").as[Long].collect().toSeq)
+    }
+    val plain = lookupJobs(indexed = false)
+    assert(plain == (0, Seq(3702L)))
+    assert(lookupJobs(indexed = true) == plain)
+  }
+
   test("deletion vectors read locally agree with the distributed read " +
     "across MULTIPLE dv sidecars") {
     val a = tmp("lsr_dva"); val b = tmp("lsr_dvb")

@@ -371,6 +371,28 @@ class PipelineSpec extends AnyFunSuite {
     outs.foreach(o => assert(spark.read.parquet(mergedFile(o)).count() == 30))
   }
 
+  test("mergeParquet: the read schema comes from the input footers; one " +
+    "that disagrees merges under the union schema") {
+    val base = tmp()
+    val inFiles = mergeInputs(base, Seq(30, 20, 25))
+    val (outs, jobs) = jobsDuring(
+      MergeParquet.merge(spark, inFiles, s"$base/merged", maxRows = 60))
+    assert(jobs <= 2, s"merge ran $jobs jobs")
+    assert(spark.read.parquet(outs: _*).count() == 75)
+    // the last input (in path order) gains a column the others lack
+    val staged = s"$base/noted"
+    spark.read.parquet(inFiles.last).withColumn("note", lit("x")).coalesce(1)
+      .write.parquet(staged)
+    val noted = new java.io.File(staged).listFiles.map(_.toString)
+      .filter(_.endsWith(".parquet")).head
+    val drifted = MergeParquet.merge(spark, inFiles.init :+ noted, s"$base/drift",
+      maxRows = 100)
+    val back = spark.read.parquet(drifted.map(mergedFile): _*)
+    assert(back.columns.contains("note"), back.columns.toSeq)
+    assert(back.filter($"note" === "x").count() == 25)
+    assert(back.filter($"note".isNull).count() == 50)
+  }
+
   test("ewkbStats + heatmap + bbox") {
     val df = fixture().filter($"Shape".isNotNull)
       .select($"fid", $"Shape".as("geom"))

@@ -2,7 +2,10 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import com.github.luben.zstd.{EndDirective, Zstd, ZstdCompressCtx}
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.bytes.BytesInput
+import org.apache.parquet.format.{PageType, Util}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -15,8 +18,9 @@ import graft.operators.{Concurrency, GeoNormalize, ZstdSinkFormat}
 
 /** The zstd sink's writer against Spark's built-in parquet writer: same
   * file layout, no larger chunks, one zstd context per file, a `geo` footer
-  * equal to the one recomputed from each file's rows, and a failed task
-  * leaves nothing committed and no context open. */
+  * equal to the one recomputed from each file's rows, page frames cut to
+  * their page's size with the blocks the full geometry gives, and a failed
+  * task leaves nothing committed and no context open. */
 class ZstdSinkSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -128,6 +132,80 @@ class ZstdSinkSpec extends AnyFunSuite {
       assert(got.contains(want), s"$f: $got vs $want")
       assert(want.contains("\"bbox\":[") && want.contains("[\"Point\"]"), want)
     }
+  }
+
+  /** The window log a zstd frame's header names: the Window_Descriptor
+    * follows the 4-byte magic and the descriptor byte, which for these
+    * frames (unknown size, no dictionary) flags no other field. */
+  private def windowLog(frame: Array[Byte]): Int = {
+    assert(frame(4) == 0, s"frame header flags ${frame(4)}")
+    assert((frame(5) & 7) == 0, s"window mantissa in ${frame(5)}")
+    10 + ((frame(5) & 0xff) >> 3)
+  }
+
+  private def ceilLog2(n: Int): Int = 32 - Integer.numberOfLeadingZeros(math.max(n, 2) - 1)
+
+  test("page frames equal an unclamped context's but for the window they name") {
+    // near-duplicate text lines, as a column of labels pages
+    val rnd = new scala.util.Random(7)
+    def page(n: Int): Array[Byte] = {
+      val sb = new StringBuilder
+      while (sb.length < n)
+        sb ++= s"building ${rnd.nextInt(100000)} on block ${rnd.nextInt(97)} ${rnd.nextDouble()}\n"
+      sb.toString.getBytes("UTF-8").take(n)
+    }
+    val pages = Seq(8, 20000, 150000, 1000000, 3000000).map(page)
+    def plainFrame(zc: ZstdCompressCtx, p: Array[Byte]): Array[Byte] = {
+      val src = java.nio.ByteBuffer.allocateDirect(p.length).put(p).flip()
+      val dst = java.nio.ByteBuffer.allocateDirect(Zstd.compressBound(p.length).toInt)
+      zc.compressDirectByteBufferStream(dst, src, EndDirective.CONTINUE)
+      while (!zc.compressDirectByteBufferStream(dst, src, EndDirective.END)) {}
+      dst.flip()
+      val out = new Array[Byte](dst.remaining); dst.get(out); out
+    }
+    val defaultWindow = Map(1 -> 19, 3 -> 21, 9 -> 22, 19 -> 23, 22 -> 27)
+    defaultWindow.foreach { case (level, w) =>
+      val plain = new ZstdCompressCtx().setLevel(level)
+      val sized = new ZstdSinkFormat.ZstdPages(level, 0)
+      try pages.foreach { p =>
+        val a = plainFrame(plain, p)
+        val b = sized.compress(BytesInput.from(p)).toByteArray
+        // the unclamped frame names the level's default window
+        assert(windowLog(a) == w, s"level $level")
+        val want = w.min(ceilLog2(p.length).max(17))
+        assert(windowLog(b) == want, s"level $level, ${p.length} B page")
+        assert(a.length == b.length && a.indices.forall(i => i == 5 || a(i) == b(i)),
+          s"level $level, ${p.length} B page: ${a.length} vs ${b.length} B")
+        assert(Zstd.decompress(b, p.length).sameElements(p))
+      } finally { plain.close(); sized.release() }
+    }
+  }
+
+  test("each page of a level-22 file is a frame no wider than its page") {
+    val sink = tmp() + "/windows"
+    GeoNormalize.writeClustered(frame(), sink, numFiles = 2, zstdLevel = 22,
+      rowGroupBytes = 64L * 1024)
+    val conf = spark.sparkContext.hadoopConfiguration
+    var pages = 0
+    parquetFiles(sink).foreach { f =>
+      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f))
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).foreach { c =>
+        val in = new java.io.ByteArrayInputStream(bytes, c.getStartingPos.toInt,
+          c.getTotalSize.toInt)
+        while (in.available > 0) {
+          val h = Util.readPageHeader(in)
+          assert(h.getType == PageType.DATA_PAGE || h.getType == PageType.DICTIONARY_PAGE,
+            s"${h.getType} page in $f")
+          val body = in.readNBytes(h.getCompressed_page_size)
+          val bound = ceilLog2(h.getUncompressed_page_size).max(17)
+          assert(windowLog(body) <= bound,
+            s"${c.getPath}: ${h.getUncompressed_page_size} B page, window 2^${windowLog(body)}")
+          pages += 1
+        }
+      } finally r.close()
+    }
+    assert(pages > 8, s"only $pages pages")
   }
 
   test("the geo footer takes types and bbox only from decodable geometries") {
