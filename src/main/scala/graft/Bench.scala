@@ -68,22 +68,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // optional comma-separated subset for local perf triage; the driver
-    // never sets it, so its runs always time the full suite
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val spark = Harness.session()
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(Harness.selected)
     if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") {
       val warmDir = "/root/testdata/sf0.001"
       names.foreach { name =>
@@ -92,26 +78,6 @@ object Bench {
       }
     }
 
-    // per-query job/stage counts ride a listener and land in the JSON as
-    // ADDITIONS-only keys ("jobs"/"stages"): at sf0.1 most gates are
-    // fixed-overhead-bound, so wall-clock cannot resolve a structural
-    // optimization across host-band shifts — the structural counts can.
-    // The counters are read OUTSIDE the timed region (after a listener
-    // drain), so the existing per-query seconds are untouched.
-    val jobsCnt = new java.util.concurrent.atomic.AtomicInteger
-    val stagesCnt = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobsCnt.incrementAndGet()
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          stagesCnt.incrementAndGet()
-      })
-    def drainListeners(): Unit = org.apache.spark.graft.CoreInternals
-      .waitListenerBusEmpty(spark.sparkContext, 10000)
-
     val sentinelPre = sentinelMs()
     val sentinelMtPre = sentinelMtMs()
     // best-of-2 per query (back-to-back, so both passes sit in the same
@@ -119,6 +85,10 @@ object Bench {
     // way isolated RunOne measurements do, making the recorded artifact
     // comparable across rounds
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
+    // per-query job/stage counts ride the probe and land in the JSON as
+    // ADDITIONS-only keys ("jobs"/"stages"): at sf0.1 most gates are
+    // fixed-overhead-bound, so wall-clock cannot resolve a structural
+    // optimization across host-band shifts — the structural counts can.
     val structural = scala.collection.mutable.LinkedHashMap[String, (Int, Int)]()
     val timed = names.map { name =>
       val times = (0 until passes).map { i =>
@@ -127,16 +97,14 @@ object Bench {
         // query happens to allocate next (measured: t3/t5 2-3x inflated
         // late in the suite while isolated runs are flat)
         System.gc()
-        // job/stage counts are taken from the LAST pass (steady state):
-        // drain + reset before it, drain + read after — all outside the
-        // timed region
+        // job/stage counts are taken from the LAST pass (steady state);
+        // the probe's drains sit outside timeQuery's timed region
         if (i == passes - 1) {
-          drainListeners(); jobsCnt.set(0); stagesCnt.set(0)
-        }
-        timeQuery(spark, name, sfDir)
+          val (t, c) = Harness.probe(spark)(timeQuery(spark, name, sfDir))
+          structural(name) = (c.jobs, c.stages)
+          t
+        } else timeQuery(spark, name, sfDir)
       }
-      drainListeners()
-      structural(name) = (jobsCnt.get, stagesCnt.get)
       name -> Option.when(times.forall(_.isDefined))(times.flatten.min)
     }
     val results = timed.collect { case (name, Some(t)) => name -> t }

@@ -24,15 +24,7 @@ object Rehearsal {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("jaccard")
     val n = args.drop(1).headOption.map(_.toLong).getOrElse(4000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // optional 3rd arg: force exactly one jaccard cap, bypassing the
     // prune/guard logic (for deliberate long anchor runs)
     val capOverride = args.drop(2).headOption.map(_.toInt)

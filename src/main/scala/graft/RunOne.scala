@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run a single SparkEntry gate query by name against a chosen
   * SF dir, print its timing (after one warm-up run) and, with `explain`,
@@ -10,16 +9,7 @@ object RunOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // ad-hoc session confs for perf triage: SPARK_GRAFT_CONF="k=v;k=v"
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
       .foreach { kv =>
@@ -31,33 +21,11 @@ object RunOne {
       })
     // `jobs` arg: per-run Spark job/stage/task counts — the guide-§1
     // "where does the fixed overhead go" probe for gates whose cost is
-    // job-count-bound rather than data-bound (lifecycle gates at sf0.1)
+    // job-count-bound rather than data-bound (lifecycle gates at sf0.1);
+    // `jobsv` adds each job's result stage (its callsite names the
+    // action; its task count hints at the data volume behind the job)
     val verbose = args.contains("jobsv")
     val counting = args.contains("jobs") || verbose
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        if (verbose) {
-          // the result stage's callsite names the action; its task count
-          // hints at the data volume behind the fixed job cost
-          val s = j.stageInfos.lastOption
-            .map(si => s"${si.name} tasks=${si.numTasks}")
-            .getOrElse("?")
-          sites.add(s)
-        }
-      }
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        tasks.addAndGet(s.stageInfo.numTasks)
-      }
-    }
-    if (counting) spark.sparkContext.addSparkListener(listener)
     // comma-separated names share one JVM/session (cuts startup cost out
     // of multi-gate probe sweeps; timings stay per-gate)
     name.split(",").filter(_.nonEmpty).foreach { nm =>
@@ -65,19 +33,17 @@ object RunOne {
       if (args.contains("explain")) q(spark, sfDir).explain("formatted")
       q(spark, sfDir).count() // warm-up: JIT + codegen + file index
       val runs = (1 to 2).map { _ =>
-        jobs.set(0); stages.set(0); tasks.set(0); sites.clear()
-        val t0 = System.nanoTime()
-        val n = q(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (counting) Thread.sleep(300) // listener events are async; drain
-        val siteList = sites.toArray(Array.empty[String])
-        (n, dt, jobs.get, stages.get, tasks.get, siteList)
+        Harness.probe(spark) {
+          val t0 = System.nanoTime()
+          val n = q(spark, sfDir).count()
+          (n, (System.nanoTime() - t0) / 1e9)
+        }
       }
-      runs.foreach { case (n, s, j, st, tk, sl) =>
+      runs.foreach { case ((n, s), c) =>
         if (counting)
-          println(f"RUNONE $nm%s rows=$n%d time=$s%.3f s jobs=$j%d stages=$st%d tasks=$tk%d")
+          println(f"RUNONE $nm%s rows=$n%d time=$s%.3f s jobs=${c.jobs}%d stages=${c.stages}%d tasks=${c.tasks}%d")
         else println(f"RUNONE $nm%s rows=$n%d time=$s%.3f s")
-        if (verbose) sl.zipWithIndex.foreach { case (site, i) =>
+        if (verbose) c.resultStages.zipWithIndex.foreach { case (site, i) =>
           println(f"  JOB $i%3d  $site%s")
         }
       }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AsofJoin, Dedup, RangeJoin, Similarity, Skew, TrainingData}
@@ -23,15 +23,7 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val nVecs = args.drop(1).headOption.map(_.toLong).getOrElse(200000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
 
     // optional section filter (comma-set of text,dedup,training,temporal,
@@ -258,8 +250,8 @@ object Stress {
       val small = spark.range(nKeys).toDF("k")
         .withColumn("name", concat(lit("dim_"), col("k")))
         .localCheckpoint(true)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle joins
-      try {
+      graft.operators.LoopLayout.withConfs(spark, // force shuffle joins
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val t0 = System.nanoTime()
         val plainN = big.join(small, Seq("k")).count()
         val t1 = System.nanoTime()
@@ -273,7 +265,7 @@ object Stress {
         println(f"    rows: $plainN; plain ${(t1 - t0) / 1e9}%.2f s, " +
           f"blanket ${(t2 - t1) / 1e9}%.2f s (small-side shuffle rows ${nKeys * 16}), " +
           f"two-path ${(t3 - t2) / 1e9}%.2f s (~${nKeys + 10 * 16} small-side rows)")
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+      }
     }
 
     // ---- round-7 operators at corpus scale --------------------------------
@@ -1031,19 +1023,8 @@ object Stress {
           dir, options = Map("parquet.block.size" -> (256 << 20).toString,
             "parquet.page.size" -> "65536"))
         def decoded[T](f: => T): (T, Long) = {
-          val n = new java.util.concurrent.atomic.LongAdder
-          val l = new org.apache.spark.scheduler.SparkListener {
-            override def onTaskEnd(e: org.apache.spark.scheduler
-                .SparkListenerTaskEnd): Unit =
-              if (e.taskMetrics != null)
-                n.add(e.taskMetrics.inputMetrics.recordsRead)
-          }
-          spark.sparkContext.addSparkListener(l)
-          try {
-            val r = f
-            org.apache.spark.sql.graft.SparkInternals.drainListeners(spark)
-            (r, n.sum())
-          } finally spark.sparkContext.removeSparkListener(l)
+          val (r, c) = Harness.probe(spark)(f)
+          (r, c.recordsRead)
         }
         val ((n1, st1), read1) = decoded {
           val (df, st) = graft.operators.LakeSelect.readWhere(spark, dir,

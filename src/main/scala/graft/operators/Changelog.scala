@@ -192,16 +192,17 @@ object Changelog {
     val (touched, untouched) =
       snap.files.partition(f => affectedStr.contains(snap.parts(f)))
     val touchedSet = touched.toSet
-    // evolved scans: the touched files may straddle an add-column or a
-    // type widening, which a plain parquet read drops or fails on
-    val snapshotDf =
-      if (touched.nonEmpty) // deletion vectors apply before the merge —
-        // a DV-deleted row must not resurface through the rewrite
-        TableLog.applyDv(spark, dir,
-          TableLog.scanEvolved(spark, dir, snap, touched),
-          snap.dvs.filter { case (f, _) => touchedSet(f) })
-      else // fresh partitions only: empty snapshot with the table schema
-        TableLog.scanEvolved(spark, dir, snap, snap.files).limit(0)
+    // the touched files read in the WHOLE snapshot's union schema: their
+    // own merged schema would drop a column only untouched partitions
+    // hold, and the changelog's values for it with it; older files
+    // surface a later column as NULL and widen to its widest type
+    val schema = TableLog.unionSchema(spark, dir, snap)
+    val snapshotDf = // deletion vectors apply before the merge — a
+      // DV-deleted row must not resurface through the rewrite
+      TableLog.applyDv(spark, dir, spark.read.schema(schema)
+        .parquet(touched.map(f => java.nio.file.Paths.get(dir).resolve(f)
+          .toString): _*),
+        snap.dvs.filter { case (f, _) => touchedSet(f) })
     val updated = applyChangelog(snapshotDf, changes, keyCols, seqCol, opCol)
     // stage new files partition-split through the SHARED TableLog helper
     // (identical leaf parsing / unescaping / naming as appendPartitioned),

@@ -1086,21 +1086,27 @@ object TableLog {
     * decimal scale-up) the files read in `snap`'s widened union schema
     * instead, and Spark's reader widens the older files. Every evolved
     * read goes through here: [[readEvolved]], the DML scans, the change
-    * feed, the bloom build and [[Changelog.applyToLakeVersioned]]. */
+    * feed and the bloom build. */
   private[graft] def scanEvolved(spark: SparkSession, dir: String, snap: Snapshot,
       files: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types.{DataType, StructField, StructType}
     val abs = files.map(f => Paths.get(dir).resolve(f).toString)
     try spark.read.option("mergeSchema", "true").parquet(abs: _*)
     catch {
       case e: org.apache.spark.SparkException
           if e.getCondition == "CANNOT_MERGE_SCHEMAS" =>
-        val cols = Option(unionColsMemo.get((dir, snap.version)))
-          .getOrElse(snapshotUnionCols(spark, dir, snap))
-        spark.read.schema(StructType(cols.map { case (n, t) =>
-          StructField(n, DataType.fromDDL(t))
-        })).parquet(abs: _*)
+        spark.read.schema(unionSchema(spark, dir, snap)).parquet(abs: _*)
     }
+  }
+
+  /** `snap`'s union schema over all its files: every column any file
+    * holds, at its widest type. Answered from the memo or the row-group
+    * index (driver-resident when the table has one). */
+  private[graft] def unionSchema(spark: SparkSession, dir: String,
+      snap: Snapshot): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{DataType, StructField, StructType}
+    val cols = Option(unionColsMemo.get((dir, snap.version)))
+      .getOrElse(snapshotUnionCols(spark, dir, snap))
+    StructType(cols.map { case (n, t) => StructField(n, DataType.fromDDL(t)) })
   }
 
   /** Row-level change feed between two committed versions (the

@@ -80,9 +80,14 @@ object SparkInternals {
   }
 
   /** Block until every event posted so far has reached the session's
-    * listeners (`listenerBus` is `private[spark]`). */
+    * listeners (`listenerBus` is `private[spark]`); throws
+    * `TimeoutException` when the bus has not emptied within 10 s. */
   def drainListeners(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Listeners registered on the session's bus. */
+  def listenerCount(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.sparkContext.listenerBus.listeners.size
 
   /** `schema` with every field, element and value nullable — what
     * Spark's file sources report on read. */

@@ -359,6 +359,30 @@ class ChangelogSpec extends AnyFunSuite {
     assert(got == model)
   }
 
+  test("applyToLakeVersioned: a column only untouched partitions hold " +
+    "keeps the changelog's values, in touched and in fresh partitions") {
+    import graft.operators.TableLog
+    val dir = java.nio.file.Files.createTempDirectory("lakeunion")
+      .toString + "/table"
+    // p1's file has no c; only p2's file (untouched below) carries it
+    TableLog.appendPartitioned(Seq((1L, 10L, "p1"), (2L, 20L, "p1"))
+      .toDF("id", "v", "part"), dir, "part")
+    TableLog.appendPartitioned(Seq((3L, 30L, "p2", "c3"))
+      .toDF("id", "v", "part", "c"), dir, "part")
+    def cOf(ch: Seq[(Long, Long, String, String, Long, String)]) = {
+      Changelog.applyToLakeVersioned(dir,
+        ch.toDF("id", "v", "part", "c", "seq", "op"), "part", Seq("id"),
+        "seq", "op")
+      TableLog.readEvolved(spark, dir).select("id", "c").collect()
+        .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+    }
+    assert(cOf(Seq((1L, 11L, "p1", "c1", 1L, "U"),
+      (4L, 40L, "p1", "c4", 1L, "I"))) ==
+      Map(1L -> Some("c1"), 2L -> None, 3L -> Some("c3"), 4L -> Some("c4")))
+    // a changelog touching only a partition the table lacks
+    assert(cOf(Seq((5L, 50L, "p5", "c5", 1L, "I")))(5L) == Some("c5"))
+  }
+
   private def mergeOut(df: org.apache.spark.sql.DataFrame) =
     df.orderBy("id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq

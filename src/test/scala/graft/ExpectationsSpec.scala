@@ -104,16 +104,11 @@ class ExpectationsSpec extends AnyFunSuite {
   }
 
   test("one pass: adding checks adds expressions, not jobs") {
-    val sc = spark.sparkContext
-    def jobsFor(group: String)(body: => Unit): Int = {
-      sc.setJobGroup(group, group, false)
-      try body finally sc.clearJobGroup()
-      sc.statusTracker.getJobIdsForGroup(group).length
-    }
-    val one = jobsFor("exp-one") {
+    def jobsFor(body: => Unit): Int = Harness.probe(spark)(body)._2.jobs
+    val one = jobsFor {
       Expectations.check(df, Seq("a" -> "id > 0"))
     }
-    val many = jobsFor("exp-many") {
+    val many = jobsFor {
       // six checks of both families — same number of passes as one check
       Expectations.check(df,
         rowChecks = Seq("a" -> "id > 0", "b" -> "v > 0",

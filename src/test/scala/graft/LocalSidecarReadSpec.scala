@@ -19,22 +19,6 @@ class LocalSidecarReadSpec extends AnyFunSuite {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
 
-  /** Spark jobs started while `body` runs (local-mode listener). */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = body
-      Thread.sleep(300) // listener events are posted asynchronously
-      (a, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("localParquetRows matches spark.read for every sidecar type " +
     "class (string/int/long/double/binary/array<float>, with nulls)") {
     val dir = java.nio.file.Files.createTempDirectory("lsr_types")
@@ -123,15 +107,15 @@ class LocalSidecarReadSpec extends AnyFunSuite {
       (r.getLong(0), r.getLong(1), st.rgOpened)
     }
     val prev = TableLog.localSidecarMaxBytes
-    val (ra, jobsLocalPlan) = try {
-      jobsDuring {
+    val (ra, localPlan) = try {
+      Harness.probe(spark) {
         // planning only: readWhere classifies row groups in the call
         LakeSelect.readWhere(spark, a, "k >= 3000 and k < 9000")
       }
     } finally TableLog.localSidecarMaxBytes = prev
-    assert(jobsLocalPlan == 0,
+    assert(localPlan.jobs == 0,
       s"indexed small-table planning must run zero Spark jobs, " +
-        s"ran $jobsLocalPlan")
+        s"ran ${localPlan.jobs}")
     val resA = run(a)
     val resB = try {
       TableLog.localSidecarMaxBytes = 0L // force the distributed build
@@ -166,13 +150,10 @@ class LocalSidecarReadSpec extends AnyFunSuite {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     def lookup(dir: String): (Int, Seq[Long]) = {
-      // the build's own job events must not reach the listener
-      org.apache.spark.graft.CoreInternals.waitListenerBusEmpty(
-        spark.sparkContext, 10000)
-      val ((pl, _, _, filesOpened, filesTotal), jobs) =
-        jobsDuring(TableLog.readPointLookup(spark, dir, "k", Seq(1234L)))
+      val ((pl, _, _, filesOpened, filesTotal), c) = Harness.probe(spark)(
+        TableLog.readPointLookup(spark, dir, "k", Seq(1234L)))
       assert(filesOpened == 1 && filesTotal == 2, s"$filesOpened/$filesTotal")
-      (jobs, pl.filter(col("k") === 1234L).select("v").as[Long].collect().toSeq)
+      (c.jobs, pl.filter(col("k") === 1234L).select("v").as[Long].collect().toSeq)
     }
     assert(lookup(bloomed("lsr_bloom")) == (0, Seq(3702L)))
     val old = bloomed("lsr_bits"); renameToBits(old)
@@ -193,12 +174,10 @@ class LocalSidecarReadSpec extends AnyFunSuite {
         .repartitionByRange(2, col("k")), dir)
       if (indexed) TableLog.computeRowGroupIndex(spark, dir)
       TableLog.computeBlooms(spark, dir, "k")
-      org.apache.spark.graft.CoreInternals.waitListenerBusEmpty(
-        spark.sparkContext, 10000)
-      val ((pl, _, _, filesOpened, _), jobs) =
-        jobsDuring(TableLog.readPointLookup(spark, dir, "k", Seq(1234L)))
+      val ((pl, _, _, filesOpened, _), c) = Harness.probe(spark)(
+        TableLog.readPointLookup(spark, dir, "k", Seq(1234L)))
       assert(filesOpened == 1)
-      (jobs, pl.filter(col("k") === 1234L).select("v").as[Long].collect().toSeq)
+      (c.jobs, pl.filter(col("k") === 1234L).select("v").as[Long].collect().toSeq)
     }
     val plain = lookupJobs(indexed = false)
     assert(plain == (0, Seq(3702L)))

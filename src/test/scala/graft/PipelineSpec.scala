@@ -9,13 +9,9 @@ import graft.geom.GeomLib
 import graft.operators._
 
 object SparkTestSession {
+  // the specs' pinned file and job counts assume local[4]
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Harness.session(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
@@ -285,23 +281,6 @@ class PipelineSpec extends AnyFunSuite {
     }.sorted
   }
 
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graft.CoreInternals.waitListenerBusEmpty(sc, 10000)
-    sc.addSparkListener(l)
-    try {
-      val a = body
-      org.apache.spark.graft.CoreInternals.waitListenerBusEmpty(sc, 10000)
-      (a, n.get)
-    } finally sc.removeSparkListener(l)
-  }
-
   /** Each merge output directory's single parquet file. */
   private def mergedFile(dir: String): String = {
     val files = new java.io.File(dir).listFiles.map(_.toString).filter(_.endsWith(".parquet"))
@@ -317,9 +296,9 @@ class PipelineSpec extends AnyFunSuite {
       inFiles.map(f => f -> spark.read.parquet(f).count()), maxRows = 60)
       .map(_.map(f => new java.io.File(f).getName).toSet)
     assert(want.size == 3, want) // 40 | 25+30 | 50+10
-    val (outs, jobs) = jobsDuring(
+    val (outs, c) = Harness.probe(spark)(
       MergeParquet.merge(spark, inFiles, s"$base/merged", maxRows = 60))
-    assert(jobs <= 3, s"merge ran $jobs jobs")
+    assert(c.jobs <= 3, s"merge ran ${c.jobs} jobs")
     assert(outs == want.indices.map(i => f"$base/merged/merged_batch=$i%04d"))
     val conf = spark.sparkContext.hadoopConfiguration
     outs.zip(want).foreach { case (out, names) =>
@@ -375,9 +354,9 @@ class PipelineSpec extends AnyFunSuite {
     "that disagrees merges under the union schema") {
     val base = tmp()
     val inFiles = mergeInputs(base, Seq(30, 20, 25))
-    val (outs, jobs) = jobsDuring(
+    val (outs, c) = Harness.probe(spark)(
       MergeParquet.merge(spark, inFiles, s"$base/merged", maxRows = 60))
-    assert(jobs <= 2, s"merge ran $jobs jobs")
+    assert(c.jobs <= 2, s"merge ran ${c.jobs} jobs")
     assert(spark.read.parquet(outs: _*).count() == 75)
     // the last input (in path order) gains a column the others lack
     val staged = s"$base/noted"

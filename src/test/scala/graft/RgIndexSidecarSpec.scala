@@ -630,19 +630,8 @@ class RgIndexSidecarSpec extends AnyFunSuite {
         "parquet.page.row.count.limit" -> "1000"))
     // rows the scan decoded = the scan tasks' input records
     def decoded[A](body: => A): (A, Long) = {
-      val n = new java.util.concurrent.atomic.LongAdder
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null)
-            n.add(e.taskMetrics.inputMetrics.recordsRead)
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        val a = body
-        org.apache.spark.sql.graft.SparkInternals.drainListeners(spark)
-        (a, n.sum())
-      } finally spark.sparkContext.removeSparkListener(l)
+      val (a, c) = Harness.probe(spark)(body)
+      (a, c.recordsRead)
     }
     val (n1, read1) = decoded {
       // count INSIDE the measured block — the read is lazy

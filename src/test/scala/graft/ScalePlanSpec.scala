@@ -522,30 +522,16 @@ class ScalePlanSpec extends AnyFunSuite {
     // init truncates (AQE may split each into a couple of jobs) plus
     // ≤2 jobs per round; the old checkpoint+checksum shape cost 1-2
     // MORE jobs per round and blows this cap.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      Dedup.clusters(star, maxIter = 10)
-      val deadline = System.nanoTime() + 5_000_000_000L
-      while (System.nanoTime() < deadline &&
-        spark.sparkContext.statusTracker.getActiveJobIds.nonEmpty)
-        Thread.sleep(50)
-      Thread.sleep(500)
-      // measured at this AQE shape: edges truncate + adaptive re-pin +
-      // labels init ≈ 8 jobs, each round ≈ 3 (one job per shuffle stage
-      // of the single checkpoint action). The old checkpoint+checksum
-      // loop added 1 job per round plus 1 initial checksum — the cap
-      // sits between.
-      val rounds = Dedup.lastIterations.get
-      assert(jobs.get <= 9 + 3 * rounds,
-        s"clusters ran ${jobs.get} jobs over $rounds rounds — " +
-          "convergence must not cost a separate action per round")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (_, c) = Harness.probe(spark)(Dedup.clusters(star, maxIter = 10))
+    // measured at this AQE shape: edges truncate + adaptive re-pin +
+    // labels init ≈ 8 jobs, each round ≈ 3 (one job per shuffle stage
+    // of the single checkpoint action). The old checkpoint+checksum
+    // loop added 1 job per round plus 1 initial checksum — the cap
+    // sits between.
+    val rounds = Dedup.lastIterations.get
+    assert(c.jobs <= 9 + 3 * rounds,
+      s"clusters ran ${c.jobs} jobs over $rounds rounds — " +
+        "convergence must not cost a separate action per round")
   }
 
   test("knnJoin loop control rides the checkpoint jobs (observe): no " +
@@ -555,35 +541,21 @@ class ScalePlanSpec extends AnyFunSuite {
     // past its 8-unit gap — a genuine multi-round run (4 rounds)
     val pts = Seq((0L, 0.0, 0.0), (1L, 1.0, 0.0), (2L, 2.0, 0.0),
       (3L, 10.0, 0.0)).toDF("id", "x", "y")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = graft.operators.KnnJoin.knnJoin(pts, pts, k = 2, r0 = 1.5)
-        .collect()
-      val deadline = System.nanoTime() + 5_000_000_000L
-      while (System.nanoTime() < deadline &&
-        spark.sparkContext.statusTracker.getActiveJobIds.nonEmpty)
-        Thread.sleep(50)
-      Thread.sleep(500)
-      // every probe gets exactly k=2 neighbors; the outlier's nearest is
-      // id 2 at dist 8 — proves the multi-round path actually ran
-      assert(out.length == 8, s"expected 4 probes x k=2, got ${out.length}")
-      // action budget: sites + probes init checkpoints, then exactly TWO
-      // materializing actions per round (doneRows + next-probes
-      // checkpoints, convergence observed in-band), 4 rounds, plus the
-      // final collect. Measured at this AQE shape: 25 jobs total (AQE
-      // splits each action into ~2-3 jobs). The old shape (per-round
-      // isEmpty + standalone sites.count + final isEmpty) cost 6 more
-      // actions and blows the cap.
-      assert(jobs.get <= 28,
-        s"knnJoin ran ${jobs.get} jobs — loop control must not cost a " +
-          "separate action per round")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (out, c) = Harness.probe(spark)(
+      graft.operators.KnnJoin.knnJoin(pts, pts, k = 2, r0 = 1.5).collect())
+    // every probe gets exactly k=2 neighbors; the outlier's nearest is
+    // id 2 at dist 8 — proves the multi-round path actually ran
+    assert(out.length == 8, s"expected 4 probes x k=2, got ${out.length}")
+    // action budget: sites + probes init checkpoints, then exactly TWO
+    // materializing actions per round (doneRows + next-probes
+    // checkpoints, convergence observed in-band), 4 rounds, plus the
+    // final collect. Measured at this AQE shape: 25 jobs total (AQE
+    // splits each action into ~2-3 jobs). The old shape (per-round
+    // isEmpty + standalone sites.count + final isEmpty) cost 6 more
+    // actions and blows the cap.
+    assert(c.jobs <= 28,
+      s"knnJoin ran ${c.jobs} jobs — loop control must not cost a " +
+        "separate action per round")
   }
 
   test("minhashPairs rejects k not divisible by bands") {
@@ -1015,26 +987,11 @@ class ScalePlanSpec extends AnyFunSuite {
     // Exchange that would itself count as a shuffle
     val docs = spark.createDataset(spark.sparkContext.parallelize(rows, 8))
       .toDF("doc_id", "label", "text")
-    @volatile var shuffleWrites = 0L
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleWrites += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val m = graft.text.TextClassifier.train(docs, "text", "label",
-        nBuckets = 256, bigrams = true, epochs = 10)
-      // listener events are async; poll briefly for the bus to drain
-      val deadline = System.nanoTime() + 5_000_000_000L
-      while (System.nanoTime() < deadline && shuffleWrites == 0L &&
-        spark.sparkContext.statusTracker.getActiveStageIds.nonEmpty)
-        Thread.sleep(50)
-      Thread.sleep(500)
-      assert(shuffleWrites == 0L,
-        s"training wrote $shuffleWrites shuffle bytes — epochs must be map-only")
-      assert(m.score("qgood") > m.score("qbad"))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (m, c) = Harness.probe(spark)(graft.text.TextClassifier.train(docs,
+      "text", "label", nBuckets = 256, bigrams = true, epochs = 10))
+    assert(c.shuffleWriteBytes == 0L, s"training wrote " +
+      s"${c.shuffleWriteBytes} shuffle bytes — epochs must be map-only")
+    assert(m.score("qgood") > m.score("qbad"))
   }
 
   test("editDistancePairs: equality joins only, wide texts off the " +
