@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.SparkInternals
 
 /** The one local session and the one job probe shared by the harnesses
@@ -35,10 +37,12 @@ object Harness {
 
   /** Spark work started while a probed body ran: jobs, completed stages
     * and their tasks, input records read, shuffle bytes written, and per
-    * job its result stage's name with that stage's task count. */
+    * job its name with its result stage's task count. A job is named by
+    * the SQL execution that ran it (the action's call site, which AQE's
+    * query-stage jobs carry too), else by its result stage. */
   final case class Counts(jobs: Int = 0, stages: Int = 0, tasks: Int = 0,
       recordsRead: Long = 0L, shuffleWriteBytes: Long = 0L,
-      resultStages: Vector[String] = Vector.empty)
+      jobNames: Vector[String] = Vector.empty)
 
   /** Run `body` and count the Spark work it starts. The listener bus is
     * drained before the listener is added, so no earlier job is counted,
@@ -59,10 +63,21 @@ object Harness {
     * below has a single writer; `probe` reads after a drain. */
   private final class Probe extends SparkListener {
     @volatile var counts = Counts()
-    override def onJobStart(j: SparkListenerJobStart): Unit =
+    private var executions = Map.empty[Long, String]
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart =>
+        executions += x.executionId -> x.description
+      case _ =>
+    }
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      val execution = Option(j.properties)
+        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .flatMap(id => executions.get(id.toLong))
       counts = counts.copy(jobs = counts.jobs + 1,
-        resultStages = counts.resultStages :+ j.stageInfos.lastOption
-          .fold("?")(si => s"${si.name} tasks=${si.numTasks}"))
+        jobNames = counts.jobNames :+ j.stageInfos.lastOption
+          .fold("?")(si =>
+            s"${execution.getOrElse(si.name)} tasks=${si.numTasks}"))
+    }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
       counts = counts.copy(stages = counts.stages + 1,
         tasks = counts.tasks + s.stageInfo.numTasks)

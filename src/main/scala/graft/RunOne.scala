@@ -22,8 +22,9 @@ object RunOne {
     // `jobs` arg: per-run Spark job/stage/task counts — the guide-§1
     // "where does the fixed overhead go" probe for gates whose cost is
     // job-count-bound rather than data-bound (lifecycle gates at sf0.1);
-    // `jobsv` adds each job's result stage (its callsite names the
-    // action; its task count hints at the data volume behind the job)
+    // `jobsv` adds each job's name (the call site of the action whose
+    // SQL execution ran it, else its result stage) and its result stage's
+    // task count (a hint at the data volume behind the job)
     val verbose = args.contains("jobsv")
     val counting = args.contains("jobs") || verbose
     // comma-separated names share one JVM/session (cuts startup cost out
@@ -43,7 +44,7 @@ object RunOne {
         if (counting)
           println(f"RUNONE $nm%s rows=$n%d time=$s%.3f s jobs=${c.jobs}%d stages=${c.stages}%d tasks=${c.tasks}%d")
         else println(f"RUNONE $nm%s rows=$n%d time=$s%.3f s")
-        if (verbose) c.resultStages.zipWithIndex.foreach { case (site, i) =>
+        if (verbose) c.jobNames.zipWithIndex.foreach { case (site, i) =>
           println(f"  JOB $i%3d  $site%s")
         }
       }

@@ -330,20 +330,10 @@ object LakeSelect {
     * (dir, version) — a committed snapshot's files are immutable — and
     * resolved LAZILY by the callers, so predicates that need no guard
     * (the common long/string, bloom-less case) never pay the footer. */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int),
-      Map[String, DataType]]()
-
   private def tableSchemaOf(spark: SparkSession, dir: String,
-      snap: TableLog.Snapshot): Map[String, DataType] = {
-    if (schemaMemo.size > 512) schemaMemo.clear()
-    schemaMemo.computeIfAbsent((dir, snap.version), _ =>
-      snap.files.lastOption.map { f =>
-        val abs = java.nio.file.Paths.get(dir).resolve(f).toString
-        RowGroupScan.readNoInfer(spark, Seq(abs)).schema
-          .map(fd => fd.name -> fd.dataType).toMap
-      }.getOrElse(Map.empty))
-  }
+      snap: TableLog.Snapshot): Map[String, DataType] =
+    TableLog.newestFileSchema(spark, dir, snap)
+      .map(fd => fd.name -> fd.dataType).toMap
 
   /** Lower (column, Constraint) pairs onto the physical index constraint
     * types, schema-aware: LocalDate values (from `to_date` rewrites)

@@ -27,12 +27,7 @@ object Similarity {
     // the corpus-side dot products are the whole cost and run pre-shuffle —
     // guard the scan's parallelism (no-op when splits >= cores)
     val c = Scatter(corpus).select(col(idCol).as("nid"), col(vecCol).as("nv"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))
-    c.join(broadcast(q), col("qid") =!= col("nid"))
-      .withColumn("cos", cosine_similarity(col("qv"), col("nv")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("rk"), col("cos"))
+    rankByCos(c.join(broadcast(q), col("qid") =!= col("nid")), k)
   }
 
   /** LSH top-k: multi-table OR-construction × multi-probe.
@@ -61,28 +56,23 @@ object Similarity {
     val qSig = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
       posexplode(array((0 until tables).map(t => sigT(t, col(vecCol))): _*)))
       .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "qb")
-    // query-side fan-out: own bucket + single-bit flips (bounded by
-    // `probes`; probes=0 must probe ONLY the query's own bucket — an
-    // empty flip list, not a descending sequence() artifact)
-    val nFlips = math.min(probes, bits)
-    val flipSql =
-      if (nFlips <= 0) "array(qb)"
-      else s"concat(array(qb), transform(sequence(0, ${nFlips - 1}), " +
-        "b -> qb ^ shiftleft(cast(1 as bigint), b)))"
     val probed = qSig.select(col("qid"), col("qv"), col("tbl"),
-      explode(expr(flipSql)).as("bucket"))
+      explode(lshFanOut(col("qb"), probes, bits)).as("bucket"))
       .dropDuplicates("qid", "tbl", "bucket")
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))
     // broadcast the |Q|·tables·(1+probes) probe fan-out — the corpus
     // bucket index streams map-only through the candidate join
-    broadcast(probed).join(c, Seq("tbl", "bucket"))
+    rankByCos(broadcast(probed).join(c, Seq("tbl", "bucket"))
       .filter(col("qid") =!= col("nid"))
-      .dropDuplicates("qid", "nid") // union candidates across tables/probes
-      .withColumn("cos", cosine_similarity(col("qv"), col("nv")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("rk"), col("cos"))
+      .dropDuplicates("qid", "nid"), k) // union candidates across tables/probes
   }
+
+  /** A query bucket's probe fan-out: its own bucket `qb` (the bigint
+    * signature) then its single-bit flips `qb ^ 1<<b` for
+    * b < min(probes, bits), so probes = 0 probes ONLY `qb`. Built as
+    * plain XORs, the fan-out compiles without a lambda. */
+  private[graft] def lshFanOut(qb: Column, probes: Int, bits: Int): Column =
+    array(qb +: (0 until math.min(probes, bits))
+      .map(b => qb.bitwiseXOR(lit(1L << b))): _*)
 
   /** IVF (inverted-file) top-k: the coarse-quantizer ANN path.
     *
@@ -107,33 +97,10 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     require(nlist >= 1 && nprobe >= 1 && nprobe <= nlist,
       s"need 1 <= nprobe <= nlist: nlist=$nlist nprobe=$nprobe")
-    // tolerate array<double> inputs (e.g. from SQL arithmetic, which
-    // promotes float to double) — the Column-side kernels implicit-cast,
-    // so the driver-side sample must too
-    val sample = corpus.select(col(idCol), col(vecCol)).sort(col(idCol))
-      .limit(trainSample).collect()
-      .map(_.getSeq[Number](1).map(_.floatValue).toArray)
-    val centroids = trainSpherical(sample, nlist, iters)
-    // corpus side: argmax cell, map-only; query side: nprobe nearest cells.
-    // Both go through the NearestCells kernel (tie-break toward the lower
-    // index on both sides — the planted-self-match guarantee).
-    val assigned = Scatter(corpus).select(col(idCol).as("nid"), col(vecCol).as("nv"))
-      .withColumn("cell", element_at(nearest_cells(col("nv"), centroids, 1), 1))
-    val probed = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
-      .select(col("qid"), col("qv"),
-        explode(nearest_cells(col("qv"), centroids, nprobe)).as("cell"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))
-    // explicit broadcast on the |Q|·nprobe probe side (the persisted
-    // paths' posture): without CBO the filtered query frame inherits its
-    // scan's size estimate, so auto-broadcast can silently fail and
-    // sort-merge the whole cell-assigned corpus through an exchange.
-    // Hint-only — semantics unchanged, corpus side stays map-only.
-    broadcast(probed).join(assigned, Seq("cell"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("cos", cosine_similarity(col("qv"), col("nv")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("rk"), col("cos"))
+    val centroids = trainSpherical(
+      trainingSample(corpus, idCol, vecCol, trainSample), nlist, iters)
+    search(probe(queries, idCol, vecCol, centroids, nprobe, None),
+      assign(Scatter(corpus), idCol, vecCol, centroids, None), k, None, None)
   }
 
   /** IVF-PQ top-k: the memory-bounded ANN path (Jégou et al., "Product
@@ -165,14 +132,60 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     require(nlist >= 1 && nprobe >= 1 && nprobe <= nlist,
       s"need 1 <= nprobe <= nlist: nlist=$nlist nprobe=$nprobe")
-    require(m >= 1 && ksub >= 1 && ksub <= 256,
-      s"need 1 <= ksub <= 256 (codes are single bytes): m=$m ksub=$ksub")
     require(refine >= k, s"refine shortlist must cover k: refine=$refine k=$k")
-    val sample = corpus.select(col(idCol), col(vecCol)).sort(col(idCol))
-      .limit(trainSample).collect()
-      .map(_.getSeq[Number](1).map(_.floatValue).toArray)
+    val sample = trainingSample(corpus, idCol, vecCol, trainSample)
     require(sample.nonEmpty, "IVF-PQ training needs a non-empty corpus")
     val centroids = trainSpherical(sample, nlist, iters)
+    val books = residualBooks(sample, centroids, m, ksub, iters)
+    search(probe(queries, idCol, vecCol, centroids, nprobe, Some(books)),
+      assign(Scatter(corpus), idCol, vecCol, centroids, Some(books)), k,
+      None, Some(Refine(refine, books,
+        corpus.select(col(idCol).as("nid"), col(vecCol).as("nv")))))
+  }
+
+  // ---- the shared ANN pipeline ------------------------------------------
+  //
+  // Every ANN path is candidate generation then exact verification: the
+  // probe side (queries × their cells or buckets) joins the corpus-side
+  // candidates, and each query keeps its best k by exact cosine. The IVF
+  // entry points — per-call and persisted, with or without PQ codes and a
+  // predicate — differ only in where the centroids, candidates and live
+  // ids come from; they all run `search`.
+
+  /** The one top-k tail: per query, rows ranked by `score` descending
+    * (ties toward the lower nid) into column `rank`, the best `k` kept. */
+  private def topK(scored: DataFrame, k: Int, score: String,
+      rank: String): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(col(score).desc, col("nid"))
+    scored.withColumn(rank, row_number().over(w)).filter(col(rank) <= k)
+  }
+
+  /** The result contract of every ANN path: (qid, nid, rk, cos), the `k`
+    * best candidate pairs per query by `cos` (exact cosine of `qv`, `nv`
+    * unless given). */
+  private def rankByCos(pairs: DataFrame, k: Int,
+      cos: Column = cosine_similarity(col("qv"), col("nv"))): DataFrame =
+    topK(pairs.withColumn("cos", cos), k, "cos", "rk")
+      .select(col("qid"), col("nid"), col("rk"), col("cos"))
+
+  /** The bounded training sample: the first `n` vectors by id (sort-limit,
+    * planned as TakeOrderedAndProject), collected as floats. array<double>
+    * inputs (e.g. from SQL arithmetic, which promotes float to double)
+    * cast here as the Column-side kernels implicit-cast. */
+  private def trainingSample(df: DataFrame, idCol: String, vecCol: String,
+      n: Int): Array[Array[Float]] =
+    df.select(col(idCol), col(vecCol)).sort(col(idCol)).limit(n).collect()
+      .map(_.getSeq[Number](1).map(_.floatValue).toArray)
+
+  /** PQ codebooks over the sample's residuals against their nearest
+    * coarse centroid — one recipe for the per-call and persisted paths,
+    * so a persisted-PQ query at the build snapshot matches [[ivfPqTopK]]
+    * row for row. */
+  private def residualBooks(sample: Array[Array[Float]],
+      centroids: Array[Array[Float]], m: Int, ksub: Int,
+      iters: Int): Array[Array[Array[Float]]] = {
+    require(m >= 1 && ksub >= 1 && ksub <= 256,
+      s"need 1 <= ksub <= 256 (codes are single bytes): m=$m ksub=$ksub")
     // residual per sample point needs another full argmax over the coarse
     // codebook (O(sample·nlist·dim)) — parallelize like the training loops
     val residuals = new Array[Array[Float]](sample.length)
@@ -184,41 +197,80 @@ object Similarity {
       while (i < vh.length) { r(i) = vh(i) - (if (i < c.length) c(i) else 0f); i += 1 }
       residuals(p) = r
     }
-    val codebooks = trainPq(residuals, m, ksub, iters)
-    // a sample smaller than ksub trains codebooks with fewer than ksub
-    // codewords (trainPq inits from subs.take(ksub)); the ADC stride MUST
-    // be the trained codebook length, not the requested ksub, or the LUT
-    // lookups for subspaces >= 1 read other subspaces' entries
-    val ksubEff = codebooks(0).length
-    val assigned = Scatter(corpus).select(col(idCol).as("nid"),
-        ivfpq_encode(col(vecCol), centroids, codebooks).as("enc"))
-      .select(col("nid"), col("enc.cell").as("cell"), col("enc.codes").as("codes"))
-    val probed = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
-      .withColumn("lut", pq_lut(col("qv"), codebooks))
-      .select(col("qid"), col("qv"), col("lut"),
-        explode(nearest_cells(col("qv"), centroids, nprobe)).as("cell"))
-      // the coarse ⟨q̂, centroid⟩ term depends only on (query, cell): compute
-      // it on the |Q|·nprobe probe rows, NOT per candidate after the join
-      .withColumn("cdot", cell_dot(col("qv"), col("cell"), centroids))
-    val wAdc = Window.partitionBy("qid").orderBy(col("adc").desc, col("nid"))
-    // probe side broadcast (|Q|·nprobe rows) — same rationale as ivfTopK:
-    // the code-carrying corpus side must never exchange for the probe join
-    val shortlist = broadcast(probed).join(assigned, Seq("cell"))
+    trainPq(residuals, m, ksub, iters)
+  }
+
+  /** Corpus rows assigned map-only to their cell: (nid, nv, cell), or with
+    * PQ books (nid, cell, codes) — `ivfpq_encode` shares the coarse argmax
+    * with `nearest_cells`, so the cell is identical either way. Both go
+    * through the NearestCells kernel, whose tie-break toward the lower
+    * index on corpus and query side is the planted-self-match guarantee. */
+  private def assign(data: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Float]],
+      books: Option[Array[Array[Array[Float]]]]): DataFrame = books match {
+    case None =>
+      data.select(col(idCol).as("nid"), col(vecCol).as("nv"))
+        .withColumn("cell", element_at(nearest_cells(col("nv"), centroids, 1), 1))
+    case Some(b) =>
+      data.select(col(idCol).as("nid"),
+          ivfpq_encode(col(vecCol), centroids, b).as("enc"))
+        .select(col("nid"), col("enc.cell").as("cell"), col("enc.codes").as("codes"))
+  }
+
+  /** The probe side: each query's `nprobe` nearest cells as (qid, qv,
+    * cell). With PQ books each row also carries the query's ADC table
+    * `lut` and `cdot`, the coarse ⟨q̂, centroid⟩ term — it depends only on
+    * (query, cell), so it is computed on the |Q|·nprobe probe rows, NOT
+    * per candidate after the join. */
+  private def probe(queries: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Float]], nprobe: Int,
+      books: Option[Array[Array[Array[Float]]]]): DataFrame = {
+    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
+    val cells = explode(nearest_cells(col("qv"), centroids, nprobe)).as("cell")
+    books match {
+      case None => q.select(col("qid"), col("qv"), cells)
+      case Some(b) =>
+        q.withColumn("lut", pq_lut(col("qv"), b))
+          .select(col("qid"), col("qv"), col("lut"), cells)
+          .withColumn("cdot", cell_dot(col("qv"), col("cell"), centroids))
+    }
+  }
+
+  /** The PQ re-rank: keep each query's best `shortlist` candidates by ADC
+    * score, then fetch only their original vectors — (nid, nv) rows of
+    * `vectors` — for the exact cosine. */
+  private final case class Refine(shortlist: Int,
+      books: Array[Array[Array[Float]]], vectors: DataFrame)
+
+  /** The IVF search every entry point runs. The probe side (|Q|·nprobe
+    * rows — the serving contract's small side) is broadcast into the cell
+    * equality join, explicitly: without CBO a filtered query frame
+    * inherits its scan's size estimate, so auto-broadcast can silently
+    * fail and sort-merge the whole cell-assigned corpus through an
+    * exchange. The candidates are semi-joined to the `live` ids first
+    * when some listed rows are no longer visible. Without `refine` every
+    * candidate is cosine-ranked; with it, candidates are ADC-scored from
+    * their codes and only the shortlist reads full vectors. */
+  private def search(probed: DataFrame, candidates: DataFrame, k: Int,
+      live: Option[DataFrame], refine: Option[Refine]): DataFrame = {
+    val cand = live.fold(candidates)(candidates.join(_, Seq("nid"), "left_semi"))
+    val pairs = broadcast(probed).join(cand, Seq("cell"))
       .filter(col("qid") =!= col("nid"))
-      .withColumn("adc", col("cdot") + pq_adc(col("lut"), col("codes"), ksubEff))
-      .withColumn("ra", row_number().over(wAdc))
-      .filter(col("ra") <= refine)
-      .select(col("qid"), col("qv"), col("nid"))
-    val orig = corpus.select(col(idCol).as("nid"), col(vecCol).as("nv"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))
-    // the refine shortlist is ≤ |Q|·refine rows — broadcasting it keeps
-    // the corpus-side vector fetch map-only (the 100 TB posture: the
-    // corpus never shuffles by nid just to serve a shortlist)
-    broadcast(shortlist).join(orig, Seq("nid"))
-      .withColumn("cos", cosine_similarity(col("qv"), col("nv")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("rk"), col("cos"))
+    refine match {
+      case None => rankByCos(pairs, k)
+      case Some(Refine(n, books, vectors)) =>
+        // a sample smaller than ksub trains codebooks with fewer than ksub
+        // codewords (trainPq inits from subs.take(ksub)); the ADC stride
+        // MUST be the trained codebook length, not the requested ksub, or
+        // the LUT lookups for subspaces >= 1 read other subspaces' entries
+        val adc = col("cdot") + pq_adc(col("lut"), col("codes"), books(0).length)
+        val shortlist = topK(pairs.withColumn("adc", adc), n, "adc", "ra")
+          .select(col("qid"), col("qv"), col("nid"))
+        // the shortlist is ≤ |Q|·refine rows — broadcasting it keeps the
+        // corpus-side vector fetch map-only (the 100 TB posture: the
+        // corpus never shuffles by nid just to serve a shortlist)
+        rankByCos(broadcast(shortlist).join(vectors, Seq("nid")), k)
+    }
   }
 
   /** SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
@@ -266,9 +318,7 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"need 0 < tau <= 1: $tau")
     val cells = if (nlist > 0) nlist else derivedNlist(embs.count(), trainSample)
-    val sample = embs.select(col(idCol), col(vecCol)).sort(col(idCol))
-      .limit(trainSample).collect()
-      .map(_.getSeq[Number](1).map(_.floatValue).toArray)
+    val sample = trainingSample(embs, idCol, vecCol, trainSample)
     require(sample.nonEmpty, "semDedup training needs a non-empty corpus")
     val centroids = trainSpherical(sample, cells, iters)
     val assigned = Scatter(embs)
@@ -475,12 +525,8 @@ object Similarity {
     val q = sq8Quantize(queries, vecCol, s)
       .select(col(idCol).as("qid"),
         sq8Reconstruct(col("codes"), s).as("qr"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))
-    c.join(broadcast(q), col("qid") =!= col("nid"))
-      .withColumn("cos", round(rcos(col("qr"), col("nr")), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("rk"), col("cos"))
+    rankByCos(c.join(broadcast(q), col("qid") =!= col("nid")), k,
+      round(rcos(col("qr"), col("nr")), 6))
   }
 
   // ---- random projection (Johnson-Lindenstrauss) ---------------------------
@@ -655,10 +701,8 @@ object Similarity {
       ksub: Int = 64): Int = {
     import java.nio.file.{Files => JF, Paths => JP, StandardCopyOption}
     val snap = TableLog.snapshot(dir)
-    val corpus = TableLog.read(spark, dir)
-    val sample = corpus.select(col(idCol), col(vecCol)).sort(col(idCol))
-      .limit(trainSample).collect()
-      .map(_.getSeq[Number](1).map(_.floatValue).toArray)
+    val sample = trainingSample(TableLog.read(spark, dir), idCol, vecCol,
+      trainSample)
     require(sample.nonEmpty, "IVF index build needs a non-empty table")
     val centroids = trainSpherical(sample, nlist, iters)
     import spark.implicits._
@@ -680,36 +724,87 @@ object Similarity {
     val cbRel = stageOne(
       centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
         .toDF("cell", "centroid"), "cb")
-    val pqRel =
-      if (!pq) None
-      else {
-        require(m >= 1 && ksub >= 1 && ksub <= 256,
-          s"need 1 <= ksub <= 256 (codes are single bytes): m=$m " +
-            s"ksub=$ksub")
-        // residuals of the SAME sample against the coarse centroids —
-        // byte-identical to ivfPqTopK's training inputs
-        val residuals = new Array[Array[Float]](sample.length)
-        java.util.stream.IntStream.range(0, sample.length).parallel()
-          .forEach { p =>
-            val vh = VectorLib.unit(sample(p))
-            val c = centroids(VectorLib.nearestCells(vh, centroids, 1)(0))
-            val r = new Array[Float](vh.length)
-            var i = 0
-            while (i < vh.length) {
-              r(i) = vh(i) - (if (i < c.length) c(i) else 0f); i += 1
-            }
-            residuals(p) = r
-          }
-        val books = trainPq(residuals, m, ksub, iters)
-        Some(stageOne(
-          books.zipWithIndex.flatMap { case (book, s) =>
-            book.zipWithIndex.map { case (cw, c) => (s, c, cw.toSeq) }
-          }.toSeq.toDF("sub", "code", "centroid"), "pq"))
-      }
+    // residuals of the SAME sample against the coarse centroids —
+    // byte-identical to ivfPqTopK's training inputs
+    val pqRel = if (!pq) None else Some(stageOne(
+      residualBooks(sample, centroids, m, ksub, iters).zipWithIndex
+        .flatMap { case (book, s) =>
+          book.zipWithIndex.map { case (cw, c) => (s, c, cw.toSeq) }
+        }.toSeq.toDF("sub", "code", "centroid"), "pq"))
     val meta = s"$vecCol,$idCol"
     val asg = stageIvfAssignments(spark, dir, cbRel, meta,
       snap.files, snap.version + 1, pqRel)
     TableLog.retryIvfCommit(dir, maxRetries, cbRel, meta, asg, pqRel)
+  }
+
+  /** A persisted IVF index resolved at one snapshot: the indexed
+    * (vecCol, idCol), the stored centroids, and the PQ books when the
+    * caller searches by codes. */
+  private final case class IvfIndex(dir: String, snap: TableLog.Snapshot,
+      vecCol: String, idCol: String, centroids: Array[Array[Float]],
+      books: Option[Array[Array[Array[Float]]]])
+
+  private def loadIndex(spark: org.apache.spark.sql.SparkSession,
+      dir: String, version: Int, pq: Boolean): IvfIndex = {
+    val snap = TableLog.snapshot(dir, version)
+    val Array(vecCol, idCol) = snap.vecCol.getOrElse(sys.error(
+      s"no persisted IVF index on $dir (run buildIvfIndex first)"))
+      .split(",", 2)
+    def sidecar(key: String, missing: String): String =
+      snap.vecidx.getOrElse(key, sys.error(s"IVF index on $dir $missing"))
+    val centroids = loadCodebook(spark, dir,
+      sidecar("codebook", "lost its codebook sidecar"))
+    val books = if (!pq) None else Some(loadPqBook(spark, dir, sidecar(
+      "pqbook", "has no PQ codebooks (rebuild with buildIvfIndex(pq = true))")))
+    IvfIndex(dir, snap, vecCol, idCol, centroids, books)
+  }
+
+  /** The index's candidates, in [[assign]]'s columns: the assignment
+    * sidecars for the files they cover, and the uncovered files
+    * (post-rewrite outputs) assigned on the fly from the stored centroids
+    * and books — zero training either way. */
+  private def candidates(spark: org.apache.spark.sql.SparkSession,
+      ix: IvfIndex): DataFrame = {
+    val base = java.nio.file.Paths.get(ix.dir)
+    def read(rels: Seq[String]): DataFrame =
+      RowGroupScan.readNoInfer(spark, rels.map(base.resolve(_).toString))
+    val (covered, uncovered) = ix.snap.files.partition(ix.snap.vecidx.contains)
+    val fromSidecars =
+      if (covered.isEmpty) None
+      else Some(read(covered.map(ix.snap.vecidx)).select(col("vid").as("nid")
+        +: (if (ix.books.isEmpty) Seq(col("vec").as("nv"), col("cell"))
+          else Seq(col("cell"), col("codes"))): _*))
+    val fromData =
+      if (uncovered.isEmpty) None
+      else Some(assign(read(uncovered), ix.idCol, ix.vecCol, ix.centroids,
+        ix.books))
+    (fromSidecars.toSeq ++ fromData.toSeq).reduce(_ unionByName _)
+  }
+
+  /** The four persisted entry points: `refine` searches by PQ codes,
+    * `predicate` filters through [[LakeSelect.readWhere]]. The filtered
+    * read, else the live table read, supplies both the live ids — needed
+    * when a predicate or deletion vectors hide rows the sidecars still
+    * list — and the refine vectors. */
+  private def persistedTopK(spark: org.apache.spark.sql.SparkSession,
+      dir: String, queries: DataFrame, k: Int, nprobe: Int, version: Int,
+      refine: Option[Int], predicate: Option[String])
+      : (DataFrame, Option[LakeSelect.Stats]) = {
+    refine.foreach(n =>
+      require(n >= k, s"refine shortlist must cover k: refine=$n k=$k"))
+    val ix = loadIndex(spark, dir, version, pq = refine.isDefined)
+    val filtered = predicate.map(LakeSelect.readWhere(spark, dir, _, version,
+      ix.idCol +: refine.map(_ => ix.vecCol).toSeq))
+    lazy val rows = filtered.fold(TableLog.read(spark, dir, version))(_._1)
+    val live =
+      if (filtered.isEmpty && ix.snap.dvs.isEmpty) None
+      else Some(rows.select(col(ix.idCol).as("nid")))
+    val byCodes = refine.zip(ix.books).map { case (n, books) =>
+      Refine(n, books, rows.select(col(ix.idCol).as("nid"),
+        col(ix.vecCol).as("nv")))
+    }
+    (search(probe(queries, ix.idCol, ix.vecCol, ix.centroids, nprobe,
+      ix.books), candidates(spark, ix), k, live, byCodes), filtered.map(_._2))
   }
 
   /** ANN top-k THROUGH the persisted index: zero training jobs, the
@@ -721,52 +816,8 @@ object Similarity {
     * index (or its top-ups) covered. */
   def ivfTopKPersisted(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: DataFrame, k: Int, nprobe: Int = 8,
-      version: Int = -1): DataFrame = {
-    val snap = TableLog.snapshot(dir, version)
-    val meta = snap.vecCol.getOrElse(sys.error(
-      s"no persisted IVF index on $dir (run buildIvfIndex first)"))
-    val Array(vecCol, idCol) = meta.split(",", 2)
-    val cbRel = snap.vecidx.getOrElse("codebook", sys.error(
-      s"IVF index on $dir lost its codebook sidecar"))
-    val centroids = loadCodebook(spark, dir, cbRel)
-    val base = java.nio.file.Paths.get(dir)
-    val covered = snap.files.filter(snap.vecidx.contains)
-    val uncovered = snap.files.filterNot(snap.vecidx.contains)
-    val fromSidecars =
-      if (covered.isEmpty) None
-      else Some(RowGroupScan.readNoInfer(spark, covered.map(f =>
-          base.resolve(snap.vecidx(f)).toString))
-        .select(col("vid"), col("vec"), col("cell")))
-    val fromData =
-      if (uncovered.isEmpty) None
-      else Some(RowGroupScan.readNoInfer(spark, uncovered.map(f =>
-          base.resolve(f).toString))
-        .select(col(idCol).as("vid"), col(vecCol).as("vec"))
-        .withColumn("cell",
-          element_at(nearest_cells(col("vec"), centroids, 1), 1)))
-    var cand = (fromSidecars.toSeq ++ fromData.toSeq)
-      .reduce(_ unionByName _)
-    if (snap.dvs.nonEmpty) {
-      val live = TableLog.read(spark, dir, version)
-        .select(col(idCol).as("vid"))
-      cand = cand.join(live, Seq("vid"), "left_semi")
-    }
-    val probed = queries
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"))
-      .select(col("qid"), col("qv"),
-        explode(nearest_cells(col("qv"), centroids, nprobe)).as("cell"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))
-    // the probe side is |Q|·nprobe rows — the serving contract's small
-    // side (bruteForceTopK broadcasts the same frame): a broadcast join
-    // leaves the corpus-side candidates entirely un-shuffled
-    broadcast(probed).join(cand.withColumnRenamed("vid", "nid"),
-        Seq("cell"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("cos", cosine_similarity(col("qv"), col("vec")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("rk"), col("cos"))
-  }
+      version: Int = -1): DataFrame =
+    persistedTopK(spark, dir, queries, k, nprobe, version, None, None)._1
 
   /** FILTERED ANN through the persisted index — the vector-serving
     * pattern `top-k of rows WHERE pred`: the predicate routes through
@@ -786,49 +837,9 @@ object Similarity {
       dir: String, queries: DataFrame, k: Int, predicate: String,
       nprobe: Int = 8, version: Int = -1)
       : (DataFrame, LakeSelect.Stats) = {
-    val snap = TableLog.snapshot(dir, version)
-    val meta = snap.vecCol.getOrElse(sys.error(
-      s"no persisted IVF index on $dir (run buildIvfIndex first)"))
-    val Array(vecCol, idCol) = meta.split(",", 2)
-    val cbRel = snap.vecidx.getOrElse("codebook", sys.error(
-      s"IVF index on $dir lost its codebook sidecar"))
-    val centroids = loadCodebook(spark, dir, cbRel)
-    val base = java.nio.file.Paths.get(dir)
-    val covered = snap.files.filter(snap.vecidx.contains)
-    val uncovered = snap.files.filterNot(snap.vecidx.contains)
-    val (filtered, stats) = LakeSelect.readWhere(spark, dir, predicate,
-      version, Seq(idCol))
-    val keep = filtered.select(col(idCol).as("vid"))
-    val fromSidecars =
-      if (covered.isEmpty) None
-      else Some(RowGroupScan.readNoInfer(spark, covered.map(f =>
-          base.resolve(snap.vecidx(f)).toString))
-        .select(col("vid"), col("vec"), col("cell")))
-    val fromData =
-      if (uncovered.isEmpty) None
-      else Some(RowGroupScan.readNoInfer(spark, uncovered.map(f =>
-          base.resolve(f).toString))
-        .select(col(idCol).as("vid"), col(vecCol).as("vec"))
-        .withColumn("cell",
-          element_at(nearest_cells(col("vec"), centroids, 1), 1)))
-    val cand = (fromSidecars.toSeq ++ fromData.toSeq)
-      .reduce(_ unionByName _)
-      .join(keep, Seq("vid"), "left_semi")
-    val probed = queries
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"))
-      .select(col("qid"), col("qv"),
-        explode(nearest_cells(col("qv"), centroids, nprobe)).as("cell"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc,
-      col("nid"))
-    // broadcast the |Q|·nprobe probe side (the ivfTopKPersisted shape)
-    val ranked = broadcast(probed)
-      .join(cand.withColumnRenamed("vid", "nid"), Seq("cell"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("cos", cosine_similarity(col("qv"), col("vec")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("rk"), col("cos"))
-    (ranked, stats)
+    val (ranked, stats) = persistedTopK(spark, dir, queries, k, nprobe,
+      version, None, Some(predicate))
+    (ranked, stats.get)
   }
 
   /** [[ivfTopKPersistedWhere]] × [[ivfPqTopKPersisted]]: filtered
@@ -842,71 +853,9 @@ object Similarity {
       dir: String, queries: DataFrame, k: Int, predicate: String,
       nprobe: Int = 8, refine: Int = 64, version: Int = -1)
       : (DataFrame, LakeSelect.Stats) = {
-    require(refine >= k,
-      s"refine shortlist must cover k: refine=$refine k=$k")
-    val snap = TableLog.snapshot(dir, version)
-    val meta = snap.vecCol.getOrElse(sys.error(
-      s"no persisted IVF index on $dir (run buildIvfIndex first)"))
-    val Array(vecCol, idCol) = meta.split(",", 2)
-    val cbRel = snap.vecidx.getOrElse("codebook", sys.error(
-      s"IVF index on $dir lost its codebook sidecar"))
-    val pqRel = snap.vecidx.getOrElse("pqbook", sys.error(
-      s"IVF index on $dir has no PQ codebooks " +
-        "(rebuild with buildIvfIndex(pq = true))"))
-    val centroids = loadCodebook(spark, dir, cbRel)
-    val books = loadPqBook(spark, dir, pqRel)
-    val ksubEff = books(0).length
-    val base = java.nio.file.Paths.get(dir)
-    val covered = snap.files.filter(snap.vecidx.contains)
-    val uncovered = snap.files.filterNot(snap.vecidx.contains)
-    val (filtered, stats) = LakeSelect.readWhere(spark, dir, predicate,
-      version, Seq(idCol, vecCol))
-    val keep = filtered.select(col(idCol).as("vid"))
-    val fromSidecars =
-      if (covered.isEmpty) None
-      else Some(RowGroupScan.readNoInfer(spark, covered.map(f =>
-          base.resolve(snap.vecidx(f)).toString))
-        .select(col("vid"), col("cell"), col("codes")))
-    val fromData =
-      if (uncovered.isEmpty) None
-      else Some(RowGroupScan.readNoInfer(spark, uncovered.map(f =>
-          base.resolve(f).toString))
-        .select(col(idCol).as("vid"),
-          ivfpq_encode(col(vecCol), centroids, books).as("enc"))
-        .select(col("vid"), col("enc.cell").as("cell"),
-          col("enc.codes").as("codes")))
-    val cand = (fromSidecars.toSeq ++ fromData.toSeq)
-      .reduce(_ unionByName _)
-      .join(keep, Seq("vid"), "left_semi")
-    val probed = queries
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"))
-      .withColumn("lut", pq_lut(col("qv"), books))
-      .select(col("qid"), col("qv"), col("lut"),
-        explode(nearest_cells(col("qv"), centroids, nprobe)).as("cell"))
-      .withColumn("cdot", cell_dot(col("qv"), col("cell"), centroids))
-    val wAdc = Window.partitionBy("qid").orderBy(col("adc").desc,
-      col("nid"))
-    // probe side broadcast (|Q|·nprobe rows) — candidates un-shuffled
-    val shortlist = broadcast(probed)
-      .join(cand.withColumnRenamed("vid", "nid"), Seq("cell"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("adc",
-        col("cdot") + pq_adc(col("lut"), col("codes"), ksubEff))
-      .withColumn("ra", row_number().over(wAdc))
-      .filter(col("ra") <= refine)
-      .select(col("qid"), col("qv"), col("nid"))
-    val orig = filtered.select(col(idCol).as("nid"),
-      col(vecCol).as("nv"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc,
-      col("nid"))
-    // refine joins ≤ |Q|·refine shortlist rows against the table read —
-    // broadcasting the shortlist keeps the table scan map-only
-    val ranked = broadcast(shortlist).join(orig, Seq("nid"))
-      .withColumn("cos", cosine_similarity(col("qv"), col("nv")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("rk"), col("cos"))
-    (ranked, stats)
+    val (ranked, stats) = persistedTopK(spark, dir, queries, k, nprobe,
+      version, Some(refine), Some(predicate))
+    (ranked, stats.get)
   }
 
   /** IVF-PQ ANN THROUGH the persisted index (built with
@@ -923,71 +872,7 @@ object Similarity {
     * index was built on — the training inputs are byte-identical. */
   def ivfPqTopKPersisted(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: DataFrame, k: Int, nprobe: Int = 8,
-      refine: Int = 64, version: Int = -1): DataFrame = {
-    require(refine >= k,
-      s"refine shortlist must cover k: refine=$refine k=$k")
-    val snap = TableLog.snapshot(dir, version)
-    val meta = snap.vecCol.getOrElse(sys.error(
-      s"no persisted IVF index on $dir (run buildIvfIndex first)"))
-    val Array(vecCol, idCol) = meta.split(",", 2)
-    val cbRel = snap.vecidx.getOrElse("codebook", sys.error(
-      s"IVF index on $dir lost its codebook sidecar"))
-    val pqRel = snap.vecidx.getOrElse("pqbook", sys.error(
-      s"IVF index on $dir has no PQ codebooks " +
-        "(rebuild with buildIvfIndex(pq = true))"))
-    val centroids = loadCodebook(spark, dir, cbRel)
-    val books = loadPqBook(spark, dir, pqRel)
-    val ksubEff = books(0).length
-    val base = java.nio.file.Paths.get(dir)
-    val covered = snap.files.filter(snap.vecidx.contains)
-    val uncovered = snap.files.filterNot(snap.vecidx.contains)
-    val fromSidecars =
-      if (covered.isEmpty) None
-      else Some(RowGroupScan.readNoInfer(spark, covered.map(f =>
-          base.resolve(snap.vecidx(f)).toString))
-        .select(col("vid"), col("cell"), col("codes")))
-    val fromData =
-      if (uncovered.isEmpty) None
-      else Some(RowGroupScan.readNoInfer(spark, uncovered.map(f =>
-          base.resolve(f).toString))
-        .select(col(idCol).as("vid"),
-          ivfpq_encode(col(vecCol), centroids, books).as("enc"))
-        .select(col("vid"), col("enc.cell").as("cell"),
-          col("enc.codes").as("codes")))
-    var cand = (fromSidecars.toSeq ++ fromData.toSeq)
-      .reduce(_ unionByName _)
-    if (snap.dvs.nonEmpty) {
-      val live = TableLog.read(spark, dir, version)
-        .select(col(idCol).as("vid"))
-      cand = cand.join(live, Seq("vid"), "left_semi")
-    }
-    val probed = queries
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"))
-      .withColumn("lut", pq_lut(col("qv"), books))
-      .select(col("qid"), col("qv"), col("lut"),
-        explode(nearest_cells(col("qv"), centroids, nprobe)).as("cell"))
-      .withColumn("cdot", cell_dot(col("qv"), col("cell"), centroids))
-    val wAdc = Window.partitionBy("qid").orderBy(col("adc").desc,
-      col("nid"))
-    // probe side broadcast (|Q|·nprobe rows) — candidates un-shuffled
-    val shortlist = broadcast(probed)
-      .join(cand.withColumnRenamed("vid", "nid"), Seq("cell"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("adc",
-        col("cdot") + pq_adc(col("lut"), col("codes"), ksubEff))
-      .withColumn("ra", row_number().over(wAdc))
-      .filter(col("ra") <= refine)
-      .select(col("qid"), col("qv"), col("nid"))
-    val orig = TableLog.read(spark, dir, version)
-      .select(col(idCol).as("nid"), col(vecCol).as("nv"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc,
-      col("nid"))
-    // refine joins ≤ |Q|·refine shortlist rows against the table read —
-    // broadcasting the shortlist keeps the table scan map-only
-    broadcast(shortlist).join(orig, Seq("nid"))
-      .withColumn("cos", cosine_similarity(col("qv"), col("nv")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("rk"), col("cos"))
-  }
+      refine: Int = 64, version: Int = -1): DataFrame =
+    persistedTopK(spark, dir, queries, k, nprobe, version, Some(refine),
+      None)._1
 }

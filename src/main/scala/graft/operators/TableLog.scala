@@ -1337,32 +1337,8 @@ object TableLog {
             RowGroupScan.prunePairs(spark, wide, constraints,
               needCols = memoHit.isEmpty)
         }
-      // the union schema must cover the FULL snapshot even when a bloom
-      // or partition prune narrowed the file set: under add-column
-      // evolution a predicate/projection column can live only in files
-      // the prune dropped, and a subset-derived union would fail its
-      // resolution (AnalysisException) instead of null-filling like
-      // readEvolved. A retained full-index memo answers exactly from
-      // driver rows; fully sidecar-mapped snapshots widen from the
-      // index (no footers); others widen from the NEWEST file's footer
-      // (one open — the widest schema under add-column evolution), so
-      // eliminated files still cost zero footer opens.
-      val unionCols = memoHit.getOrElse {
-        if (fileSubset.isEmpty) colsOpt.get
-        else Option(wideIdxMemo.get((dir, snap.version))) match {
-          case Some((fullRows, fullSchema)) =>
-            RowGroupScan.unionColsFromTuples(
-              colsOfRows(fullRows, fullSchema))
-          case None if snap.files.forall(snap.rgidx.contains) =>
-            snapshotUnionCols(spark, dir, snap)
-          case None =>
-            mergeUnionCols(colsOpt.get, newestFileCols(spark, dir, snap))
-        }
-      }
-      if (memoHit.isEmpty && fileSubset.isEmpty) {
-        if (unionColsMemo.size > 512) unionColsMemo.clear()
-        unionColsMemo.put((dir, snap.version), unionCols)
-      }
+      val unionCols = fullUnionCols(spark, dir, snap, memoHit, colsOpt,
+        fileSubset.isEmpty)
       val dvRel = snap.dvs.keySet
       val (dvSlices, cleanSlices) = slices.partition(s =>
         dvRel.contains(s.file.stripPrefix(prefix)))
@@ -1393,6 +1369,33 @@ object TableLog {
     }
   }
 
+  /** The union schema of a pruned read or count: the memo hit, else the
+    * columns its planning derived (`planned`, over the planned files)
+    * widened to the FULL snapshot. A bloom or partition prune can narrow
+    * the file set, and under add-column evolution a predicate/projection
+    * column can live only in files the prune dropped: a subset-derived
+    * union would fail its resolution (AnalysisException) instead of
+    * null-filling like readEvolved. A retained full-index memo answers
+    * exactly from driver rows; fully sidecar-mapped snapshots widen from
+    * the index (no footers); others widen from the NEWEST file's footer
+    * (one open — the widest schema under add-column evolution), so
+    * eliminated files still cost zero footer opens. Planning over the
+    * `whole` snapshot memoizes its answer. */
+  private def fullUnionCols(spark: SparkSession, dir: String,
+      snap: Snapshot, memoHit: Option[Seq[(String, String)]],
+      planned: Option[Seq[(String, String)]],
+      whole: Boolean): Seq[(String, String)] = memoHit.getOrElse {
+    if (whole) rememberUnionCols(dir, snap, planned.get)
+    else Option(wideIdxMemo.get((dir, snap.version))) match {
+      case Some((fullRows, fullSchema)) =>
+        RowGroupScan.unionColsFromTuples(colsOfRows(fullRows, fullSchema))
+      case None if snap.files.forall(snap.rgidx.contains) =>
+        snapshotUnionCols(spark, dir, snap)
+      case None =>
+        mergeUnionCols(planned.get, newestFileSchema(spark, dir, snap))
+    }
+  }
+
   /** Distinct (ord, column, dtype) descriptors of driver-resident index
     * rows. */
   private def colsOfRows(rows: Array[org.apache.spark.sql.Row],
@@ -1404,40 +1407,39 @@ object TableLog {
       .distinct.toSeq
   }
 
-  /** Widen a subset-derived union with columns only the rest of the
-    * snapshot carries (subset order first — identical to the subset
-    * union when schemas never evolved). */
+  /** Widen a subset-derived union with columns only the newest file
+    * carries (subset order first — identical to the subset union when
+    * schemas never evolved). */
   private def mergeUnionCols(subset: Seq[(String, String)],
-      extra: Seq[(Int, String, String)]): Seq[(String, String)] = {
+      newest: org.apache.spark.sql.types.StructType)
+      : Seq[(String, String)] = {
     val have = subset.map(_._1).toSet
-    val extraT = extra.map(e => e._2 -> e._3).toMap
+    val extra = newest.fields.toSeq.map(fd =>
+      fd.name -> fd.dataType.catalogString)
+    val extraT = extra.toMap
     subset.map { case (n, t) =>
       // the newest file may carry the WIDER type (int→long evolution) —
       // resolve to the lossless LUB so its values fit the plan schema
       n -> extraT.get(n).flatMap(RowGroupScan.widenType(t, _))
         .getOrElse(t)
-    } ++ extra.sortBy(_._1).collect {
-      case (_, n, t) if !have(n) => (n, t)
-    }
+    } ++ extra.filterNot { case (n, _) => have(n) }
   }
 
-  /** The NEWEST data file's columns (ord, name, catalog type) — the
-    * widest schema under add-column evolution, at the cost of ONE
-    * footer. Memoized per committed snapshot. */
-  private val newestColsMemo =
+  /** The NEWEST data file's schema — the widest under add-column
+    * evolution, at the cost of ONE footer (empty for an empty snapshot).
+    * Memoized per committed snapshot, whose files are immutable; the
+    * union widening above and [[LakeSelect]]'s routing guards share it.
+    * Bounded: cleared wholesale past 512 snapshots. */
+  private val newestSchemaMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Int),
-      Seq[(Int, String, String)]]()
-  private def newestFileCols(spark: SparkSession, dir: String,
-      snap: Snapshot): Seq[(Int, String, String)] = {
-    if (newestColsMemo.size > 512) newestColsMemo.clear()
-    newestColsMemo.computeIfAbsent((dir, snap.version), _ =>
-      snap.files.lastOption.map { f =>
-        RowGroupScan.readNoInfer(spark,
-            Seq(Paths.get(dir).resolve(f).toString))
-          .schema.fields.zipWithIndex.map { case (fd, i) =>
-            (i, fd.name, fd.dataType.catalogString)
-          }.toSeq
-      }.getOrElse(Nil))
+      org.apache.spark.sql.types.StructType]()
+  private[operators] def newestFileSchema(spark: SparkSession, dir: String,
+      snap: Snapshot): org.apache.spark.sql.types.StructType = {
+    if (newestSchemaMemo.size > 512) newestSchemaMemo.clear()
+    newestSchemaMemo.computeIfAbsent((dir, snap.version), _ =>
+      snap.files.lastOption.fold(new org.apache.spark.sql.types.StructType())(
+        f => RowGroupScan.readNoInfer(spark,
+          Seq(Paths.get(dir).resolve(f).toString)).schema))
   }
 
   /** The FULL snapshot's union schema from its row-group index (sidecar
@@ -1460,6 +1462,11 @@ object TableLog {
         RowGroupScan.unionColsFromSets(
           Seq(row.getSeq[org.apache.spark.sql.Row](0)))
     }
+    rememberUnionCols(dir, snap, cols)
+  }
+
+  private def rememberUnionCols(dir: String, snap: Snapshot,
+      cols: Seq[(String, String)]): Seq[(String, String)] = {
     if (unionColsMemo.size > 512) unionColsMemo.clear()
     unionColsMemo.put((dir, snap.version), cols)
     cols
@@ -2054,23 +2061,8 @@ object TableLog {
                   scala.collection.Seq[org.apache.spark.sql.Row]](3)))
               else None)
         }
-      val unionCols = memoHit.getOrElse {
-        val subsetCols = subsetColsOpt.get
-        if (fileSubset.isEmpty) subsetCols
-        else Option(wideIdxMemo.get((dir, snap.version))) match {
-          case Some((fullRows, fullSchema)) =>
-            RowGroupScan.unionColsFromTuples(
-              colsOfRows(fullRows, fullSchema))
-          case None if snap.files.forall(snap.rgidx.contains) =>
-            snapshotUnionCols(spark, dir, snap)
-          case None =>
-            mergeUnionCols(subsetCols, newestFileCols(spark, dir, snap))
-        }
-      }
-      if (memoHit.isEmpty && fileSubset.isEmpty) {
-        if (unionColsMemo.size > 512) unionColsMemo.clear()
-        unionColsMemo.put((dir, snap.version), unionCols)
-      }
+      val unionCols = fullUnionCols(spark, dir, snap, memoHit,
+        subsetColsOpt, fileSubset.isEmpty)
       val predCols = LakeSelect.referencedColumns(spark, predicate.get)
         .filter(c => unionCols.exists(_._1 == c))
       val dvRel = snap.dvs.keySet

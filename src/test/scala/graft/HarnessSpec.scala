@@ -23,7 +23,19 @@ class HarnessSpec extends AnyFunSuite {
     assert(jobs.length >= 2, "the shuffle map stage and the collect")
     assert((c.jobs, c.stages, c.tasks) ==
       ((jobs.length, stages.length, stages.map(_.numTasks).sum)))
-    assert(c.resultStages.length == c.jobs)
+    assert(c.jobNames.length == c.jobs)
+  }
+
+  test("with AQE on, every job of an action is named after the " +
+    "action's call site") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val (_, c) = Harness.probe(spark) {
+      spark.range(1000).groupBy(org.apache.spark.sql.functions.col("id") % 7)
+        .count().collect()
+    }
+    assert(c.jobs >= 2, "AQE runs the shuffle map stage as its own job")
+    assert(c.jobNames.forall(_.startsWith("collect at HarnessSpec.scala:")),
+      c.jobNames.mkString("\n"))
   }
 
   test("probe does not count a job that ran before it") {

@@ -317,4 +317,49 @@ class IvfIndexSpec extends AnyFunSuite {
       assert(r.getLong(1) % 4 == 2, s"non-matching PQ neighbor: $r")
     }
   }
+
+  test("a predicate every row satisfies returns exactly the unfiltered " +
+    "persisted result, with an uncovered file and a DV in the snapshot") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfsame")
+      .toString + "/t"
+    TableLog.append(dvecs(2000).repartition(4), dir)
+    Similarity.buildIvfIndex(spark, dir, nlist = 16,
+      trainSample = 500, iters = 3, pq = true, m = 8, ksub = 64)
+    val built = TableLog.snapshot(dir).files
+    TableLog.append(dvecs(2300).filter("vec_id >= 2000").coalesce(1), dir)
+    // drop the appended file's assignment entry so it is read and
+    // assigned on the fly, then hide one covered row behind a DV
+    val snap = TableLog.snapshot(dir)
+    val added = snap.files.filterNot(built.contains)
+    assert(added.size == 1, added.toString)
+    TableLog.commit(dir, snap.files,
+      expectedVersion = snap.version + 1, txn = snap.txn,
+      dvs = snap.dvs, checks = snap.checks, rgidx = snap.rgidx,
+      vecidx = snap.vecidx - added.head, vecCol = snap.vecCol)
+    TableLog.deleteVectored(spark, dir, "vec_id = 3")
+    val fin = TableLog.snapshot(dir)
+    assert(fin.dvs.nonEmpty, "no deletion vector in the snapshot")
+    assert(fin.files.filterNot(fin.vecidx.contains) == added,
+      "the appended file should be the one uncovered file")
+
+    val q = queriesOf(dvecs(2300), "vec_id in (3, 7, 2100, 2205)")
+    def rows(df: DataFrame) = df.orderBy("qid", "rk").collect().toSeq
+    val plain = rows(Similarity.ivfTopKPersisted(spark, dir, q, k = 3,
+      nprobe = 4))
+    val plainPq = rows(Similarity.ivfPqTopKPersisted(spark, dir, q, k = 3,
+      nprobe = 4, refine = 64))
+    // the uncovered file's twins are found, the DV'd row never is
+    Seq(plain, plainPq).foreach { rs =>
+      assert(rs.exists(r => r.getLong(0) == 12100L && r.getLong(1) == 2100L),
+        rs.toString)
+      assert(!rs.exists(_.getLong(1) == 3L), s"DV'd row surfaced: $rs")
+    }
+    val (where, _) = Similarity.ivfTopKPersistedWhere(spark, dir, q, k = 3,
+      "vec_id >= 0", nprobe = 4)
+    val (wherePq, _) = Similarity.ivfPqTopKPersistedWhere(spark, dir, q,
+      k = 3, "vec_id >= 0", nprobe = 4, refine = 64)
+    assert(rows(where) == plain, "filtered IVF drifted from unfiltered")
+    assert(rows(wherePq) == plainPq,
+      "filtered IVF-PQ drifted from unfiltered")
+  }
 }

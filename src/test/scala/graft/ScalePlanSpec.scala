@@ -146,6 +146,40 @@ class ScalePlanSpec extends AnyFunSuite {
     }
   }
 
+  /** The higher-order-function expressions (interpreted, no codegen)
+    * anywhere in a logical plan. */
+  private def lambdas(p: org.apache.spark.sql.catalyst.plans.logical
+      .LogicalPlan) = {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform,
+      LambdaFunction}
+    p.flatMap(_.expressions).flatMap(_.find(e =>
+      e.isInstanceOf[LambdaFunction] || e.isInstanceOf[ArrayTransform]))
+  }
+
+  test("lshTopK probe fan-out is plain XORs: no lambda in the plan, " +
+    "buckets equal {qb} ∪ {qb ^ 1<<b}") {
+    // lambda-free inputs: any lambda left in the plan is the operator's
+    val emb = (0 until 40).map(i => (i.toLong,
+        Array.tabulate(8)(j => math.sin(i * 37 + j * 11).toFloat)))
+      .toDF("vec_id", "embedding")
+    val q = emb.filter($"vec_id" < 4).withColumn("vec_id", $"vec_id" + 10000)
+    val plan = Similarity.lshTopK(emb, q, k = 2, bits = 10, probes = 3,
+      tables = 2).queryExecution.optimizedPlan
+    assert(lambdas(plan).isEmpty, s"lambda in the LSH plan:\n$plan")
+    val qbs = Seq(0L, 5L, 1023L, (1L << 61) | 12345L)
+    for ((bits, probes) <- Seq((10, 3), (10, 0), (4, 9), (62, 62))) {
+      val fan = qbs.toDF("qb").select($"qb",
+        Similarity.lshFanOut($"qb", probes, bits).as("fan"))
+      assert(lambdas(fan.queryExecution.optimizedPlan).isEmpty)
+      fan.collect().foreach { r =>
+        val qb = r.getLong(0)
+        val model = qb +: (0 until math.min(probes, bits))
+          .map(b => qb ^ (1L << b))
+        assert(r.getSeq[Long](1) == model, s"bits=$bits probes=$probes: $r")
+      }
+    }
+  }
+
   test("v3/v4 gates join by equality — no nested-loop, no cartesian") {
     Seq("v3_embedding_neardup", "v4_ann_ivf").foreach { g =>
       val p = staticPlan(g).toString
