@@ -36,13 +36,14 @@ object Harness {
   def selected(name: String): Boolean = only.forall(_.contains(name))
 
   /** Spark work started while a probed body ran: jobs, completed stages
-    * and their tasks, input records read, shuffle bytes written, and per
+    * and their tasks, input records read, shuffle bytes written and the
+    * stages that wrote them (one per shuffle the body ran), and per
     * job its name with its result stage's task count. A job is named by
     * the SQL execution that ran it (the action's call site, which AQE's
     * query-stage jobs carry too), else by its result stage. */
   final case class Counts(jobs: Int = 0, stages: Int = 0, tasks: Int = 0,
       recordsRead: Long = 0L, shuffleWriteBytes: Long = 0L,
-      jobNames: Vector[String] = Vector.empty)
+      shuffleStages: Int = 0, jobNames: Vector[String] = Vector.empty)
 
   /** Run `body` and count the Spark work it starts. The listener bus is
     * drained before the listener is added, so no earlier job is counted,
@@ -78,9 +79,13 @@ object Harness {
           .fold("?")(si =>
             s"${execution.getOrElse(si.name)} tasks=${si.numTasks}"))
     }
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      val m = Option(s.stageInfo.taskMetrics)
       counts = counts.copy(stages = counts.stages + 1,
-        tasks = counts.tasks + s.stageInfo.numTasks)
+        tasks = counts.tasks + s.stageInfo.numTasks,
+        shuffleStages = counts.shuffleStages +
+          m.count(_.shuffleWriteMetrics.bytesWritten > 0))
+    }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
       if (e.taskMetrics != null) counts = counts.copy(
         recordsRead =

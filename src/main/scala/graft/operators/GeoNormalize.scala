@@ -77,15 +77,23 @@ object GeoNormalize {
     * (reference parity: 1). */
   def writeClustered(df: DataFrame, outPath: String, numFiles: Int = 0,
       zstdLevel: Int = 22, rowGroupBytes: Long = sinkRowGroupBytes): Unit = {
-    // arrange: the WKB→Hilbert kernel runs in the pre-exchange stage (twice,
-    // for the range sampling) — scatter a few-split input first (no-op at
-    // scale)
-    val keyed = Scatter(df).withColumn("__hk", hilbert_of_geom(col("geom")))
+    // numFiles > 0: the range exchange sets the write's parallelism, so no
+    // Scatter (its partition count plans the query a second time, and its
+    // round-robin exchange adds a shuffle and a job). The exchange keys on
+    // the Hilbert expression and the key column comes after it: a projection
+    // over the input would be pushed below a sort+limit input's limit and
+    // turn its top-k into a global sort. The price is one more run of the
+    // kernel (a WKB decode plus the Hilbert index) per row than a
+    // pre-exchange key column costs: it runs for the range sample, for the
+    // partition key, and again after the exchange for the sort key — with
+    // numFiles = 1 in the one write task. numFiles <= 0: the input's splits
+    // are the write's tasks, so a few-split input is scattered first.
+    val hk = hilbert_of_geom(col("geom"))
     val placed =
-      if (numFiles > 0) keyed.repartitionByRange(numFiles, col("__hk"))
-      else keyed // caller controls partitioning
-    sink(placed.sortWithinPartitions("__hk").drop("__hk"), outPath, zstdLevel,
-      rowGroupBytes)
+      if (numFiles > 0) df.repartitionByRange(numFiles, hk)
+      else Scatter(df)
+    sink(placed.withColumn("__hk", hk).sortWithinPartitions("__hk").drop("__hk"),
+      outPath, zstdLevel, rowGroupBytes)
   }
 
   private val sinkRowGroupBytes: Long = 4L * 1024 * 1024

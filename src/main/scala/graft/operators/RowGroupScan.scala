@@ -226,22 +226,23 @@ object RowGroupScan {
   private[graft] def readNoInfer(spark: SparkSession,
       paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "readNoInfer needs at least one path")
+    val conf = spark.sparkContext.hadoopConfiguration
     try {
+      // listed through the path's own FileSystem (file:, hdfs:, s3a: URIs
+      // and plain paths alike), skipping the `_`/`.` names Spark skips
       def filesOf(path: String): Seq[String] = {
-        val p = java.nio.file.Paths.get(path)
-        if (!java.nio.file.Files.isDirectory(p)) Seq(path)
-        else {
-          import scala.jdk.CollectionConverters._
-          val s = java.nio.file.Files.list(p)
-          try s.iterator.asScala.map(_.toString)
-            .filter(_.endsWith(".parquet")).toSeq.sorted
-          finally s.close()
-        }
+        val p = new org.apache.hadoop.fs.Path(path)
+        val fs = p.getFileSystem(conf)
+        if (!fs.getFileStatus(p).isDirectory) Seq(path)
+        else fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath)
+          .filter { f =>
+            val n = f.getName
+            n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+          }.map(_.toString).sorted
       }
       val headFiles = filesOf(paths.head)
       val head = headFiles.head
-      val msg = parquetSchemaOf(head,
-        spark.sparkContext.hadoopConfiguration)
+      val msg = parquetSchemaOf(head, conf)
       // uniform-schema cross-check (one extra footer, driver-side): when
       // the path set spans more than one file, a set that silently
       // violates the write contract must fall back to inference LOUDLY
@@ -254,8 +255,7 @@ object RowGroupScan {
         else if (headFiles.size > 1) Some(headFiles.last)
         else None
       val drifted = guard.filter(_ != head).exists { g =>
-        val gMsg = parquetSchemaOf(g,
-          spark.sparkContext.hadoopConfiguration)
+        val gMsg = parquetSchemaOf(g, conf)
         import scala.jdk.CollectionConverters._
         def names(m: org.apache.parquet.schema.MessageType) =
           m.getFields.asScala.map(_.getName).toSeq

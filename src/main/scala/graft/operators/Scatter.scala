@@ -20,7 +20,11 @@ import org.apache.spark.sql.DataFrame
   * one cheap shuffle of the raw rows buys back full parallelism for the
   * kernel stage. Never call it where a plan contract forbids an extra
   * Exchange (e.g. the incremental-dedup corpus side, whose no-shuffle plan
-  * is asserted in ScalePlanSpec).
+  * is asserted in ScalePlanSpec), nor where an exchange of the caller's
+  * already sets the parallelism: `GeoNormalize.writeClustered` scatters
+  * only when `numFiles <= 0`, since its range exchange otherwise does.
+  * Reading the partition count plans the input's query (analysis,
+  * optimization, code generation) on the driver once more.
   */
 private[graft] object Scatter {
   def apply(df: DataFrame): DataFrame = {

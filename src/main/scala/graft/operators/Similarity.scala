@@ -100,7 +100,7 @@ object Similarity {
     val centroids = trainSpherical(
       trainingSample(corpus, idCol, vecCol, trainSample), nlist, iters)
     search(probe(queries, idCol, vecCol, centroids, nprobe, None),
-      assign(Scatter(corpus), idCol, vecCol, centroids, None), k, None, None)
+      assign(Scatter(corpus), idCol, vecCol, centroids, None), k, None)
   }
 
   /** IVF-PQ top-k: the memory-bounded ANN path (Jégou et al., "Product
@@ -139,7 +139,7 @@ object Similarity {
     val books = residualBooks(sample, centroids, m, ksub, iters)
     search(probe(queries, idCol, vecCol, centroids, nprobe, Some(books)),
       assign(Scatter(corpus), idCol, vecCol, centroids, Some(books)), k,
-      None, Some(Refine(refine, books,
+      Some(Refine(refine, books,
         corpus.select(col(idCol).as("nid"), col(vecCol).as("nv")))))
   }
 
@@ -247,14 +247,12 @@ object Similarity {
     * equality join, explicitly: without CBO a filtered query frame
     * inherits its scan's size estimate, so auto-broadcast can silently
     * fail and sort-merge the whole cell-assigned corpus through an
-    * exchange. The candidates are semi-joined to the `live` ids first
-    * when some listed rows are no longer visible. Without `refine` every
-    * candidate is cosine-ranked; with it, candidates are ADC-scored from
-    * their codes and only the shortlist reads full vectors. */
+    * exchange. Without `refine` every candidate is cosine-ranked; with
+    * it, candidates are ADC-scored from their codes and only the
+    * shortlist reads full vectors. */
   private def search(probed: DataFrame, candidates: DataFrame, k: Int,
-      live: Option[DataFrame], refine: Option[Refine]): DataFrame = {
-    val cand = live.fold(candidates)(candidates.join(_, Seq("nid"), "left_semi"))
-    val pairs = broadcast(probed).join(cand, Seq("cell"))
+      refine: Option[Refine]): DataFrame = {
+    val pairs = broadcast(probed).join(candidates, Seq("cell"))
       .filter(col("qid") =!= col("nid"))
     refine match {
       case None => rankByCos(pairs, k)
@@ -586,7 +584,7 @@ object Similarity {
   // the STORED codebook, zero training), rewrites drop their inputs'
   // entries and the query path assigns uncovered files on the fly (zero
   // training), and deletion vectors are honored by a candidate-id
-  // semi-join against the live table.
+  // anti-join against the rows they hide.
 
   /** Assign `files`' rows to their nearest stored centroid and stage one
     * assignment sidecar per file under stats/ (NOT yet committed);
@@ -782,10 +780,14 @@ object Similarity {
   }
 
   /** The four persisted entry points: `refine` searches by PQ codes,
-    * `predicate` filters through [[LakeSelect.readWhere]]. The filtered
-    * read, else the live table read, supplies both the live ids — needed
-    * when a predicate or deletion vectors hide rows the sidecars still
-    * list — and the refine vectors. */
+    * `predicate` filters through [[LakeSelect.readWhere]]. The sidecars
+    * still list rows a predicate or deletion vectors hide: with a
+    * predicate the candidates are semi-joined to the filtered read's ids;
+    * without one, they are anti-joined to the ids the deletion vectors
+    * hide, read from the DV'd files only and broadcast (DVs hold
+    * selective deletes), so one deleted row costs a scan of its file,
+    * not a join with every listed row. The filtered read, else the live
+    * table read, supplies the refine vectors. */
   private def persistedTopK(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: DataFrame, k: Int, nprobe: Int, version: Int,
       refine: Option[Int], predicate: Option[String])
@@ -796,24 +798,28 @@ object Similarity {
     val filtered = predicate.map(LakeSelect.readWhere(spark, dir, _, version,
       ix.idCol +: refine.map(_ => ix.vecCol).toSeq))
     lazy val rows = filtered.fold(TableLog.read(spark, dir, version))(_._1)
-    val live =
-      if (filtered.isEmpty && ix.snap.dvs.isEmpty) None
-      else Some(rows.select(col(ix.idCol).as("nid")))
+    def ids(df: DataFrame) = df.select(col(ix.idCol).as("nid"))
+    val listed = candidates(spark, ix)
+    val visible = filtered match {
+      case Some((f, _)) => listed.join(ids(f), Seq("nid"), "left_semi")
+      case None => TableLog.readDeleted(spark, dir, ix.snap).fold(listed)(
+        d => listed.join(broadcast(ids(d)), Seq("nid"), "left_anti"))
+    }
     val byCodes = refine.zip(ix.books).map { case (n, books) =>
       Refine(n, books, rows.select(col(ix.idCol).as("nid"),
         col(ix.vecCol).as("nv")))
     }
     (search(probe(queries, ix.idCol, ix.vecCol, ix.centroids, nprobe,
-      ix.books), candidates(spark, ix), k, live, byCodes), filtered.map(_._2))
+      ix.books), visible, k, byCodes), filtered.map(_._2))
   }
 
   /** ANN top-k THROUGH the persisted index: zero training jobs, the
     * codebook read from its sidecar, candidates from the assignment
     * sidecars' probed cells (uncovered files — post-rewrite outputs —
     * assigned on the fly from the stored centroids), deletion vectors
-    * honored by a live-id semi-join. Result contract matches
-    * [[ivfTopK]] row for row when run against the same snapshot the
-    * index (or its top-ups) covered. */
+    * honored by an anti-join of the ids they hide. Result contract
+    * matches [[ivfTopK]] row for row when run against the same snapshot
+    * the index (or its top-ups) covered. */
   def ivfTopKPersisted(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: DataFrame, k: Int, nprobe: Int = 8,
       version: Int = -1): DataFrame =
@@ -865,11 +871,12 @@ object Similarity {
     * unread until the refine join (the memory shape that matters at
     * 100 TB: the shortlist join moves codes, not embeddings).
     * Uncovered files (post-rewrite outputs) are encoded on the fly
-    * from the stored codebooks; deletion vectors are honored by a
-    * live-id semi-join; the exact-cosine refine reads vectors from the
-    * LIVE table read. Row-for-row equal to [[ivfPqTopK]] with the same
-    * (nlist, m, ksub, trainSample, iters) against the snapshot the
-    * index was built on — the training inputs are byte-identical. */
+    * from the stored codebooks; deletion vectors are honored by an
+    * anti-join of the ids they hide; the exact-cosine refine reads
+    * vectors from the LIVE table read. Row-for-row equal to
+    * [[ivfPqTopK]] with the same (nlist, m, ksub, trainSample, iters)
+    * against the snapshot the index was built on — the training inputs
+    * are byte-identical. */
   def ivfPqTopKPersisted(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: DataFrame, k: Int, nprobe: Int = 8,
       refine: Int = 64, version: Int = -1): DataFrame =

@@ -771,6 +771,30 @@ object TableLog {
             col("__graft_ridx") === col("__graft_dv_ridx"), "left_anti")
     }
 
+  /** The rows `snap`'s deletion vectors hide, read from the DV'd files
+    * only — O(DV'd files), never a table scan; None when no file of the
+    * snapshot carries a vector. Exactly the rows [[read]] drops. */
+  private[operators] def readDeleted(spark: SparkSession, dir: String,
+      snap: Snapshot): Option[DataFrame] = {
+    import org.apache.spark.sql.functions.broadcast
+    val dvFiles = snap.files.filter(snap.dvs.contains)
+    val dvs = snap.dvs.filter { case (f, _) => dvFiles.contains(f) }
+    dvPairs(spark, dir, dvs).map { pairs =>
+      val abs = dvFiles.map(f => Paths.get(dir).resolve(f).toString)
+      tagPhys(RowGroupScan.readNoInfer(spark, abs))
+        .join(broadcast(dvKey(pairs)), Seq("__graft_fn", "__graft_ridx"),
+          "left_semi")
+        .drop("__graft_fn", "__graft_ridx")
+    }
+  }
+
+  /** DV (f, ridx) pairs keyed like [[tagPhys]]'s tags: (basename, row). */
+  private def dvKey(pairs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{element_at, split}
+    pairs.select(element_at(split(col("f"), "/"), -1).as("__graft_fn"),
+      col("ridx").as("__graft_ridx"))
+  }
+
   /** Apply `dvs` to a plain parquet scan of this table's files. */
   private[operators] def applyDv(spark: SparkSession, dir: String,
       df: DataFrame, dvs: Map[String, String]): DataFrame =
@@ -1121,8 +1145,7 @@ object TableLog {
     * Output = table schema + `_change_type` ('insert' | 'delete'). */
   def changes(spark: SparkSession, dir: String,
       fromV: Int, toV: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, element_at,
-      lit, split}
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
     require(fromV >= 1 && toV >= fromV,
       s"need 1 <= fromV <= toV: $fromV, $toV")
     val a = snapshot(dir, fromV)
@@ -1163,11 +1186,8 @@ object TableLog {
       val fs = pairs.select("f").distinct().collect().map(_.getString(0))
       if (fs.isEmpty) None
       else {
-        val key = pairs.select(
-          element_at(split(col("f"), "/"), -1).as("__graft_fn"),
-          col("ridx").as("__graft_ridx"))
         Some(tagPhys(scanEvolved(spark, dir, b, fs.toSeq))
-          .join(broadcast(key), Seq("__graft_fn", "__graft_ridx"),
+          .join(broadcast(dvKey(pairs)), Seq("__graft_fn", "__graft_ridx"),
             "left_semi")
           .drop("__graft_fn", "__graft_ridx")
           .withColumn("_change_type", lit(tag)))

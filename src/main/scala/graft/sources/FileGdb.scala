@@ -1098,13 +1098,16 @@ object FileGdb {
         .collect()
     if (splits.isEmpty) return readLargest(spark, gdbDir) // sparse/empty index
     val src = target.substring(target.lastIndexOf('/') + 1)
+    // the last split runs to the end of the table: its length, once
+    lazy val tableLen = tfs.getFileStatus(new org.apache.hadoop.fs.Path(target)).getLen
+    val planned = splits.map { case (oid, n, start, end) =>
+      (oid, n, start, if (end < 0) tableLen else end)
+    }
+    val conf = SessionFiles.conf(spark)
     spark.sparkContext
-      .parallelize(splits.toIndexedSeq, splits.length)
+      .parallelize(planned.toIndexedSeq, planned.length)
       .flatMap { case (startOid, rowCount, byteStart, byteEnd) =>
-        val p = new org.apache.hadoop.fs.Path(target)
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        val in = fs.open(p)
-        try {
+        SessionFiles.withStream(conf, target) { in =>
           // header → field section (a few hundred bytes, re-read per task)
           val head = new Array[Byte](44)
           in.readFully(0, head)
@@ -1120,12 +1123,11 @@ object FileGdb {
             .getOrElse(throw new IllegalStateException(
               s"unparseable field section in $target"))
           // this split's byte window only
-          val end = if (byteEnd < 0) fs.getFileStatus(p).getLen else byteEnd
-          val buf = new Array[Byte]((end - byteStart).toInt)
+          val buf = new Array[Byte]((byteEnd - byteStart).toInt)
           in.readFully(byteStart, buf)
           FileGdbCodec.decodeRows(buf, fields, startOid, rowCount)
             .map { case (no, attrs, wkb) => (src, no, attrs, wkb) }
-        } finally in.close()
+        }
       }
       .toDF("source", "row_no", "attrs", "geom")
   }

@@ -254,12 +254,16 @@ object Shapefile {
     * geom WKB). One Spark task per file via the binaryFile source —
     * file-granular parallelism and retry exactly like the reference's Pool
     * (east_asia.py:308-314), scheduled by Spark. */
-  def read(spark: SparkSession, pathGlob: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
+  def read(spark: SparkSession, pathGlob: String): DataFrame =
+    decodeWhole(spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.shp")
-      .load(pathGlob)
-      .select(col("path"), col("content"))
+      .load(pathGlob))
+
+  /** Whole-file decode of a binaryFile frame of `.shp` files. */
+  private def decodeWhole(files: DataFrame): DataFrame = {
+    val spark = files.sparkSession
+    import spark.implicits._
+    files.select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
         val src = path.substring(path.lastIndexOf('/') + 1)
@@ -274,7 +278,12 @@ object Shapefile {
     * caps a stage at one task (reference F1's limit; the Japan4 case in
     * BASELINE.md). Index decoding happens on executors; only the split
     * plan — a few rows per FILE, not per record — returns to the driver.
-    * Files without a `.shx` sidecar fall back to whole-file decoding. */
+    *
+    * Each `.shp` is read once: an indexed one only through its range
+    * tasks, which open it with the session's Hadoop conf
+    * ([[SessionFiles]]). The `.shp` files without a usable `.shx` are
+    * listed on the driver and only they are decoded whole, one task per
+    * file; with none, the whole-file read is not planned at all. */
   def readSplit(spark: SparkSession, pathGlob: String,
       maxRecordsPerSplit: Int = 250000): DataFrame = {
     import spark.implicits._
@@ -291,34 +300,33 @@ object Shapefile {
         }
         .collect()
     val indexed = splits.map(_._1).toSet
+    // the .shp files, listed on the driver (no job); their URIs turned back
+    // into the `path` column's form that `indexed` holds
+    val unindexed = spark.read.format("binaryFile")
+      .option("pathGlobFilter", "*.shp")
+      .load(pathGlob)
+      .inputFiles
+      .map(f => new org.apache.hadoop.fs.Path(new java.net.URI(f)).toString)
+      .filterNot(indexed)
     // ranges: one task each, reading only its byte window
+    val conf = SessionFiles.conf(spark)
     val ranged = spark.sparkContext
       .parallelize(splits.toIndexedSeq, math.max(1, splits.length))
       .flatMap { case (shp, off, len) =>
-        val p = new org.apache.hadoop.fs.Path(shp)
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        val in = fs.open(p)
-        try {
-          val buf = new Array[Byte](len)
-          in.readFully(off, buf)
-          val src = shp.substring(shp.lastIndexOf('/') + 1)
-          ShapefileCodec.decodeRange(buf).map { case (no, st, wkb) => (src, no, st, wkb) }
-        } finally in.close()
+        val buf = new Array[Byte](len)
+        SessionFiles.withStream(conf, shp)(_.readFully(off, buf))
+        val src = shp.substring(shp.lastIndexOf('/') + 1)
+        ShapefileCodec.decodeRange(buf).map { case (no, st, wkb) => (src, no, st, wkb) }
       }
       .toDF("source", "record_no", "shape_type", "geom")
-    // files without a .shx: whole-file decode, one task per file (S1 path)
-    val whole = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.shp")
-      .load(pathGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .filter(pc => !indexed.contains(pc._1))
-      .flatMap { case (path, bytes) =>
-        val src = path.substring(path.lastIndexOf('/') + 1)
-        ShapefileCodec.decode(bytes).map { case (no, st, wkb) => (src, no, st, wkb) }
-      }
-      .toDF("source", "record_no", "shape_type", "geom")
-    ranged.unionByName(whole)
+    if (unindexed.isEmpty) return ranged
+    // files without a usable .shx: whole-file decode, one task per file.
+    // load() globs each path again, so a listed name's glob metacharacters
+    // are escaped: `roads[2020].shp` must load itself, not `roads2.shp`
+    val literal = unindexed.map(_.replaceAll("""([\\\[\]{}*?])""", """\\$1"""))
+    val whole = decodeWhole(
+      spark.read.format("binaryFile").load(literal.toIndexedSeq: _*))
+    if (splits.isEmpty) whole else ranged.unionByName(whole)
   }
 
   /** Read shapefiles with their .dbf attribute sidecars: geometry rows

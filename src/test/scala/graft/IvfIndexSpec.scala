@@ -362,4 +362,36 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(rows(wherePq) == plainPq,
       "filtered IVF-PQ drifted from unfiltered")
   }
+
+  test("with a DV in the snapshot, the query reads only the DV'd data " +
+    "file: its hidden ids are anti-joined to the candidates") {
+    import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    val dir = java.nio.file.Files.createTempDirectory("ivfanti")
+      .toString + "/t"
+    TableLog.append(vecs(1000).repartition(2), dir)
+    Similarity.buildIvfIndex(spark, dir, nlist = 8,
+      trainSample = 300, iters = 2)
+    TableLog.deleteVectored(spark, dir, "vec_id = 5")
+    val snap = TableLog.snapshot(dir)
+    def path(f: String) = java.nio.file.Paths.get(dir).resolve(f)
+      .toUri.getPath
+    val dvd = snap.files.filter(snap.dvs.contains).map(path)
+    assert(snap.files.size == 2 && dvd.size == 1, snap.toString)
+    val q = queriesOf(vecs(1000), "vec_id < 8")
+    val ranked = Similarity.ivfTopKPersisted(spark, dir, q, k = 2, nprobe = 2)
+    val data = snap.files.map(path).toSet
+    val read = ranked.inputFiles.map(f => new java.net.URI(f).getPath)
+      .filter(data).toSeq
+    assert(read == dvd, s"data files read: $read, DV'd: $dvd")
+    def joins(p: LogicalPlan) = p.collect { case j: Join => j }
+    val plan = ranked.queryExecution.optimizedPlan
+    assert(joins(plan).filter(_.joinType == Inner)
+      .exists(j => joins(j.right).exists(_.joinType == LeftAnti)),
+      s"no anti-join on the cell join's candidate side:\n${plan.treeString}")
+    val rs = ranked.collect()
+    assert(rs.exists(r => r.getLong(0) == 10003L && r.getLong(1) == 3L),
+      rs.toSeq.toString)
+    assert(!rs.exists(_.getLong(1) == 5L), s"DV'd row surfaced: ${rs.toSeq}")
+  }
 }

@@ -79,6 +79,40 @@ class PipelineSpec extends AnyFunSuite {
     assert(files.nonEmpty && files.forall(_.getName.contains("zstd")))
   }
 
+  test("writeClustered with numFiles = 1 on a one-split input shuffles once: " +
+    "the range exchange, no round-robin scatter before it") {
+    val dir = tmp() + "/one"
+    val df = GeoNormalize.normalize(fixture(), flipProbe = false).coalesce(1)
+    val (_, c) = Harness.probe(spark)(
+      GeoNormalize.writeClustered(df, dir, numFiles = 1))
+    assert(c.shuffleStages == 1, c.toString)
+    assert(spark.read.parquet(dir).count() == df.count())
+  }
+
+  test("writeClustered with numFiles > 0 keeps a sort+limit input's top-k: " +
+    "the range sample, the range shuffle and the write are its only jobs") {
+    val dir = tmp() + "/topk"
+    val df = spark.range(0, 20000, 1, 3).orderBy($"id".desc).limit(500)
+      .withColumn("geom", st_point(($"id" % 360).cast("double") - 180.0,
+        ($"id" % 170).cast("double") - 85.0))
+    val (_, c) = Harness.probe(spark)(
+      GeoNormalize.writeClustered(df, dir, numFiles = 2))
+    assert(c.jobs == 3, c.jobNames.toString)
+    assert(spark.read.parquet(dir).count() == 500)
+  }
+
+  test("readNoInfer lists a converted dir given as a file: URI through its " +
+    "FileSystem and plans with zero jobs") {
+    val dir = tmp() + "/conv"
+    GeoNormalize.writeClustered(
+      GeoNormalize.normalize(fixture(), flipProbe = false), dir, numFiles = 2)
+    val (df, c) = Harness.probe(spark)(
+      RowGroupScan.readNoInfer(spark, Seq(s"file:$dir")))
+    assert(c.jobs == 0, c.jobNames.toString)
+    assert(df.columns.toSeq == Seq("fid", "name", "geom"))
+    assert(df.count() == 188)
+  }
+
   test("writeClustered stamps a GeoParquet 1.1 geo footer; Spark metadata preserved") {
     val dir = tmp() + "/geofooter"
     val df = GeoNormalize.normalize(fixture(), flipProbe = false)
@@ -408,6 +442,18 @@ class PipelineSpec extends AnyFunSuite {
     val fails2 = GeoNormalize.convertAll(spark,
       Seq(src -> 4326, s"$base/in/missing" -> 4326), out)
     assert(fails2.map(_._1._1) == Seq(s"$base/in/missing"))
+  }
+
+  test("convertAll on a one-file source runs 4 jobs: the flip probe's two, " +
+    "the range shuffle and the write") {
+    val base = tmp()
+    val src = s"$base/in/one"
+    fixture().filter($"Shape".isNotNull).select($"fid", $"Shape".as("geom"))
+      .coalesce(1).write.parquet(src)
+    val (fails, c) = Harness.probe(spark)(
+      GeoNormalize.convertAll(spark, Seq(src -> 4326), s"$base/out"))
+    assert(fails.isEmpty)
+    assert(c.jobs == 4, c.jobNames.toString)
   }
 
   test("spatial join: grid prefilter + JTS refine matches brute force") {

@@ -96,6 +96,13 @@ object ShpFixture {
   }
 }
 
+/** The local file system under a scheme of its own, which only a conf that
+  * names its class (`fs.sessiononly.impl`) can open. */
+class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("sessiononly:///")
+  override def getScheme: String = "sessiononly"
+}
+
 class ShapefileSpec extends AnyFunSuite {
 
   test("decode point + polygon records to WKB") {
@@ -192,5 +199,62 @@ class ShapefileSpec extends AnyFunSuite {
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "demo.shp"),
       ShpFixture.pointAndPolygon())
     assert(Shapefile.readSplit(spark, dir).count() == 2)
+  }
+
+  /** `big.shp` (`n` points) with its `.shx`, and `demo.shp` (2 records)
+    * without one, in a new directory. */
+  private def mixedDir(n: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory("shpmixed").toString
+    val (shp, shx) = ShpFixture.manyPoints(n)
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "big.shp"), shp)
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "big.shx"), shx)
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "demo.shp"),
+      ShpFixture.pointAndPolygon())
+    dir
+  }
+
+  test("readSplit reads each .shp once: the indexed one only through its " +
+    "ranges, the unindexed one whole") {
+    val spark = SparkTestSession.spark
+    val dir = mixedDir(3000)
+    val (rows, c) = Harness.probe(spark)(
+      Shapefile.readSplit(spark, dir, maxRecordsPerSplit = 1000)
+        .select("source", "record_no").collect())
+    val keys = rows.map(r => (r.getString(0), r.getInt(1)))
+    assert(keys.length == 3002 && keys.distinct.length == keys.length)
+    assert(keys.groupBy(_._1).map { case (k, v) => k -> v.length } ==
+      Map("big.shp" -> 3000, "demo.shp" -> 2))
+    // one record per file read whole: big.shx and demo.shp, not big.shp
+    assert(c.recordsRead == 2, s"read ${c.recordsRead} whole files")
+  }
+
+  test("readSplit decodes an unindexed .shp whose name is a glob pattern " +
+    "as itself, not as the indexed file the pattern matches") {
+    val spark = SparkTestSession.spark
+    val dir = java.nio.file.Files.createTempDirectory("shpglob").toString
+    val (shp, shx) = ShpFixture.manyPoints(50)
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "roads2.shp"), shp)
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "roads2.shx"), shx)
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "roads[2020].shp"),
+      ShpFixture.pointAndPolygon())
+    val counts = Shapefile.readSplit(spark, dir).groupBy("source").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counts == Map("roads2.shp" -> 50L, "roads[2020].shp" -> 2L),
+      counts.toString)
+  }
+
+  test("readSplit's range tasks open files with the session's Hadoop conf") {
+    val spark = SparkTestSession.spark
+    val dir = mixedDir(2000)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.sessiononly.impl", "fs.sessiononly.impl.disable.cache")
+    try {
+      conf.set(keys(0), classOf[SessionOnlyFs].getName)
+      conf.set(keys(1), "true")
+      val df = Shapefile.readSplit(spark, s"sessiononly:$dir",
+        maxRecordsPerSplit = 500)
+      assert(df.rdd.getNumPartitions >= 4)
+      assert(df.count() == 2002)
+    } finally keys.foreach(conf.unset)
   }
 }

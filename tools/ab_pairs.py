@@ -10,13 +10,16 @@ pairs and the change first on odd ones. For every end-to-end metric of
 BENCHMARK.json it prints each side's median and quartiles and how many pairs
 the change won (ties count for neither side), and whether the gain rule
 holds: the change wins at least 9/10 of the pairs and the medians differ by
-more than the parent's interquartile range. A run that fails or reports
+more than the parent's interquartile range. It then prints each side's
+median of every op's p50 (the run's `# op <kind> ... p50=` lines), so a
+gain can be put down to its op without a traced round. A run that fails or reports
 correct=false is listed and its pair is left out of the statistics. Raw
 per-run results go to --out when given. Nothing under perfbench/ or
 BENCHMARK.json is changed.
 """
 import argparse
 import json
+import re
 import statistics
 import subprocess
 import sys
@@ -32,6 +35,9 @@ def parse_seeds(text: str) -> list:
     return seeds
 
 
+OP_LINE = re.compile(r"^# op (\S+)\s+n=\s*\d+\s+p50=\s*([0-9.]+) ms")
+
+
 def run_one(checkout: Path, workload: str, seed: int, seconds: int) -> dict:
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
@@ -45,6 +51,8 @@ def run_one(checkout: Path, workload: str, seed: int, seconds: int) -> dict:
             "wall_s": round(time.time() - t0, 1),
             "metrics": {k: v["value"] for k, v in result["metrics"].items()}
             if result else {},
+            "ops": {m.group(1): float(m.group(2))
+                    for m in map(OP_LINE.match, done.stdout.splitlines()) if m},
             "stderr_tail": "" if ok else done.stderr[-2000:]}
 
 
@@ -108,6 +116,15 @@ def main() -> int:
         fmt = lambda q: "/".join(f"{x:.4g}" for x in q)  # noqa: E731
         print(f"{name:24} {fmt(pq):>30} {fmt(cq):>30} "
               f"{wins:>3}/{len(good):<3} {'holds' if gain else '-':>9}")
+    print(f"{'op p50 (ms)':24} {'parent median':>30} {'change median':>30} {'wins':>7}")
+    ops = sorted(set.intersection(*(set(p[side]["ops"]) for p in good
+                                    for side in ("parent", "change"))))
+    for op in ops:
+        par = [p["parent"]["ops"][op] for p in good]
+        chg = [p["change"]["ops"][op] for p in good]
+        wins = sum(c < p for p, c in zip(par, chg))
+        print(f"{op:24} {statistics.median(par):>30.1f} "
+              f"{statistics.median(chg):>30.1f} {wins:>3}/{len(good):<3}")
     return 0
 
 
