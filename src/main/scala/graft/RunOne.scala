@@ -3,7 +3,7 @@ package graft
 /** Dev tool: run a single SparkEntry gate query by name against a chosen
   * SF dir, print its timing (after one warm-up run) and, with `explain`,
   * the formatted physical plan. Usage:
-  *   runMain graft.RunOne <query> [sfDir] [explain]
+  *   runMain graft.RunOne <query[,query…]> [sfDir] [explain] [jobs|jobsv]
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
@@ -19,9 +19,10 @@ object RunOne {
             s"SPARK_GRAFT_CONF token missing '=': '$kv' (expected k=v;k=v)")
         }
       })
-    // `jobs` arg: per-run Spark job/stage/task counts — the guide-§1
-    // "where does the fixed overhead go" probe for gates whose cost is
-    // job-count-bound rather than data-bound (lifecycle gates at sf0.1);
+    // `jobs` arg: per-run Spark job/stage/task counts, input records read
+    // and shuffle bytes written — the "where does the fixed overhead go"
+    // probe for gates whose cost is job-count-bound rather than
+    // data-bound (lifecycle gates at sf0.1);
     // `jobsv` adds each job's name (the call site of the action whose
     // SQL execution ran it, else its result stage) and its result stage's
     // task count (a hint at the data volume behind the job)
@@ -42,7 +43,7 @@ object RunOne {
       }
       runs.foreach { case ((n, s), c) =>
         if (counting)
-          println(f"RUNONE $nm%s rows=$n%d time=$s%.3f s jobs=${c.jobs}%d stages=${c.stages}%d tasks=${c.tasks}%d")
+          println(f"RUNONE $nm%s rows=$n%d time=$s%.3f s jobs=${c.jobs}%d stages=${c.stages}%d tasks=${c.tasks}%d records=${c.recordsRead}%d shuffle_write=${c.shuffleWriteBytes}%d")
         else println(f"RUNONE $nm%s rows=$n%d time=$s%.3f s")
         if (verbose) c.jobNames.zipWithIndex.foreach { case (site, i) =>
           println(f"  JOB $i%3d  $site%s")

@@ -729,15 +729,14 @@ object SparkEntry {
       // in any polygon" via `WHERE NOT EXISTS (… st_contains(…))`
       // (East-Asia-Building-Footprints.md:127-141 runs the equivalent
       // set-difference check). Catalyst turns the subquery into a
-      // LeftAnti join only in the RewriteSubquery batch — AFTER the
-      // optimizer batch hosting SpatialJoinRewrite — so this gate rides
-      // SpatialJoinStrategy: the planner-time twin keys the probe on its
-      // centroid cell (scalar — probe multiplicity untouched), explodes
-      // the polygon coverings, and chains hash anti joins; a
-      // BroadcastNestedLoopJoin over |points|·|polys| never appears
-      // (pinned in SpatialJoinRuleSpec). The oracle replays contains as
-      // strict interval arithmetic (JTS contains excludes the boundary),
-      // same as j3.
+      // LeftAnti join in the RewriteSubquery batch, which runs before
+      // SpatialJoinRewrite (installed as an extra optimization): the rule
+      // keys the probe on its centroid cell (scalar — probe multiplicity
+      // untouched), explodes the polygon coverings, and chains hash anti
+      // joins; a BroadcastNestedLoopJoin over |points|·|polys| never
+      // appears (pinned in SpatialJoinRuleSpec). The oracle replays
+      // contains as strict interval arithmetic (JTS contains excludes the
+      // boundary), same as j3.
       graft.functions.GraftFunctions.registerAll(s)
       t(s, d, "lineitem")
         .select(st_point(cxCol, cyCol).as("geom"), col("l_orderkey"))

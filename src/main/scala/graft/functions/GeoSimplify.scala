@@ -230,31 +230,15 @@ object GeoSimplify extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     inlineCtors(plan).transformUp { case node => node.transformExpressionsUp(rewrites) }
 
-  /** Install into an existing session (idempotent). For sessions built from
-    * scratch, `SparkSession.builder().withExtensions(new GraftExtensions)`
-    * achieves the same at construction time. */
+  /** Install into an existing session (idempotent): this rule and
+    * [[SpatialJoinRewrite]] run as extra optimizations, after Spark's
+    * own batches — RewriteSubquery included, so the rewrite also sees the
+    * semi/anti joins that `[NOT] EXISTS` subqueries become. */
   def install(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraOptimizations
     if (!cur.contains(GeoSimplify)) {
       spark.experimental.extraOptimizations =
         cur :+ GeoSimplify :+ SpatialJoinRewrite
     }
-    // planner-time twin for WHERE [NOT] EXISTS spatial predicates — the
-    // semi/anti join they become only exists after the optimizer batch
-    // hosting SpatialJoinRewrite (see SpatialJoinStrategy scaladoc)
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(SpatialJoinStrategy)) {
-      spark.experimental.extraStrategies = strategies :+ SpatialJoinStrategy
-    }
-  }
-}
-
-/** `SparkSessionExtensions` hook: register the optimizer rules (and nothing
-  * else — functions register per-session via GraftFunctions.registerAll). */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => GeoSimplify)
-    e.injectOptimizerRule(_ => SpatialJoinRewrite)
-    e.injectPlannerStrategy(_ => SpatialJoinStrategy)
   }
 }

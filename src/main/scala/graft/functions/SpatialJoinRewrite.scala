@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.LongType
@@ -14,10 +14,11 @@ import org.apache.spark.sql.types.LongType
   * `st_intersects` / `st_dwithin`) has no equi-conjunct, so Catalyst can
   * only plan a broadcast-nested-loop or cartesian product — |A|·|B|
   * predicate tests, the plan that melts at any scale.
-  * [[graft.operators.SpatialJoin]] is the hand-written fix; this rule
-  * applies the SAME decompositions to the logical plan automatically, so
+  * This rule rewrites such joins into cell equi-joins automatically, so
   * plain SQL users get the scalable shape (reference analogue: every
-  * DuckDB spatial query is declarative, east_asia.py:176-178).
+  * DuckDB spatial query is declarative, east_asia.py:176-178). Its
+  * containment decomposition, [[containment]], also plans the hand-called
+  * [[graft.operators.SpatialJoin]] point-in-polygon operators.
   *
   * `st_contains(outer, inner)` — one-sided covering: the inner side keys
   * on its centroid's res-R cell (containment implies envelope
@@ -69,10 +70,10 @@ import org.apache.spark.sql.types.LongType
   *    resolve identically; plans whose probe schema contains a MapType
   *    are left to the naive plan — maps aren't joinable keys).
   *
-  * `WHERE [NOT] EXISTS (… st_contains(…))` only BECOMES a semi/anti join
-  * in the optimizer's RewriteSubquery batch — after this rule's batch has
-  * finished — so [[SpatialJoinStrategy]] applies the same rewrite at
-  * planning time for those.
+  * `WHERE [NOT] EXISTS (… st_contains(…))` becomes a semi/anti join in
+  * the optimizer's RewriteSubquery batch. `GeoSimplify.install` registers
+  * this rule as an extra optimization, which Spark runs after that batch,
+  * so those joins are rewritten like any other.
   *
   * The rule fires only on joins with no equality conjunct and no user
   * join hint (the coarse branches carry broadcast hints, which also
@@ -167,11 +168,77 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
             rewriteInner(j.output, left, right, conjuncts, pick, res)
           case None => j
         }
-      case j @ Join(_, _, LeftSemi | LeftAnti, Some(_), hint)
+      case j @ Join(left, right, jt @ (LeftSemi | LeftAnti), Some(cond), hint)
           if hint == JoinHint.NONE =>
-        rewriteSemiAnti(j).getOrElse(j)
+        rewriteSemiAnti(left, right, jt, cond, res).getOrElse(j)
     }
   }
+
+  /** The containment decomposition — the one copy, serving both contains
+    * picks of this rule and [[graft.operators.SpatialJoin]]'s
+    * point-in-polygon operators. `probeKey` (the probe row's one cell)
+    * and `covering` (the container's cells, empty past the cell cap) are
+    * the lattice: rect grid or H3. `condition` is the exact predicate
+    * plus any residual conjuncts.
+    *
+    * The fine branch equi-joins the keyed probe with the exploded
+    * covering and refines with `condition`; a true pair shares exactly
+    * one cell. The coarse branch, when asked for, joins the probe with
+    * the broadcast containers whose covering overflowed. Inner returns
+    * fine ∪ coarse over `probe.output ++ container.output`; semi is
+    * fine-semi ∪ (fine-anti ⋉ oversized) and anti is fine-anti ▷
+    * oversized, each over `probe.output`, so every probe row lands in
+    * exactly one branch and its multiplicity is untouched. */
+  private[graft] def containment(probe: LogicalPlan, container: LogicalPlan,
+      containerG: Expression, condition: Seq[Expression], joinType: JoinType,
+      probeKey: Expression, covering: Expression, coarse: Boolean)
+      : LogicalPlan = {
+    // the key is projected once per probe row and wrapped in
+    // coalesce(key, -1): a nullable key lets Catalyst infer an
+    // IsNotNull(key) filter and push it into the probe scan, where filter
+    // and project would each run the WKB decode + cell encode. The -1
+    // sentinel matches no cell, so null geometries still drop at the join.
+    val key = Alias(Coalesce(Seq(probeKey, Literal(-1L))), "__graft_key")()
+    val keyed = Project(probe.output :+ key, probe)
+    // explode_OUTER + IsNotNull, not a plain explode: the latter lets
+    // InferFiltersFromGenerate add `isnotnull(covering) AND
+    // size(covering) > 0` below the generate, evaluating the covering
+    // three times per container instead of once
+    val cell = AttributeReference("__graft_cell", LongType)()
+    val gridable = Filter(IsNotNull(cell), Generate(Explode(covering), Nil,
+      outer = true, qualifier = None, generatorOutput = Seq(cell),
+      child = container))
+    def fine(jt: JoinType): LogicalPlan = Join(keyed, gridable, jt,
+      Some((EqualTo(key.toAttribute, cell) +: condition).reduce(And(_, _))),
+      JoinHint.NONE)
+    def withCoarse(left: LogicalPlan, jt: JoinType): LogicalPlan =
+      Join(left, oversized(container, containerG, covering), jt,
+        Some(condition.reduce(And(_, _))),
+        JoinHint(None, Some(HintInfo(Some(BROADCAST)))))
+    val both = probe.output ++ container.output
+    joinType match {
+      case Inner if coarse => Union(Seq(Project(both, fine(Inner)),
+        Project(both, withCoarse(probe, Inner))))
+      case Inner => Project(both, fine(Inner))
+      case LeftSemi if coarse => Project(probe.output, Union(Seq(
+        fine(LeftSemi), withCoarse(fine(LeftAnti), LeftSemi))))
+      case LeftAnti if coarse =>
+        Project(probe.output, withCoarse(fine(LeftAnti), LeftAnti))
+      case LeftSemi | LeftAnti => Project(probe.output, fine(joinType))
+      case other => throw new IllegalArgumentException(
+        s"containment supports Inner, LeftSemi and LeftAnti, not $other")
+    }
+  }
+
+  /** The containers whose covering overflowed the cell cap (an empty
+    * covering on a non-null geometry; a null geometry contains nothing). */
+  private[graft] def oversized(container: LogicalPlan,
+      containerG: Expression, covering: Expression): Filter =
+    Filter(And(EqualTo(Size(covering), Literal(0)), IsNotNull(containerG)),
+      container)
+
+  private def rectKey(g: Expression, res: Int): Expression =
+    GridCell(CentroidX(g), CentroidY(g), Literal(res))
 
   /** The Inner-join decomposition for a picked spatial conjunct,
     * projected to `output`. */
@@ -179,31 +246,12 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       right: LogicalPlan, conjuncts: Seq[Expression], pick: Pick,
       res: Int): LogicalPlan = pick match {
     case ContainsPick(containsExpr, outerG, innerG, gSide, pSide) =>
-      val residual = conjuncts.filterNot(_ eq containsExpr)
-      // fine branch: explode the outer covering, equi-join on cell
-      val cells = CellsCovering(outerG, Literal(res))
-      val cellAttr = AttributeReference("__graft_cell", LongType,
-        nullable = false)()
-      val gridable = Generate(Explode(cells), Nil, outer = false,
-        qualifier = None, generatorOutput = Seq(cellAttr),
-        child = gSide)
-      val pKey = Coalesce(Seq(
-        GridCell(CentroidX(innerG), CentroidY(innerG), Literal(res)),
-        Literal(-1L)))
-      val fineCond = (EqualTo(pKey, cellAttr) +: containsExpr +:
-        residual).reduce(And(_, _))
-      val fine = Project(output,
-        Join(pSide, gridable, Inner, Some(fineCond), JoinHint.NONE))
-      // coarse branch: covering overflowed the cap → broadcast the
-      // (few) oversized outers against the inner side
-      val oversized = Filter(
-        And(EqualTo(Size(cells), Literal(0)), IsNotNull(outerG)),
-        gSide)
-      val coarseCond = (containsExpr +: residual).reduce(And(_, _))
-      val coarse = Project(output,
-        Join(pSide, oversized, Inner, Some(coarseCond),
-          JoinHint(None, Some(HintInfo(Some(BROADCAST))))))
-      Union(Seq(fine, coarse))
+      // the rule cannot probe for oversized outers, so the coarse branch
+      // is always planned; AQE drops it when its broadcast comes back empty
+      Project(output, containment(pSide, gSide, outerG,
+        containsExpr +: conjuncts.filterNot(_ eq containsExpr), Inner,
+        rectKey(innerG, res), CellsCovering(outerG, Literal(res)),
+        coarse = true))
     case GeodeticPick(predExpr, aG, bG, meters) =>
       // built with the DataFrame API over the SAME child plans
       // (SparkInternals.ofRows preserves attribute identity), so the
@@ -279,13 +327,9 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
         Join(genA, genB, Inner, Some(fineCond), JoinHint.NONE))
       // coarse branches: (oversized a) × all b, plus (fit a) ×
       // (oversized b) — a disjoint split of the non-fine pair space
-      val aOver = Filter(
-        And(EqualTo(Size(cellsA), Literal(0)), IsNotNull(aG)), left)
-      val aFit = Filter(
-        Not(And(EqualTo(Size(cellsA), Literal(0)), IsNotNull(aG))),
-        left)
-      val bOver = Filter(
-        And(EqualTo(Size(cellsB), Literal(0)), IsNotNull(bG)), right)
+      val aOver = oversized(left, aG, cellsA)
+      val aFit = Filter(Not(aOver.condition), left)
+      val bOver = oversized(right, bG, cellsB)
       val coarse1 = Project(output,
         Join(aOver, right, Inner, Some(pred),
           JoinHint(Some(HintInfo(Some(BROADCAST))), None)))
@@ -295,17 +339,10 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       Union(Seq(fine, coarse1, coarse2))
   }
 
-  /** The semi/anti decomposition (see class doc). Shared with
-    * [[SpatialJoinStrategy]] — None leaves the join to the default
-    * planner. */
-  def rewriteSemiAnti(j: Join): Option[LogicalPlan] = {
-    if (!enabled) return None
-    val res = resolution
-    val Join(left, right, joinType, condOpt, hint) = j
-    if (hint != JoinHint.NONE) return None
-    val cond = condOpt.getOrElse(return None)
-    val isSemi = joinType == LeftSemi
-    if (!isSemi && joinType != LeftAnti) return None
+  /** The semi/anti decomposition (see class doc); None leaves the join
+    * to the default planner. */
+  private def rewriteSemiAnti(left: LogicalPlan, right: LogicalPlan,
+      joinType: JoinType, cond: Expression, res: Int): Option[LogicalPlan] = {
     val conjuncts = splitConjunctivePredicates(cond)
     if (hasEquiConjunct(left, right, conjuncts)) return None
     pickFor(left, right, conjuncts) match {
@@ -313,29 +350,9 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
         // probe is the CONTAINED side: scalar centroid-cell key on the
         // probe (multiplicity untouched), covering explode on the
         // container side, fine/coarse chained
-        val residual = conjuncts.filterNot(_ eq c)
-        val cells = CellsCovering(o, Literal(res))
-        val cellAttr = AttributeReference("__graft_cell", LongType,
-          nullable = false)()
-        val gridable = Generate(Explode(cells), Nil, outer = false,
-          qualifier = None, generatorOutput = Seq(cellAttr), child = right)
-        val pKey = Coalesce(Seq(
-          GridCell(CentroidX(i), CentroidY(i), Literal(res)),
-          Literal(-1L)))
-        val fineCond = (EqualTo(pKey, cellAttr) +: c +: residual)
-          .reduce(And(_, _))
-        val oversized = Filter(
-          And(EqualTo(Size(cells), Literal(0)), IsNotNull(o)), right)
-        val coarseCond = (c +: residual).reduce(And(_, _))
-        val bHint = JoinHint(None, Some(HintInfo(Some(BROADCAST))))
-        val antiFine =
-          Join(left, gridable, LeftAnti, Some(fineCond), JoinHint.NONE)
-        Some(
-          if (isSemi) Union(Seq(
-            Join(left, gridable, LeftSemi, Some(fineCond), JoinHint.NONE),
-            Join(antiFine, oversized, LeftSemi, Some(coarseCond), bHint)))
-          else
-            Join(antiFine, oversized, LeftAnti, Some(coarseCond), bHint))
+        Some(containment(left, right, o, c +: conjuncts.filterNot(_ eq c),
+          joinType, rectKey(i, res), CellsCovering(o, Literal(res)),
+          coarse = true))
       case Some(pick) =>
         // membership via matched probe VALUES: project the probe columns
         // out of the exactly-once Inner decomposition (fresh exprIds so
@@ -370,26 +387,5 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
   private def distOf(d: Expression): Double = d.eval() match {
     case n: Number => n.doubleValue
     case _ => -1.0
-  }
-}
-
-/** Planner-time twin of [[SpatialJoinRewrite]] for semi/anti joins that
-  * only materialize AFTER the operator-optimization batch: `WHERE [NOT]
-  * EXISTS (… st_contains(…))` becomes a LeftSemi/LeftAnti join in the
-  * optimizer's RewriteSubquery batch, which runs after the batch hosting
-  * the rule — without this strategy those plans fall into the
-  * BroadcastNestedLoopJoin the rule exists to kill. The strategy applies
-  * the same logical decomposition and hands the result back through
-  * `planLater`, so JoinSelection plans the rewritten equi-joins
-  * normally. */
-object SpatialJoinStrategy
-    extends org.apache.spark.sql.execution.SparkStrategy {
-  import org.apache.spark.sql.execution.SparkPlan
-
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case j @ Join(_, _, LeftSemi | LeftAnti, Some(_), _) =>
-      SpatialJoinRewrite.rewriteSemiAnti(j)
-        .map(rw => planLater(rw) :: Nil).getOrElse(Nil)
-    case _ => Nil
   }
 }

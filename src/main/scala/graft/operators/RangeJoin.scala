@@ -79,7 +79,8 @@ object RangeJoin {
     * week-long session among minutes) do NOT ride the explode — each side's
     * oversized subset is by nature small (bounded total span ÷ huge span),
     * so it takes a broadcast branch with the raw overlap predicate instead,
-    * the [[SpatialJoin.pointInPolygon]] oversized-polygon pattern. Branches
+    * the oversized-container pattern of the spatial containment plan
+    * (`SpatialJoinRewrite.containment`). Branches
     * partition the pair space (big×all, small×big, small×small) — no pair
     * is produced twice.
     *

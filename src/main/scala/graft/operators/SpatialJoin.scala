@@ -1,78 +1,101 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkInternals
+import org.apache.spark.sql.internal.SQLConf
 
-import graft.functions.GraftFunctions._
+import graft.functions.{CellsCovering, CentroidX, CentroidY, GridCell,
+  H3CellsCovering, H3OfGeom, SpatialJoinRewrite, StContains}
 
-/** Spatial join (point-in-polygon) — the extension SURVEY.md §2.4 sketches:
-  * a grid-cell equi-join prefilter followed by an exact JTS refine. No
-  * custom SparkStrategy needed: the prefilter is a plain shuffled equi-join
-  * on cell ids (Catalyst picks broadcast vs sort-merge; AQE handles skewed
-  * cells), and the refine only touches candidate pairs.
+/** Spatial joins as candidate-pair plans: a cell equi-join prefilter
+  * followed by an exact refine, so Catalyst plans a shuffled or broadcast
+  * equi-join (AQE handles skewed cells) instead of a nested loop.
   *
-  * A point lives in exactly one res-`res` cell; a polygon is replicated to
-  * the cells covering its envelope — so every true containment pair shares
-  * exactly one cell and no pair is ever produced twice. Resolution trades
-  * polygon replication (finer → more copies) against candidate precision
-  * (coarser → more false candidates to refine); res 10–12 suits
+  * Point-in-polygon ([[pointInPolygon]], [[pointInPolygonH3]]) uses the
+  * containment decomposition of [[graft.functions.SpatialJoinRewrite]]
+  * (`containment`), the same one a declarative `JOIN ON st_contains(…)`
+  * gets. A point lives in exactly one cell; a polygon is replicated to
+  * the cells covering its envelope, so every true containment pair
+  * shares exactly one cell and no pair is produced twice. Resolution
+  * trades polygon replication (finer → more copies) against candidate
+  * precision (coarser → more false candidates to refine); res 10–12 suits
   * building/city-scale polygons.
+  *
+  * The distance joins ([[distanceJoin]], [[distanceJoinGeodetic]])
+  * replicate one side to a bounded cell neighborhood instead.
   */
 object SpatialJoin {
 
-  /** Join `points` (WKB `geom`) with `polygons` (WKB `geom`): one output row
-    * per (point, containing polygon). Both inputs keep their non-geometry
-    * columns; the polygon's come suffixed to avoid collisions.
+  /** Join `points` (WKB `geom`) with `polygons` (WKB `geom`) on the
+    * res-`res` rect grid: one output row per (point, containing polygon),
+    * with every point column followed by every polygon column. The
+    * polygon geometry column is renamed to `__poly_geom`; the other
+    * columns keep their names.
     *
-    * Polygons whose envelope covers more res-`res` cells than the covering
-    * cap (country/continent scale — `cells_covering` returns an empty array
+    * Polygons whose envelope covers more cells than the covering cap
+    * (country/continent scale — `cells_covering` returns an empty array
     * past its cap) cannot ride the grid prefilter; instead of silently
-    * dropping them, they take a broadcast-refine branch: such polygons are by
-    * nature few (a corpus has bounded area ÷ huge polygons), so broadcasting
-    * them against the streamed point side is the scalable fallback. */
+    * dropping them, they take a broadcast-refine branch: such polygons are
+    * by nature few, so broadcasting them against the point side is the
+    * scalable fallback. */
   def pointInPolygon(points: DataFrame, polygons: DataFrame, res: Int = 10,
-      pointGeom: String = "geom", polyGeom: String = "geom"): DataFrame = {
-    // The join key is wrapped in coalesce(cell, -1): a bare expression key
-    // makes Catalyst infer IsNotNull(key) and push it into the point-side
-    // scan, where the pushed filter plus the project each evaluate the
-    // full WKB-decode + cell-encode chain — doubling the dominant per-row
-    // cost of the whole join. coalesce folds the inferred filter away
-    // (the key is never null), the encode runs once per row, and the -1
-    // sentinel matches no polygon cell, so null/broken geometries still
-    // drop at the join exactly as before.
+      pointGeom: String = "geom", polyGeom: String = "geom"): DataFrame =
     // NO Scatter here (unlike the H3 variant): the rect-grid encode is
     // ~100ns/row, so repartitioning the WKB payloads costs more than the
     // single-task encode saves (measured j3 0.7 -> 1.9s with it at sf0.1)
-    val pts = points.withColumn("__cell", coalesce(
-      grid_cell(centroid_x(col(pointGeom)), centroid_y(col(pointGeom)), lit(res)),
-      lit(-1L)))
-    val tagged = polygons
-      .withColumnRenamed(polyGeom, "__poly_geom")
-      .withColumn("__cells", cells_covering(col("__poly_geom"), lit(res)))
-    // explode() emits no rows for an empty array, so the oversized filter is
-    // NOT repeated here — a size(...)>0 pre-filter would make Catalyst
-    // evaluate the covering expression a second (and via the inferred
-    // not-null constraint, a third) time per polygon.
-    val gridable = tagged
-      .withColumn("__cell", explode(col("__cells"))).drop("__cells")
-    // covering came back empty on a non-null geometry ⇒ envelope overflowed
-    // the cell cap (null/broken geometry stays dropped — contains() is false)
-    val oversized = tagged
-      .filter(size(col("__cells")) === 0 && col("__poly_geom").isNotNull)
-      .drop("__cells")
-    val fine = pts.join(gridable, Seq("__cell"))
-      .filter(st_contains(col("__poly_geom"), col(pointGeom)))
-      .drop("__cell")
-    // The coarse branch re-scans the ENTIRE point side — at corpus scale the
-    // dominant table — so it must only exist when an oversized polygon does.
-    // Probing costs one polygon-side-only job (polygons are the small input
-    // by construction of a point-in-polygon join); paying it once beats
-    // paying a second full point scan on every run. In the common case
-    // (every polygon fits the covering cap) the returned plan reads points
-    // exactly once.
-    if (oversized.isEmpty) fine
-    else fine.unionByName(points.join(broadcast(oversized),
-      st_contains(col("__poly_geom"), col(pointGeom))))
+    containment(points, polygons, pointGeom, polyGeom,
+      g => GridCell(CentroidX(g), CentroidY(g), Literal(res)),
+      g => CellsCovering(g, Literal(res)))
+
+  /** [[pointInPolygon]] on the TRUE H3 lattice instead of the rect grid —
+    * the same lattice as the reference's heatmap
+    * (East-Asia-Building-Footprints.md:250-252), so a pipeline can bucket
+    * its join and aggregate its heatmap on one cell id. Points map to
+    * their res-`res` H3 cell, polygons to a grid-disk covering of their
+    * envelope; polygons whose covering overflows the disk cap take the
+    * same broadcast-refine branch. Same output columns. */
+  def pointInPolygonH3(points: DataFrame, polygons: DataFrame, res: Int = 9,
+      pointGeom: String = "geom", polyGeom: String = "geom"): DataFrame =
+    // h3_of_geom is the fused kernel — one WKB decode + one H3 encode per
+    // row (the separate centroid_y/centroid_x form decodes the geometry
+    // twice, the dominant point-side cost), worth a Scatter at low split
+    // counts
+    containment(Scatter(points), Scatter(polygons), pointGeom, polyGeom,
+      g => H3OfGeom(g, Literal(res)), g => H3CellsCovering(g, Literal(res)))
+
+  /** Both point-in-polygon operators: the rule's containment plan over
+    * the two inputs' analyzed plans. The polygon side is re-aliased
+    * (fresh attribute ids, so inputs sharing a lineage still join) with
+    * its geometry renamed. */
+  private def containment(points: DataFrame, polygons: DataFrame,
+      pointGeom: String, polyGeom: String, key: Expression => Expression,
+      covering: Expression => Expression): DataFrame = {
+    val spark = points.sparkSession
+    val resolver = SQLConf.get.resolver
+    val probe = points.queryExecution.analyzed
+    val pG = probe.resolveQuoted(pointGeom, resolver).getOrElse(
+      throw new IllegalArgumentException(s"points have no column $pointGeom"))
+    val polys = polygons.queryExecution.analyzed
+    val renamed = polys.output.map(a => Alias(a,
+      if (resolver(a.name, polyGeom)) "__poly_geom" else a.name)())
+    val cG = renamed.find(_.name == "__poly_geom").map(_.toAttribute)
+      .getOrElse(throw new IllegalArgumentException(
+        s"polygons have no column $polyGeom"))
+    val container = Project(renamed, polys)
+    // The coarse branch re-scans the ENTIRE point side — at corpus scale
+    // the dominant table — so it is planned only when an oversized
+    // polygon exists. Probing costs one polygon-side-only job (polygons
+    // are the small input of a point-in-polygon join); paying it once
+    // beats a second full point scan on every run.
+    val coarse = !SparkInternals.ofRows(spark,
+      SpatialJoinRewrite.oversized(container, cG, covering(cG))).isEmpty
+    SparkInternals.ofRows(spark, SpatialJoinRewrite.containment(probe,
+      container, cG, Seq(StContains(cG, pG)), Inner, key(pG), covering(cG),
+      coarse))
   }
 
   /** Distance join (ST_DWithin): pairs of points within `radius` in the
@@ -215,46 +238,5 @@ object SpatialJoin {
       .filter(haversineMeters(col("__glat_l"), col("__glon_l"),
         col("__glat_r"), col("__glon_r")) <= lit(radiusMeters))
       .drop("__cy", "__cx", "__glon_l", "__glat_l", "__glon_r", "__glat_r")
-  }
-
-  /** [[pointInPolygon]] on the TRUE H3 lattice instead of the rect grid —
-    * the same lattice as the reference's heatmap
-    * (East-Asia-Building-Footprints.md:250-252), so a pipeline can bucket
-    * its join and aggregate its heatmap on one cell id. Identical plan
-    * shape: points map to their res-`res` H3 cell (exactly one cell per
-    * point — no pair produced twice), polygons replicate to a grid-disk
-    * covering of their envelope, the prefilter is a shuffled equi-join on
-    * the cell id, and JTS refines candidates. Polygons whose covering
-    * overflows the disk cap take the same broadcast-refine branch. */
-  def pointInPolygonH3(points: DataFrame, polygons: DataFrame, res: Int = 9,
-      pointGeom: String = "geom", polyGeom: String = "geom"): DataFrame = {
-    // coalesce key wrapper: same single-evaluation rationale as
-    // pointInPolygon. h3_of_geom is the fused kernel — one WKB decode + one
-    // H3 encode per row (the separate centroid_y/centroid_x form decodes
-    // the geometry twice, the dominant point-side cost).
-    val pts = Scatter(points).withColumn("__cell", coalesce(
-      h3_of_geom(col(pointGeom), lit(res)), lit(-1L)))
-    val tagged = Scatter(polygons)
-      .withColumnRenamed(polyGeom, "__poly_geom")
-      .withColumn("__cells", h3_cells_covering(col("__poly_geom"), lit(res)))
-    // explode_OUTER on purpose: plain explode makes the optimizer infer
-    // `isnotnull(covering) AND size(covering) > 0` filters that INLINE
-    // the covering expression and re-evaluate it per polygon in the same
-    // stage (InferFiltersFromGenerate + project collapse — measured 3
-    // extra coverings/row on the j3h gate). The outer form infers no
-    // generate filters; the attribute-level isNotNull after it drops the
-    // same empty-covering rows for free.
-    val gridable = tagged
-      .withColumn("__cell", explode_outer(col("__cells"))).drop("__cells")
-      .filter(col("__cell").isNotNull)
-    val oversized = tagged
-      .filter(size(col("__cells")) === 0 && col("__poly_geom").isNotNull)
-      .drop("__cells")
-    val fine = pts.join(gridable, Seq("__cell"))
-      .filter(st_contains(col("__poly_geom"), col(pointGeom)))
-      .drop("__cell")
-    if (oversized.isEmpty) fine
-    else fine.unionByName(points.join(broadcast(oversized),
-      st_contains(col("__poly_geom"), col(pointGeom))))
   }
 }

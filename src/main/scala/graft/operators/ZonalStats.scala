@@ -13,10 +13,12 @@ import graft.functions.GraftFunctions._
   * `geotiff_pixels` geotransform bridge — a map-only amplification exactly
   * like the dup-span explode (`TrainingData.scala`), so it parallelizes per
   * raster file and shuffles only the grid-cell join key, never the payload.
-  * The polygon side rides [[SpatialJoin.pointInPolygon]]'s grid-equi-join
-  * prefilter + exact refine; the final groupBy is a plain hash aggregate on
-  * the zone key. No driver-side pixel loops, no cartesian product — the
-  * same candidate-pair discipline as every other join surface here.
+  * The polygon side rides [[SpatialJoin.pointInPolygon]], whose
+  * grid-equi-join prefilter + exact refine is the containment plan
+  * shared with the spatial-join rule (`SpatialJoinRewrite.containment`);
+  * the final groupBy is a plain hash aggregate on the zone key. No
+  * pixel loops outside Spark tasks, no cartesian product — the same
+  * candidate-pair discipline as every other join surface here.
   */
 object ZonalStats {
 

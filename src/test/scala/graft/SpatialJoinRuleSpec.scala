@@ -328,23 +328,93 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
     assert((gotSemi & gotAnti).isEmpty && gotSemi.size + gotAnti.size == 400)
   }
 
-  test("WHERE NOT EXISTS (st_contains) — the subquery becomes a LeftAnti " +
-    "join after the rule's batch; the planner strategy still kills the " +
-    "nested loop") {
+  test("WHERE [NOT] EXISTS (st_contains) — the subquery becomes a " +
+    "LeftAnti / LeftSemi join before the rule runs; the rule still kills " +
+    "the nested loop") {
     val (pts, polys) = fixtures()
     graft.functions.GraftFunctions.registerAll(spark) // SQL-text names
     pts.createOrReplaceTempView("sjr_pts")
     polys.createOrReplaceTempView("sjr_polys")
-    val sql = """SELECT pid FROM sjr_pts p WHERE NOT EXISTS
-                   (SELECT 1 FROM sjr_polys r
-                    WHERE st_contains(r.ggeom, p.pgeom))"""
-    val expected = naiveSet(spark.sql(sql))
-    val got = spark.sql(sql)
-    val p = got.queryExecution.executedPlan.toString
-    assertOnlyBoundedNestedLoops(p)
-    assert(p.contains("__graft_cell"), s"strategy did not fire:\n$p")
-    assert(got.collect().map(_.getLong(0)).toSet == expected)
-    assert(expected.nonEmpty)
+    for (exists <- Seq("NOT EXISTS", "EXISTS")) {
+      val sql = s"""SELECT pid FROM sjr_pts p WHERE $exists
+                     (SELECT 1 FROM sjr_polys r
+                      WHERE st_contains(r.ggeom, p.pgeom))"""
+      val expected = naiveSet(spark.sql(sql))
+      val got = spark.sql(sql)
+      val p = got.queryExecution.executedPlan.toString
+      assertOnlyBoundedNestedLoops(p)
+      assert(p.contains("__graft_cell"), s"$exists: rule did not fire:\n$p")
+      assert(got.collect().map(_.getLong(0)).toSet == expected, exists)
+      assert(expected.nonEmpty, exists)
+    }
+  }
+
+  // --- one containment plan for the rule and the operators ----------------
+
+  private def withRes[A](res: Int)(body: => A): A = {
+    spark.conf.set("spark.graft.spatialjoin.res", res.toString)
+    try body finally spark.conf.unset("spark.graft.spatialjoin.res")
+  }
+
+  /** [[fixtures]] read back from parquet: over a LocalRelation the
+    * optimizer folds projections into literals, so neither the plan's
+    * covering calls nor the records read would show. */
+  private def parquetFixtures() = {
+    val (pts, polys) = fixtures()
+    val dir = java.nio.file.Files.createTempDirectory("sjr_pq").toString
+    pts.write.parquet(s"$dir/pts")
+    polys.write.parquet(s"$dir/polys")
+    (spark.read.parquet(s"$dir/pts"), spark.read.parquet(s"$dir/polys"))
+  }
+
+  test("pointInPolygon and the rewritten st_contains join return the same " +
+    "pairs, and each fine branch evaluates cells_covering once") {
+    val (pts, polys) = parquetFixtures()
+    val res = 6
+    val (rule, rulePlan) = withRes(res) {
+      val j = naive(pts, polys)
+      (j.collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
+        j.queryExecution.optimizedPlan.toString)
+    }
+    val op = graft.operators.SpatialJoin.pointInPolygon(pts, polys, res,
+      pointGeom = "pgeom", polyGeom = "ggeom")
+    val opPairs = op.select(col("pid"), col("polyid")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(opPairs == rule, "operator and rule disagree")
+    assert(rule.nonEmpty, "fixture must produce containment pairs")
+    // points and polygons cut from ONE relation share attribute ids
+    val mixed = pts.select(col("pid").as("id"), col("pgeom").as("g"))
+      .unionByName(polys.select((col("polyid") + 1000).as("id"),
+        col("ggeom").as("g")))
+    val shared = graft.operators.SpatialJoin.pointInPolygon(
+      mixed.filter(col("id") < 1000), mixed.filter(col("id") >= 1000), res,
+      pointGeom = "g", polyGeom = "g")
+    assert(shared.collect().map(r => (r.getLong(0), r.getLong(2) - 1000))
+      .toSet == rule, "one-lineage inputs lose or invent pairs")
+    // no polygon overflows here: the operator's eager probe plans the fine
+    // branch alone, the rule also plans its (empty) coarse branch, whose
+    // oversized filter is the second call
+    val opPlan = op.queryExecution.optimizedPlan.toString
+    assert(countOf(opPlan, "cells_covering(") == 1,
+      s"operator evaluates the covering more than once:\n$opPlan")
+    assert(countOf(rulePlan, "cells_covering(") == 2 &&
+      countOf(rulePlan, "size(cells_covering(") == 1,
+      s"rule evaluates the covering more than once per branch:\n$rulePlan")
+    val h3Plan = graft.operators.SpatialJoin.pointInPolygonH3(pts, polys, 3,
+      pointGeom = "pgeom", polyGeom = "ggeom").queryExecution.optimizedPlan
+      .toString
+    assert(countOf(h3Plan, "h3_cells_covering(") == 1,
+      s"H3 operator evaluates the covering more than once:\n$h3Plan")
+  }
+
+  test("with AQE on, the rule's empty coarse branch is dropped: points are " +
+    "read once, polygons twice (fine join and coarse broadcast)") {
+    val (pts, polys) = parquetFixtures()
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val (rows, c) = Harness.probe(spark)(naive(pts, polys).collect())
+    assert(rows.nonEmpty)
+    assert(c.recordsRead == 400L + 2 * 20L,
+      s"records read ${c.recordsRead}, want 400 points + 2 x 20 polygons")
   }
 
   test("symmetric semi (st_intersects, left_semi): value-based membership " +
