@@ -1668,7 +1668,7 @@ object SparkEntry {
       // `lower(col) = 'x'` / `upper(col) IN (…)` route through the
       // exact case-variant probe over the raw zone stats — no
       // write-side normalized stats needed: a row group is kept iff
-      // some per-char case variant of the target fits its [smin,
+      // some case variant of the target fits its [smin,
       // smax] (RowGroupScan.variantInRange), so a priority-sorted
       // table prunes case-insensitive lookups as tightly as exact
       // ones. Replay: the same predicates as plain filters.

@@ -709,8 +709,10 @@ object LakeSelect {
       }
     // ===== case-mapped equality routing ==============================
     // `upper(c) = 'X'` / `lower(c) = 'x'` / `... IN (lits)`: for an
-    // ASCII literal the matching raw strings are exactly the per-char
-    // case VARIANTS of the target, so a [[CaseEq]] constraint routes
+    // ASCII literal the matching raw strings are exactly the case
+    // VARIANTS of the target (each char in either case, or a non-ASCII
+    // character whose mapping spells a run of it: upper('ı') = 'I',
+    // upper('ß') = 'SS'), so a [[CaseEq]] constraint routes
     // through the variant-in-range test against raw zone stats
     // (RowGroupScan.variantInRange -- an exact membership check over
     // the variant set, far tighter than any single bounding range on
@@ -719,9 +721,8 @@ object LakeSelect {
     // must not trust containment. A literal that is not a fixed point
     // of its own mapping (`upper(c) = 'x'`) is provably false and
     // drops from the probe set. Non-ASCII literals fall through to
-    // unprunable: Unicode case mapping is not per-character (eszett
-    // to SS, dotted I, locale-dependent maps), so no sound variant
-    // set exists.
+    // unprunable: their preimages under Unicode case mapping are not
+    // enumerated (dotted I, locale-dependent maps).
     def caseConstraint(c: String, strs: Seq[String], up: Boolean,
         pfx: Boolean): Option[(String, Constraint)] = {
       if (strs.isEmpty ||

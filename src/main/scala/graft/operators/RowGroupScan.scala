@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graft.SparkInternals
 import org.apache.spark.sql.types._
 
@@ -20,13 +20,13 @@ import org.apache.spark.sql.types._
   *    file, no data pages touched. The log persists it as a stats/
   *    sidecar ([[TableLog.computeRowGroupIndex]]) so repeated reads open
   *    ZERO footers.
-  *  - [[prunePairs]] — the DISTRIBUTED prune: every constraint becomes a
-  *    Catalyst Column filter over the index rows (IN-lists via
-  *    `functions.exists` over a literal array — never an O(|index|·|values|)
-  *    driver loop), the per-(file, rg) verdicts fold in one metadata-sized
-  *    aggregation, and the driver collects ONLY the kept slices. Null
-  *    bounds keep conservatively (skipping may lose rows; keeping never
-  *    does).
+  *  - [[classify]] — the ONE row-group verdict: it folds index rows
+  *    into a reject/full verdict per (file, rg) for every constraint at
+  *    once. The log's planner runs it on the driver for a small
+  *    snapshot and inside tasks (one hash partition of the index by
+  *    file each) for a large one, so the driver holds only the kept
+  *    slices. Null bounds keep conservatively (skipping may lose rows;
+  *    keeping never does).
   *  - [[scanSlices]] — scans EXACTLY the kept row groups through Spark's
   *    own parquet reader (`ParquetFileFormat`, vectorized where the
   *    schema allows): each kept run of contiguous row groups becomes one
@@ -44,7 +44,7 @@ import org.apache.spark.sql.types._
   *
   * Scale: driver residency is the KEPT (file, rowGroup) slices only —
   * bounded by the query's selectivity, never the table (100 TB at 128 MB
-  * row groups ≈ 10⁶ index rows, all filtered where they live). Each scan
+  * row groups ≈ 10⁶ index rows, all classified where they live). Each scan
   * task opens one footer per run to locate its byte range and reads at
   * most [[rgsPerTask]] row groups' pages; nothing reads a page outside
   * the keep set.
@@ -426,56 +426,80 @@ object RowGroupScan {
     split(file, 0L, len, len)
   }
 
-  // ===== distributed prune =============================================
+  // ===== row-group verdicts ============================================
 
-  /** TRUE iff some ASCII case VARIANT v of `x` (each char independently
-    * upper- or lower-cased; non-letters fixed) lies in [lo, hi] under
-    * UTF-8 byte order — the exact row-group keep test for case-mapped
-    * equalities (`lower(c) = x` matches exactly the variants of x).
-    * Digit-DP over v's positions with lo/hi tightness flags: O(|x|)
-    * states, each trying the (at most two) case forms of that char.
-    * Caller guarantees `x` is pure ASCII, so each variant char is one
-    * byte and byte order equals the stats' comparator. */
+  /** Non-ASCII characters whose Unicode case mapping is pure ASCII,
+    * keyed by that mapping in lower case: `upper('ß') = 'SS'`,
+    * `upper('ı') = 'I'`, `upper('ſ') = 'S'`, `lower('K') = 'k'` (the
+    * Kelvin sign) and the Latin ligatures (`upper('ﬁ') = 'FI'`). Spark's
+    * upper/lower and the JDK agree on this list at the root locale, and
+    * no other code point maps into ASCII. A case-mapped equality matches
+    * them too, so they belong to the variant set. */
+  private val caseFoldPreimages: Seq[(String, Array[Byte])] = Seq(
+    "ss" -> "\u00df", "i" -> "\u0131", "s" -> "\u017f", "k" -> "\u212a",
+    "ff" -> "\ufb00", "fi" -> "\ufb01", "fl" -> "\ufb02",
+    "ffi" -> "\ufb03", "ffl" -> "\ufb04", "st" -> "\ufb05",
+    "st" -> "\ufb06").map { case (f, c) => f -> c.getBytes("UTF-8") }
+
+  /** TRUE iff some case VARIANT v of `x` lies in [lo, hi] under UTF-8
+    * byte order — the exact row-group keep test for case-mapped
+    * equalities (`lower(c) = x` matches exactly the variants of x). A
+    * variant spells each char of x in upper or lower case (non-letters
+    * fixed) or spells a run of x with one [[caseFoldPreimages]]
+    * character. `prefix` asks instead whether [lo, hi] can contain some
+    * string STARTING WITH a variant. Digit-DP over (char of x, byte of
+    * v) with lo/hi tightness flags; once neither bound is tight every
+    * completion fits. Caller guarantees `x` is pure ASCII. */
   private[operators] def variantInRange(x: String, lo: String,
       hi: String, prefix: Boolean = false): Boolean = {
     val lob = lo.getBytes("UTF-8"); val hib = hi.getBytes("UTF-8")
     val n = x.length
-    // memo per (pos, loTight, hiTight): 0 unknown, 1 true, 2 false
-    val memo = new Array[Byte]((n + 1) * 4)
-    def rec(i: Int, loT: Boolean, hiT: Boolean): Boolean = {
-      val key = i * 4 + (if (loT) 1 else 0) + (if (hiT) 2 else 0)
-      if (memo(key) != 0) return memo(key) == 1
-      val r =
+    // v's bytes `bs` from offset `off`: the tightness flags after them,
+    // or None once v leaves [lo, hi]
+    def feed(bs: Array[Byte], off: Int, loT0: Boolean, hiT0: Boolean)
+        : Option[(Boolean, Boolean)] = {
+      var loT = loT0; var hiT = hiT0; var ok = true; var j = 0
+      while (ok && j < bs.length) {
+        val (i, vb) = (off + j, bs(j) & 0xff)
+        // an exhausted tight lo (v extends lo) is already > lo;
+        // an exhausted tight hi (v extends hi) is already > hi
+        ok = !(loT && i < lob.length && vb < (lob(i) & 0xff)) &&
+          !(hiT && (i >= hib.length || vb > (hib(i) & 0xff)))
+        loT = loT && i < lob.length && vb == (lob(i) & 0xff)
+        hiT = hiT && i < hib.length && vb == (hib(i) & 0xff)
+        j += 1
+      }
+      if (ok) Some((loT, hiT)) else None
+    }
+    val memo = scala.collection.mutable.HashMap
+      .empty[(Int, Int, Boolean, Boolean), Boolean]
+    def rec(i: Int, off: Int, loT: Boolean, hiT: Boolean): Boolean =
+      (!loT && !hiT) || memo.getOrElseUpdate((i, off, loT, hiT),
         if (i == n)
-          // v complete: a still-tight lo means v equals lo's first n
-          // bytes, so v >= lo iff lo has no tail; dually a still-tight
-          // hi admits v iff hi is at least as long. PREFIX mode asks a
-          // different question — can [lo, hi] contain some string
-          // STARTING WITH v? — and reaching i == n already proves it:
-          // tight-lo means lo itself starts with v; tight-hi means hi
-          // does; non-tight sides are strictly inside the bound.
-          prefix ||
-            ((!loT || lob.length <= n) && (!hiT || hib.length >= n))
+          // v complete: a still-tight lo means v equals lo's first `off`
+          // bytes, so v >= lo iff lo has no tail; a still-tight hi admits
+          // v. PREFIX mode already has its witness: tight-lo means lo
+          // itself starts with v, tight-hi means hi does.
+          prefix || !loT || lob.length <= off
         else {
           val ch = x.charAt(i)
-          val up = Character.toUpperCase(ch).toByte
-          val dn = Character.toLowerCase(ch).toByte
-          val cands = if (up == dn) Seq(up) else Seq(up, dn)
-          cands.exists { b =>
-            val vb = b & 0xff
-            // an exhausted tight lo (v extends lo) is already > lo;
-            // an exhausted tight hi (v extends hi) is already > hi
-            val loOk = !loT || i >= lob.length || vb >= (lob(i) & 0xff)
-            val hiOk = !hiT || (i < hib.length && vb <= (hib(i) & 0xff))
-            loOk && hiOk && rec(i + 1,
-              loT && i < lob.length && vb == (lob(i) & 0xff),
-              hiT && vb == (hib(i) & 0xff))
+          val cased = Seq(Character.toUpperCase(ch),
+            Character.toLowerCase(ch)).distinct
+            .map(c => (Array(c.toByte), 1))
+          val runs = caseFoldPreimages.collect {
+            case (f, bs) if x.regionMatches(true, i, f, 0, f.length) =>
+              (bs, f.length)
+            // a prefix may end inside a ligature's spelling
+            case (f, bs) if prefix && f.length > n - i &&
+                f.regionMatches(true, 0, x, i, n - i) => (bs, n - i)
           }
-        }
-      memo(key) = if (r) 1 else 2
-      r
-    }
-    rec(0, loT = true, hiT = true)
+          (cased ++ runs).exists { case (bs, len) =>
+            feed(bs, off, loT, hiT).exists { case (l, h) =>
+              rec(i + len, off + bs.length, l, h)
+            }
+          }
+        })
+    rec(0, 0, loT = true, hiT = true)
   }
 
   /** TRUE iff some SPACE-PADDED variant of `x` (`' '^i + x + ' '^j`;
@@ -533,241 +557,6 @@ object RowGroupScan {
     }
   }
 
-  /** An index-row DISPROOF for one constraint: TRUE iff this (file, rg,
-    * column) row's bounds PROVE no row can satisfy the constraint. Null
-    * or missing bounds never reject (conservative keep). Spark's string
-    * comparison is UTF-8 byte order — the same order the stats fold in,
-    * so string pruning can never disagree with the scan's re-filter.
-    * Numeric bounds judge only stats in their own space: a DECIMAL's
-    * stats are unscaled at its file's scale, so only an
-    * [[TableLog.AtScale]] probe of that `scale` may judge them. */
-  private[operators] def rejectCond(c: TableLog.RgConstraint,
-      scale: Option[Int] = None): Column = {
-    import org.apache.spark.sql.functions.{col, exists, lit}
-    val nums = col("lmin").isNotNull && col("lmax").isNotNull &&
-      scale.fold(!col("dtype").startsWith("decimal"))(sc =>
-        col("dtype").endsWith(s",$sc)"))
-    c match {
-      case TableLog.NumRange(_, lo, hi) =>
-        val sides = lo.map(l => col("lmax") < lit(l)).toSeq ++
-          hi.map(h => col("lmin") > lit(h)).toSeq
-        nums && sides.reduceOption(_ || _).getOrElse(lit(false))
-      case TableLog.NumIn(_, vs) =>
-        nums && !exists(lit(vs.toArray),
-            v => col("lmin") <= v && v <= col("lmax"))
-      case TableLog.DblRange(_, lo, hi, hiExcl) =>
-        // sides reject independently: a NaN max drops dmax (unbounded
-        // above), but a present dmin can still disprove the hi side
-        val loRej = lo.map(l =>
-          col("dmax").isNotNull && col("dmax") < lit(l))
-        val hiRej = hi.map(h =>
-          col("dmin").isNotNull &&
-            (if (hiExcl) col("dmin") >= lit(h)
-             else col("dmin") > lit(h)))
-        (loRej.toSeq ++ hiRej.toSeq)
-          .reduceOption(_ || _).getOrElse(lit(false))
-      case TableLog.DblIn(_, vs) =>
-        col("dmin").isNotNull && col("dmax").isNotNull &&
-          !exists(lit(vs.toArray),
-            v => col("dmin") <= v && v <= col("dmax"))
-      case TableLog.StrRange(_, lo, hi, hiExcl) =>
-        val sides = lo.map(l => col("smax") < lit(l)).toSeq ++
-          hi.map(h => if (hiExcl) col("smin") >= lit(h)
-                      else col("smin") > lit(h)).toSeq
-        col("smin").isNotNull && col("smax").isNotNull &&
-          sides.reduceOption(_ || _).getOrElse(lit(false))
-      case TableLog.StrIn(_, vs) =>
-        col("smin").isNotNull && col("smax").isNotNull &&
-          !exists(lit(vs.toArray),
-            v => col("smin") <= v && v <= col("smax"))
-      case TableLog.NullCheck(_, isNull) =>
-        if (isNull) col("n_nulls") === 0L // no nulls → IS NULL disproven
-        else col("n_nulls") === col("n_rows") // all null → no non-null
-      case TableLog.NumNotIn(_, vs) =>
-        // only a CONSTANT group disproves: its one value is excluded.
-        // Any null row satisfies nothing (WHERE semantics drop nulls),
-        // so nulls don't block the disproof.
-        nums && col("lmin") === col("lmax") &&
-          exists(lit(vs.toArray), v => col("lmin") === v)
-      case TableLog.StrNotIn(_, vs) =>
-        col("smin").isNotNull && col("smin") === col("smax") &&
-          exists(lit(vs.toArray), v => col("smin") === v)
-      case TableLog.CaseIn(_, vs, _, pfx) =>
-        // non-codegen, but evaluated over the tiny index frame, never
-        // data rows
-        val anyVariant = org.apache.spark.sql.functions.udf(
-          (lo: String, hi: String) =>
-            vs.exists(variantInRange(_, lo, hi, pfx)))
-        col("smin").isNotNull && col("smax").isNotNull &&
-          !anyVariant(col("smin"), col("smax"))
-      case TableLog.TrimIn(_, vs, mode) =>
-        if (vs.isEmpty) lit(true) // provably-false predicate: all drop
-        else {
-          val anyPadded = org.apache.spark.sql.functions.udf(
-            (lo: String, hi: String) =>
-              vs.exists(paddedVariantInRange(_, lo, hi, mode)))
-          col("smin").isNotNull && col("smax").isNotNull &&
-            !anyPadded(col("smin"), col("smax"))
-        }
-      case TableLog.AtScale(in, sc) => rejectCond(in, Some(sc))
-      case or: TableLog.RgOr => sys.error(
-        s"RgOr must be expanded before leaf evaluation: $or")
-    }
-  }
-
-  /** Flag machinery shared by [[prunePairs]] and the metadata count:
-    * one (reject, full) flag pair per LEAF constraint folded in the
-    * per-(file, rg) aggregation, then boolean trees over the flags —
-    * a top-level conjunct disproves the group when its flag fires, a
-    * DISJUNCTION ([[TableLog.RgOr]]) only when EVERY branch's does
-    * (`a OR b` has no matching row iff neither side can match); dually
-    * a disjunction PROVES the group when any branch proves it. Returns
-    * (agg expressions, group-rejected, group-fully-matching). */
-  private[operators] def constraintFlags(
-      constraints: Seq[TableLog.RgConstraint])
-      : (Seq[Column], Column, Column) = {
-    import org.apache.spark.sql.functions.{col, lit, max, when}
-    def leavesOf(c: TableLog.RgConstraint): Seq[TableLog.RgConstraint] =
-      c match {
-        case TableLog.RgOr(bs) =>
-          bs.foreach {
-            case _: TableLog.RgOr =>
-              sys.error("nested RgOr unsupported (flatten the branches)")
-            case _ =>
-          }
-          bs
-        case x => Seq(x)
-      }
-    var next = 0
-    val topLeafIds: Seq[(TableLog.RgConstraint, Seq[Int])] =
-      constraints.map { c =>
-        val ls = leavesOf(c)
-        val ids = ls.indices.map(_ + next)
-        next += ls.size
-        (c, ids)
-      }
-    val leaves = constraints.flatMap(leavesOf)
-    val aggs = leaves.zipWithIndex.flatMap { case (l, i) =>
-      Seq(
-        max(when(col("column") === l.column && rejectCond(l), 1)
-          .otherwise(0)).as(s"__rej$i"),
-        max(when(col("column") === l.column && fullMatchCond(l), 1)
-          .otherwise(0)).as(s"__full$i"))
-    }
-    val rej = topLeafIds.map { case (c, ids) =>
-      c match {
-        case _: TableLog.RgOr =>
-          ids.map(i => col(s"__rej$i") === 1).reduce(_ && _)
-        case _ => col(s"__rej${ids.head}") === 1
-      }
-    }.reduceOption(_ || _).getOrElse(lit(false))
-    val full = topLeafIds.map { case (c, ids) =>
-      c match {
-        case _: TableLog.RgOr =>
-          ids.map(i => col(s"__full$i") === 1).reduce(_ || _)
-        case _ => col(s"__full${ids.head}") === 1
-      }
-    }.reduceOption(_ && _).getOrElse(lit(false))
-    (aggs, rej, full)
-  }
-
-  /** An index-row PROOF for one constraint: TRUE iff the bounds prove
-    * EVERY row of the group satisfies it — the metadata-only COUNT path.
-    * Demands exact stats: zero nulls, and a dtype whose parquet min/max
-    * are not truncated (integral/date for numeric, string for string —
-    * float/double bounds fold through longValue and cannot prove
-    * containment). */
-  private[operators] def fullMatchCond(c: TableLog.RgConstraint): Column = {
-    import org.apache.spark.sql.functions.{array_contains, col, exists,
-      lit}
-    // micros-normalized timestamps are exact integers too (INT96 and
-    // unit-drift files carry NULL bounds, so they can never prove)
-    val exactNum = col("dtype").isin("tinyint", "smallint", "int",
-      "bigint", "date", "timestamp", "timestamp_ntz")
-    c match {
-      case TableLog.NumRange(_, lo, hi) =>
-        exactNum && col("n_nulls") === 0L &&
-          col("lmin").isNotNull && col("lmax").isNotNull &&
-          lo.map(l => col("lmin") >= lit(l)).getOrElse(lit(true)) &&
-          hi.map(h => col("lmax") <= lit(h)).getOrElse(lit(true))
-      case TableLog.NumIn(_, vs) =>
-        exactNum && col("n_nulls") === 0L &&
-          col("lmin").isNotNull && col("lmin") === col("lmax") &&
-          array_contains(lit(vs.toArray), col("lmin"))
-      case _: TableLog.DblRange | _: TableLog.DblIn =>
-        // FP stats may silently exclude NaN rows (writer-dependent),
-        // and a NaN row fails any range — containment never proves
-        lit(false)
-      case TableLog.StrRange(_, lo, hi, hiExcl) =>
-        col("dtype") === "string" && col("n_nulls") === 0L &&
-          col("smin").isNotNull && col("smax").isNotNull &&
-          lo.map(l => col("smin") >= lit(l)).getOrElse(lit(true)) &&
-          hi.map(h => if (hiExcl) col("smax") < lit(h)
-                      else col("smax") <= lit(h)).getOrElse(lit(true))
-      case TableLog.StrIn(_, vs) =>
-        col("dtype") === "string" && col("n_nulls") === 0L &&
-          col("smin").isNotNull && col("smin") === col("smax") &&
-          array_contains(lit(vs.toArray), col("smin"))
-      case TableLog.NullCheck(_, isNull) =>
-        if (isNull) col("n_nulls") === col("n_rows")
-        else col("n_nulls") === 0L
-      case TableLog.NumNotIn(_, vs) =>
-        // full iff every excluded value lies OUTSIDE [min, max] (no
-        // value in the group can equal one) and the group has no nulls
-        exactNum && col("n_nulls") === 0L &&
-          col("lmin").isNotNull && col("lmax").isNotNull &&
-          !exists(lit(vs.toArray),
-            v => col("lmin") <= v && v <= col("lmax"))
-      case TableLog.CaseIn(_, vs, up, pfx) =>
-        // only a CONSTANT no-null group proves: its single value's
-        // case-fold (Spark's own upper/lower, so semantics match the
-        // re-applied predicate exactly) must be (prefix mode: start
-        // with) one of the targets
-        val folded =
-          if (up) org.apache.spark.sql.functions.upper(col("smin"))
-          else org.apache.spark.sql.functions.lower(col("smin"))
-        val hit =
-          if (pfx) exists(lit(vs.toArray),
-            p => folded.startsWith(p))
-          else array_contains(lit(vs.toArray), folded)
-        col("dtype") === "string" && col("n_nulls") === 0L &&
-          col("smin").isNotNull && col("smin") === col("smax") && hit
-      case TableLog.TrimIn(_, vs, mode) =>
-        // only a CONSTANT no-null group proves: its single value's
-        // trim (Spark's own, so semantics match the re-applied
-        // predicate exactly) must be a target
-        if (vs.isEmpty) lit(false)
-        else {
-          val f = mode match {
-            case 'l' => org.apache.spark.sql.functions.ltrim(col("smin"))
-            case 'r' => org.apache.spark.sql.functions.rtrim(col("smin"))
-            case _ => org.apache.spark.sql.functions.trim(col("smin"))
-          }
-          col("dtype") === "string" && col("n_nulls") === 0L &&
-            col("smin").isNotNull && col("smin") === col("smax") &&
-            array_contains(lit(vs.toArray), f)
-        }
-      case TableLog.StrNotIn(_, vs) =>
-        col("dtype") === "string" && col("n_nulls") === 0L &&
-          col("smin").isNotNull && col("smax").isNotNull &&
-          !exists(lit(vs.toArray),
-            v => col("smin") <= v && v <= col("smax"))
-      case TableLog.AtScale(in, _) => fullMatchCond(in)
-      case or: TableLog.RgOr => sys.error(
-        s"RgOr must be expanded before leaf evaluation: $or")
-    }
-  }
-
-  // ===== driver-side prune (memoized small snapshots) ==================
-  //
-  // The Delta/Iceberg planning model: when a snapshot's whole index is
-  // already resident on the driver (the bounded memo — ≤512 files), the
-  // prune is plain Scala over the rows, ZERO Spark jobs. The scalar
-  // predicates below are exact twins of [[rejectCond]] /
-  // [[fullMatchCond]] (including three-valued null handling: a missing
-  // bound never rejects and never proves). Large snapshots keep the
-  // distributed aggregation.
-
   /** One (file, rg) planning verdict. `full` = every row provably
     * satisfies ALL constraints. */
   private[operators] final case class RgVerdict(file: String, rg: Int,
@@ -785,8 +574,14 @@ object RowGroupScan {
     x.length - y.length
   }
 
-  /** Scalar [[rejectCond]]: bounds of THIS (file, rg, column) row
-    * disprove the constraint. */
+  /** An index-row DISPROOF for one constraint: TRUE iff this (file, rg,
+    * column) row's bounds PROVE no row can satisfy the constraint. Null
+    * or missing bounds never reject (conservative keep). Spark's string
+    * comparison is UTF-8 byte order — the same order the stats fold in,
+    * so string pruning can never disagree with the scan's re-filter.
+    * Numeric bounds judge only stats in their own space: a DECIMAL's
+    * stats are unscaled at its file's scale, so only an
+    * [[TableLog.AtScale]] probe of that `scale` may judge them. */
   private def leafReject(l: TableLog.RgConstraint, r: Row,
       ix: Map[String, Int], scale: Option[Int] = None): Boolean = {
     val dtype = r.getString(ix("dtype"))
@@ -872,7 +667,12 @@ object RowGroupScan {
     }
   }
 
-  /** Scalar [[fullMatchCond]]: bounds prove EVERY row satisfies it. */
+  /** An index-row PROOF for one constraint: TRUE iff the bounds prove
+    * EVERY row of the group satisfies it — the metadata-only COUNT path.
+    * Demands exact stats: zero nulls, and a dtype whose parquet min/max
+    * are not truncated (integral/date/timestamp for numeric, string for
+    * string — float/double stats may exclude NaN rows and never prove).
+    * A missing bound never proves. */
   private def leafFull(l: TableLog.RgConstraint, r: Row,
       ix: Map[String, Int]): Boolean = {
     def lng(c: String): Option[Long] =
@@ -967,21 +767,23 @@ object RowGroupScan {
     }
   }
 
-  /** Driver-side twin of [[prunePairs]]'s per-group aggregation: fold
-    * the index rows into one [[RgVerdict]] per (file, rg) — reject =
-    * any top-level conjunct disproves (a disjunction only when EVERY
-    * branch does), full = every conjunct proves (a disjunction when ANY
-    * branch does) — plus the union column descriptors. rg == -1 schema
-    * carriers contribute descriptors but no verdicts. */
-  private[operators] def classifyLocal(rows: Array[Row],
+  /** THE row-group verdict: fold index rows into one [[RgVerdict]] per
+    * (file, rg) — reject = any top-level conjunct disproves (a
+    * disjunction only when EVERY branch does), full = every conjunct
+    * proves (a disjunction when ANY branch does) — plus the distinct
+    * (ord, column, dtype) descriptors. `rows` may come in any order but
+    * must hold every row of each group it touches; a constraint whose
+    * column a group lacks (stats-less, or evolved away) neither rejects
+    * nor proves. rg == -1 schema carriers contribute descriptors but no
+    * verdicts. The log's planner runs this on the driver for a small
+    * snapshot and inside tasks for a large one. */
+  private[operators] def classify(rows: Iterator[Row],
       schema: org.apache.spark.sql.types.StructType,
       constraints: Seq[TableLog.RgConstraint])
       : (Seq[RgVerdict], Seq[(Int, String, String)]) = {
     val ix = schema.fieldNames.zipWithIndex.toMap
     val (iFile, iRg, iCol) = (ix("file"), ix("rg"), ix("column"))
     val (iOrd, iDtype, iNRows) = (ix("ord"), ix("dtype"), ix("n_rows"))
-    def leavesOf(c: TableLog.RgConstraint): Seq[TableLog.RgConstraint] =
-      c match { case TableLog.RgOr(bs) => bs; case x => Seq(x) }
     val cols = scala.collection.mutable.LinkedHashSet[(Int, String,
       String)]()
     // group rows by (file, rg), keeping encounter order
@@ -997,7 +799,8 @@ object RowGroupScan {
         l: TableLog.RgConstraint,
         f: (TableLog.RgConstraint, Row, Map[String, Int]) => Boolean)
         : Boolean = byCol.get(l.column).exists(f(l, _, ix))
-    val verdicts = groups.iterator.map { case ((f, rg), byCol) =>
+    val verdicts = groups.iterator.collect { case ((f, rg), byCol)
+        if rg >= 0 =>
       val rej = constraints.exists {
         case TableLog.RgOr(bs) =>
           bs.nonEmpty && bs.forall(flag(byCol, _, leafReject(_, _, _)))
@@ -1011,53 +814,6 @@ object RowGroupScan {
       RgVerdict(f, rg, n, rej, full)
     }.toSeq
     (verdicts, cols.toSeq)
-  }
-
-  /** DISTRIBUTED prune of a wide index by every constraint at once:
-    * per-(file, rg) reject verdicts fold in one metadata aggregation
-    * (a constraint rejects a group iff ITS column's bounds disprove it;
-    * a column with no stats — or absent from an evolved file — never
-    * rejects), and the driver collects ONLY the kept slices plus the
-    * total group count. Caller should have the index persisted (two
-    * jobs). */
-  private[operators] def prunePairs(spark: SparkSession, wide: DataFrame,
-      constraints: Seq[TableLog.RgConstraint],
-      needCols: Boolean = false)
-      : (Seq[RgSlice], Long, Option[Seq[(String, String)]]) = {
-    import org.apache.spark.sql.functions.{col, collect_list, collect_set,
-      first, sort_array, struct, sum, when}
-    // rg == -1 rows (zero-row-group schema carriers) ride through the
-    // grouping so the union schema below sees them, but never become
-    // slices and never count
-    val (flagAggs, rej, _) = constraintFlags(constraints)
-    val aggs = (first(col("n_rows")).as("n_rows") +: flagAggs) ++
-      (if (needCols)
-        Seq(sort_array(collect_set(struct(col("ord"), col("column"),
-          col("dtype")))).as("__cols"))
-      else Nil)
-    val pairs = wide.groupBy(col("file"), col("rg"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("__rej", rej)
-    // ONE action: total group count, the kept slices (collect_list
-    // skips the nulls when() emits for rejects), and — when no memo had
-    // the union schema — the DISTINCT per-group column descriptors
-    // (files share schemas, so the set of sets stays O(distinct
-    // schemas), never O(groups))
-    val globalAggs = Seq(
-      sum(when(col("rg") >= 0, 1L).otherwise(0L)).as("total"),
-      collect_list(when(!col("__rej") && col("rg") >= 0,
-        struct(col("file"), col("rg")))).as("kept")) ++
-      (if (needCols) Seq(collect_set(col("__cols")).as("colsets"))
-       else Nil)
-    val row = pairs.agg(globalAggs.head, globalAggs.tail: _*).first()
-    val kept = row.getSeq[Row](1)
-      .map(r => RgSlice(r.getString(0), r.getInt(1)))
-      .sortBy(s => (s.file, s.rg))
-    val total = if (row.isNullAt(0)) 0L else row.getLong(0)
-    val cols =
-      if (!needCols) None
-      else Some(unionColsFromSets(row.getSeq[scala.collection.Seq[Row]](2)))
-    (kept, total, cols)
   }
 
   // ===== read-side type widening =======================================
@@ -1093,17 +849,10 @@ object RowGroupScan {
     }
   }
 
-  /** Fold the collected per-group column-descriptor sets into the
-    * union schema: mergeSchema order (first field position, then name),
-    * widening scalar types to their lossless LUB, loud on any other
-    * type conflict — the driver-side twin of what a separate
-    * metadata job used to compute. */
-  private[operators] def unionColsFromSets(
-      sets: scala.collection.Seq[scala.collection.Seq[Row]])
-      : Seq[(String, String)] =
-    unionColsFromTuples(sets.flatten
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq)
-
+  /** Fold (ord, column, dtype) descriptors into the union schema:
+    * mergeSchema order (first field position, then name), widening
+    * scalar types to their lossless LUB, loud on any other type
+    * conflict. */
   private[operators] def unionColsFromTuples(
       all0: Seq[(Int, String, String)]): Seq[(String, String)] = {
     val all = all0.distinct

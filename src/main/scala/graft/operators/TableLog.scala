@@ -1128,10 +1128,16 @@ object TableLog {
   private[graft] def unionSchema(spark: SparkSession, dir: String,
       snap: Snapshot): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types.{DataType, StructField, StructType}
-    val cols = Option(unionColsMemo.get((dir, snap.version)))
-      .getOrElse(snapshotUnionCols(spark, dir, snap))
-    StructType(cols.map { case (n, t) => StructField(n, DataType.fromDDL(t)) })
+    StructType(unionColsOf(spark, dir, snap).map { case (n, t) =>
+      StructField(n, DataType.fromDDL(t)) })
   }
+
+  /** `snap`'s union columns (name, type), from the memo or the
+    * row-group index. */
+  private def unionColsOf(spark: SparkSession, dir: String,
+      snap: Snapshot): Seq[(String, String)] =
+    Option(unionColsMemo.get((dir, snap.version)))
+      .getOrElse(snapshotUnionCols(spark, dir, snap))
 
   /** Row-level change feed between two committed versions (the
     * `table_changes` / CDF read), derived purely from file-set diffs:
@@ -1252,15 +1258,16 @@ object TableLog {
     extends RgConstraint
   /** `upper(col) = 'X'` / `lower(col) IN (…)` on a string column:
     * `folded` holds the ASCII case-folded targets; a group is disproven
-    * when NO per-char case variant of any target lies within its raw
-    * [smin, smax] (RowGroupScan.variantInRange — exact over the variant
-    * set, so single-case data prunes as tightly as a plain equality),
-    * and proven full only for a constant no-null group whose folded
-    * value is a target. `prefix` = the case-INSENSITIVE prefix family
-    * (`col ILIKE 'p%'`, `lower(col) LIKE 'p%'`,
-    * `startswith(lower(col), 'p')`): the variant test asks instead
-    * whether [smin, smax] can contain a string STARTING WITH a variant
-    * of a target. */
+    * when NO case variant of any target (each char in either case, or
+    * a non-ASCII character folding onto a run of it, like 'ı' onto 'I')
+    * lies within its raw [smin, smax] (RowGroupScan.variantInRange —
+    * exact over the variant set, so single-case data prunes as tightly
+    * as a plain equality), and proven full only for a constant no-null
+    * pure-ASCII group whose folded value is a target. `prefix` = the
+    * case-INSENSITIVE prefix family (`col ILIKE 'p%'`,
+    * `lower(col) LIKE 'p%'`, `startswith(lower(col), 'p')`): the variant
+    * test asks instead whether [smin, smax] can contain a string
+    * STARTING WITH a variant of a target. */
   final case class CaseIn(column: String, folded: Seq[String],
       toUpper: Boolean, prefix: Boolean = false) extends RgConstraint
   /** `trim(col) = 'x'` / `ltrim`/`rtrim` `... IN (…)` on a string
@@ -1294,10 +1301,9 @@ object TableLog {
     def column: String = inner.column
   }
 
-  /** MULTI-constraint row-group pruning: every constraint's disproof is
-    * a Column filter over ONE wide index, the per-(file, row-group)
-    * verdicts fold in a single distributed aggregation, and the scan
-    * runs once over the intersection — the z-order payoff (a 2-column
+  /** MULTI-constraint row-group pruning: one classification of ONE
+    * wide index judges every constraint per (file, row group)
+    * ([[planSlices]]), and the scan runs once over the intersection — the z-order payoff (a 2-column
     * clustered table prunes on BOTH predicate columns, where any
     * single-column read over-keeps). A constraint on a stats-less (or
     * evolved-away) column keeps everything (conservative). The caller
@@ -1313,80 +1319,104 @@ object TableLog {
       fileSubset)
   }
 
-  /** Shared pruned-read core: serve the wide row-group index (sidecar
-    * first, footers for unmapped files), prune DISTRIBUTED by all
-    * constraints at once, scan exactly the kept slices. DV-carrying
-    * files scan with file-ordinal positions and anti-join their vectors
-    * — a deletion no longer degrades the file to a whole read. `files`
-    * narrows the snapshot (the bloom prune passes its keep set). */
+  /** Shared pruned-read core: plan the kept row groups
+    * ([[planSlices]]) and scan exactly those ([[scanPlanned]]).
+    * `fileSubset` narrows the snapshot (the bloom and partition prunes
+    * pass their keep sets); an empty keep set plans nothing and returns
+    * the snapshot's schema. */
   private def prunedCore(spark: SparkSession, dir: String, snap: Snapshot,
       constraints: Seq[RgConstraint], columns: Seq[String],
       fileSubset: Option[Seq[String]] = None)
       : (DataFrame, Long, Long, Int, Int) = {
-    def proj(df: DataFrame): DataFrame =
-      if (columns.isEmpty) df else df.select(columns.map(col): _*)
-    val files = fileSubset.getOrElse(snap.files)
-    if (files.isEmpty)
-      return (proj(readEvolved(spark, dir, snap.version).limit(0)),
-        0L, 0L, 0, snap.files.size)
+    if (fileSubset.getOrElse(snap.files).isEmpty)
+      return (RowGroupScan.emptyFrame(spark, unionColsOf(spark, dir, snap),
+        columns), 0L, 0L, 0, snap.files.size)
+    val plan = planSlices(spark, dir, snap, constraints, fileSubset,
+      meta = false)
+    val df = scanPlanned(spark, dir, snap, plan.slices, plan.unionCols,
+      columns, constraints)
+      .getOrElse(RowGroupScan.emptyFrame(spark, plan.unionCols, columns))
+    (df, plan.slices.size.toLong, plan.rgTotal,
+      plan.slices.map(_.file).distinct.size, snap.files.size)
+  }
+
+  /** A pruned read's or count's plan: the row groups to scan, the rows
+    * metadata proves match, the planned group count and the union
+    * columns to scan in. */
+  private final case class SlicePlan(slices: Seq[RowGroupScan.RgSlice],
+      metaRows: Long, rgTotal: Long, unionCols: Seq[(String, String)])
+
+  /** The one slice planner of [[prunedCore]] and [[countPruned]]:
+    * [[RowGroupScan.classify]] judges every row group of the planned
+    * files (`fileSubset`, else the snapshot). A snapshot whose index
+    * rows sit on the driver ([[rgIndexLocal]], ≤512 files) plans there
+    * with zero Spark jobs. A larger one runs the same classifier inside
+    * tasks over the wide index hash-partitioned by file, so every row
+    * of a group reaches one task, and the driver collects only kept
+    * slices, sums and distinct column descriptors. A kept group
+    * meta-counts when `meta` holds, the classifier proves it full and
+    * its file carries no deletion vector (deleted rows are invisible to
+    * footer stats); every other kept group scans. */
+  private def planSlices(spark: SparkSession, dir: String, snap: Snapshot,
+      constraints: Seq[RgConstraint], fileSubset: Option[Seq[String]],
+      meta: Boolean): SlicePlan = {
+    val memoHit = Option(unionColsMemo.get((dir, snap.version)))
     val prefix = Paths.get(dir).toString + "/"
-    locally {
-      // Planning: small/memoized snapshots plan entirely ON THE DRIVER
-      // (the Delta manifest model — zero Spark jobs); large snapshots
-      // run ONE distributed metadata action (kept slices, total group
-      // count, and on a memo miss the union schema) — so an un-indexed
-      // table pays exactly one footer pass + one aggregation, and a
-      // sidecar-indexed one a single small-parquet aggregation.
-      val memoHit = Option(unionColsMemo.get((dir, snap.version)))
-      val (slices, total, colsOpt)
-          : (Seq[RowGroupScan.RgSlice], Long,
-             Option[Seq[(String, String)]]) =
-        rgIndexLocal(spark, dir, snap, files) match {
-          case Some((rows, schema)) =>
-            val (verdicts, colTuples) =
-              RowGroupScan.classifyLocal(rows, schema, constraints)
-            val kept = verdicts.filter(v => !v.rejected && v.rg >= 0)
-              .map(v => RowGroupScan.RgSlice(v.file, v.rg))
-              .sortBy(s => (s.file, s.rg))
-            (kept, verdicts.count(_.rg >= 0).toLong,
-              if (memoHit.isEmpty)
-                Some(RowGroupScan.unionColsFromTuples(colTuples))
-              else None)
-          case None =>
-            val wide = rgIndexForUncached(spark, dir, snap, files)
-            RowGroupScan.prunePairs(spark, wide, constraints,
-              needCols = memoHit.isEmpty)
-        }
-      val unionCols = fullUnionCols(spark, dir, snap, memoHit, colsOpt,
-        fileSubset.isEmpty)
-      val dvRel = snap.dvs.keySet
-      val (dvSlices, cleanSlices) = slices.partition(s =>
-        dvRel.contains(s.file.stripPrefix(prefix)))
-      val filesOpened = slices.map(_.file).distinct.size
-      val cleanPart =
-        if (cleanSlices.isEmpty) None
-        else Some(RowGroupScan.scanSlices(spark, cleanSlices, unionCols,
-          columns, constraints = constraints))
-      val dvPart =
-        if (dvSlices.isEmpty) None
-        else {
-          val kept = dvSlices.map(_.file.stripPrefix(prefix)).toSet
-          val scanned = RowGroupScan.scanSlices(spark, dvSlices,
-            unionCols, columns, emitPos = true,
-            constraints = constraints)
-          Some(antiDv(spark, dir, scanned,
-            snap.dvs.filter { case (f, _) => kept(f) })
-            .drop("__graft_fn", "__graft_ridx"))
-        }
-      val df = (cleanPart, dvPart) match {
-        case (Some(a), Some(b)) => a.unionByName(b)
-        case (Some(a), None) => a
-        case (None, Some(b)) => b
-        case (None, None) =>
-          RowGroupScan.emptyFrame(spark, unionCols, columns)
-      }
-      (df, slices.size.toLong, total, filesOpened, snap.files.size)
+    val dvAbs = snap.dvs.keySet.map(prefix + _)
+    val countable: String => Boolean = f => meta && !dvAbs(f)
+    val files = fileSubset.getOrElse(snap.files)
+    val parts = rgIndexLocal(spark, dir, snap, files) match {
+      case Some((rows, schema)) =>
+        Seq(planPart(rows.iterator, schema, constraints, countable))
+      case None =>
+        val wide = rgIndexForUncached(spark, dir, snap, files)
+        val schema = wide.schema
+        wide.repartition(col("file")).rdd.mapPartitions(rows =>
+          Iterator.single(planPart(rows, schema, constraints, countable)))
+          .collect().toSeq
     }
+    val planned = Option.when(memoHit.isEmpty)(
+      RowGroupScan.unionColsFromTuples(parts.flatMap(_._4)))
+    SlicePlan(parts.flatMap(_._1).sortBy(s => (s.file, s.rg)),
+      parts.map(_._2).sum, parts.map(_._3).sum,
+      fullUnionCols(spark, dir, snap, memoHit, planned, fileSubset.isEmpty))
+  }
+
+  /** One share of a [[planSlices]] plan from the index rows of whole
+    * files: the slices to scan, the metadata-proven row sum, the group
+    * count and the column descriptors. */
+  private def planPart(rows: Iterator[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType,
+      constraints: Seq[RgConstraint], countable: String => Boolean)
+      : (Seq[RowGroupScan.RgSlice], Long, Long,
+         Seq[(Int, String, String)]) = {
+    val (verdicts, cols) = RowGroupScan.classify(rows, schema, constraints)
+    val (meta, scan) = verdicts.filterNot(_.rejected)
+      .partition(v => v.full && countable(v.file))
+    (scan.map(v => RowGroupScan.RgSlice(v.file, v.rg)),
+      meta.map(_.nRows).sum, verdicts.size.toLong, cols)
+  }
+
+  /** The rows of `slices` in `unionCols` (projected to `columns`): clean
+    * files scan plainly, deletion-vector files scan with file-ordinal
+    * positions and anti-join their vectors. None when nothing scans. */
+  private def scanPlanned(spark: SparkSession, dir: String, snap: Snapshot,
+      slices: Seq[RowGroupScan.RgSlice], unionCols: Seq[(String, String)],
+      columns: Seq[String], constraints: Seq[RgConstraint])
+      : Option[DataFrame] = {
+    val prefix = Paths.get(dir).toString + "/"
+    val (dvSlices, cleanSlices) = slices.partition(s =>
+      snap.dvs.contains(s.file.stripPrefix(prefix)))
+    val clean = Option.when(cleanSlices.nonEmpty)(RowGroupScan.scanSlices(
+      spark, cleanSlices, unionCols, columns, constraints = constraints))
+    val dv = Option.when(dvSlices.nonEmpty) {
+      val kept = dvSlices.map(_.file.stripPrefix(prefix)).toSet
+      antiDv(spark, dir, RowGroupScan.scanSlices(spark, dvSlices, unionCols,
+          columns, emitPos = true, constraints = constraints),
+        snap.dvs.filter { case (f, _) => kept(f) })
+        .drop("__graft_fn", "__graft_ridx")
+    }
+    (clean ++ dv).reduceOption(_.unionByName(_))
   }
 
   /** The union schema of a pruned read or count: the memo hit, else the
@@ -1470,19 +1500,14 @@ object TableLog {
     * in-line computation does. */
   private def snapshotUnionCols(spark: SparkSession, dir: String,
       snap: Snapshot): Seq[(String, String)] = {
-    import org.apache.spark.sql.functions.{col, collect_set, sort_array,
-      struct}
-    val cols = rgIndexLocal(spark, dir, snap, snap.files) match {
-      case Some((rows, schema)) =>
-        RowGroupScan.unionColsFromTuples(colsOfRows(rows, schema))
-      case None =>
-        val wide = rgIndexFor(spark, dir, snap, snap.files)
-        val row = wide.agg(sort_array(collect_set(struct(col("ord"),
-          col("column"), col("dtype"))))).first()
-        RowGroupScan.unionColsFromSets(
-          Seq(row.getSeq[org.apache.spark.sql.Row](0)))
-    }
-    rememberUnionCols(dir, snap, cols)
+    val (rows, schema) = rgIndexLocal(spark, dir, snap, snap.files)
+      .getOrElse {
+        val descs = rgIndexForUncached(spark, dir, snap, snap.files)
+          .select("ord", "column", "dtype").distinct()
+        (descs.collect(), descs.schema)
+      }
+    rememberUnionCols(dir, snap,
+      RowGroupScan.unionColsFromTuples(colsOfRows(rows, schema)))
   }
 
   private def rememberUnionCols(dir: String, snap: Snapshot,
@@ -1980,11 +2005,9 @@ object TableLog {
       predicate: Option[String], version: Int = -1,
       fileSubset: Option[Seq[String]] = None)
       : (Long, Long, Long, Long, Int) = {
-    import org.apache.spark.sql.functions.{broadcast, expr, first, lit,
-      max, min, sum, when}
+    import org.apache.spark.sql.functions.expr
     val snap = snapshot(dir, version)
     if (snap.files.isEmpty) return (0L, 0L, 0L, 0L, 0)
-    val prefix = Paths.get(dir).toString + "/"
     require(predicate.isDefined || constraints.isEmpty,
       "constraints without a predicate")
     if (predicate.isEmpty) {
@@ -2004,108 +2027,17 @@ object TableLog {
     // partition-eliminated files never enter the index math: their rows
     // provably fail the predicate (every row carries the tag value), so
     // they contribute neither meta rows nor straddlers
-    val cFiles = fileSubset.getOrElse(snap.files)
-    if (cFiles.isEmpty) return (0L, 0L, 0L, 0L, snap.files.size)
-    locally {
-      val memoHit = Option(unionColsMemo.get((dir, snap.version)))
-      val needCols = memoHit.isEmpty
-      // DV files can never meta-count (deleted rows are invisible to
-      // footer stats) — their non-rejected groups always scan
-      val dvAbs = snap.dvs.keySet.toSeq.sorted.map(prefix + _)
-      // classification: driver-local for small/memoized snapshots
-      // (zero Spark jobs), ONE distributed action otherwise — meta-
-      // provable row sum, total group count, straddling slices, and on
-      // a memo miss the union schema; driver residency is
-      // O(straddlers). rg == -1 schema carriers never classify.
-      val (metaRows, rgTotal, straddle, subsetColsOpt)
-          : (Long, Long, Seq[RowGroupScan.RgSlice],
-             Option[Seq[(String, String)]]) =
-        rgIndexLocal(spark, dir, snap, cFiles) match {
-          case Some((rows, schemaT)) =>
-            val (verdicts, colTuples) =
-              RowGroupScan.classifyLocal(rows, schemaT, constraints)
-            val dvSet = dvAbs.toSet
-            val gate = exact && constraints.nonEmpty
-            def isFull(v: RowGroupScan.RgVerdict): Boolean =
-              gate && v.full && !dvSet(v.file)
-            val vs = verdicts.filter(_.rg >= 0)
-            (vs.filter(v => !v.rejected && isFull(v)).map(_.nRows).sum,
-              vs.size.toLong,
-              vs.filter(v => !v.rejected && !isFull(v))
-                .map(v => RowGroupScan.RgSlice(v.file, v.rg))
-                .sortBy(s => (s.file, s.rg)),
-              if (needCols)
-                Some(RowGroupScan.unionColsFromTuples(colTuples))
-              else None)
-          case None =>
-            val wide = rgIndexForUncached(spark, dir, snap, cFiles)
-            val (flagAggs, rej, fullCol) =
-              RowGroupScan.constraintFlags(constraints)
-            val aggs = (first(col("n_rows")).as("n_rows") +: flagAggs) ++
-              (if (needCols)
-                Seq(org.apache.spark.sql.functions.sort_array(
-                  org.apache.spark.sql.functions.collect_set(
-                    org.apache.spark.sql.functions.struct(col("ord"),
-                      col("column"), col("dtype")))).as("__cols"))
-              else Nil)
-            val pairs0 = wide.groupBy(col("file"), col("rg"))
-              .agg(aggs.head, aggs.tail: _*)
-            val isFull =
-              if (!exact || constraints.isEmpty) lit(false) else fullCol
-            import spark.implicits._
-            val dvDf = broadcast(dvAbs.toDF("file")
-              .withColumn("__isdv", lit(true)))
-            val pairs = pairs0
-              .join(dvDf, Seq("file"), "left")
-              .withColumn("__rej", rej)
-              .withColumn("__full", isFull && col("__isdv").isNull)
-            import org.apache.spark.sql.functions.{collect_list,
-              collect_set, struct}
-            val gAggs = Seq(
-              sum(when(col("__full") && !col("__rej") && col("rg") >= 0,
-                col("n_rows")).otherwise(0L)),
-              sum(when(col("rg") >= 0, 1L).otherwise(0L)),
-              collect_list(when(!col("__rej") && !col("__full") &&
-                col("rg") >= 0,
-                struct(col("file"), col("rg"))))) ++
-              (if (needCols) Seq(collect_set(col("__cols"))) else Nil)
-            val agg = pairs.agg(gAggs.head, gAggs.tail: _*).first()
-            (if (agg.isNullAt(0)) 0L else agg.getLong(0),
-              if (agg.isNullAt(1)) 0L else agg.getLong(1),
-              agg.getSeq[org.apache.spark.sql.Row](2)
-                .map(r => RowGroupScan.RgSlice(r.getString(0),
-                  r.getInt(1)))
-                .sortBy(s => (s.file, s.rg)),
-              if (needCols)
-                Some(RowGroupScan.unionColsFromSets(agg.getSeq[
-                  scala.collection.Seq[org.apache.spark.sql.Row]](3)))
-              else None)
-        }
-      val unionCols = fullUnionCols(spark, dir, snap, memoHit,
-        subsetColsOpt, fileSubset.isEmpty)
-      val predCols = LakeSelect.referencedColumns(spark, predicate.get)
-        .filter(c => unionCols.exists(_._1 == c))
-      val dvRel = snap.dvs.keySet
-      val (dvSlices, cleanSlices) = straddle.partition(s =>
-        dvRel.contains(s.file.stripPrefix(prefix)))
-      val cleanCount =
-        if (cleanSlices.isEmpty) 0L
-        else RowGroupScan.scanSlices(spark, cleanSlices, unionCols,
-          predCols, constraints = constraints)
-          .where(expr(predicate.get)).count()
-      val dvCount =
-        if (dvSlices.isEmpty) 0L
-        else {
-          val kept = dvSlices.map(_.file.stripPrefix(prefix)).toSet
-          antiDv(spark, dir,
-            RowGroupScan.scanSlices(spark, dvSlices, unionCols,
-              predCols, emitPos = true, constraints = constraints),
-            snap.dvs.filter { case (f, _) => kept(f) })
-            .where(expr(predicate.get)).count()
-        }
-      (metaRows + cleanCount + dvCount, metaRows,
-        straddle.size.toLong, rgTotal, snap.files.size)
-    }
+    if (fileSubset.exists(_.isEmpty))
+      return (0L, 0L, 0L, 0L, snap.files.size)
+    val plan = planSlices(spark, dir, snap, constraints, fileSubset,
+      meta = exact)
+    // straddlers scan selectively, predicate columns only, in one action
+    val predCols = LakeSelect.referencedColumns(spark, predicate.get)
+      .filter(c => plan.unionCols.exists(_._1 == c))
+    val scanned = scanPlanned(spark, dir, snap, plan.slices, plan.unionCols,
+      predCols, constraints).fold(0L)(_.where(expr(predicate.get)).count())
+    (plan.metaRows + scanned, plan.metaRows, plan.slices.size.toLong,
+      plan.rgTotal, snap.files.size)
   }
 
   /** Metadata-only MIN/MAX of `column` — the other most common lake
@@ -2568,13 +2500,6 @@ object TableLog {
   private def bloomKeepFiles(spark: SparkSession, dir: String,
       snap: Snapshot, values: Seq[Any]): Seq[String] = {
     val probeHashes: Array[Array[Long]] = probeHashesLocal(values)
-    def probe(bytes: Array[Byte]): Boolean = {
-      val m = bytes.length.toLong * 8L
-      probeHashes.exists(_.forall { h =>
-        val p = (((h % m) + m) % m).toInt
-        (bytes(p >>> 3) & (1 << (p & 7))) != 0
-      })
-    }
     // small snapshots probe DRIVER-RESIDENT bitmaps (zero jobs);
     // otherwise a distributed probe over the CURRENT mapping's sidecar
     // rows only — a sidecar row counts iff the snapshot still maps that
@@ -2584,7 +2509,7 @@ object TableLog {
       if (snap.blooms.isEmpty) Map.empty
       else bloomBitsLocal(spark, dir, snap) match {
         case Some(bits) =>
-          bits.map { case (f, bytes) => f -> probe(bytes) }
+          bits.map { case (f, bytes) => f -> bloomHit(bytes, probeHashes) }
         case None =>
           import spark.implicits._
           val parts = snap.blooms.groupBy(_._2).toSeq.sortBy(_._1)
@@ -2596,20 +2521,25 @@ object TableLog {
             }
           val ph = probeHashes
           parts.reduce(_.unionByName(_)).as[(String, Array[Byte])]
-            .map { case (f, bytes) =>
-              val m = bytes.length.toLong * 8L
-              val hit = ph.exists(_.forall { h =>
-                val p = (((h % m) + m) % m).toInt
-                (bytes(p >>> 3) & (1 << (p & 7))) != 0
-              })
-              (f, hit)
-            }.collect().toMap // bounded: ONE boolean per indexed file
+            .map { case (f, bytes) => (f, bloomHit(bytes, ph)) }
+            .collect().toMap // bounded: ONE boolean per indexed file
       }
     snap.files.filter { f =>
       if (!snap.blooms.contains(f)) true // unindexed: conservative
       // indexed but no sidecar row: all-NULL file — definitely absent
       else hitByFile.getOrElse(f, false)
     }
+  }
+
+  /** Whether the bloom bitmap `bits` may hold one of the probes: every
+    * one of some probe's k hashed bit positions is set. */
+  private def bloomHit(bits: Array[Byte], probeHashes: Array[Array[Long]])
+      : Boolean = {
+    val m = bits.length.toLong * 8L
+    probeHashes.exists(_.forall { h =>
+      val p = (((h % m) + m) % m).toInt
+      (bits(p >>> 3) & (1 << (p & 7))) != 0
+    })
   }
 
   /** Point / IN-list lookup composing EVERY index the log carries — the
@@ -2638,8 +2568,6 @@ object TableLog {
       fileSubset: Option[Seq[String]] = None)
       : (DataFrame, Long, Long, Int, Int) = {
     require(values.nonEmpty, "readPointLookup needs at least one value")
-    def proj(df: DataFrame): DataFrame =
-      if (columns.isEmpty) df else df.select(columns.map(col): _*)
     val snap = snapshot(dir, version)
     require(snap.bloomCol.contains(column),
       s"no bloom index on $column in $dir (run computeBlooms first)")
@@ -2658,9 +2586,6 @@ object TableLog {
     val keep0 = bloomKeepFiles(spark, dir, snap, values)
     // partition-eliminated files intersect OUT of the bloom keep set
     val keep = fileSubset.fold(keep0)(fs => keep0.filter(fs.toSet))
-    if (keep.isEmpty) // provably absent everywhere: empty, table schema
-      return (proj(readEvolved(spark, dir, snap.version).limit(0)),
-        0L, 0L, 0, snap.files.size)
     val eq: RgConstraint = longs match {
       case Some(ls) => NumIn(column, ls)
       case None => StrIn(column, values.map(_.asInstanceOf[String]))

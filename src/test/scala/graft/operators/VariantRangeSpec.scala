@@ -72,4 +72,48 @@ class VariantRangeSpec extends AnyFunSuite {
     }
     assert(checked == 4000)
   }
+
+  test("non-ASCII characters whose case mapping is ASCII are variants: " +
+    "upper('ı') = 'I', upper('ß') = 'SS', lower('K') = 'k', ligatures") {
+    // every spelling of x whose Spark upper or lower case equals x's
+    def spellings(x: String): Seq[String] =
+      if (x.isEmpty) Seq("")
+      else {
+        val one = variants(x.take(1)).flatMap(c =>
+          spellings(x.drop(1)).map(c + _))
+        val runs = Seq("\u00df", "\u0131", "\u017f", "\u212a", "\ufb00",
+          "\ufb01", "\ufb02", "\ufb03", "\ufb04", "\ufb05", "\ufb06")
+          .filter { c =>
+            val f = c.toUpperCase(java.util.Locale.ROOT)
+              .toLowerCase(java.util.Locale.ROOT)
+            x.toLowerCase(java.util.Locale.ROOT).startsWith(f)
+          }.flatMap { c =>
+            val f = c.toUpperCase(java.util.Locale.ROOT)
+            spellings(x.drop(f.length)).map(c + _)
+          }
+        one ++ runs
+      }
+    assert(RowGroupScan.variantInRange("I", "\u0131", "\u0131"))
+    assert(RowGroupScan.variantInRange("SS", "\u00df", "\u00df"))
+    assert(RowGroupScan.variantInRange("k", "\u212a", "\u212a"))
+    assert(RowGroupScan.variantInRange("OFFICE", "O\ufb03CE", "O\ufb03CE"))
+    assert(!RowGroupScan.variantInRange("E", "\u00e9", "\u00e9"))
+    // a prefix may end inside a ligature's spelling
+    assert(RowGroupScan.variantInRange("F", "\ufb01x", "\ufb01x",
+      prefix = true))
+    assert(!RowGroupScan.variantInRange("F", "\ufb01x", "\ufb01x"))
+    val rnd = new scala.util.Random(7)
+    val alphabet = "iSfktA\u0131\u00df\u017f\u212a\ufb01\ufb03\u00e9"
+    def randStr(maxLen: Int): String =
+      Seq.fill(rnd.nextInt(maxLen + 1))(
+        alphabet(rnd.nextInt(alphabet.length))).mkString
+    (1 to 3000).foreach { _ =>
+      val x = randStr(4).filter(_.toInt < 128)
+      val a = randStr(4); val b = randStr(4)
+      val (lo, hi) = if (utf8Leq(a, b)) (a, b) else (b, a)
+      assert(RowGroupScan.variantInRange(x, lo, hi) ==
+        spellings(x).exists(v => utf8Leq(lo, v) && utf8Leq(v, hi)),
+        s"x='$x' lo='$lo' hi='$hi'")
+    }
+  }
 }
